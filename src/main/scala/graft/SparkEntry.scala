@@ -81,6 +81,15 @@ object SparkEntry {
       s.sql(sql)
     }
 
+  /** Registers each table of `dir` as a temp view of `s`. The built relation
+    * (read, fanned out to the cores, ts-normalized) comes from one bounded
+    * map, `fixtures`, keyed by (session, dir, table, useCache, data
+    * signature): a table whose leaf files are unchanged is not read again
+    * (no Spark file index or schema-inference job), and a rewritten one gets a
+    * new key, is read afresh, and drops its stale entries. The same map
+    * entry is what `spark.graft.fixtureCache.enabled` persists; with the
+    * flag off (the default) nothing is persisted, so every execution still
+    * scans every input row. */
   private def registerFixtures(s: SparkSession, dir: String, useCache: Boolean,
       tables: Seq[String]): Unit = {
       Graft.register(s)
@@ -89,116 +98,116 @@ object SparkEntry {
       // plain timestamp[us]. Accept either: read nanos as long, then
       // normalize below so every query sees one canonical TimestampType.
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Optional per-session fixture cache (spark.graft.fixtureCache
+      // .enabled, default false): persist the fanned table once so the
+      // 150+ bench queries stop re-paying the same parquet scan + fan-out
+      // shuffle — pure Spark job-floor amortization, identical results.
+      // HARD byte budget (fixtureCache.maxBytes, default 32 MB on-disk
+      // per table), for two measured reasons. (1) Memory: cached blocks
+      // live inside the protected storageFraction half of unified memory,
+      // so an over-eager persist does not spill harmlessly — it starves
+      // execution memory for the buffer-heavy queries (sf100's 2.6 GB
+      // orders cached "because it was under-split" OOMed q_cluster_agg's
+      // aggregation 40 queries later). (2) Decode crossover: the columnar
+      // cache re-decodes strings/float-arrays per scan, and above tens of
+      // MB that costs more than parquet's vectorized reader — sf10's
+      // 51-57 MB embeddings/documents cached made q_semdedup 5× slower.
+      // At 32 MB every sf0.1 table still caches (the job-floor win the
+      // cache exists for) and the sf10+ mid-size tables scan parquet.
+      // Bench turns the cache on; Verify and the correctness gate keep the
+      // default read-every-time path.
+      val maxCacheBytes =
+        s.conf.get("spark.graft.fixtureCache.maxBytes", (32L << 20).toString).toLong
+      // lenient flag parse: accept 1/0 alongside true/false (the env
+      // override documents SPARK_GRAFT_CACHE_FIXTURES=0; "0".toBoolean
+      // throws)
+      val cacheFlag = s.conf.get("spark.graft.fixtureCache.enabled", "false")
+      val persist = useCache && (cacheFlag.equalsIgnoreCase("true") || cacheFlag == "1")
       tables.foreach { t =>
         val path = s"$dir/$t.parquet"
-        // An uncached read must not only skip persist() — CacheManager
-        // substitutes ANY analyzed subtree that canonically matches a
-        // persisted plan, so a plain re-read of the same path would still be
-        // served from another query's cached InMemoryRelation. A marker
-        // option lands in HadoopFsRelation's options map (part of relation
-        // equality), so the canonical match fails and the scan really hits
-        // parquet. The option itself is inert: the parquet source ignores
-        // unrecognized keys.
-        val df =
-          if (useCache) s.read.parquet(path)
-          else s.read.option("graft.fixtureCache.bypass", "true").parquet(path)
-        // Fan out under-split inputs to the cores: the driver's testdata is
-        // single-row-group parquet (one scan task no matter the split
-        // config) and GenScale scale points ship ~80 MB single-row-group
-        // part files (one task per file — 16 tasks on 32 cores at sf10).
-        // Parquet can't split inside a row group, so estimate the EFFECTIVE
-        // task count as sum(ceil(file/128MB)) over leaf files and shuffle
-        // only when it undershoots the core count. At real scale inputs
-        // carry plenty of row groups and this never fires — e.g. sf100's
-        // ~870 MB parts yield ~112 splits, and the earlier total-bytes
-        // check (which read File.length on a DIRECTORY — the ~4 KB inode
-        // size) made every sf100 query pay a useless 13 GB shuffle first.
-        def leaves(f: java.io.File): Seq[java.io.File] = {
-          val kids = f.listFiles()
-          if (kids == null) Seq(f)
-          // Hadoop's default PathFilter: skip both '_' (committer markers)
-          // and '.' (hidden + local-FS .crc checksum shadows — each would
-          // otherwise count as >=1 effective split via the max(1,...) below,
-          // doubling effSplits and suppressing a beneficial fan-out)
-          else kids.toSeq.filterNot(k => k.getName.startsWith("_") ||
-            k.getName.startsWith(".")).flatMap(leaves)
-        }
-        // Fan below 3 waves: barely-above-core split counts are the worst
-        // case (33 single-row-group parts on 32 cores = one task straggling
-        // alone in wave 2 — measured 1.6-2x on kernel-bound queries), so
-        // require enough splits that waves amortize stragglers before
-        // trusting the source layout. At real scale splits >> 3x cores and
-        // this never fires.
-        val rowGroup = 128L << 20
-        val files = leaves(new java.io.File(path))
-        val sizes = files.map(_.length)
-        val effSplits = sizes
-          .map(sz => math.max(1L, (sz + rowGroup - 1) / rowGroup)).sum
-        val fanned =
-          if (effSplits < 3L * s.sparkContext.defaultParallelism)
-            df.repartition(s.sparkContext.defaultParallelism)
-          else df
-        // Optional per-session fixture cache (spark.graft.fixtureCache
-        // .enabled, default false): persist the fanned table once so the
-        // 150+ bench queries stop re-paying the same parquet scan + fan-out
-        // shuffle — pure Spark job-floor amortization, identical results.
-        // HARD byte budget (fixtureCache.maxBytes, default 32 MB on-disk
-        // per table), for two measured reasons. (1) Memory: cached blocks
-        // live inside the protected storageFraction half of unified memory,
-        // so an over-eager persist does not spill harmlessly — it starves
-        // execution memory for the buffer-heavy queries (sf100's 2.6 GB
-        // orders cached "because it was under-split" OOMed q_cluster_agg's
-        // aggregation 40 queries later). (2) Decode crossover: the columnar
-        // cache re-decodes strings/float-arrays per scan, and above tens of
-        // MB that costs more than parquet's vectorized reader — sf10's
-        // 51-57 MB embeddings/documents cached made q_semdedup 5× slower.
-        // At 32 MB every sf0.1 table still caches (the job-floor win the
-        // cache exists for) and the sf10+ mid-size tables scan parquet.
-        // Bench turns the cache on; Verify and the driver gate keep the
-        // default read-every-time path.
-        val view = normalizeEventTs(fanned)
-        val maxCacheBytes =
-          s.conf.get("spark.graft.fixtureCache.maxBytes", (32L << 20).toString).toLong
-        // lenient flag parse: accept 1/0 alongside true/false (the env
-        // override documents SPARK_GRAFT_CACHE_FIXTURES=0; "0".toBoolean
-        // throws)
-        val cacheFlag = s.conf.get("spark.graft.fixtureCache.enabled", "false")
-        // Data signature folded into the cache key: the sample caches in
-        // SpatialJoinRule learned this lesson via stats.sizeInBytes — a path
-        // rewritten mid-session must not silently serve the stale persisted
-        // rows. Lengths + mtimes of the leaf files catch any rewrite
-        // (same-size same-mtime replacement is below filesystem resolution).
+        val files = leafFiles(new java.io.File(path))
+        // Data signature: lengths + mtimes of the leaf files catch any
+        // rewrite (same-size same-mtime replacement is below filesystem
+        // resolution), so a path rewritten mid-session never serves the
+        // stale relation or its persisted rows.
         val dataSig = files.foldLeft(17L)((h, f) =>
           h * 1000003L + f.length * 31L + f.lastModified)
-        val cached =
-          if (useCache && sizes.sum <= maxCacheBytes &&
-              (cacheFlag.equalsIgnoreCase("true") || cacheFlag == "1"))
-            fixtureCache.computeIfAbsent((s, dir, t, dataSig), _ =>
-              view.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          else view
-        cached.createOrReplaceTempView(t)
+        val df = fixtures.getOrElseUpdate((s, dir, t, useCache, dataSig)) {
+          fixtures.removeIf(k => k._1 == s && k._2 == dir && k._3 == t && k._4 == useCache)
+          buildFixture(s, path, useCache, files)
+        }
+        if (persist && files.map(_.length).sum <= maxCacheBytes &&
+            df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        df.createOrReplaceTempView(t)
       }
     }
 
-  // per-(session, sfdir, table, data-signature) persisted fixtures — see q()
-  // above. LRU-bounded (same hygiene as SpatialJoinRule's sample caches): a
-  // long-lived JVM cycling sessions/dirs must not pin stale DataFrames (and
-  // their sessions) forever. 32 covers 3 SF dirs × 10 tables with room.
-  // Eviction UNPERSISTS the dropped entry: removing only the map reference
+  /** Leaf data files under `f`, skipping what Hadoop's default PathFilter
+    * skips: '_' (committer markers) and '.' (hidden + local-FS .crc checksum
+    * shadows — each would otherwise count as >=1 effective split in the
+    * fan-out estimate, doubling it and suppressing a beneficial fan-out). */
+  private def leafFiles(f: java.io.File): Seq[java.io.File] = {
+    val kids = f.listFiles()
+    if (kids == null) Seq(f)
+    else kids.toSeq.filterNot(k => k.getName.startsWith("_") ||
+      k.getName.startsWith(".")).flatMap(leafFiles)
+  }
+
+  /** One fixture table read from `path` (with leaf `files`), fanned out and
+    * ts-normalized. */
+  private def buildFixture(s: SparkSession, path: String, useCache: Boolean,
+      files: Seq[java.io.File]): DataFrame = {
+    // An uncached read must not only skip persist() — CacheManager
+    // substitutes ANY analyzed subtree that canonically matches a
+    // persisted plan, so a plain re-read of the same path would still be
+    // served from another query's cached InMemoryRelation. A marker
+    // option lands in HadoopFsRelation's options map (part of relation
+    // equality), so the canonical match fails and the scan really hits
+    // parquet. The option itself is inert: the parquet source ignores
+    // unrecognized keys.
+    val df =
+      if (useCache) s.read.parquet(path)
+      else s.read.option("graft.fixtureCache.bypass", "true").parquet(path)
+    // Fan out under-split inputs to the cores: the shipped testdata is
+    // single-row-group parquet (one scan task no matter the split
+    // config) and GenScale scale points ship ~80 MB single-row-group
+    // part files (one task per file — 16 tasks on 32 cores at sf10).
+    // Parquet can't split inside a row group, so estimate the EFFECTIVE
+    // task count as sum(ceil(file/128MB)) over leaf files and shuffle
+    // only when it undershoots the core count. At real scale inputs
+    // carry plenty of row groups and this never fires — e.g. sf100's
+    // ~870 MB parts yield ~112 splits, and the earlier total-bytes
+    // check (which read File.length on a DIRECTORY — the ~4 KB inode
+    // size) made every sf100 query pay a useless 13 GB shuffle first.
+    // Fan below 3 waves: barely-above-core split counts are the worst
+    // case (33 single-row-group parts on 32 cores = one task straggling
+    // alone in wave 2 — measured 1.6-2x on kernel-bound queries), so
+    // require enough splits that waves amortize stragglers before
+    // trusting the source layout. At real scale splits >> 3x cores and
+    // this never fires.
+    val rowGroup = 128L << 20
+    val effSplits = files
+      .map(f => math.max(1L, (f.length + rowGroup - 1) / rowGroup)).sum
+    val fanned =
+      if (effSplits < 3L * s.sparkContext.defaultParallelism)
+        df.repartition(s.sparkContext.defaultParallelism)
+      else df
+    normalizeEventTs(fanned)
+  }
+
+  // The fixture map (see registerFixtures). LRU-bounded: a long-lived JVM
+  // cycling sessions/dirs must not pin stale DataFrames (and their
+  // sessions) forever; 64 covers 3 SF dirs × 10 tables × both read modes.
+  // Eviction UNPERSISTS a persisted entry: removing only the map reference
   // leaves the blocks pinned in the live session's CacheManager, so the
   // bound would not actually cap storage memory.
-  private val fixtureCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String, String, Long), DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, String, Long), DataFrame]): Boolean = {
-        val evict = size() > 32
-        if (evict) {
-          try e.getValue.unpersist(blocking = false)
-          catch { case _: Exception => } // dead session: blocks already gone
-        }
-        evict
-      }
-    })
+  private val fixtures = new LruCache[(SparkSession, String, String, Boolean, Long), DataFrame](
+    "fixture", 64, df =>
+      try {
+        if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+          df.unpersist(blocking = false)
+      } catch { case _: Exception => }) // dead session: blocks already gone
 
   /** Schema-robustness shim for the `events` fixture: a LongType `ts` is
    *  epoch-nanos (TIMESTAMP(NANOS) parquet under nanosAsLong), a TimestampType

@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
  * Tuning: spark.graft.rangeJoin.enabled (default true),
  * spark.graft.rangeJoin.binWidth (default "auto": sample up to 1000 interval
  * rows at planning time, use max(median length, tiny) so a typical interval
- * spans 1–2 bins; cached per canonicalized plan like the spatial cell size),
+ * spans 1–2 bins; cached across queries like the spatial cell size),
  * and spark.graft.rangeJoin.salt (default "auto" — the same self-enabling
  * TARGETED skew mitigation as the spatial tile join, via the shared
  * [[SkewSampler]]: a plan-time sample of both sides' bins finds the bins hot
@@ -65,11 +65,9 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def enabled: Boolean =
     spark.conf.get("spark.graft.rangeJoin.enabled", "true").toBoolean
 
-  // plan-keyed sample caches — keying (dual plan hash + stats.sizeInBytes
-  // data signature) and LRU bounding via SkewSampler, same discipline as the
-  // spatial rule's cellCache/hotCache
-  private val widthCache = SkewSampler.lruMap[java.lang.Double](128)
-  private val hotCache = SkewSampler.lruMap[(Seq[Long], Boolean, Double)](128)
+  // Plan-time samples (bin width, hot bins) go through SkewSampler.cached:
+  // one cross-query cache shared with SpatialJoinRule, which cannot live on
+  // this instance because Spark builds fresh rules for every optimizer run.
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
@@ -200,34 +198,31 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
                        hi: Expression): Option[Double] = {
     val conf = spark.conf.get("spark.graft.rangeJoin.binWidth", "auto")
     if (!conf.equalsIgnoreCase("auto")) return Some(conf.toDouble)
-    val key = s"${SkewSampler.sideKey(intervalPlan, lo)}:${hi.canonicalized.hashCode()}"
-    val hit = widthCache.get(key)
-    if (hit != null) return if (hit.isNaN) None else Some(hit.doubleValue())
     val maxBins = spark.conf.get("spark.graft.rangeJoin.maxBinsPerInterval", "100000").toLong
-    var unbounded = false
-    val lens = try {
+    val key = s"${SkewSampler.sideKey(intervalPlan, lo)}:${SkewSampler.exprKey(intervalPlan, hi)}:$maxBins"
+    // NaN caches "do not rewrite"; a failed sample falls back to 1.0 for
+    // this query and is not cached
+    val w = try SkewSampler.cached(spark, "binWidth", key) {
       val len = Alias(Subtract(toD(hi), toD(lo)), "__len")()
       val probe = Limit(Literal(1000), Project(Seq(len), intervalPlan))
       val raw = spark.sessionState.executePlan(probe).executedPlan.executeCollect()
         .filterNot(_.isNullAt(0)).map(_.getDouble(0))
-      unbounded = raw.exists(d => d.isInfinite || d.isNaN)
-      raw.filter(d => !d.isNaN && !d.isInfinite && d >= 0).sorted.toSeq
-    } catch {
+      val lens = raw.filter(d => !d.isNaN && !d.isInfinite && d >= 0).sorted.toSeq
+      java.lang.Double.valueOf(
+        if (raw.exists(d => d.isInfinite || d.isNaN)) Double.NaN
+        else if (lens.isEmpty) 1.0
+        else {
+          val w = math.max(lens(lens.length / 2), 1e-9) // all-degenerate: any width
+          if (lens.last / w > maxBins) Double.NaN // outlier interval would explode
+          else w
+        })
+    }.doubleValue() catch {
       case e: Exception =>
         logWarning(s"range-join binWidth=auto sampling failed (${e.getClass.getSimpleName}: " +
           s"${e.getMessage}); using 1.0")
-        Seq.empty
+        1.0
     }
-    val result: Option[Double] =
-      if (unbounded) None
-      else if (lens.isEmpty) Some(1.0)
-      else {
-        val w = math.max(lens(lens.length / 2), 1e-9) // all-degenerate: any width
-        if (lens.last / w > maxBins) None // outlier interval would explode
-        else Some(w)
-      }
-    widthCache.put(key, java.lang.Double.valueOf(result.getOrElse(Double.NaN)))
-    result
+    if (w.isNaN) None else Some(w)
   }
 
   /** bins lo..hi as array<long>; reversed/NULL bounds → zero bins. */
@@ -345,22 +340,20 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def hotBins(pointPlan: LogicalPlan, x: Expression,
                       intvPlan: LogicalPlan, lo: Expression,
                       w: Double): (Seq[Long], Boolean, Double) = {
-    val key = s"${SkewSampler.sideKey(pointPlan, x)}|${SkewSampler.sideKey(intvPlan, lo)}:$w"
-    val hit = hotCache.get(key)
-    if (hit != null) return hit
-    def sample(plan: LogicalPlan, e: Expression): Seq[Long] = try {
+    val par = spark.sparkContext.defaultParallelism
+    def sample(plan: LogicalPlan, e: Expression): Seq[Long] = {
       val col = Alias(bin(e, w), "__graft_bin_probe")()
       SkewSampler.sampleLongs(spark, plan, col, perPart = 256, maxParts = 64)
+    }
+    try SkewSampler.cached(spark, "hotBins",
+        s"${SkewSampler.sideKey(pointPlan, x)}|${SkewSampler.sideKey(intvPlan, lo)}:$w:$par") {
+      SkewSampler.detectSkew(sample(pointPlan, x), sample(intvPlan, lo), par)
     } catch {
       case ex: Exception =>
         logWarning(s"range-join hot-bin sampling failed (${ex.getClass.getSimpleName}: " +
-          s"${ex.getMessage}); salting nothing for this side")
-        Seq.empty
+          s"${ex.getMessage}); salting nothing")
+        (Nil, true, 0.0)
     }
-    val result = SkewSampler.detectSkew(sample(pointPlan, x), sample(intvPlan, lo),
-      spark.sparkContext.defaultParallelism)
-    hotCache.put(key, result)
-    result
   }
 
   /** Both sides explode to their bin ranges; a matching pair meets in every

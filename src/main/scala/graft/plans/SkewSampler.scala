@@ -1,7 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 
 /**
@@ -21,7 +23,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
  * bounded planning cost at any table size (≤ maxParts short first-page
  * tasks), deterministic plans (fixed seed), full-file-order coverage.
  */
-private[plans] object SkewSampler {
+private[plans] object SkewSampler extends Logging {
 
   def pickPartitions(n: Int, maxParts: Int): Seq[Int] =
     if (n <= maxParts) 0 until n
@@ -49,26 +51,45 @@ private[plans] object SkewSampler {
       pickPartitions(rdd.getNumPartitions, maxParts)).toSeq.flatten
   }
 
-  /** LRU-bounded cache for plan-keyed samples: optimizer rules re-fire on
-    * every re-optimization of the same query, and a long-lived session must
-    * not grow the maps without bound. */
-  def lruMap[V](max: Int): java.util.Map[String, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
-          size() > max
-      })
+  /** Plan-time samples of both join rules, kept across queries. The cache
+    * cannot live on a rule instance: Spark builds fresh optimizer rules for
+    * every optimizer run (`Optimizer.batches` is a `def`, and the session
+    * state re-runs `buildOptimizerRules` each time), so a per-instance map
+    * never outlives one query. Keys come from [[sideKey]] and carry a data
+    * signature, so unchanged data reuses its sample and changed data
+    * resamples; the LRU bound keeps a long-lived session from growing it. */
+  private val samples = new graft.LruCache[String, AnyRef]("planSample", 256)
+  private val missNo = new java.util.concurrent.atomic.AtomicLong
+
+  /** The cached sample under `kind|key`, or `sample`'s result. A miss logs
+    * its wall time and the Spark jobs it ran, counted under a job tag. */
+  def cached[V <: AnyRef](spark: SparkSession, kind: String, key: String)(sample: => V): V =
+    samples.getOrElseUpdate(s"$kind|$key") {
+      val sc = spark.sparkContext
+      val tag = s"graft-plan-sample-${missNo.incrementAndGet()}"
+      val t0 = System.nanoTime()
+      sc.addJobTag(tag)
+      val v = try sample finally sc.removeJobTag(tag)
+      logInfo(f"plan-time $kind sample: ${(System.nanoTime() - t0) / 1e6}%.1f ms, " +
+        s"${sc.statusTracker.getJobIdsForTag(tag).length} Spark job(s)")
+      v
+    }.asInstanceOf[V]
 
   /** Cache key for one join side: two independent 32-bit plan hashes (a
     * single hashCode collision silently reusing another join's sample was an
     * r14 advisory) plus stats.sizeInBytes as a DATA signature — overwriting a
     * path with different data changes the scan size, so a stale sample is
-    * not reused. */
+    * not reused. `e` is normalized against the side's output: a lone
+    * attribute keeps its exprId under `canonicalized`, and exprIds change on
+    * every analysis of the same SQL. */
   def sideKey(p: LogicalPlan, e: Expression): String = {
     val c = p.canonicalized
-    s"${c.hashCode()}:${c.toString.hashCode}:${p.stats.sizeInBytes}:" +
-      s"${e.canonicalized.hashCode()}"
+    s"${c.hashCode()}:${c.toString.hashCode}:${p.stats.sizeInBytes}:${exprKey(p, e)}"
   }
+
+  /** Hash of `e` with its attributes normalized against `p`'s output. */
+  def exprKey(p: LogicalPlan, e: Expression): Int =
+    QueryPlan.normalizeExpressions(e, p.output).hashCode()
 
   /** Skew detection from two anchor-key samples (one per join side).
     *

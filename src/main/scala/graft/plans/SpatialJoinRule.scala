@@ -76,29 +76,19 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     spark.conf.get("spark.graft.spatialJoin.enabled", "true").toBoolean
 
   // ---- plan-time sampling ---------------------------------------------------
-  // Sampling discipline, cache keying, and skew detection live in
-  // [[SkewSampler]] (shared with RangeJoinRule — the 1-D bin join has the
-  // identical hot-key failure shape and mitigation).
-  private def sampleDoubles(plan: LogicalPlan, col: NamedExpression,
-                            perPart: Int, maxParts: Int): Seq[Double] =
-    SkewSampler.sampleDoubles(spark, plan, col, perPart, maxParts)
-
-  private def sampleLongs(plan: LogicalPlan, col: NamedExpression,
-                          perPart: Int, maxParts: Int): Seq[Long] =
-    SkewSampler.sampleLongs(spark, plan, col, perPart, maxParts)
-
-  private def sideKey(p: LogicalPlan, g: Expression): String =
-    SkewSampler.sideKey(p, g)
-
-  private val cellCache = SkewSampler.lruMap[java.lang.Double](128)
+  // Sampling discipline, the cross-query sample cache, its keying, and skew
+  // detection live in [[SkewSampler]] (shared with RangeJoinRule — the 1-D
+  // bin join has the identical hot-key failure shape and mitigation). The
+  // cache cannot live on this instance: Spark builds fresh rules for every
+  // optimizer run, so a field here would never outlive one query.
+  private def sideKeys(left: LogicalPlan, lGeom: Expression,
+                       right: LogicalPlan, rGeom: Expression): String =
+    s"${SkewSampler.sideKey(left, lGeom)}|${SkewSampler.sideKey(right, rGeom)}"
 
   private def cellSize(left: LogicalPlan, lGeom: Expression,
                        right: LogicalPlan, rGeom: Expression): Double = {
     val conf = spark.conf.get("spark.graft.spatialJoin.cellSize", "auto")
     if (!conf.equalsIgnoreCase("auto")) return conf.toDouble
-    val key = s"${sideKey(left, lGeom)}|${sideKey(right, rGeom)}"
-    val hit = cellCache.get(key)
-    if (hit != null) return hit.doubleValue()
     // auto: a fixed cell is data-dependent and silently degrades at the
     // wrong scale. Cell = 2 × the median POSITIVE bbox extent over a bounded
     // sample of each side: zero-extent (point) rows don't constrain the cell
@@ -109,29 +99,26 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // window (e + c)² stays within ~2× of the tight cell's. Measured on the
     // sf100 polygon fan-out: the difference between a shuffle that fits the
     // volume and one that doesn't.
-    def sampleExtents(plan: LogicalPlan, geom: Expression): Seq[Double] = try {
+    // A failed sample falls back for this query and is not cached, so the
+    // next query samples again.
+    def sampleExtents(plan: LogicalPlan, geom: Expression): Seq[Double] = {
       val ext = Alias(Greatest(Seq(
         Subtract(FnExpr("st_xmax", Seq(geom)), FnExpr("st_xmin", Seq(geom))),
         Subtract(FnExpr("st_ymax", Seq(geom)), FnExpr("st_ymin", Seq(geom))))), "__ext")()
-      sampleDoubles(plan, ext, perPart = 32, maxParts = 64)
+      SkewSampler.sampleDoubles(spark, plan, ext, perPart = 32, maxParts = 64)
         .filter(d => !d.isNaN && !d.isInfinite)
-    } catch {
+    }
+    try SkewSampler.cached(spark, "cell", sideKeys(left, lGeom, right, rGeom)) {
+      val all = (sampleExtents(left, lGeom) ++ sampleExtents(right, rGeom)).filter(_ > 0).sorted
+      // pure point clouds: any cell works; keep 1
+      java.lang.Double.valueOf(if (all.isEmpty) 1.0 else 2.0 * all(all.length / 2))
+    }.doubleValue() catch {
       case e: Exception =>
         logWarning(s"spatial-join cellSize=auto sampling failed (${e.getClass.getSimpleName}: " +
-          s"${e.getMessage}); falling back to cellSize=1.0 for this side")
-        Seq.empty
+          s"${e.getMessage}); falling back to cellSize=1.0")
+        1.0
     }
-    val all = (sampleExtents(left, lGeom) ++ sampleExtents(right, rGeom)).filter(_ > 0).sorted
-    val result =
-      if (all.isEmpty) 1.0 // pure point clouds: any cell works; keep 1
-      else 2.0 * all(all.length / 2)
-    cellCache.put(key, result)
-    result
   }
-
-  // hot-tile sets sampled per (plan, geom, cell, expand) — same re-fire
-  // rationale (and the same keying/bounding) as cellCache
-  private val hotCache = SkewSampler.lruMap[(Seq[Long], Boolean, Double)](128)
 
   /** Tiles hot enough to serialize a task, detected from a bounded sample of
     * each side's ANCHOR tile (st_tile_id of the bbox min corner, expanded on
@@ -152,31 +139,28 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def hotTiles(left: LogicalPlan, lGeom: Expression,
                        right: LogicalPlan, rGeom: Expression,
                        cell: Double, expand: Double): (Seq[Long], Boolean, Double) = {
-    val key = s"${sideKey(left, lGeom)}|${sideKey(right, rGeom)}:$cell:$expand"
-    val hit = hotCache.get(key)
-    if (hit != null) return hit
-    def sampleAnchors(plan: LogicalPlan, geom: Expression, exp: Double): Seq[Long] = try {
+    val par = spark.sparkContext.defaultParallelism
+    def sampleAnchors(plan: LogicalPlan, geom: Expression, exp: Double): Seq[Long] = {
       def corner(fn: String): Expression =
         if (exp == 0.0) FnExpr(fn, Seq(geom))
         else Subtract(FnExpr(fn, Seq(geom)), Literal(exp))
       val anchor = Alias(FnExpr("st_tile_id", Seq(
         corner("st_xmin"), corner("st_ymin"), Literal(cell))), "__anchor")()
-      sampleLongs(plan, anchor, perPart = 256, maxParts = 64)
-    } catch {
-      case e: Exception =>
-        logWarning(s"spatial-join hot-tile sampling failed (${e.getClass.getSimpleName}: " +
-          s"${e.getMessage}); salting nothing for this side")
-        Seq.empty
+      SkewSampler.sampleLongs(spark, plan, anchor, perPart = 256, maxParts = 64)
     }
-    val aL = sampleAnchors(left, lGeom, expand)
-    val aR = sampleAnchors(right, rGeom, 0.0)
     // Hot-key + severity math is shared with RangeJoinRule: pair-mass share
     // (product of both sides' sampled densities — the quantity that actually
     // serializes a task), row-share floor, dense-side selection. See
     // SkewSampler.detectSkew for the full rationale and SkewBench numbers.
-    val result = SkewSampler.detectSkew(aL, aR, spark.sparkContext.defaultParallelism)
-    hotCache.put(key, result)
-    result
+    try SkewSampler.cached(spark, "hotTiles",
+        s"${sideKeys(left, lGeom, right, rGeom)}:$cell:$expand:$par") {
+      SkewSampler.detectSkew(sampleAnchors(left, lGeom, expand), sampleAnchors(right, rGeom, 0.0), par)
+    } catch {
+      case e: Exception =>
+        logWarning(s"spatial-join hot-tile sampling failed (${e.getClass.getSimpleName}: " +
+          s"${e.getMessage}); salting nothing")
+        (Nil, true, 0.0)
+    }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {

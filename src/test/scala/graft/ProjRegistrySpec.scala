@@ -171,18 +171,46 @@ class ProjRegistrySpec extends AnyFunSuite {
     anchor("EPSG:26943", -120.5, 36.5, 2000000, 500000)               // CA zone 3
   }
 
-  test("state-plane parameters agree with the authoritative taxi_zones .prj") {
-    // the reference ships the ESRI .prj for NY Long Island (FIPS 3104):
-    // cross-check the registry's EPSG:32118/2263 parameter values against it
-    val prj = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.prj")), "UTF-8")
-    def param(name: String): Double =
-      s"""PARAMETER\\["$name",([-\\d.]+)\\]""".r.findFirstMatchIn(prj).get.group(1).toDouble
-    assert(math.abs(param("Standard_Parallel_1") - (40 + 40 / 60.0)) < 1e-9)
-    assert(math.abs(param("Standard_Parallel_2") - (41 + 2 / 60.0)) < 1e-9)
-    assert(math.abs(param("Latitude_Of_Origin") - (40 + 10 / 60.0)) < 1e-9)
-    assert(param("Central_Meridian") == -74.0)
-    assert(param("False_Easting") == 984250.0) // ftUS, as registered for 2263
+  test("state-plane parameters match the documented NY Long Island (FIPS 3104) values") {
+    // NAD83 New York Long Island (FIPS 3104), as published for the state
+    // plane system and in the ESRI .prj of NYC's taxi zones: Lambert
+    // conformal conic on GRS80, standard parallels 40°40' and 41°02',
+    // latitude of origin 40°10', central meridian -74°, false easting
+    // 300000 m = 984250 ftUS, false northing 0
+    val sp1 = 40 + 40 / 60.0
+    val sp2 = 41 + 2 / 60.0
+    val lat0 = 40 + 10 / 60.0
+    val lon0 = -74.0
+    val feFt = 984250.0
+    val ftus = Proj.lookup("EPSG:2263").get.proj
+    val meters = Proj.lookup("EPSG:32118").get.proj
+    // the origin maps to the false offsets, in both units
+    val (x0, y0) = ftus.forward(lon0, lat0)
+    assert(math.abs(x0 - feFt) < 1e-6 && math.abs(y0) < 1e-6, s"2263 origin -> ($x0, $y0)")
+    val (mx0, my0) = meters.forward(lon0, lat0)
+    assert(math.abs(mx0 - 300000) < 1e-6 && math.abs(my0) < 1e-6, s"32118 origin -> ($mx0, $my0)")
+    assert(math.abs(feFt * Proj.UsFoot - 300000) < 1e-6)
+    // the central meridian is the grid's vertical through the false easting
+    Seq(39.5, 40.75, 41.5).foreach { lat =>
+      assert(math.abs(ftus.forward(lon0, lat)._1 - feFt) < 1e-6, s"lon0 at lat $lat")
+    }
+    // the standard parallels are where the scale along a parallel is exactly
+    // 1 (GRS80 parallel arc vs. grid distance); between them it is below 1
+    def parallelScale(lat: Double): Double = {
+      val a = 6378137.0
+      val f = 1 / 298.257222101
+      val e2 = f * (2 - f)
+      val phi = math.toRadians(lat)
+      val dLon = 1e-4
+      val arc = a / math.sqrt(1 - e2 * math.sin(phi) * math.sin(phi)) * math.cos(phi) *
+        math.toRadians(dLon)
+      val (xa, ya) = meters.forward(lon0 - dLon / 2, lat)
+      val (xb, yb) = meters.forward(lon0 + dLon / 2, lat)
+      math.hypot(xb - xa, yb - ya) / arc
+    }
+    assert(math.abs(parallelScale(sp1) - 1) < 1e-9, s"k at $sp1 = ${parallelScale(sp1)}")
+    assert(math.abs(parallelScale(sp2) - 1) < 1e-9, s"k at $sp2 = ${parallelScale(sp2)}")
+    assert(parallelScale((sp1 + sp2) / 2) < 1 - 1e-6)
     // end-to-end: real taxi zone coordinates (EPSG:2263 ftUS) inverse-project
     // into the NYC lon/lat box
     val crs = Proj.lookup("EPSG:2263").get
