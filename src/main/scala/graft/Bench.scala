@@ -139,12 +139,13 @@ object Bench {
     // default, where the 1.7x threshold was validated by a loaded-control
     // experiment.
     val canaryBad = sys.env.getOrElse("SPARK_GRAFT_CANARY_BAD", "1.7").toDouble
-    // Memo-cold mode (opt-in): clear every content-keyed kernel result memo
-    // before each sample, so repeat runs of kernel-bound queries measure the
-    // cold kernel rather than a prior run's memo hits. Off by default — the
-    // default methodology accepts kernel-granularity memo retention (pure
-    // deterministic kernels, bounded maps) while forbidding plan-level
-    // result reuse; this mode puts the honest-cold number on record too.
+    // Memo-cold mode (opt-in): Graft.clearKernelMemos() before each sample,
+    // so repeat runs of kernel-bound queries measure the cold kernel rather
+    // than a prior run's hits in the JVM-wide KernelMemo. Off by default —
+    // the default methodology accepts kernel results memoized in that one
+    // byte-budgeted map (pure deterministic kernels) while forbidding
+    // plan-level result reuse; this mode puts the honest-cold number on
+    // record too.
     val memoCold = sys.env.getOrElse("SPARK_GRAFT_MEMO_COLD", "false") == "true" ||
       sys.env.get("SPARK_GRAFT_MEMO_COLD").contains("1")
     // pre-bench spin-wait: give a transiently busy host up to 60s to go

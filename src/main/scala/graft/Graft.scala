@@ -367,19 +367,13 @@ object Graft {
     if (!oursT(ci)) tfr.registerFunction(ci, new ExpressionInfo("graft", "st_crs_info"), stCrsInfoPlan _)
   }
 
-  /** Drop every content-keyed kernel RESULT memo (GeoFns, TopoFns,
-    * CompGeomFns maps; Geo's per-thread parse/WKT caches). The bench's
-    * memo-cold mode calls this before each sample so repeat runs of
-    * kernel-bound queries measure the cold kernel rather than a prior run's
-    * memo hits — the kernel-granularity analogue of the cross-run plan-cache
-    * honesty rule. Structural caches (circle tables, CRS registries, datum
-    * grids) are construction artifacts, not results, and are kept. */
-  def clearKernelMemos(): Unit = {
-    graft.functions.GeoFns.clearKernelMemos()
-    graft.functions.TopoFns.clearKernelMemos()
-    graft.functions.CompGeomFns.clearKernelMemos()
-    graft.geom.Geo.clearKernelMemos()
-  }
+  /** Drop every memoized kernel result: the JVM-wide [[KernelMemo]] (its
+    * accounted bytes go to 0) and [[graft.geom.Geo]]'s per-thread parse
+    * caches. Call it before an execution that must measure the kernels cold
+    * rather than a previous execution's memo hits. Structural caches (circle
+    * tables, CRS registries, compiled transforms, datum grids) are
+    * construction artifacts, not results, and are kept. */
+  def clearKernelMemos(): Unit = KernelMemo.clear()
 }
 
 /** `--conf spark.sql.extensions=graft.GraftExtensions` */

@@ -17,7 +17,7 @@ final class LruCache[K, V <: AnyRef](name: String, max: Int, onEvict: V => Unit 
       evict
     }
   }
-  LruCache.register(name, this)
+  LruCache.register(name, () => Seq("hits" -> hits.sum, "misses" -> misses.sum))
 
   /** The cached value for `k`, or else `compute`'s, which is then cached.
     * `compute` runs outside the lock, so a slow one (a Spark job) does not
@@ -45,17 +45,18 @@ final class LruCache[K, V <: AnyRef](name: String, max: Int, onEvict: V => Unit 
 }
 
 object LruCache {
-  private val all = new java.util.concurrent.ConcurrentHashMap[String, LruCache[_, _]]()
+  private val all = new java.util.concurrent.ConcurrentHashMap[String, () => Seq[(String, Long)]]()
 
-  private def register(name: String, c: LruCache[_, _]): Unit = all.put(name, c)
+  private def register(name: String, counters: () => Seq[(String, Long)]): Unit =
+    all.put(name, counters)
+  register("kernelMemo", () => KernelMemo.shared.counters)
 
-  /** `<cache>.hits` and `<cache>.misses` for every cache since JVM start. */
+  /** The one place to read graft's cache counters since JVM start:
+    * `<cache>.hits` and `<cache>.misses` for every cache, and the
+    * [[KernelMemo]]'s `kernelMemo.{hits,misses,clears,bytes}`. */
   def counters: Map[String, Long] = {
     val out = Map.newBuilder[String, Long]
-    all.forEach { (name, c) =>
-      out += s"$name.hits" -> c.hits.sum
-      out += s"$name.misses" -> c.misses.sum
-    }
+    all.forEach((name, c) => c().foreach { case (k, v) => out += s"$name.$k" -> v })
     out.result()
   }
 }

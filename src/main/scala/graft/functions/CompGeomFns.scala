@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.KernelMemo
+import graft.KernelMemo.Op
 import graft.geom.{Geo, Wkb}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StructField, StructType}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -33,90 +35,7 @@ object CompGeomFns {
   }
   private def w(g: Geometry): Array[Byte] = Wkb.write(g)
 
-  /** Bounded content-keyed memo for the heavyweight kernels (same pattern as
-   *  the st_buffer memo in GeoFns): triangulations / hulls / min-bounding
-   *  computations cost 10–1000µs per call while a probe costs ~0.1µs, and real
-   *  corpora repeat geometries heavily (a dimension polygon joined onto
-   *  millions of fact rows). Keyed on the input bytes + a kernel tag + one
-   *  double param; cleared wholesale when full so memory stays bounded
-   *  (≤64k × ≤16KB worst case). Values are WKB byte arrays or read-only
-   *  InternalRows — both are copied on write into UnsafeRows, so sharing one
-   *  instance across rows is safe. */
-  private final class CgKey(val in: Array[Byte], val op: Int, val p: Double) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(in)
-      h = h * 31 + op
-      h * 31 + java.lang.Double.hashCode(p)
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: CgKey => k.op == op && k.p == p && java.util.Arrays.equals(k.in, in)
-      case _ => false
-    }
-  }
-  private val cgMemoMax = 65536
-  private val cgMemoMaxEntryBytes = 16384
-  private val cgMemo = new java.util.concurrent.ConcurrentHashMap[CgKey, AnyRef]()
-  private def keyBytes(raw: Any): Array[Byte] = raw match {
-    case b: Array[Byte] if b.length <= cgMemoMaxEntryBytes => b
-    case s: UTF8String if s.numBytes <= cgMemoMaxEntryBytes => s.getBytes
-    case _ => null
-  }
-  private def memo(op: Int, raw: Any, p: Double)(compute: => AnyRef): AnyRef = {
-    val in = keyBytes(raw)
-    if (in == null) return compute
-    val key = new CgKey(in, op, p)
-    val hit = cgMemo.get(key)
-    if (hit != null) return hit
-    val out = compute
-    val cacheable = out match {
-      case b: Array[Byte] => b.length <= cgMemoMaxEntryBytes
-      case _: GenericInternalRow => true
-      case _: UTF8String => true
-      case _: java.lang.Boolean => true
-      case _ => false
-    }
-    if (cacheable) {
-      if (cgMemo.size >= cgMemoMax) cgMemo.clear()
-      cgMemo.put(key, out)
-    }
-    out
-  }
-
-  /** Pair-keyed memo for the binary kernels (st_relate): the key holds BOTH
-   *  operands' arrays — no `x ++ y` concat, so a cache HIT allocates nothing
-   *  beyond the thread-local probe mutation. Probe keys are per-thread
-   *  mutables used only for get(); stored keys are fresh immutable
-   *  instances. */
-  private final class CgKey2(var a: Array[Byte], var b: Array[Byte], var op: Int) {
-    var hash: Int = 0
-    def rehash(): this.type = {
-      hash = (java.util.Arrays.hashCode(a) * 31 + java.util.Arrays.hashCode(b)) * 31 + op
-      this
-    }
-    override def hashCode: Int = hash
-    override def equals(o: Any): Boolean = o match {
-      case k: CgKey2 => k.op == op && java.util.Arrays.equals(k.a, a) &&
-        java.util.Arrays.equals(k.b, b)
-      case _ => false
-    }
-  }
-  private val cgMemo2 = new java.util.concurrent.ConcurrentHashMap[CgKey2, AnyRef]()
-
-  /** Memo-cold support — see GeoFns.clearKernelMemos. */
-  private[graft] def clearKernelMemos(): Unit = { cgMemo.clear(); cgMemo2.clear() }
-  private val probe2 = new ThreadLocal[CgKey2] {
-    override def initialValue(): CgKey2 = new CgKey2(null, null, 0)
-  }
-  private def memoPair(op: Int, x: Array[Byte], y: Array[Byte])(compute: => AnyRef): AnyRef = {
-    val pk = probe2.get()
-    pk.a = x; pk.b = y; pk.op = op; pk.rehash()
-    val hit = cgMemo2.get(pk)
-    if (hit != null) return hit
-    val out = compute
-    if (cgMemo2.size >= cgMemoMax) cgMemo2.clear()
-    cgMemo2.put(new CgKey2(x, y, op).rehash(), out)
-    out
-  }
+  private val memo = KernelMemo.shared
   private def dbl(a: Any): Double = a.asInstanceOf[Double]
   private val f: GeometryFactory = Geo.factory
 
@@ -278,13 +197,13 @@ object CompGeomFns {
     // whole geometry per call, and corpora repeat polygons heavily (the
     // bench's 400-distinct-polygon column pays 400 rebuilds, not millions)
     fn("st_forcepolygoncw", B, Seq(B))(a =>
-      memo(20, a(0), 0)(w(forceOrient(rg(a(0)), exteriorCW = true))))
+      memo(Op.ForcePolygonCw, a(0))(w(forceOrient(rg(a(0)), exteriorCW = true))))
     fn("st_forcepolygonccw", B, Seq(B))(a =>
-      memo(21, a(0), 0)(w(forceOrient(rg(a(0)), exteriorCW = false))))
+      memo(Op.ForcePolygonCcw, a(0))(w(forceOrient(rg(a(0)), exteriorCW = false))))
     fn("st_ispolygoncw", org.apache.spark.sql.types.BooleanType, Seq(B))(a =>
-      memo(22, a(0), 0)(java.lang.Boolean.valueOf(isOriented(rg(a(0)), exteriorCW = true))))
+      memo(Op.IsPolygonCw, a(0))(java.lang.Boolean.valueOf(isOriented(rg(a(0)), exteriorCW = true))))
     fn("st_ispolygonccw", org.apache.spark.sql.types.BooleanType, Seq(B))(a =>
-      memo(23, a(0), 0)(java.lang.Boolean.valueOf(isOriented(rg(a(0)), exteriorCW = false))))
+      memo(Op.IsPolygonCcw, a(0))(java.lang.Boolean.valueOf(isOriented(rg(a(0)), exteriorCW = false))))
     // angle P1-P2-P3 at the P2 vertex, measured clockwise from P2->P1 to
     // P2->P3 (PostGIS ST_Angle 3-point form); null on degenerate rays
     fn("st_angle", D, Seq(B, B, B)) { a =>
@@ -300,16 +219,16 @@ object CompGeomFns {
       }
     }
     fn("st_segmentize", B, Seq(B, D))(a =>
-      memo(1, a(0), dbl(a(1)))(w(segmentize(rg(a(0)), dbl(a(1))))))
+      memo(Op.Segmentize, a(0), dbl(a(1)))(w(segmentize(rg(a(0)), dbl(a(1))))))
     fn("st_orientedenvelope", B, Seq(B))(a =>
-      memo(2, a(0), 0)(w(MinimumDiameter.getMinimumRectangle(rg(a(0))))))
+      memo(Op.OrientedEnvelope, a(0))(w(MinimumDiameter.getMinimumRectangle(rg(a(0))))))
     fn("st_minimumrotatedrectangle", B, Seq(B))(a =>
-      memo(2, a(0), 0)(w(MinimumDiameter.getMinimumRectangle(rg(a(0))))))
+      memo(Op.OrientedEnvelope, a(0))(w(MinimumDiameter.getMinimumRectangle(rg(a(0))))))
     fn("st_minimumboundingcircle", B, Seq(B))(a =>
-      memo(3, a(0), 0)(w(new MinimumBoundingCircle(rg(a(0))).getCircle)))
+      memo(Op.MinimumBoundingCircle, a(0))(w(new MinimumBoundingCircle(rg(a(0))).getCircle)))
     fn("st_minimumboundingradius",
       StructType(Seq(StructField("center", B), StructField("radius", D))), Seq(B)) { a =>
-      memo(4, a(0), 0) {
+      memo(Op.MinimumBoundingRadius, a(0)) {
         val mbc = new MinimumBoundingCircle(rg(a(0)))
         val c = mbc.getCentre
         new GenericInternalRow(Array[Any](
@@ -322,7 +241,7 @@ object CompGeomFns {
     fn("st_maximuminscribedcircle",
       StructType(Seq(StructField("center", B), StructField("nearest", B),
         StructField("radius", D))), Seq(B, D)) { a =>
-      memo(10, a(0), dbl(a(1))) {
+      memo(Op.MaximumInscribedCircle, a(0), dbl(a(1))) {
         val mic = new org.locationtech.jts.algorithm.construct.MaximumInscribedCircle(
           rg(a(0)), dbl(a(1)))
         new GenericInternalRow(Array[Any](
@@ -334,7 +253,7 @@ object CompGeomFns {
     fn("st_largestemptycircle",
       StructType(Seq(StructField("center", B), StructField("nearest", B),
         StructField("radius", D))), Seq(B, D)) { a =>
-      memo(11, a(0), dbl(a(1))) {
+      memo(Op.LargestEmptyCircle, a(0), dbl(a(1))) {
         // null boundary = obstacles' convex hull (the PostGIS default)
         val lec = new org.locationtech.jts.algorithm.construct.LargestEmptyCircle(
           rg(a(0)), null, dbl(a(1)))
@@ -345,14 +264,14 @@ object CompGeomFns {
     fn("st_snap", B, Seq(B, B, D))(a =>
       w(new GeometrySnapper(rg(a(0))).snapTo(rg(a(1)), dbl(a(2)))))
     fn("st_delaunaytriangles", B, Seq(B)) { a =>
-      memo(5, a(0), 0) {
+      memo(Op.DelaunayTriangles, a(0)) {
         val b = new DelaunayTriangulationBuilder
         b.setSites(rg(a(0)))
         w(b.getTriangles(f))
       }
     }
     fn("st_voronoipolygons", B, Seq(B)) { a =>
-      memo(6, a(0), 0) {
+      memo(Op.VoronoiPolygons, a(0)) {
         val b = new VoronoiDiagramBuilder
         b.setSites(rg(a(0)))
         w(b.getDiagram(f))
@@ -362,7 +281,7 @@ object CompGeomFns {
     // crossings become endpoints. JTS's unary union over linework performs
     // exactly this noding.
     fn("st_node", B, Seq(B)) { a =>
-      memo(13, a(0), 0) {
+      memo(Op.Node, a(0)) {
         val g = rg(a(0))
         val lines = scala.collection.mutable.ArrayBuffer.empty[Geometry]
         g.apply(new GeometryComponentFilter {
@@ -378,7 +297,7 @@ object CompGeomFns {
     }
     // PostGIS ST_VoronoiLines: the diagram's cell boundaries as linework
     fn("st_voronoilines", B, Seq(B)) { a =>
-      memo(12, a(0), 0) {
+      memo(Op.VoronoiLines, a(0)) {
         val b = new VoronoiDiagramBuilder
         b.setSites(rg(a(0)))
         val d = b.getDiagram(f)
@@ -395,9 +314,9 @@ object CompGeomFns {
     // JTS edge-length-threshold variant (ConcaveHull.concaveHullByLength):
     // maxLen >= the diameter degrades to the convex hull
     fn("st_concavehull", B, Seq(B, D))(a =>
-      memo(7, a(0), dbl(a(1)))(w(ConcaveHull.concaveHullByLength(rg(a(0)), dbl(a(1))))))
+      memo(Op.ConcaveHull, a(0), dbl(a(1)))(w(ConcaveHull.concaveHullByLength(rg(a(0)), dbl(a(1))))))
     fn("st_subdivide", B, Seq(B, org.apache.spark.sql.types.IntegerType))(a =>
-      memo(9, a(0), a(1).asInstanceOf[Int].toDouble)(
+      memo(Op.Subdivide, a(0), n = a(1).asInstanceOf[Int])(
         w(subdivide(rg(a(0)), a(1).asInstanceOf[Int]))))
     // 1-indexed member accessor (PostGIS ST_GeometryN); null out of range
     fn("st_geometryn", B, Seq(B, org.apache.spark.sql.types.IntegerType)) { a =>
@@ -411,13 +330,8 @@ object CompGeomFns {
     // dimension-table patterns relate the same geometry pair across millions
     // of rows, so the pair memo collapses them to one topology build each
     fn("st_relate", org.apache.spark.sql.types.StringType, Seq(B, B)) { a =>
-      (a(0), a(1)) match {
-        case (x: Array[Byte], y: Array[Byte])
-            if x.length <= cgMemoMaxEntryBytes && y.length <= cgMemoMaxEntryBytes =>
-          memoPair(8, x, y)(
-            UTF8String.fromString(rg(x).relate(rg(y)).toString))
-        case _ => UTF8String.fromString(rg(a(0)).relate(rg(a(1))).toString)
-      }
+      memo.pair(Op.Relate, a(0), a(1))(
+        UTF8String.fromString(rg(a(0)).relate(rg(a(1))).toString))
     }
     fn("st_relatematch",
       org.apache.spark.sql.types.BooleanType,

@@ -242,7 +242,7 @@ object GeoAggregates {
   }
 
   /** Hash key over WKB bytes. Mutable so the update hot path can probe with
-    * one reusable per-thread instance (the CompGeomFns cgMemo2 pattern) —
+    * one reusable per-thread instance (the KernelMemo probe pattern) —
     * stored keys are always fresh instances over cloned arrays and are never
     * mutated after insertion. */
   final class WkbKey(w0: Array[Byte]) {

@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.KernelMemo
+import graft.KernelMemo.Op
 import graft.geom.{Curves, Geo, GeoHash, GeoJson, Wkb, Wkt}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -274,127 +276,11 @@ object GeoFns {
     f.createPolygon(cs)
   }
 
-  /** Memoization for expensive buffer kernels. Real corpora repeat geometries
-   *  heavily (a zone polygon joined onto millions of event rows buffers the
-   *  same bytes every time), and one small-geometry BufferOp costs ~40µs vs
-   *  ~0.1µs for a probe. Shared across task threads, bounded by entry count
-   *  and per-entry size; cleared wholesale when full — the simplest eviction
-   *  that keeps memory bounded (≈ max 128k × ≤16KB, hit in practice only by
-   *  adversarial input). Values are WKB bytes: BinaryType results are copied
-   *  into UnsafeRows on write, so sharing one array across rows is safe. */
-  private final class BufferKey(val wkb: Array[Byte], val dist: Double, val segs: Int,
-      val cap: Int, val join: Int, val mitre: Double) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(wkb)
-      h = h * 31 + java.lang.Double.hashCode(dist)
-      h = (h * 31 + segs) * 31 + cap
-      (h * 31 + join) * 31 + java.lang.Double.hashCode(mitre)
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: BufferKey => k.dist == dist && k.segs == segs && k.cap == cap &&
-        k.join == join && k.mitre == mitre && java.util.Arrays.equals(k.wkb, wkb)
-      case _ => false
-    }
-  }
-  private final class XformKey(val wkb: Array[Byte], val from: String, val to: String,
-      val xy: Boolean) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(wkb)
-      h = h * 31 + from.hashCode
-      h = h * 31 + to.hashCode
-      h * 31 + (if (xy) 1 else 0)
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: XformKey => k.xy == xy && k.from == from && k.to == to &&
-        java.util.Arrays.equals(k.wkb, wkb)
-      case _ => false
-    }
-  }
-  private val xformMemoMax = 131072
-  private val xformMemoMaxEntryBytes = 16384
-  private val xformMemo = new java.util.concurrent.ConcurrentHashMap[XformKey, Array[Byte]]()
-
-  private val bufferMemoMax = 131072
-  private val bufferMemoMaxEntryBytes = 16384
-  private val bufferMemo = new java.util.concurrent.ConcurrentHashMap[BufferKey, Array[Byte]]()
-
-  /** Generic single-input kernel memo — the TopoFns pattern brought to the
-   *  GeoFns kernels that still ran per row (IsValidOp, GeometryFixer,
-   *  simplifiers, convex hull): content-keyed, bounded, cleared wholesale
-   *  when full. Op codes are local to this map. */
-  private final class GKey(val in: Array[Byte], val op: Int, val p: Double) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(in)
-      h = h * 31 + op
-      h * 31 + java.lang.Double.hashCode(p)
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: GKey => k.op == op && k.p == p && java.util.Arrays.equals(k.in, in)
-      case _ => false
-    }
-  }
-  private val gMemo = new java.util.concurrent.ConcurrentHashMap[GKey, AnyRef]()
-
-  /** Drop every content-keyed kernel RESULT memo in this object — the bench's
-    * memo-cold mode (spark.graft / SPARK_GRAFT_MEMO_COLD) calls this per
-    * sample so repeat runs measure the cold kernel rather than a prior run's
-    * memo hits. Structural caches (circle tables, CRS id lookups) are NOT
-    * results and stay. */
-  private[graft] def clearKernelMemos(): Unit = {
-    gMemo.clear(); bufferMemo.clear(); bufferAreaMemo.clear(); xformMemo.clear()
-  }
-  private def gMemo1(op: Int, raw: Any, p: Double = 0.0)(compute: => AnyRef): AnyRef = raw match {
-    case in: Array[Byte] if in.length <= bufferMemoMaxEntryBytes =>
-      val key = new GKey(in, op, p)
-      val hit = gMemo.get(key)
-      if (hit != null) return hit
-      val out = compute
-      val ok = out match {
-        case b: Array[Byte] => b.length <= bufferMemoMaxEntryBytes
-        case _: java.lang.Boolean | _: java.lang.Double => true
-        case _ => false
-      }
-      if (ok) {
-        if (gMemo.size >= bufferMemoMax) gMemo.clear()
-        gMemo.put(key, out)
-      }
-      out
-    case _ => compute
-  }
-  // fused-measure memo (st_buffer_area): value is the area double, and the
-  // probe happens BEFORE the input WKB is parsed — a memo hit costs one hash
-  // lookup, no JTS at all
-  private val bufferAreaMemo = new java.util.concurrent.ConcurrentHashMap[BufferKey, java.lang.Double]()
-  private def memoBufferArea(raw: Any, dist: Double, segs: Int, cap: Int, join: Int,
-      mitre: Double)(compute: => Double): Double = raw match {
-    case in: Array[Byte] if in.length <= bufferMemoMaxEntryBytes =>
-      val key = new BufferKey(in, dist, segs, cap, join, mitre)
-      val hit = bufferAreaMemo.get(key)
-      if (hit != null) hit.doubleValue
-      else {
-        val out = compute
-        if (bufferAreaMemo.size >= bufferMemoMax) bufferAreaMemo.clear()
-        bufferAreaMemo.put(key, java.lang.Double.valueOf(out))
-        out
-      }
-    case _ => compute
-  }
-  private def memoBuffer(raw: Any, dist: Double, segs: Int, cap: Int, join: Int,
-      mitre: Double)(compute: => Array[Byte]): Array[Byte] = raw match {
-    case in: Array[Byte] if in.length <= bufferMemoMaxEntryBytes =>
-      val key = new BufferKey(in, dist, segs, cap, join, mitre)
-      val hit = bufferMemo.get(key)
-      if (hit != null) hit
-      else {
-        val out = compute
-        if (out != null && out.length <= bufferMemoMaxEntryBytes) {
-          if (bufferMemo.size >= bufferMemoMax) bufferMemo.clear()
-          bufferMemo.put(key, out)
-        }
-        out
-      }
-    case _ => compute
-  }
+  private val memo = KernelMemo.shared
+  // The buffer kernels' style ints packed into one key param; the 2- and
+  // 3-arg arities pass -1 for cap and join, which no style maps to.
+  private def bufferStyle(segs: Int, cap: Int, join: Int): Long =
+    (segs.toLong << 32) | ((cap & 0xffffL) << 16) | (join & 0xffffL)
 
   /** Directed line merge (reference: GEOSLineMergeDirected_r via
    *  geos/functions/scalar/st_linemerge.cpp:31-38): chains lines strictly
@@ -982,7 +868,7 @@ object GeoFns {
   // (x, y) => (lon, lat) closure held in a bounded cache; the closure bodies
   // are the former match arms verbatim, so results are bit-identical
   // (guide §4: per-row work). These are construction artifacts like the CRS
-  // registries, not result memos — clearKernelMemos leaves them alone.
+  // registries, not result memos — KernelMemo.clear leaves them alone.
   private val toWgsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Boolean), (Double, Double) => (Double, Double)]()
   private val fromWgsCache =
@@ -1478,8 +1364,8 @@ object GeoFns {
     gB("st_isring")(g => g match { case l: LineString => l.isClosed && l.isSimple; case _ => false })
     gB("st_issimple")(_.isSimple)
     // IsValidOp is a full topology check — memoized (repeated constructed
-    // shapes dominate real corpora; see gMemo1)
-    fn("st_isvalid", BO, Seq(B))(a => gMemo1(1, a(0))(
+    // shapes dominate real corpora; see graft.KernelMemo)
+    fn("st_isvalid", BO, Seq(B))(a => memo(Op.IsValid, a(0))(
       java.lang.Boolean.valueOf(new IsValidOp(rg(a(0))).isValid)))
     gG("st_startpoint")(g => g match { case l: LineString if !l.isEmpty => l.getStartPoint; case _ => null })
     gG("st_endpoint")(g => g match { case l: LineString if !l.isEmpty => l.getEndPoint; case _ => null })
@@ -1810,7 +1696,8 @@ object GeoFns {
         val segs = if (a.length > 2) int(a(2)) else 8
         g match {
           case p: Point if dist > 0 && segs >= 1 && !p.isEmpty => w(pointCircle(p, dist, segs))
-          case _ => memoBuffer(a(0), dist, segs, -1, -1, 0.0)(w(BufferOp.bufferOp(g, dist, segs)))
+          case _ =>
+            memo(Op.Buffer, a(0), dist, n = bufferStyle(segs, -1, -1))(w(BufferOp.bufferOp(g, dist, segs)))
         }
       } else {
         val cap = bufferEnum("cap style", str(a(3)), bufferCapStyles)
@@ -1827,7 +1714,7 @@ object GeoFns {
               case _ => w(pointSquare(p, dist))
             }
           case _ =>
-            memoBuffer(a(0), dist, segs, cap, join, mitre) {
+            memo(Op.Buffer, a(0), dist, mitre, bufferStyle(segs, cap, join)) {
               val bp = new BufferParameters(segs, cap, join, mitre)
               w(new BufferOp(g, bp).getResultGeometry(dist))
             }
@@ -1844,18 +1731,18 @@ object GeoFns {
       val dist = dbl(a(1))
       if (a.length <= 3) {
         val segs = if (a.length > 2) int(a(2)) else 8
-        memoBufferArea(a(0), dist, segs, -1, -1, 0.0) {
-          rg(a(0)) match {
+        memo(Op.BufferArea, a(0), dist, n = bufferStyle(segs, -1, -1)) {
+          java.lang.Double.valueOf(rg(a(0)) match {
             case p: Point if dist > 0 && segs >= 1 && !p.isEmpty => pointCircle(p, dist, segs).getArea
             case g => BufferOp.bufferOp(g, dist, segs).getArea
-          }
+          })
         }
       } else {
         val cap = bufferEnum("cap style", str(a(3)), bufferCapStyles)
         val join = bufferEnum("join style", str(a(4)), bufferJoinStyles)
         val segs = int(a(2)); val mitre = dbl(a(5))
-        memoBufferArea(a(0), dist, segs, cap, join, mitre) {
-          rg(a(0)) match {
+        memo(Op.BufferArea, a(0), dist, mitre, bufferStyle(segs, cap, join)) {
+          java.lang.Double.valueOf(rg(a(0)) match {
             case p: Point if dist > 0 && segs >= 1 && !p.isEmpty =>
               cap match {
                 case BufferParameters.CAP_ROUND => pointCircle(p, dist, segs).getArea
@@ -1865,11 +1752,11 @@ object GeoFns {
             case g =>
               val bp = new BufferParameters(segs, cap, join, mitre)
               new BufferOp(g, bp).getResultGeometry(dist).getArea
-          }
+          })
         }
       }
     }
-    fn("st_convexhull", B, Seq(B))(a => gMemo1(5, a(0)) {
+    fn("st_convexhull", B, Seq(B))(a => memo(Op.ConvexHull, a(0)) {
       val r = rg(a(0)).convexHull()
       if (r == null) null else w(r) // gG's null-result guard: SQL NULL, not NPE
     })
@@ -2027,7 +1914,7 @@ object GeoFns {
     fn("st_reduceprecision", B, Seq(B, D)) { a =>
       val grid = dbl(a(1))
       require(grid > 0, "ST_ReducePrecision: grid size must be > 0")
-      gMemo1(6, a(0), grid)(
+      memo(Op.ReducePrecision, a(0), grid)(
         w(GeometryPrecisionReducer.reduce(rg(a(0)), new PrecisionModel(1.0 / grid))))
     }
     fn("st_removerepeatedpoints", B, Seq(B), Seq(B, D)) { a =>
@@ -2088,11 +1975,11 @@ object GeoFns {
         }
       }))
     }
-    fn("st_simplify", B, Seq(B, D))(a => gMemo1(2, a(0), dbl(a(1)))(
+    fn("st_simplify", B, Seq(B, D))(a => memo(Op.Simplify, a(0), dbl(a(1)))(
       w(DouglasPeuckerSimplifier.simplify(rg(a(0)), dbl(a(1))))))
-    fn("st_simplifypreservetopology", B, Seq(B, D))(a => gMemo1(3, a(0), dbl(a(1)))(
+    fn("st_simplifypreservetopology", B, Seq(B, D))(a => memo(Op.SimplifyPreserveTopology, a(0), dbl(a(1)))(
       w(TopologyPreservingSimplifier.simplify(rg(a(0)), dbl(a(1))))))
-    fn("st_makevalid", B, Seq(B))(a => gMemo1(4, a(0)) {
+    fn("st_makevalid", B, Seq(B))(a => memo(Op.MakeValid, a(0)) {
       val g = rg(a(0))
       val r = if (g.isValid) g else GeometryFixer.fix(g)
       if (r == null) null else w(r) // gG's null-result guard: SQL NULL, not NPE
@@ -2113,34 +2000,20 @@ object GeoFns {
     gG("st_pointonsurface")(_.getInteriorPoint)
 
     // ---- CRS
-    // Content-keyed memo, same rationale as the buffer/compgeom memos:
-    // grid-snapped and dimension-joined corpora repeat coordinates heavily,
-    // and a projection kernel (trig + iteration + possibly a grid shift)
-    // costs orders of magnitude more than a probe. Bounded, cleared
-    // wholesale when full.
+    // Memoized like the other kernels: grid-snapped and dimension-joined
+    // corpora repeat coordinates heavily, and a projection kernel (trig +
+    // iteration + possibly a grid shift) costs far more than a probe.
     fn("st_transform", B, Seq(B, S, S), Seq(B, S, S, BO)) { a =>
       val alwaysXy = a.length > 3 && a(3).asInstanceOf[Boolean]
-      val from = str(a(1)); val to = str(a(2))
+      val from = a(1).asInstanceOf[UTF8String]; val to = a(2).asInstanceOf[UTF8String]
       a(0) match {
-        case in: Array[Byte] if in.length <= xformMemoMaxEntryBytes =>
-          val key = new XformKey(in, from, to, alwaysXy)
-          val hit = xformMemo.get(key)
-          if (hit != null) hit
-          else {
-            val p = xprep(from, to, alwaysXy)
+        case in: Array[Byte] =>
+          memo(Op.Transform, in, n = if (alwaysXy) 1 else 0, s = from, t = to) {
+            val p = xprep(from.toString, to.toString, alwaysXy)
             val fast = transformPointWkb(in, p)
-            val out = if (fast != null) fast else w(transformGeomPrepped(rg(in), p))
-            // Insertion stops at the cap instead of clearing the whole map:
-            // a distinct-input space past the cap (e.g. q_transform_vgrid's
-            // 3.2M points vs 131k entries) made every put cycle through
-            // clear() storms for a ~2% hit rate; first-come-keep has the
-            // same ~hit rate there, keeps small spaces fully hot, and does
-            // no wholesale eviction work on the hot path.
-            if (out.length <= xformMemoMaxEntryBytes && xformMemo.size < xformMemoMax)
-              xformMemo.put(key, out)
-            out
+            if (fast != null) fast else w(transformGeomPrepped(rg(in), p))
           }
-        case other => w(transformGeom(rg(other), from, to, alwaysXy))
+        case other => w(transformGeom(rg(other), from.toString, to.toString, alwaysXy))
       }
     }
 

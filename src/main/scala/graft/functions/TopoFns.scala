@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.KernelMemo
+import graft.KernelMemo.Op
 import graft.geom.{Geo, Wkb}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DoubleType, IntegerType}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -44,96 +46,7 @@ object TopoFns {
   private def dbl(a: Any): Double = a.asInstanceOf[Double]
   private val f: GeometryFactory = Geo.factory
 
-  /** Bounded content-keyed memo — the CompGeomFns/st_buffer pattern: the
-   *  topology kernels cost 10µs–1ms per call while a probe costs ~0.1µs, and
-   *  real corpora repeat geometries heavily. Cleared wholesale when full so
-   *  memory stays bounded. Op codes are local to this map. */
-  private final class TKey(val in: Array[Byte], val op: Int, val p: Double, val q: Int) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(in)
-      h = h * 31 + op
-      h = h * 31 + java.lang.Double.hashCode(p)
-      h * 31 + q
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: TKey => k.op == op && k.p == p && k.q == q && java.util.Arrays.equals(k.in, in)
-      case _ => false
-    }
-  }
-  private val memoMax = 65536
-  private val memoMaxEntryBytes = 16384
-  private val tMemo = new java.util.concurrent.ConcurrentHashMap[TKey, AnyRef]()
-  private def memo(op: Int, raw: Any, p: Double, q: Int = 0)(compute: => AnyRef): AnyRef = {
-    val in = raw match {
-      case b: Array[Byte] if b.length <= memoMaxEntryBytes => b
-      case s: UTF8String if s.numBytes <= memoMaxEntryBytes => s.getBytes
-      case _ => null
-    }
-    if (in == null) return compute
-    val key = new TKey(in, op, p, q)
-    val hit = tMemo.get(key)
-    if (hit != null) return hit
-    val out = compute
-    val ok = out match {
-      case b: Array[Byte] => b.length <= memoMaxEntryBytes
-      case _: java.lang.Double => true
-      // small immutable id arrays (st_clusterdbscan); bounded like bytes
-      case g: GenericArrayData => g.numElements <= 4096
-      case _ => false
-    }
-    if (ok) {
-      if (tMemo.size >= memoMax) tMemo.clear()
-      tMemo.put(key, out)
-    }
-    out
-  }
-
-  /** Two-sided content key — the st_relate pattern (CompGeomFns): binary
-   *  topology kernels (st_split, st_sharedpaths) take a geometry PAIR, and
-   *  real corpora repeat pairs heavily (≤ ~8k distinct shapes over 60k rows
-   *  in the contract data). Same bounded-clear policy as the single memo. */
-  private final class TKey2(val a: Array[Byte], val b: Array[Byte], val op: Int,
-      val p: Double) {
-    override val hashCode: Int = {
-      var h = java.util.Arrays.hashCode(a)
-      h = h * 31 + java.util.Arrays.hashCode(b)
-      h = h * 31 + op
-      h * 31 + java.lang.Double.hashCode(p)
-    }
-    override def equals(o: Any): Boolean = o match {
-      case k: TKey2 => k.op == op && k.p == p &&
-        java.util.Arrays.equals(k.a, a) && java.util.Arrays.equals(k.b, b)
-      case _ => false
-    }
-  }
-  private val tMemo2 = new java.util.concurrent.ConcurrentHashMap[TKey2, AnyRef]()
-
-  /** Memo-cold support — see GeoFns.clearKernelMemos. */
-  private[graft] def clearKernelMemos(): Unit = { tMemo.clear(); tMemo2.clear() }
-  private def memo2(op: Int, rawA: Any, rawB: Any, p: Double = 0.0)(
-      compute: => AnyRef): AnyRef = {
-    def bytes(raw: Any): Array[Byte] = raw match {
-      case b: Array[Byte] if b.length <= memoMaxEntryBytes => b
-      case s: UTF8String if s.numBytes <= memoMaxEntryBytes => s.getBytes
-      case _ => null
-    }
-    val a = bytes(rawA); val b = bytes(rawB)
-    if (a == null || b == null) return compute
-    val key = new TKey2(a, b, op, p)
-    val hit = tMemo2.get(key)
-    if (hit != null) return hit
-    val out = compute
-    val ok = out match {
-      case bs: Array[Byte] => bs.length <= memoMaxEntryBytes
-      case _: java.lang.Double => true // measure kernels (hausdorff/fréchet)
-      case _ => false
-    }
-    if (ok) {
-      if (tMemo2.size >= memoMax) tMemo2.clear()
-      tMemo2.put(key, out)
-    }
-    out
-  }
+  private val memo = KernelMemo.shared
 
   /** Every LineString component of a geometry (polygon rings included). */
   private def linework(g: Geometry): Seq[LineString] = {
@@ -150,23 +63,26 @@ object TopoFns {
   private def members(g: Geometry): Seq[Geometry] =
     (0 until g.getNumGeometries).map(g.getGeometryN)
 
-  /** Noded faces of a geometry's linework (polygonizer over the unary union,
-   *  which performs full noding — crossings become endpoints). */
-  private def faces(g: Geometry): Seq[Polygon] = {
-    val lines = linework(g)
+  /** Noded faces of a set of lines (polygonizer over their unary union,
+   *  which performs full noding — crossings become endpoints), normalized
+   *  and sorted: the polygonizer walks a hash set, so its ring start points
+   *  and face order would otherwise change from call to call. */
+  private def faces(lines: Seq[LineString]): Seq[Polygon] = {
     if (lines.isEmpty) return Nil
     val noded = UnaryUnionOp.union(java.util.Arrays.asList(lines: _*))
     val pz = new Polygonizer()
     pz.add(noded)
     import scala.jdk.CollectionConverters._
-    pz.getPolygons.asScala.toSeq.asInstanceOf[Seq[Polygon]]
+    val fs = pz.getPolygons.asScala.toSeq.asInstanceOf[Seq[Polygon]]
+    fs.foreach(_.normalize())
+    fs.sortWith(_.compareTo(_) < 0)
   }
 
   /** ST_Polygonize over a collected set of lines: the faces formed by fully
    *  noded linework, as a GeometryCollection (PostGIS's aggregate form is
    *  spelled st_polygonize(st_collect_agg(g))). */
   def polygonize(g: Geometry): Geometry =
-    f.createGeometryCollection(faces(g).toArray)
+    f.createGeometryCollection(faces(linework(g)).toArray)
 
   /** ST_BuildArea: areal geometry from constituent linework — rings at odd
    *  nesting depth become holes, even depth becomes land again
@@ -176,7 +92,7 @@ object TopoFns {
    *  not its parent) and the result is simply the union of even-depth
    *  faces. */
   def buildArea(g: Geometry): Geometry = {
-    val fs = faces(g)
+    val fs = faces(linework(g))
     if (fs.isEmpty) return f.createGeometryCollection()
     val shells = fs.map(p => f.createPolygon(p.getExteriorRing.getCoordinateSequence))
     val pts = fs.map(_.getInteriorPoint)
@@ -217,12 +133,7 @@ object TopoFns {
         if (comps.isEmpty) Seq(g) else comps
       case (2, 1) =>
         // faces of (boundary ∪ blade) that lie inside the input polygon
-        val lines = linework(g) ++ linework(blade)
-        val noded = UnaryUnionOp.union(java.util.Arrays.asList(lines: _*))
-        val pz = new Polygonizer()
-        pz.add(noded)
-        import scala.jdk.CollectionConverters._
-        val inside = pz.getPolygons.asScala.toSeq.asInstanceOf[Seq[Polygon]]
+        val inside = faces(linework(g) ++ linework(blade))
           .filter(face => g.contains(face.getInteriorPoint))
         if (inside.isEmpty) Seq(g) else inside
       case (dg, db) =>
@@ -488,27 +399,27 @@ object TopoFns {
   }
 
   def load(): Unit = {
-    fn("st_unaryunion", B, Seq(B))(a => memo(30, a(0), 0)(w(UnaryUnionOp.union(rg(a(0))))))
-    fn("st_polygonize", B, Seq(B))(a => memo(31, a(0), 0)(w(polygonize(rg(a(0))))))
-    fn("st_buildarea", B, Seq(B))(a => memo(32, a(0), 0)(w(buildArea(rg(a(0))))))
-    fn("st_split", B, Seq(B, B))(a => memo2(40, a(0), a(1))(w(split(rg(a(0)), rg(a(1))))))
-    fn("st_sharedpaths", B, Seq(B, B))(a => memo2(41, a(0), a(1))(w(sharedPaths(rg(a(0)), rg(a(1))))))
+    fn("st_unaryunion", B, Seq(B))(a => memo(Op.UnaryUnion, a(0))(w(UnaryUnionOp.union(rg(a(0))))))
+    fn("st_polygonize", B, Seq(B))(a => memo(Op.Polygonize, a(0))(w(polygonize(rg(a(0))))))
+    fn("st_buildarea", B, Seq(B))(a => memo(Op.BuildArea, a(0))(w(buildArea(rg(a(0))))))
+    fn("st_split", B, Seq(B, B))(a => memo.pair(Op.Split, a(0), a(1))(w(split(rg(a(0)), rg(a(1))))))
+    fn("st_sharedpaths", B, Seq(B, B))(a => memo.pair(Op.SharedPaths, a(0), a(1))(w(sharedPaths(rg(a(0)), rg(a(1))))))
     // positive distance offsets left of the line direction (PostGIS/GEOS)
     fn("st_offsetcurve", B, Seq(B, D))(a =>
-      memo(33, a(0), dbl(a(1)))(w(OffsetCurve.getCurve(rg(a(0)), dbl(a(1))))))
+      memo(Op.OffsetCurve, a(0), dbl(a(1)))(w(OffsetCurve.getCurve(rg(a(0)), dbl(a(1))))))
     fn("st_triangulatepolygon", B, Seq(B))(a =>
-      memo(34, a(0), 0)(w(ConstrainedDelaunayTriangulator.triangulate(rg(a(0))))))
+      memo(Op.TriangulatePolygon, a(0))(w(ConstrainedDelaunayTriangulator.triangulate(rg(a(0))))))
     fn("st_minimumclearance", D, Seq(B))(a =>
-      memo(35, a(0), 0)(java.lang.Double.valueOf(MinimumClearance.getDistance(rg(a(0))))))
+      memo(Op.MinimumClearance, a(0))(java.lang.Double.valueOf(MinimumClearance.getDistance(rg(a(0))))))
     fn("st_minimumclearanceline", B, Seq(B))(a =>
-      memo(36, a(0), 0)(w(MinimumClearance.getLine(rg(a(0))))))
+      memo(Op.MinimumClearanceLine, a(0))(w(MinimumClearance.getLine(rg(a(0))))))
     // the discrete measure kernels are O(n·m) over the densified vertex sets
     // — memoized two-sided like st_split/st_sharedpaths (the optional
     // densify fraction is a key dimension so variants never collide)
     fn("st_hausdorffdistance", D, Seq(B, B), Seq(B, B, D)) { a =>
-      if (a.length == 3) memo2(45, a(0), a(1), dbl(a(2)))(java.lang.Double.valueOf(
+      if (a.length == 3) memo.pair(Op.HausdorffDensify, a(0), a(1), dbl(a(2)))(java.lang.Double.valueOf(
         DiscreteHausdorffDistance.distance(rg(a(0)), rg(a(1)), dbl(a(2)))))
-      else memo2(46, a(0), a(1))(java.lang.Double.valueOf(
+      else memo.pair(Op.Hausdorff, a(0), a(1))(java.lang.Double.valueOf(
         DiscreteHausdorffDistance.distance(rg(a(0)), rg(a(1)))))
     }
     // JTS's discrete Fréchet has no densify knob — densify the inputs to the
@@ -517,7 +428,7 @@ object TopoFns {
       if (a.length == 3) {
         val frac = dbl(a(2))
         require(frac > 0 && frac <= 1, s"densify fraction must be in (0, 1], got $frac")
-        memo2(47, a(0), a(1), frac) {
+        memo.pair(Op.FrechetDensify, a(0), a(1), frac) {
           def dens(g: Geometry): Geometry = {
             val e = g.getEnvelopeInternal
             val diag = math.hypot(e.getWidth, e.getHeight)
@@ -526,12 +437,12 @@ object TopoFns {
           java.lang.Double.valueOf(
             DiscreteFrechetDistance.distance(dens(rg(a(0))), dens(rg(a(1)))))
         }
-      } else memo2(48, a(0), a(1))(java.lang.Double.valueOf(
+      } else memo.pair(Op.Frechet, a(0), a(1))(java.lang.Double.valueOf(
         DiscreteFrechetDistance.distance(rg(a(0)), rg(a(1)))))
     }
     fn("st_geometricmedian", B, Seq(B), Seq(B, D)) { a =>
       val tol = if (a.length == 2) dbl(a(1)) else 1e-8
-      memo(37, a(0), tol)(w(geometricMedian(rg(a(0)), tol)))
+      memo(Op.GeometricMedian, a(0), tol)(w(geometricMedian(rg(a(0)), tol)))
     }
     fn("st_boundingdiagonal", B, Seq(B)) { a =>
       val g = rg(a(0))
@@ -543,16 +454,16 @@ object TopoFns {
       }
     }
     fn("st_lineinterpolatepoints", B, Seq(B, D, BooleanType))(a =>
-      memo(42, a(0), dbl(a(1)), if (a(2).asInstanceOf[Boolean]) 1 else 0)(
+      memo(Op.LineInterpolatePoints, a(0), dbl(a(1)), n = if (a(2).asInstanceOf[Boolean]) 1 else 0)(
         w(lineInterpolatePoints(rg(a(0)), dbl(a(1)), a(2).asInstanceOf[Boolean]))))
     // collection-level clustering: pairs with st_collect_agg the way the
     // PostGIS aggregates pair with array_agg — the collected input is the
     // scale bound, exactly as for st_collect_agg itself
-    fn("st_clusterintersecting", B, Seq(B))(a => memo(38, a(0), 0)(w(cluster(rg(a(0)), 0.0))))
+    fn("st_clusterintersecting", B, Seq(B))(a => memo(Op.ClusterIntersecting, a(0))(w(cluster(rg(a(0)), 0.0))))
     fn("st_clusterwithin", B, Seq(B, D))(a =>
-      memo(39, a(0), dbl(a(1)))(w(cluster(rg(a(0)), dbl(a(1))))))
+      memo(Op.ClusterWithin, a(0), dbl(a(1)))(w(cluster(rg(a(0)), dbl(a(1))))))
     fn("st_clusterkmeans", ArrayType(IntegerType), Seq(B, IntegerType)) { a =>
-      memo(44, a(0), 0, a(1).asInstanceOf[Int]) {
+      memo(Op.ClusterKMeans, a(0), n = a(1).asInstanceOf[Int]) {
         new GenericArrayData(clusterKMeans(rg(a(0)),
           a(1).asInstanceOf[Int]).asInstanceOf[Array[AnyRef]])
       }
@@ -561,7 +472,7 @@ object TopoFns {
       // content memo like the other collection kernels; eps and minpoints
       // each get their own key dimension so distinct parameter pairs never
       // collide
-      memo(43, a(0), dbl(a(1)), a(2).asInstanceOf[Int]) {
+      memo(Op.ClusterDbscan, a(0), dbl(a(1)), n = a(2).asInstanceOf[Int]) {
         new GenericArrayData(clusterDbscan(rg(a(0)), dbl(a(1)),
           a(2).asInstanceOf[Int]).asInstanceOf[Array[AnyRef]])
       }

@@ -1,5 +1,6 @@
 package graft.geom
 
+import graft.KernelMemo
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.io.{WKBReader, WKTReader}
@@ -25,9 +26,9 @@ object Geo {
   val factory = new GeometryFactory(new PrecisionModel(PrecisionModel.FLOATING), 0)
 
   private final class Caches {
-    // memo-cold support: a Caches instance built before the last
-    // clearKernelMemos() call discards its contents on next access
-    var epoch: Int = memoEpoch
+    // a Caches instance built before the last KernelMemo.clear() call
+    // discards its contents on next access
+    var epoch: Int = KernelMemo.epoch
     val reader = new WKBReader(factory)
     val wktReader = new WKTReader(factory)
     // two-slot parse memo, content-keyed (binary predicates have two args)
@@ -49,7 +50,7 @@ object Geo {
     // so a hit here skips BOTH the parse and the per-call serialization
     // (Wkb.write allocated a fresh array every row even when the parse memo
     // hit). Sharing one byte array across rows is safe — BinaryType values
-    // are copied into UnsafeRows on write (the bufferMemo precedent).
+    // are copied into UnsafeRows on write (as with KernelMemo's values).
     val wktWkbMemo = new java.util.LinkedHashMap[String, Array[Byte]](256, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, Array[Byte]]): Boolean =
         size() > 2048
@@ -57,24 +58,14 @@ object Geo {
   }
   private val tl = ThreadLocal.withInitial[Caches](() => new Caches)
 
-  /** Bumped by [[clearKernelMemos]]; per-thread caches self-clear on first
-    * access after a bump (a ThreadLocal cannot be cleared from another
-    * thread). Volatile read per access — noise next to the memo probes. */
-  @volatile private var memoEpoch = 0
-
-  /** Drop every per-thread kernel memo (WKB parse slots, prepared-geometry
-    * slot, WKT and WKT→WKB LRUs). Used by the bench's memo-cold mode so
-    * repeat runs of kernel-bound queries measure the cold kernel, not a
-    * prior run's memo hits. */
-  def clearKernelMemos(): Unit = memoEpoch += 1
-
   private def caches(): Caches = {
     val c = tl.get()
-    if (c.epoch != memoEpoch) {
+    val epoch = KernelMemo.epoch
+    if (c.epoch != epoch) {
       c.k0 = null; c.v0 = null; c.k1 = null; c.v1 = null
       c.pk = null; c.pv = null
       c.wktMemo.clear(); c.wktWkbMemo.clear()
-      c.epoch = memoEpoch
+      c.epoch = epoch
     }
     c
   }
