@@ -4,9 +4,11 @@ import java.util.concurrent.atomic.LongAdder
 
 /** Bounded LRU map that counts its hits and misses: the one mechanism behind
   * graft's cross-query reuse of plan-time join samples
-  * ([[graft.plans.SkewSampler]]) and of built fixture relations
-  * ([[SparkEntry]]). `onEvict` runs on every entry that leaves the map,
-  * whether pushed out by the bound or dropped by [[removeIf]]. */
+  * ([[graft.plans.SkewSampler]]), of built fixture relations
+  * ([[SparkEntry]]) and of executor-side R-trees over broadcast build sides
+  * ([[graft.plans.BroadcastIndex]]). `onEvict` runs on every entry that
+  * leaves the map, whether pushed out by the bound or dropped by
+  * [[removeIf]]. */
 final class LruCache[K, V <: AnyRef](name: String, max: Int, onEvict: V => Unit = (_: V) => ()) {
   private val hits = new LongAdder
   private val misses = new LongAdder

@@ -10,35 +10,29 @@ import org.locationtech.jts.index.strtree.STRtree
  * geometries with exact planar distances.
  *
  * Scale shape: the build side is broadcast (same budget as any broadcast
- * hash join) and ONE STRtree is built per executor (broadcast-id cache, same
- * pattern as the broadcast spatial join); probes stream through mapPartitions
- * with no shuffle. Each probe runs an EXPANDING-RADIUS search: query the
- * tree with a growing envelope until at least k candidates lie within the
- * radius and the k-th distance is covered — exact regardless of tree node
- * layout, and ties resolve deterministically by (distance, id), so results
- * are reproducible row for row (a plain JTS nearestNeighbour(k) is
- * tie-order-arbitrary at the cutoff).
+ * hash join) and ONE STRtree is built per executor, held in the
+ * [[graft.plans.BroadcastIndex]] the broadcast spatial join also uses;
+ * probes stream through mapPartitions with no shuffle. Each probe runs an
+ * EXPANDING-RADIUS search: query the tree with a growing envelope until at
+ * least k candidates lie within the radius and the k-th distance is
+ * covered — exact regardless of tree node layout, and ties resolve
+ * deterministically by (distance, id), so results are reproducible row for
+ * row (a plain JTS nearestNeighbour(k) is tie-order-arbitrary at the cutoff).
  *
  * Inputs are (id, WKB) pairs to keep the encoder simple and the broadcast
  * compact; output is (pid, nid, dist, rank) with rank 1..k.
  */
 object KnnJoin {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[Long, STRtree]()
-
-  private def tree(bc: Broadcast[Array[(Long, Array[Byte])]]): STRtree = {
-    val hit = cache.get(bc.id)
-    if (hit != null) return hit
-    val t = new STRtree()
-    bc.value.foreach { case (id, wkb) =>
-      val g = graft.geom.Geo.read(wkb)
-      if (g != null && !g.isEmpty) t.insert(g.getEnvelopeInternal, (id, g))
+  private def tree(bc: Broadcast[Array[(Long, Array[Byte])]]): STRtree =
+    graft.plans.BroadcastIndex.tree((bc.id, "knn")) {
+      val t = new STRtree()
+      bc.value.foreach { case (id, wkb) =>
+        val g = graft.geom.Geo.read(wkb)
+        if (g != null && !g.isEmpty) t.insert(g.getEnvelopeInternal, (id, g))
+      }
+      t
     }
-    t.build()
-    if (cache.size >= 8) cache.clear()
-    cache.put(bc.id, t)
-    t
-  }
 
   private val ThresholdConf = "spark.graft.spatialJoin.broadcastThreshold"
 

@@ -7,9 +7,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution,
+  IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.locationtech.jts.geom.Envelope
 import org.locationtech.jts.index.strtree.STRtree
+import scala.jdk.CollectionConverters._
 
 /**
  * Broadcast R-tree spatial join — the right plan for the dominant production
@@ -143,8 +148,20 @@ case class SpatialBroadcastJoinExec(
     expand: Double) extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ right.output
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    streamed.outputPartitioning
+  override def outputPartitioning: Partitioning = streamed.outputPartitioning
+
+  // The build side arrives through Spark's own BroadcastExchangeExec, as for
+  // BroadcastNestedLoopJoinExec: exchange reuse, AQE query stages, the
+  // broadcast timeout and the exchange's size/time metrics come with it.
+  override def requiredChildDistribution: Seq[Distribution] = {
+    val bcast = BroadcastDistribution(IdentityBroadcastMode)
+    if (buildLeft) bcast :: UnspecifiedDistribution :: Nil
+    else UnspecifiedDistribution :: bcast :: Nil
+  }
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numCandidates" -> SQLMetrics.createMetric(sparkContext, "number of R-tree candidates"))
 
   private def streamed: SparkPlan = if (buildLeft) right else left
   private def build: SparkPlan = if (buildLeft) left else right
@@ -158,41 +175,48 @@ case class SpatialBroadcastJoinExec(
       if (buildLeft) lGeom else rGeom, build.output)
     val streamGeom = if (buildLeft) rGeom else lGeom
     val boundStreamGeom = BindReferences.bindReference(streamGeom, streamed.output)
-    // executeCollect is bounded by the rule's broadcast threshold
-    val buildRows = build.executeCollect().map(_.copy())
-    val bc = sparkContext.broadcast(buildRows)
-    val bcId = bc.id
+    val bc = build.executeBroadcast[Array[InternalRow]]()
+    // A reused exchange hands one broadcast to joins that may index different
+    // build columns, so the tree is keyed by the geometry as well as the id.
+    val key = (bc.id, buildGeom.canonicalized)
+    val numOutputRows = longMetric("numOutputRows")
+    val numCandidates = longMetric("numCandidates")
     val bLeft = buildLeft
     val expandBy = expand
     val condExpr = condition
     val outAttrs = output
     streamed.execute().mapPartitions { iter =>
-      val tree = SpatialBroadcastJoinExec.treeFor(bcId, bc.value, buildGeom)
+      val tree = BroadcastIndex.tree(key) {
+        val t = new STRtree()
+        bc.value.foreach { row =>
+          val env = SpatialBroadcastJoinExec.envelope(buildGeom.eval(row))
+          if (env != null) t.insert(env, row)
+        }
+        t
+      }
       val joiner = new JoinedRow
       val pred = Predicate.create(condExpr, outAttrs)
       pred.initialize(org.apache.spark.TaskContext.getPartitionId())
       val proj = UnsafeProjection.create(outAttrs, outAttrs)
       iter.flatMap { streamRow =>
-        val gv = boundStreamGeom.eval(streamRow)
-        val env = if (gv == null) null else try {
-          graft.geom.Wkb.envelope(gv.asInstanceOf[Array[Byte]])
-        } catch { case _: Exception => null }
+        val env = SpatialBroadcastJoinExec.envelope(boundStreamGeom.eval(streamRow))
         if (env == null) Iterator.empty
         else {
-          val cands = tree.query(new org.locationtech.jts.geom.Envelope(
-            env(0) - expandBy, env(2) + expandBy, env(1) - expandBy, env(3) + expandBy))
+          env.expandBy(expandBy)
+          val cands = tree.query(env)
+          numCandidates += cands.size
           // Lazy map/filter keeps the operator-row contract: proj reuses its
           // UnsafeRow buffer, so it must run exactly once per next() and the
           // emitted row stays valid until the consumer pulls again. (An eager
           // lookahead here overwrote emitted rows whenever a streamed row had
           // more than one match.)
-          scala.jdk.CollectionConverters.IteratorHasAsScala(cands.iterator()).asScala
+          cands.asScala.iterator
             .map { b =>
               val buildRow = b.asInstanceOf[InternalRow]
               if (bLeft) joiner(buildRow, streamRow) else joiner(streamRow, buildRow)
             }
             .filter(pred.eval(_))
-            .map(proj(_))
+            .map { r => numOutputRows += 1; proj(r) }
         }
       }
     }
@@ -200,31 +224,26 @@ case class SpatialBroadcastJoinExec(
 }
 
 object SpatialBroadcastJoinExec {
-  // One STRtree per (executor, broadcast) instead of per task: the build is
-  // O(n log n) and tasks on the same executor share it. Bounded: entries are
-  // dropped wholesale past 8 live broadcasts (a broadcast id is unique per
-  // query execution, so stale entries are dead weight, not correctness).
-  private val cache = new java.util.concurrent.ConcurrentHashMap[Long, STRtree]()
+  /** The envelope of a WKB value, or null for null, empty or unparsable. */
+  private def envelope(gv: Any): Envelope = {
+    val e = if (gv == null) null
+      else try graft.geom.Wkb.envelope(gv.asInstanceOf[Array[Byte]])
+      catch { case _: Exception => null }
+    if (e == null) null else new Envelope(e(0), e(2), e(1), e(3))
+  }
+}
 
-  private[plans] def treeFor(id: Long, rows: Array[InternalRow],
-      geom: Expression): STRtree = {
-    val hit = cache.get(id)
-    if (hit != null) return hit
-    val tree = new STRtree()
-    var i = 0
-    while (i < rows.length) {
-      val gv = geom.eval(rows(i))
-      if (gv != null) {
-        val env = try graft.geom.Wkb.envelope(gv.asInstanceOf[Array[Byte]])
-        catch { case _: Exception => null }
-        if (env != null)
-          tree.insert(new org.locationtech.jts.geom.Envelope(env(0), env(2), env(1), env(3)), rows(i))
-      }
-      i += 1
-    }
-    tree.build()
-    if (cache.size >= 8) cache.clear()
-    cache.put(id, tree)
-    tree
+/** The executor-side R-trees over broadcast build sides, shared by
+ *  [[SpatialBroadcastJoinExec]] and [[graft.operators.KnnJoin]]: one tree per
+ *  (JVM, key) instead of one per task, LRU-bounded at 8 trees. A key starts
+ *  with the broadcast id and names what the tree indexes, so two users of
+ *  one broadcast never share a tree. Lookups are serialized, so tasks that
+ *  start together build a tree once; `broadcastIndex.{hits,misses}` in
+ *  [[graft.LruCache.counters]] count them. */
+object BroadcastIndex {
+  private val trees = new graft.LruCache[(Long, AnyRef), STRtree]("broadcastIndex", 8)
+
+  def tree(key: (Long, AnyRef))(build: => STRtree): STRtree = synchronized {
+    trees.getOrElseUpdate(key) { val t = build; t.build(); t }
   }
 }

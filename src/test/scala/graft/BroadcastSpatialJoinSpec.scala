@@ -1,15 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.KnnJoin
+import graft.plans.SpatialBroadcastJoinExec
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Broadcast R-tree spatial join: small-side joins must take the
   * SpatialBroadcastJoinExec plan (no shuffle of the big side, no
-  * BroadcastNestedLoopJoin pair scan) and produce results identical to both
-  * the tile rewrite and the naive join. */
-class BroadcastSpatialJoinSpec extends AnyFunSuite {
+  * BroadcastNestedLoopJoin pair scan), receive the build side through Spark's
+  * broadcast exchange, and produce results identical to both the tile rewrite
+  * and the naive join. */
+class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** The join nodes of `df`'s executed plan (the AQE-final one once run). */
+  private def joinsOf(df: DataFrame): Seq[SpatialBroadcastJoinExec] =
+    collect(df.queryExecution.executedPlan) { case j: SpatialBroadcastJoinExec => j }
+
+  private def nodes(df: DataFrame)(pf: PartialFunction[SparkPlan, Unit]): Int =
+    collect(df.queryExecution.executedPlan) { case p if pf.isDefinedAt(p) => p }.size
+
+  private def indexMisses: Long = LruCache.counters.getOrElse("broadcastIndex.misses", 0L)
+
+  private def withNaive[T](body: => T): T = {
+    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
+    try body finally spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   private def setup(): Unit = {
     spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "true")
@@ -35,6 +57,11 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite {
     assert(plan.contains("SpatialBroadcastJoin"), s"broadcast plan not chosen:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val j = joinsOf(df).head
+    (if (j.buildLeft) j.left else j.right) match {
+      case _: BroadcastQueryStageExec | _: BroadcastExchangeExec | _: ReusedExchangeExec =>
+      case other => fail(s"build child is not a broadcast exchange:\n$other")
+    }
 
     spark.conf.set("spark.graft.spatialJoin.enabled", "false")
     val naive = collectPairs(sql)
@@ -87,7 +114,11 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite {
     val df = spark.sql(sql)
     assert(df.queryExecution.executedPlan.toString.contains("SpatialBroadcastJoin"),
       s"dwithin not broadcast:\n${df.queryExecution.executedPlan}")
-    val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rows = df.collect()
+    val fast = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val metrics = joinsOf(df).head.metrics
+    assert(metrics("numOutputRows").value == rows.length)
+    assert(metrics("numCandidates").value >= rows.length)
     spark.conf.set("spark.graft.spatialJoin.enabled", "false")
     val naive = collectPairs(sql)
     spark.conf.set("spark.graft.spatialJoin.enabled", "true")
@@ -103,5 +134,77 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite {
     val tiled = collectPairs(sql)
     spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "true")
     assert(broadcast == tiled && broadcast.nonEmpty)
+  }
+
+  private def setupReuse(): Unit = {
+    // env2 is env shifted half a cell, so the two geometries index different
+    // trees; points sit off every cell edge.
+    spark.sql("""
+      SELECT id AS k, st_point(cast(id % 50 AS DOUBLE) + 0.25d, cast(id DIV 50 AS DOUBLE) + 0.25d) AS pt
+      FROM range(0, 2500)""").createOrReplaceTempView("rp")
+    spark.sql("""
+      SELECT id AS c,
+             st_makeenvelope(cast((id % 10) * 5 AS DOUBLE), cast((id DIV 10) * 5 AS DOUBLE),
+                             cast((id % 10) * 5 + 5 AS DOUBLE), cast((id DIV 10) * 5 + 5 AS DOUBLE)) AS env,
+             st_makeenvelope(cast((id % 10) * 5 AS DOUBLE) + 2.5d, cast((id DIV 10) * 5 AS DOUBLE) + 2.5d,
+                             cast((id % 10) * 5 AS DOUBLE) + 7.5d, cast((id DIV 10) * 5 AS DOUBLE) + 7.5d) AS env2
+      FROM range(0, 100)""").createOrReplaceTempView("rz")
+  }
+
+  test("a reused build probed on two different geometries returns the naive rows") {
+    setup()
+    setupReuse()
+    val sql = """
+      SELECT k, c FROM rp JOIN rz ON st_contains(env, pt) AND st_ymin(env2) <= st_y(pt) + 100.0d
+      UNION ALL
+      SELECT k, c FROM rp JOIN rz ON st_contains(env2, pt) AND st_ymin(env) <= st_y(pt) + 100.0d"""
+    val df = spark.sql(sql)
+    val fast = sortedRows(df)
+    assert(joinsOf(df).size == 2)
+    assert(nodes(df) { case _: ReusedExchangeExec => } >= 1,
+      s"build not reused:\n${df.queryExecution.executedPlan}")
+    val naive = withNaive(sortedRows(spark.sql(sql)))
+    // every point lies in one env cell; env2 covers the points from 2.5 up
+    assert(naive.size == 2500 + 47 * 47)
+    val (onlyFast, onlyNaive) = (fast.diff(naive).size, naive.diff(fast).size)
+    assert(onlyFast == 0 && onlyNaive == 0, s"fast=${fast.size} naive=${naive.size} rows")
+  }
+
+  test("a union of two identical joins builds one broadcast and one tree") {
+    setup()
+    val sql = """
+      SELECT pid, cell FROM bpts JOIN bcells ON st_contains(env, pt)
+      UNION ALL
+      SELECT pid, cell FROM bpts JOIN bcells ON st_contains(env, pt)"""
+    val df = spark.sql(sql)
+    val before = indexMisses
+    val rows = sortedRows(df)
+    assert(indexMisses - before == 1)
+    assert(joinsOf(df).size == 2)
+    assert(nodes(df) { case _: ReusedExchangeExec => } == 1)
+    assert(nodes(df) { case _: BroadcastExchangeExec => } == 1,
+      s"expected a single build:\n${df.queryExecution.executedPlan}")
+    assert(rows == withNaive(sortedRows(spark.sql(sql))) && rows.nonEmpty)
+  }
+
+  test("the join and kNN share one index: one miss per distinct build") {
+    setup()
+    spark.sql("""
+      SELECT id, st_aswkb(st_point(CAST((id * 7) % 50 AS DOUBLE), CAST((id * 11) % 50 AS DOUBLE))) AS g
+      FROM range(0, 200, 1, 4)""").createOrReplaceTempView("ix_p")
+    spark.sql("""
+      SELECT id, st_aswkb(st_point(CAST((id * 3) % 50 AS DOUBLE), CAST((id * 13) % 50 AS DOUBLE))) AS g
+      FROM range(0, 60)""").createOrReplaceTempView("ix_b")
+    val m0 = indexMisses
+    val join = spark.sql("SELECT pid, cell FROM bpts JOIN bcells ON st_contains(env, pt)")
+    join.collect()
+    assert(indexMisses == m0 + 1)
+    join.collect() // same executed plan, same broadcast: a hit
+    assert(indexMisses == m0 + 1)
+    val knn = KnnJoin.knn(spark, spark.table("ix_p"), spark.table("ix_b"), 3)
+    assert(knn.count() == 200 * 3)
+    assert(indexMisses == m0 + 2)
+    spark.sql("SELECT pid, cell FROM bpts JOIN bcells ON st_contains(env, pt)").collect()
+    assert(indexMisses == m0 + 3)
   }
 }

@@ -31,8 +31,11 @@ class RectOverlaySpec extends AnyFunSuite {
     val coords = Seq((0, 0, 3, 3), (1, 1, 4, 4), (0, 1, 4, 2), (1, 0, 2, 4),
       (1, 1, 2, 2), (0, 0, 4, 4), (2, 0, 5, 3), (0, 2, 3, 5), (1, 2, 4, 5),
       (0, 0, 2, 2), (2, 2, 4, 4), (1, 0, 3, 5))
+    // a slab cutting a rectangle in two, and a hole punched through one
+    val cuts = Seq(((0, 0, 6, 6), (2, -1, 4, 7)), ((0, 0, 6, 6), (2, 2, 4, 4)))
+    val pairs = (for (a <- coords; b <- coords) yield (a, b)) ++ cuts ++ cuts.map(_.swap)
     var checked = 0
-    for ((a0, a1, a2, a3) <- coords; (b0, b1, b2, b3) <- coords) {
+    for (((a0, a1, a2, a3), (b0, b1, b2, b3)) <- pairs) {
       val ga = Geo.fromWkt(rectWkt(a0, a1, a2, a3))
       val gb = Geo.fromWkt(rectWkt(b0, b1, b2, b3))
       // only positive-area overlaps exercise the closed form; run all anyway
