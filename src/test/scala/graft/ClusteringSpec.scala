@@ -236,14 +236,14 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("read_meta crs_detail: .prj authority + FGB header vs reference fixtures") {
     val shp = "/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp"
-    assume(new java.io.File(shp).exists())
+    TestFiles.assumeFile(shp)
     val d = GeoMeta.readMeta(spark, shp).collect()(0).getAs[org.apache.spark.sql.Row]("crs_detail")
     // taxi_zones.prj: NAD83 / New York Long Island (ftUS), EPSG:2263
     assert(d.getString(0) != null && d.getString(0).contains("Long_Island"), d.toString)
     assert(d.getString(3) != null && d.getString(3).startsWith("PROJCS"), "wkt carried")
 
     val fgb = "/root/reference/test/data/amsterdam_roads.fgb"
-    assume(new java.io.File(fgb).exists())
+    TestFiles.assumeFile(fgb)
     val f = GeoMeta.readMeta(spark, fgb).collect()(0)
     val fd = f.getAs[org.apache.spark.sql.Row]("crs_detail")
     // the GDAL-written fixture stamps org:code in the FGB header Crs table

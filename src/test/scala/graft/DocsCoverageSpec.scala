@@ -13,7 +13,7 @@ class DocsCoverageSpec extends AnyFunSuite {
   private val docs = "/root/reference/docs/functions.md"
 
   test("every documented reference function name resolves in the registry") {
-    assume(new java.io.File(docs).exists())
+    TestFiles.assumeFile(docs)
     val names = scala.io.Source.fromFile(docs)(scala.io.Codec.ISO8859).getLines()
       .collect { case l if l.startsWith("### ") => l.stripPrefix("### ").trim.toLowerCase }
       .filter(_.nonEmpty).toSet

@@ -5,14 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** FlatGeobuf packed Hilbert R-tree: writer emission, reader traversal, and
   * the BboxSkippingRule pushdown into the DSv2 scan. The GDAL-written
-  * amsterdam_roads.fgb fixture validates layout assumptions against an
-  * external producer (reference reads the same file via GDAL). */
-class FgbIndexSpec extends AnyFunSuite {
+  * amsterdam_roads.fgb from the reference checkout's test data validates
+  * layout assumptions against an external producer (the reference reads the
+  * same file via GDAL). The repo does not hold it and it cannot be rebuilt
+  * without GDAL, so that test is canceled where the file is absent; the
+  * others run on graft-written files. */
+class FgbIndexSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val amsterdam = "/root/reference/test/data/amsterdam_roads.fgb"
 
   test("searchIndex on a GDAL-written file prunes to a small candidate set") {
+    TestFiles.assumeFile(amsterdam)
     val header = FlatGeobuf.readHeader(amsterdam)
     assume(header.indexNodeSize > 0, "fixture has no index")
     val total = header.featuresCount
@@ -35,7 +39,7 @@ class FgbIndexSpec extends AnyFunSuite {
   }
 
   test("graft-written index round-trips and prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fgbidx").toString
+    val dir = tempDir("graft_fgbidx").toString
     val df = spark.range(5000).selectExpr(
       "cast(id as int) AS fid",
       "st_aswkb(st_point(cast(id % 100 as double), cast((id * 37) % 100 as double))) AS geom")
@@ -60,7 +64,7 @@ class FgbIndexSpec extends AnyFunSuite {
   }
 
   test("intra-file range splits cover the file exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fgbsplit").toString
+    val dir = tempDir("graft_fgbsplit").toString
     val df = spark.range(8000).selectExpr(
       "cast(id as int) AS fid",
       "st_aswkb(st_point(cast(id % 200 as double), cast((id * 7) % 200 as double))) AS geom")
@@ -86,7 +90,7 @@ class FgbIndexSpec extends AnyFunSuite {
   }
 
   test("SQL bbox filter pushes the window into the fgb scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fgbsql").toString
+    val dir = tempDir("graft_fgbsql").toString
     val df = spark.range(2000).selectExpr(
       "cast(id as int) AS fid",
       "st_aswkb(st_point(cast(id % 50 as double), cast((id * 13) % 50 as double))) AS geom")

@@ -208,7 +208,7 @@ class GeoIOSpec extends AnyFunSuite {
   test("flatgeobuf reader parses the reference's real-world fixture") {
     // public data fixture from the reference repo (read-only input)
     val fgb = "/root/reference/test/data/amsterdam_roads.fgb"
-    assume(new java.io.File(fgb).exists())
+    TestFiles.assumeFile(fgb)
     val header = graft.io.FlatGeobuf.readHeader(fgb)
     assert(header.featuresCount > 0)
     val df = spark.read.format("geo").load(fgb)

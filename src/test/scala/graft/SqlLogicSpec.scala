@@ -14,7 +14,7 @@ class SqlLogicSpec extends AnyFunSuite {
     "st_area.test")
 
   test("reference sqllogictest corpus: curated files pass fully") {
-    assume(new java.io.File(dir).exists())
+    TestFiles.assumeFile(dir)
     fullPass.foreach { f =>
       val o = SqlLogicTest.runFile(spark, s"$dir/$f")
       assert(o.failed == 0, s"$f: ${o.failures.take(5).mkString("; ")}")
@@ -23,7 +23,7 @@ class SqlLogicSpec extends AnyFunSuite {
   }
 
   test("reference sqllogictest corpus: aggregate pass rate") {
-    assume(new java.io.File(dir).exists())
+    TestFiles.assumeFile(dir)
     // geometry/ plus the geos-, postgis- and top-level suites (proj,
     // area_spheroid, linemerge, buffer, …) — everything not IO-fixture-bound
     val dirs = Seq(dir, "/root/reference/test/sql", "/root/reference/test/sql/geos",

@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** KML / GPX / CSV-WKT readers (round-4 format breadth; the reference covers
   * these through GDAL's driver surface). */
-class TextFormatsSpec extends AnyFunSuite {
+class TextFormatsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private def tmpFile(name: String, content: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_fmt")
+    val d = tempDir("graft_fmt")
     val p = d.resolve(name)
     java.nio.file.Files.write(p, content.getBytes("UTF-8"))
     p.toString
@@ -112,7 +112,7 @@ class TextFormatsSpec extends AnyFunSuite {
                ELSE st_geomfromtext('MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((2 0, 3 0, 3 1, 2 1, 2 0)))')
              END AS geom
       FROM range(8)""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_gmlw").toString
+    val dir = tempDir("graft_gmlw").toString
     graft.io.GeoWriter.gml(df, "geom", s"$dir/out.gml", singleFile = true)
     val back = spark.read.format("geo").load(s"$dir/out.gml")
     back.createOrReplaceTempView("gml_rt")
@@ -157,28 +157,29 @@ class TextFormatsSpec extends AnyFunSuite {
   }
 
   test("st_read_meta surfaces CRS detail per format") {
-    // shapefile: .prj sidecar text (real fixture)
+    // shapefile: .prj sidecar text (ESRI WKT1 of FIPS 3104 feet, CrsFixtures)
     val shpMeta = graft.io.GeoMeta.readMeta(spark,
-      "/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp").collect()(0)
+      getClass.getResource("/longisland_ftus.shp").getPath).collect()(0)
     val prj = shpMeta.getAs[String]("crs")
     assert(prj != null && (prj.contains("PROJCS") || prj.contains("GEOGCS")), prj)
-    // flatgeobuf: header crs (GDAL-written fixture carries one)
+    // flatgeobuf: header crs (COPY with SRS EPSG:28992, CrsFixtures)
     val fgbMeta = graft.io.GeoMeta.readMeta(spark,
-      "/root/reference/test/data/amsterdam_roads.fgb").collect()(0)
+      getClass.getResource("/rdnew.fgb").getPath).collect()(0)
     val fgbCrs = fgbMeta.getAs[String]("crs")
     assert(fgbCrs != null && fgbCrs.contains(":"), s"fgb crs: $fgbCrs")
     // geopackage: organization:code from gpkg_spatial_ref_sys (graft-written)
-    val dir = java.nio.file.Files.createTempDirectory("graft_crsmeta").toString
+    val dir = tempDir("graft_crsmeta").toString
     val df = spark.range(5).selectExpr("id", "st_aswkb(st_point(1.0d, 2.0d)) AS geom")
     graft.io.GeoWriter.geopackage(df, "geom", s"$dir/t.gpkg", singleFile = true)
     val gpkgMeta = graft.io.GeoMeta.readMeta(spark, s"$dir/t.gpkg").collect()(0)
     assert(gpkgMeta.getAs[String]("crs") == "EPSG:4326", gpkgMeta.toString)
 
-    // CRS enrichment: the taxi_zones .prj is ESRI WKT (no AUTHORITY node) —
+    // CRS enrichment: the .prj is ESRI WKT (no AUTHORITY node) —
     // crs_detail must surface the name, the .prj WKT, and a +proj= string
     // SYNTHESIZED from the WKT parameters that parses back through
     // st_transform's PROJ-string path and agrees with the EPSG:2263 kernel
     val d = shpMeta.getAs[org.apache.spark.sql.Row]("crs_detail")
+    assert(d.getAs[String]("auth_name") == null && d.getAs[String]("auth_code") == null, d.toString)
     assert(d.getAs[String]("name") != null && d.getAs[String]("name").contains("Long_Island"))
     assert(d.getAs[String]("wkt") != null && d.getAs[String]("wkt").contains("PROJCS"))
     val p4 = d.getAs[String]("proj4")
@@ -192,7 +193,7 @@ class TextFormatsSpec extends AnyFunSuite {
 
     // GeoParquet: graft-written file (no explicit crs → OGC:CRS84 per the
     // 1.1 spec) enriches to the longlat proj4
-    val pqDir = java.nio.file.Files.createTempDirectory("graft_crsmeta_pq").toString
+    val pqDir = tempDir("graft_crsmeta_pq").toString
     graft.io.GeoWriter.clusteredParquet(df, "geom", s"$pqDir/pts.parquet")
     val pqMeta = graft.io.GeoMeta.readMeta(spark, s"$pqDir/pts.parquet").collect()(0)
     val pd = pqMeta.getAs[org.apache.spark.sql.Row]("crs_detail")
@@ -233,7 +234,7 @@ class TextFormatsSpec extends AnyFunSuite {
                WHEN 1 THEN 'LINESTRING (0 0, 1 1, 2 0)'
                ELSE 'POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0), (2 2, 4 2, 4 4, 2 4, 2 2))' END) AS geom
       FROM range(3)""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmlw").toString
+    val dir = tempDir("graft_kmlw").toString
     graft.io.GeoWriter.kml(df, "geom", s"$dir/out.kml", singleFile = true)
     val back = spark.read.format("geo").load(s"$dir/out.kml")
     back.createOrReplaceTempView("kml_rt")
@@ -253,7 +254,7 @@ class TextFormatsSpec extends AnyFunSuite {
       SELECT 'summit' AS name, '1337.5' AS ele, st_geomfromtext('POINT (7.65 45.97)') AS geom
       UNION ALL
       SELECT 'hike', NULL, st_geomfromtext('MULTILINESTRING ((0 0, 1 1), (2 2, 3 3))')""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_gpxw").toString
+    val dir = tempDir("graft_gpxw").toString
     graft.io.GeoWriter.gpx(df, "geom", s"$dir/out.gpx", singleFile = true)
     val back = spark.read.format("geo").load(s"$dir/out.gpx")
     back.createOrReplaceTempView("gpx_rt")
@@ -276,7 +277,7 @@ class TextFormatsSpec extends AnyFunSuite {
       SELECT 'a, comma' AS label, st_geomfromtext('POINT (1 2)') AS geom
       UNION ALL
       SELECT 'say "hi"', st_geomfromtext('POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))')""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csvw").toString
+    val dir = tempDir("graft_csvw").toString
     graft.io.GeoWriter.csvWkt(df, "geom", s"$dir/out.csv", singleFile = true)
     val back = spark.read.format("geo").load(s"$dir/out.csv")
     val rows = back.selectExpr("label", "st_astext(geom) AS wkt").collect()
