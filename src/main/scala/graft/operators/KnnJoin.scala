@@ -34,15 +34,12 @@ object KnnJoin {
       t
     }
 
-  private val ThresholdConf = "spark.graft.spatialJoin.broadcastThreshold"
-
   /** Exact kNN of `probe` against `build`; both DataFrames must have exactly
    *  (id: Long/Int, geom: WKB binary) columns.
    *
    *  The build side is driver-collected and broadcast, so it is gated by the
-   *  SAME budget as every other broadcast path in the repo
-   *  (spark.graft.spatialJoin.broadcastThreshold, falling back to
-   *  spark.sql.autoBroadcastJoinThreshold): an over-threshold build side
+   *  SAME budget as the broadcast R-tree join
+   *  ([[graft.plans.BroadcastIndex.budget]]): an over-budget build side
    *  automatically takes the distributed tile-partitioned path
    *  ([[knnTiled]]) instead of OOMing the driver — same results, row for
    *  row (both orders ties by (distance, id)).
@@ -50,8 +47,7 @@ object KnnJoin {
   def knn(spark: SparkSession, probe: DataFrame, build: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
     require(k > 0, "k must be positive")
-    val threshold = spark.conf.getOption(ThresholdConf).map(_.toLong)
-      .getOrElse(spark.sessionState.conf.autoBroadcastJoinThreshold)
+    val threshold = graft.plans.BroadcastIndex.budget(spark)
     val est = build.queryExecution.optimizedPlan.stats.sizeInBytes
     if (!(threshold > 0 && est <= threshold)) return knnTiled(spark, probe, build, k)
     val buildRows = build.collect().map(r =>

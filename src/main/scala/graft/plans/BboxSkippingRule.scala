@@ -19,13 +19,10 @@ import org.apache.spark.sql.types.StructType
  * scan, so row groups outside the constant's envelope are skipped via min/max
  * stats — index-grade pruning with zero index machinery.
  */
-class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] {
+class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   // predicates where bbox overlap with the constant's envelope is implied
-  private val overlapPreds = Set(
-    "st_intersects", "st_equals", "st_touches", "st_crosses", "st_within",
-    "st_contains", "st_overlaps", "st_covers", "st_coveredby",
-    "st_containsproperly", "st_intersects_extent")
+  private val overlapPreds = SpatialPredicate.bboxImplying + "st_intersects_extent"
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.bboxSkipping.enabled", "true").toBoolean
@@ -39,7 +36,7 @@ class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if r.table.isInstanceOf[graft.io.GeoTable] &&
             r.table.asInstanceOf[graft.io.GeoTable].format == "flatgeobuf" &&
             r.table.asInstanceOf[graft.io.GeoTable].bbox.isEmpty =>
-        val windows = splitConjuncts(cond).flatMap(constWindow(_, r))
+        val windows = splitConjunctivePredicates(cond).flatMap(constWindow(_, r))
         if (windows.isEmpty) f
         else {
           val w = windows.reduce { (a, b) => // intersect all pushed windows
@@ -50,8 +47,8 @@ class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
 
       case f @ Filter(cond, child) =>
-        val extra = splitConjuncts(cond).flatMap(derive(_, child))
-        val fresh = extra.filterNot(e => splitConjuncts(cond).exists(_.semanticEquals(e)))
+        val extra = splitConjunctivePredicates(cond).flatMap(derive(_, child))
+        val fresh = extra.filterNot(e => splitConjunctivePredicates(cond).exists(_.semanticEquals(e)))
         if (fresh.isEmpty) f
         else Filter(fresh.foldLeft(cond)(And(_, _)), child)
     }
@@ -81,11 +78,6 @@ class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case FnExpr("st_geomfromwkb" | "st_geomfromhexwkb" | "st_geomfromtext" | "st_geomfromgeojson", Seq(inner)) =>
       baseAttr(inner)
     case _ => None
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
   }
 
   /** Locate the bbox sidecar for a geometry column, accepting BOTH naming

@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.functions.FnExpr
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -59,72 +58,26 @@ case class SpatialBroadcastJoin(
 
 class BroadcastSpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  // predicates whose truth implies envelope overlap (st_disjoint excluded —
-  // same set SpatialJoinRule accepts, optimizer_rules.cpp:96-98)
-  private val rewritable = Set(
-    "st_intersects", "st_equals", "st_touches", "st_crosses", "st_within",
-    "st_contains", "st_overlaps", "st_covers", "st_coveredby", "st_containsproperly")
-
   private def enabled: Boolean =
-    spark.conf.get("spark.graft.spatialJoin.enabled", "true").toBoolean &&
-      spark.conf.get("spark.graft.spatialJoin.broadcast.enabled", "true").toBoolean
-
-  private def threshold: Long =
-    spark.conf.getOption("spark.graft.spatialJoin.broadcastThreshold").map(_.toLong)
-      .getOrElse(spark.sessionState.conf.autoBroadcastJoinThreshold)
+    spark.conf.get("spark.graft.spatialJoin.enabled", "true").toBoolean
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
+    val threshold = BroadcastIndex.budget(spark)
     if (!enabled || threshold <= 0) return plan
     plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), _)
-          if j.resolved && !tiled(cond) =>
-        findSpatialPredicate(cond, left, right) match {
-          case Some((lGeom, rGeom, expand)) =>
+      case j @ Join(left, right, Inner, Some(cond), _) if j.resolved =>
+        SpatialPredicate.find(cond, left, right) match {
+          case Some(m) =>
             val lSize = left.stats.sizeInBytes
             val rSize = right.stats.sizeInBytes
             if (rSize <= threshold && rSize <= lSize)
-              SpatialBroadcastJoin(left, right, lGeom, rGeom, cond, buildLeft = false, expand)
+              SpatialBroadcastJoin(left, right, m.lGeom, m.rGeom, cond, buildLeft = false, m.expand)
             else if (lSize <= threshold)
-              SpatialBroadcastJoin(left, right, lGeom, rGeom, cond, buildLeft = true, expand)
+              SpatialBroadcastJoin(left, right, m.lGeom, m.rGeom, cond, buildLeft = true, m.expand)
             else j
           case None => j
         }
     }
-  }
-
-  private def tiled(cond: Expression): Boolean = cond.exists {
-    case a: AttributeReference => a.name.startsWith("__graft_tile")
-    case _ => false
-  }
-
-  /** Returns (leftSideGeom, rightSideGeom, envelopeExpansion). Plain bbox-
-   *  implying predicates expand by 0; st_dwithin with a CONSTANT distance
-   *  expands the probe envelope by it (dwithin(a,b,d) implies the envelopes
-   *  lie within d of each other). */
-  private def findSpatialPredicate(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Option[(Expression, Expression, Double)] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def sides(a: Expression, b: Expression): Option[(Expression, Expression)] =
-      if (a.references.nonEmpty && b.references.nonEmpty &&
-          a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) Some((a, b))
-      else if (a.references.nonEmpty && b.references.nonEmpty &&
-          b.references.subsetOf(left.outputSet) && a.references.subsetOf(right.outputSet)) Some((b, a))
-      else None
-    conjuncts(cond).iterator.flatMap {
-      case FnExpr(fn, Seq(a, b)) if rewritable(fn) =>
-        sides(a, b).map { case (l, r) => (l, r, 0.0) }
-      case FnExpr("st_dwithin", Seq(a, b, d)) if d.foldable =>
-        val dist = d.eval() match {
-          case n: java.lang.Number => n.doubleValue()
-          case _ => Double.NaN
-        }
-        if (dist.isNaN || dist < 0) None
-        else sides(a, b).map { case (l, r) => (l, r, dist) }
-      case _ => None
-    }.nextOption()
   }
 }
 
@@ -242,6 +195,14 @@ object SpatialBroadcastJoinExec {
  *  [[graft.LruCache.counters]] count them. */
 object BroadcastIndex {
   private val trees = new graft.LruCache[(Long, AnyRef), STRtree]("broadcastIndex", 8)
+
+  /** The byte budget for a broadcast build side, shared by the broadcast
+    * R-tree join and kNN: spark.graft.spatialJoin.broadcastThreshold, else
+    * Spark's autoBroadcastJoinThreshold. A budget <= 0 (e.g. -1) turns off
+    * both the broadcast R-tree join and kNN's broadcast path. */
+  def budget(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.spatialJoin.broadcastThreshold").map(_.toLong)
+      .getOrElse(spark.sessionState.conf.autoBroadcastJoinThreshold)
 
   def tree(key: (Long, AnyRef))(build: => STRtree): STRtree = synchronized {
     trees.getOrElseUpdate(key) { val t = build; t.build(); t }

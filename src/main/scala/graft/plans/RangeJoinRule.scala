@@ -52,15 +52,14 @@ import org.apache.spark.sql.types._
  * share, and sub-splits ONLY those bins: the denser side's hot rows spread
  * across s sub-keys by full-row hash, the sparser side's hot rows replicate
  * s-fold; skew-free data pays nothing and its plan is unchanged. An integer
- * pins the factor manually (|salt| <= 1 = off in either sign); an integer
- * below -1 forces salting past the broadcast-shape gate — when a side fits
- * the broadcast threshold the bin join never shuffles, so salting is pure
- * overhead and is skipped otherwise. Applies to the point-in-interval path;
+ * N > 1 pins the factor; any other number is off. When a side fits the
+ * broadcast threshold the bin join never shuffles, so salting is pure
+ * overhead and is skipped. Applies to the point-in-interval path;
  * the interval-overlap path's per-pair dedupe anchor makes per-bin salting
  * interact with the anchor condition and is left to AQE skew handling.
  * Degenerate/reversed intervals (hi < lo) explode to zero bins.
  */
-class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
+class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.rangeJoin.enabled", "true").toBoolean
@@ -95,18 +94,13 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   private def hasEquiConjunct(cond: Expression, left: LogicalPlan, right: LogicalPlan): Boolean =
-    splitConjuncts(cond).exists {
+    splitConjunctivePredicates(cond).exists {
       case EqualTo(a, b) =>
         (a.references.nonEmpty && b.references.nonEmpty) &&
           ((a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
            (b.references.subsetOf(left.outputSet) && a.references.subsetOf(right.outputSet)))
       case _ => false
     }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
 
   private def supported(dt: DataType): Boolean = dt match {
     case _: NumericType | TimestampType | TimestampNTZType => true
@@ -144,7 +138,7 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => Seq.empty
     }
     // normalize every inequality conjunct to (smaller, larger)
-    val ineqs: Seq[(Expression, Expression)] = splitConjuncts(cond).flatMap {
+    val ineqs: Seq[(Expression, Expression)] = splitConjunctivePredicates(cond).flatMap {
       case LessThanOrEqual(l: Abs, d)    => band(l, d)
       case LessThan(l: Abs, d)           => band(l, d)
       case GreaterThanOrEqual(d, l: Abs) => band(l, d)
@@ -256,104 +250,17 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val intvSide = Generate(Explode(binsExpr(iv.lo, iv.hi, w)), unrequiredChildIndex = Nil,
       outer = false, qualifier = None, generatorOutput = Seq(binI), child = intvPlan)
 
-    var equi: Expression = EqualTo(binP.toAttribute, binI)
-    var pointSalted: LogicalPlan = pointSide
-    var intvSalted: LogicalPlan = intvSide
-
-    val setting = spark.conf.get("spark.graft.rangeJoin.salt", "auto")
-    val auto = setting.equalsIgnoreCase("auto")
-    val manual = if (auto) 0 else setting.toInt
-    // |manual| <= 1 is OFF in either sign (a single bucket splits nothing);
-    // N < -1 forces past the broadcast-shape gate — same contract as
-    // spark.graft.spatialJoin.salt
-    val force = manual < -1
-    val wantSalt = auto || manual > 1 || force
-    // Salt is a SHUFFLE-skew mitigation: when a side fits the broadcast
-    // threshold the rewritten bin equi-join broadcasts and no bin ever owns
-    // a task, so salting is pure replication overhead (same gate + rationale
-    // as SpatialJoinRule).
-    val abt = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val broadcastShaped = abt > 0 &&
-      (j.left.stats.sizeInBytes <= abt || j.right.stats.sizeInBytes <= abt)
-    if (wantSalt && broadcastShaped && !force && !auto)
-      logInfo(s"range-join salt=$setting skipped: a join side fits the broadcast " +
-        s"threshold ($abt b), so the bin join will not shuffle and has no skew to split")
-    if (wantSalt && (!broadcastShaped || force)) {
-      // TARGETED skew salting (shared detection with the spatial tile join):
-      // only bins the plan-time sample flags as hot are sub-split (dense
-      // side, by full-row hash — a value-only hash would co-bucket identical
-      // values, exactly the skew being split) and replicated (sparse side,
-      // s-fold). Skew-free data pays nothing and keeps today's plan.
-      val (hot, splitIntervals, hottestShare) =
-        hotBins(pointPlan, iv.x, intvPlan, iv.lo, w)
-      val par = spark.sparkContext.defaultParallelism
-      val s =
-        if (!auto) math.abs(manual)
-        else SkewSampler.autoFactor(hottestShare, par)
-      if (hot.isEmpty) {
-        if (!auto)
-          logInfo(s"range-join salt=$s requested but the bin sample found no hot " +
-            s"bins — salting nothing (a skew-free join pays no replication tax)")
-      } else {
-        logInfo(s"range-join salt=$s${if (auto) " (auto)" else ""} targeting " +
-          s"${hot.size} hot bin(s), splitting the " +
-          s"${if (splitIntervals) "interval" else "point"} side")
-        val hotP = In(binP.toAttribute, hot.map(Literal(_)))
-        val hotI = In(binI, hot.map(Literal(_)))
-        val one = Literal.create(Seq(0), ArrayType(IntegerType))
-        val all = Literal.create(0 until s, ArrayType(IntegerType))
-        val saltGen = AttributeReference("__graft_bin_salt", IntegerType, nullable = false)()
-        if (splitIntervals) {
-          val split = Alias(If(hotI,
-            Pmod(new Murmur3Hash(intvPlan.output), Literal(s)), Literal(0)),
-            "__graft_bin_salt_v")()
-          intvSalted = Project(intvSide.output :+ split, intvSide)
-          pointSalted = Generate(
-            Explode(If(hotP, all, one)),
-            unrequiredChildIndex = Nil, outer = false, qualifier = None,
-            generatorOutput = Seq(saltGen), child = pointSide)
-          equi = And(equi, EqualTo(saltGen, split.toAttribute))
-        } else {
-          val split = Alias(If(hotP,
-            Pmod(new Murmur3Hash(pointPlan.output), Literal(s)), Literal(0)),
-            "__graft_bin_salt_v")()
-          pointSalted = Project(pointSide.output :+ split, pointSide)
-          intvSalted = Generate(
-            Explode(If(hotI, all, one)),
-            unrequiredChildIndex = Nil, outer = false, qualifier = None,
-            generatorOutput = Seq(saltGen), child = intvSide)
-          equi = And(equi, EqualTo(split.toAttribute, saltGen))
-        }
-      }
-    }
+    // TARGETED skew salting (shared with the spatial tile join): only bins
+    // the plan-time sample flags as hot are sub-split on the dense side and
+    // replicated on the sparse one; an interval's anchor is its LOW bin
+    val (pointSalted, intvSalted, equi) = SkewSampler.salt(spark, "spark.graft.rangeJoin.salt", j,
+      "__graft_bin_salt",
+      SkewSampler.SaltSide(pointSide, binP.toAttribute, pointPlan, bin(iv.x, w)),
+      SkewSampler.SaltSide(intvSide, binI, intvPlan, bin(iv.lo, w)))
     val newCond = And(equi, cond)
     val (newL, newR) =
       if (iv.pointOnLeft) (pointSalted, intvSalted) else (intvSalted, pointSalted)
     Project(j.output, Join(newL, newR, Inner, Some(newCond), j.hint))
-  }
-
-  /** Hot bins sampled per (point plan, x, interval plan, lo, width) — the
-    * point side's bin is exact (one bin per row); an interval counts toward
-    * its LOW bin, which under-counts a bin-spanning interval's contribution
-    * but never invents skew (same anchor convention as the tile sampler's
-    * bbox min corner). */
-  private def hotBins(pointPlan: LogicalPlan, x: Expression,
-                      intvPlan: LogicalPlan, lo: Expression,
-                      w: Double): (Seq[Long], Boolean, Double) = {
-    val par = spark.sparkContext.defaultParallelism
-    def sample(plan: LogicalPlan, e: Expression): Seq[Long] = {
-      val col = Alias(bin(e, w), "__graft_bin_probe")()
-      SkewSampler.sampleLongs(spark, plan, col, perPart = 256, maxParts = 64)
-    }
-    try SkewSampler.cached(spark, "hotBins",
-        s"${SkewSampler.sideKey(pointPlan, x)}|${SkewSampler.sideKey(intvPlan, lo)}:$w:$par") {
-      SkewSampler.detectSkew(sample(pointPlan, x), sample(intvPlan, lo), par)
-    } catch {
-      case ex: Exception =>
-        logWarning(s"range-join hot-bin sampling failed (${ex.getClass.getSimpleName}: " +
-          s"${ex.getMessage}); salting nothing")
-        (Nil, true, 0.0)
-    }
   }
 
   /** Both sides explode to their bin ranges; a matching pair meets in every

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /**
  * Spatial-join acceleration (reference: RangeJoinSpatialPredicateRewriter,
@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
  * The equi-condition makes Catalyst pick a shuffled hash / sort-merge join, so
  * the work distributes over the cluster keyed by tile. The dedupe condition
  * keeps exactly the tile containing the top-left corner of the bbox
- * intersection, so no distinct pass is needed. Rewritable predicate set
- * mirrors optimizer_rules.cpp:96-98 (st_disjoint excluded: bbox overlap does
- * not imply it).
+ * intersection, so no distinct pass is needed. The rewritable predicates
+ * are [[SpatialPredicate.bboxImplying]] plus st_dwithin with a constant
+ * distance.
  *
  * Tuning: spark.graft.spatialJoin.enabled (default true),
  * spark.graft.spatialJoin.cellSize (default "auto" — samples bbox extents at
@@ -45,32 +45,25 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
  * fair task share, and ONLY those tiles are
  * sub-split — dense-side rows across `s` sub-keys by full-row hash, sparse
  * side replicated per sub-key — so a city-sized tile no longer lands on one
- * task while the rest of the data pays no replication tax. An integer value
- * pins the factor manually (|salt| <= 1 = off in either sign); an integer
- * below -1 forces salting
- * at |salt| even when a join side looks broadcast-sized — the escape hatch
- * for unreliable size stats. Otherwise salting is skipped entirely when a
- * join side fits the broadcast threshold: a broadcast hash join never
- * shuffles by tile, so it has no tile skew to split).
+ * task while the rest of the data pays no replication tax. An integer N > 1
+ * pins the factor; any other number is off. Salting is skipped entirely
+ * when a join side fits the broadcast threshold: a broadcast hash join never
+ * shuffles by tile, so it has no tile skew to split. [[SkewSampler.salt]]
+ * builds it, shared with the range join's hot bins).
  *
  * Two further scale moves (round 16), both free of semantic drift:
- *   - spark.graft.spatialJoin.preferHashJoin (default true): a forced-shuffle
- *     tile join is hinted SHUFFLE_HASH (build = smaller side by stats). The
- *     tile equi-join derives no benefit from sort order, and SMJ fully sorts
- *     BOTH fanned sides — at 600M×150M rows those two external sorts spilled
- *     more disk than the shuffle itself (measured: the sf100 polygon fan-out
- *     filled a 47 GB volume through SMJ sort spills).
+ *   - a forced-shuffle tile join is hinted SHUFFLE_HASH (build = smaller
+ *     side by stats). The tile equi-join derives no benefit from sort order,
+ *     and SMJ fully sorts BOTH fanned sides — at 600M×150M rows those two
+ *     external sorts spilled more disk than the shuffle itself (measured: the
+ *     sf100 polygon fan-out filled a 47 GB volume through SMJ sort spills).
  *   - envelope-exact residuals + WKB payload narrowing: when a geometry arg
  *     traces to a rect/point constructor, boundary-inclusive predicates
  *     evaluate as closed-form arithmetic on the st_extent sidecar and the
  *     WKB column is dropped from the shuffle entirely (rebuilt exactly from
  *     the sidecar where the output needs it) — see traceConstructor below.
  */
-class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private val rewritable = Set(
-    "st_intersects", "st_equals", "st_touches", "st_crosses", "st_within",
-    "st_contains", "st_overlaps", "st_covers", "st_coveredby", "st_containsproperly")
+class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.spatialJoin.enabled", "true").toBoolean
@@ -81,9 +74,6 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
   // bin join has the identical hot-key failure shape and mitigation). The
   // cache cannot live on this instance: Spark builds fresh rules for every
   // optimizer run, so a field here would never outlive one query.
-  private def sideKeys(left: LogicalPlan, lGeom: Expression,
-                       right: LogicalPlan, rGeom: Expression): String =
-    s"${SkewSampler.sideKey(left, lGeom)}|${SkewSampler.sideKey(right, rGeom)}"
 
   private def cellSize(left: LogicalPlan, lGeom: Expression,
                        right: LogicalPlan, rGeom: Expression): Double = {
@@ -105,10 +95,11 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val ext = Alias(Greatest(Seq(
         Subtract(FnExpr("st_xmax", Seq(geom)), FnExpr("st_xmin", Seq(geom))),
         Subtract(FnExpr("st_ymax", Seq(geom)), FnExpr("st_ymin", Seq(geom))))), "__ext")()
-      SkewSampler.sampleDoubles(spark, plan, ext, perPart = 32, maxParts = 64)
+      SkewSampler.sample[Double](spark, plan, ext, perPart = 32)
         .filter(d => !d.isNaN && !d.isInfinite)
     }
-    try SkewSampler.cached(spark, "cell", sideKeys(left, lGeom, right, rGeom)) {
+    val key = s"${SkewSampler.sideKey(left, lGeom)}|${SkewSampler.sideKey(right, rGeom)}"
+    try SkewSampler.cached(spark, "cell", key) {
       val all = (sampleExtents(left, lGeom) ++ sampleExtents(right, rGeom)).filter(_ > 0).sorted
       // pure point clouds: any cell works; keep 1
       java.lang.Double.valueOf(if (all.isEmpty) 1.0 else 2.0 * all(all.length / 2))
@@ -120,100 +111,26 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Tiles hot enough to serialize a task, detected from a bounded sample of
-    * each side's ANCHOR tile (st_tile_id of the bbox min corner, expanded on
-    * the left for st_dwithin so a tile that is only hot AFTER expansion is
-    * still seen — exact for point clouds, the common skew shape; a
-    * bbox-spanning geometry counts toward one of its tiles, which
-    * under-counts but never invents skew). A tile is hot when its sampled
-    * share exceeds 1/(2·parallelism) — the level where one tile's pairs
-    * start to dominate one task. Also returns WHICH side to sub-split (the
-    * side whose sample is denser in the hot tiles — the point cloud in the
-    * city-polygons-vs-points shape; the other side replicates, which is
-    * cheap precisely because it is sparse there) and the hottest tile's
-    * sampled share on that side, which salt=auto turns into the split
-    * factor. A false positive only salts a tile that didn't need it
-    * (bounded s× replication of that tile's rows on the sparse side); a
-    * false negative equals the unsalted status quo. Capped at 64 tiles so
-    * the IN-literal stays codegen-friendly. */
-  private def hotTiles(left: LogicalPlan, lGeom: Expression,
-                       right: LogicalPlan, rGeom: Expression,
-                       cell: Double, expand: Double): (Seq[Long], Boolean, Double) = {
-    val par = spark.sparkContext.defaultParallelism
-    def sampleAnchors(plan: LogicalPlan, geom: Expression, exp: Double): Seq[Long] = {
-      def corner(fn: String): Expression =
-        if (exp == 0.0) FnExpr(fn, Seq(geom))
-        else Subtract(FnExpr(fn, Seq(geom)), Literal(exp))
-      val anchor = Alias(FnExpr("st_tile_id", Seq(
-        corner("st_xmin"), corner("st_ymin"), Literal(cell))), "__anchor")()
-      SkewSampler.sampleLongs(spark, plan, anchor, perPart = 256, maxParts = 64)
-    }
-    // Hot-key + severity math is shared with RangeJoinRule: pair-mass share
-    // (product of both sides' sampled densities — the quantity that actually
-    // serializes a task), row-share floor, dense-side selection. See
-    // SkewSampler.detectSkew for the full rationale and SkewBench numbers.
-    try SkewSampler.cached(spark, "hotTiles",
-        s"${sideKeys(left, lGeom, right, rGeom)}:$cell:$expand:$par") {
-      SkewSampler.detectSkew(sampleAnchors(left, lGeom, expand), sampleAnchors(right, rGeom, 0.0), par)
-    } catch {
-      case e: Exception =>
-        logWarning(s"spatial-join hot-tile sampling failed (${e.getClass.getSimpleName}: " +
-          s"${e.getMessage}); salting nothing")
-        (Nil, true, 0.0)
-    }
+  /** The ANCHOR tile a skew sample reads per row: the tile of the bbox min
+    * corner, expanded by `exp` on the left for st_dwithin so a tile that is
+    * only hot AFTER expansion is still seen (exact for point clouds, the
+    * common skew shape). */
+  private def anchor(geom: Expression, exp: Double, cell: Literal): Expression = {
+    def corner(fn: String): Expression =
+      if (exp == 0.0) FnExpr(fn, Seq(geom))
+      else Subtract(FnExpr(fn, Seq(geom)), Literal(exp))
+    FnExpr("st_tile_id", Seq(corner("st_xmin"), corner("st_ymin"), cell))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
     plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), hint)
-          if j.resolved && !alreadyRewritten(cond) =>
-        findSpatialPredicate(cond, left, right) match {
+      case j @ Join(left, right, Inner, Some(cond), _) if j.resolved =>
+        SpatialPredicate.find(cond, left, right) match {
           case Some(m) => rewrite(j, cond, m)
           case None => j
         }
     }
-  }
-
-  private def alreadyRewritten(cond: Expression): Boolean =
-    cond.exists {
-      case a: AttributeReference => a.name.startsWith("__graft_tile")
-      case _ => false
-    }
-
-  /** One matched spatial-join predicate: the conjunct itself, its function
-   *  name AS WRITTEN (before any side-swap), the left/right-side geometry
-   *  args after side normalization, whether the args were swapped to get
-   *  there, and the tile expansion (st_dwithin's constant distance). */
-  private case class Matched(pred: Expression, fn: String, lGeom: Expression,
-                             rGeom: Expression, swapped: Boolean, expand: Double)
-
-  /** Locate a rewritable predicate whose two geometry args resolve to opposite
-   *  join sides. Plain bbox-implying predicates expand by 0; st_dwithin with a
-   *  CONSTANT distance expands the LEFT side's tiles by it (bbox-within-d
-   *  pairs then always share a tile; the exact predicate runs as residual). */
-  private def findSpatialPredicate(
-      cond: Expression,
-      left: LogicalPlan,
-      right: LogicalPlan): Option[Matched] = {
-    def sides(a: Expression, b: Expression): Option[(Expression, Expression, Boolean)] =
-      if (a.references.nonEmpty && b.references.nonEmpty &&
-          a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) Some((a, b, false))
-      else if (a.references.nonEmpty && b.references.nonEmpty &&
-          b.references.subsetOf(left.outputSet) && a.references.subsetOf(right.outputSet)) Some((b, a, true))
-      else None
-    splitConjuncts(cond).iterator.flatMap {
-      case p @ FnExpr(fn, Seq(a, b)) if rewritable(fn) =>
-        sides(a, b).map { case (l, r, sw) => Matched(p, fn, l, r, sw, 0.0) }
-      case p @ FnExpr("st_dwithin", Seq(a, b, d)) if d.foldable =>
-        val dist = d.eval() match {
-          case n: java.lang.Number => n.doubleValue()
-          case _ => Double.NaN
-        }
-        if (dist.isNaN || dist < 0) None
-        else sides(a, b).map { case (l, r, sw) => Matched(p, "st_dwithin", l, r, sw, dist) }
-      case _ => None
-    }.nextOption()
   }
 
   // ---- envelope-exact shapes ------------------------------------------------
@@ -278,21 +195,10 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  /** Raw salt setting: "auto" (default — self-enabling from the hot-tile
-    * sample), |N|<=1 = off, N>1 = manual factor, N<-1 = FORCE factor |N| even
-    * on a broadcast-shaped join (escape hatch for unreliable size stats). */
-  private def saltSetting: String =
-    spark.conf.get("spark.graft.spatialJoin.salt", "auto")
-
   private def rewrite(
       j: Join,
       cond: Expression,
-      m: Matched): LogicalPlan = {
+      m: SpatialPredicate.Matched): LogicalPlan = {
     val lGeom = m.lGeom
     val rGeom = m.rGeom
     val expand = m.expand
@@ -331,20 +237,19 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (subst.isEmpty) e
       else e.transformUp { case a: AttributeReference if subst.contains(a.exprId) => subst(a.exprId) }
 
-    def fldOf(env: Attribute, i: Int, n: String): Expression = GetStructField(env, i, Some(n))
     // closed-set bbox tests — boundary-INCLUSIVE, matching st_intersects /
     // st_covers semantics on rect/point shapes exactly (NULL env → NULL →
     // the join filter drops the row, same as the JTS kernel on NULL/EMPTY)
     def envOverlap: Expression = And(And(
-      LessThanOrEqual(fldOf(envL, 0, "min_x"), fldOf(envR, 2, "max_x")),
-      LessThanOrEqual(fldOf(envR, 0, "min_x"), fldOf(envL, 2, "max_x"))), And(
-      LessThanOrEqual(fldOf(envL, 1, "min_y"), fldOf(envR, 3, "max_y")),
-      LessThanOrEqual(fldOf(envR, 1, "min_y"), fldOf(envL, 3, "max_y"))))
+      LessThanOrEqual(fld(envL, 0, "min_x"), fld(envR, 2, "max_x")),
+      LessThanOrEqual(fld(envR, 0, "min_x"), fld(envL, 2, "max_x"))), And(
+      LessThanOrEqual(fld(envL, 1, "min_y"), fld(envR, 3, "max_y")),
+      LessThanOrEqual(fld(envR, 1, "min_y"), fld(envL, 3, "max_y"))))
     def envCovers(a: Attribute, b: Attribute): Expression = And(And(
-      LessThanOrEqual(fldOf(a, 0, "min_x"), fldOf(b, 0, "min_x")),
-      LessThanOrEqual(fldOf(b, 2, "max_x"), fldOf(a, 2, "max_x"))), And(
-      LessThanOrEqual(fldOf(a, 1, "min_y"), fldOf(b, 1, "min_y")),
-      LessThanOrEqual(fldOf(b, 3, "max_y"), fldOf(a, 3, "max_y"))))
+      LessThanOrEqual(fld(a, 0, "min_x"), fld(b, 0, "min_x")),
+      LessThanOrEqual(fld(b, 2, "max_x"), fld(a, 2, "max_x"))), And(
+      LessThanOrEqual(fld(a, 1, "min_y"), fld(b, 1, "min_y")),
+      LessThanOrEqual(fld(b, 3, "max_y"), fld(a, 3, "max_y"))))
     val envExact: Option[Expression] =
       if (shapeL.isEmpty || shapeR.isEmpty) None
       else m.fn match {
@@ -356,7 +261,7 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // the residual: the matched conjunct becomes sidecar arithmetic when
     // envelope-exact; every other reference to a classified geometry column
     // is rebuilt from the sidecar so the WKB itself need not travel
-    val residual: Expression = splitConjuncts(cond).map { c =>
+    val residual: Expression = splitConjunctivePredicates(cond).map { c =>
       if ((c eq m.pred) && envExact.isDefined) envExact.get else substituted(c)
     }.reduce(And)
     val keepL: Seq[Attribute] = j.left.output.filterNot(a => dropL.exists(_._1.exprId == a.exprId))
@@ -366,12 +271,12 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // (null/empty geometry) makes st_tile_ids_env return null (FnExpr
     // null-propagates) and the non-outer Explode drops the row — null
     // geometries never reach the shuffle, at zero extra evaluations.
-    var genLeft: LogicalPlan = Generate(
+    val genLeft: LogicalPlan = Generate(
       Explode(FnExpr("st_tile_ids_env", Seq(envL, cell, Literal(expand)))),
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(tileL),
       child = Project(keepL :+ envLA, j.left))
-    var genRight: LogicalPlan = Generate(
+    val genRight: LogicalPlan = Generate(
       Explode(FnExpr("st_tile_ids_env", Seq(envR, cell))),
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(tileR),
@@ -386,92 +291,11 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
       fld(envR, 1, "min_y")))
     val dedupe = EqualTo(FnExpr("st_tile_id", Seq(refX, refY, cell)), tileL)
 
-    var equi: Expression = EqualTo(tileL, tileR)
-    val setting = saltSetting
-    val auto = setting.equalsIgnoreCase("auto")
-    val manual = if (auto) 0 else setting.toInt
-    // |manual| <= 1 is OFF in either sign: -1 would pass a naive `< 0` force
-    // gate and then salt with s = |−1| = 1 — the full explode + murmur
-    // machinery with a single bucket, pure per-row overhead, zero splitting
-    val force = manual < -1
-    val wantSalt = auto || manual > 1 || force
-    // Salt is a SHUFFLE-skew mitigation: it only helps when the equi-join
-    // hash-partitions by tile and a hot tile would serialize onto one task.
-    // When either original side fits the session broadcast threshold,
-    // Catalyst picks a broadcast hash join for the rewritten equi-join — the
-    // probe work then distributes with the big side's partitions and no tile
-    // ever owns a task, so salting is pure overhead (s× candidate
-    // replication plus a murmur per candidate: measured 6× wall at salt=8 on
-    // a 20M-point hot-tile fixture, graft.tools.SkewBench). Skip it there —
-    // unless a negative setting FORCES it (size stats can under-estimate; a
-    // side Catalyst ultimately refuses to broadcast would then be left
-    // unprotected with no recourse).
-    val abt = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val broadcastShaped = abt > 0 &&
-      (j.left.stats.sizeInBytes <= abt || j.right.stats.sizeInBytes <= abt)
-    if (wantSalt && broadcastShaped && !force && !auto)
-      logInfo(s"spatial-join salt=$setting skipped: a join side fits the broadcast " +
-        s"threshold ($abt b), so the tile join will not shuffle and has no skew to split")
-    if (wantSalt && (!broadcastShaped || force)) {
-      // TARGETED skew salting: only tiles the plan-time sample flags as hot
-      // are sub-split (dense-side keys by full-row hash) and replicated
-      // (sparse-side rows, s-fold). Global salting replicated EVERY right
-      // row s× — on a 20M-row hot-tile fixture that quadrupled total task
-      // time for a straggler it didn't even level (SkewBench round-14
-      // measurements); targeting confines the replication tax to the hot
-      // tiles' own rows, and a skew-free dataset pays nothing at all.
-      val (hot, splitRight, hottestShare) = hotTiles(j.left, lGeom, j.right, rGeom,
-        cell.value.asInstanceOf[Double], expand)
-      // auto derives the factor from the measurement it already has:
-      // s = ceil(pairShare × parallelism) clamped to [2, min(par, 256)]
-      // (SkewSampler.autoFactor — SkewBench measured monotone improvement
-      // right up to s = parallelism at 20M/50M/100M points; 256 bounds the
-      // sparse side's replication tax on very large clusters).
-      val par = spark.sparkContext.defaultParallelism
-      val s =
-        if (!auto) math.abs(manual)
-        else SkewSampler.autoFactor(hottestShare, par)
-      if (hot.isEmpty) {
-        if (!auto)
-          logInfo(s"spatial-join salt=$s requested but the tile sample found no hot " +
-            s"tiles — salting nothing (a skew-free join pays no replication tax)")
-      } else {
-        logInfo(s"spatial-join salt=$s${if (auto) " (auto)" else ""} targeting " +
-          s"${hot.size} hot tile(s), splitting the ${if (splitRight) "right" else "left"} side")
-        val hotL = In(tileL, hot.map(Literal(_)))
-        val hotR = In(tileR, hot.map(Literal(_)))
-        val one = Literal.create(Seq(0), org.apache.spark.sql.types.ArrayType(IntegerType))
-        val all = Literal.create(0 until s, org.apache.spark.sql.types.ArrayType(IntegerType))
-        // The DENSE side's hot rows sub-split by a hash of the FULL row (a
-        // geometry-only hash collapses identical geometries — a stack of
-        // copies of the same city polygon would all land in one bucket);
-        // the sparse side replicates s-fold for hot tiles only. Fully
-        // identical rows still co-bucket — that duplication factor is the
-        // one skew this scheme cannot split.
-        val saltGen = AttributeReference("__graft_tile_salt", IntegerType, nullable = false)()
-        if (splitRight) {
-          val split = Alias(If(hotR,
-            Pmod(new Murmur3Hash(keepR :+ envR), Literal(s)), Literal(0)),
-            "__graft_tile_salt_v")()
-          genRight = Project(genRight.output :+ split, genRight)
-          genLeft = Generate(
-            Explode(If(hotL, all, one)),
-            unrequiredChildIndex = Nil, outer = false, qualifier = None,
-            generatorOutput = Seq(saltGen), child = genLeft)
-          equi = And(equi, EqualTo(saltGen, split.toAttribute))
-        } else {
-          val split = Alias(If(hotL,
-            Pmod(new Murmur3Hash(keepL :+ envL), Literal(s)), Literal(0)),
-            "__graft_tile_salt_v")()
-          genLeft = Project(genLeft.output :+ split, genLeft)
-          genRight = Generate(
-            Explode(If(hotR, all, one)),
-            unrequiredChildIndex = Nil, outer = false, qualifier = None,
-            generatorOutput = Seq(saltGen), child = genRight)
-          equi = And(equi, EqualTo(split.toAttribute, saltGen))
-        }
-      }
-    }
+    // hot tiles sub-split on the dense side, replicated on the sparse one
+    val (saltedL, saltedR, equi) = SkewSampler.salt(spark, "spark.graft.spatialJoin.salt", j,
+      "__graft_tile_salt",
+      SkewSampler.SaltSide(genLeft, tileL, j.left, anchor(lGeom, expand, cell)),
+      SkewSampler.SaltSide(genRight, tileR, j.right, anchor(rGeom, 0.0, cell)))
 
     // Null-TOLERANT conjuncts (r17): a null join condition already means
     // "no match", so coalesce(c, false) is semantically identical — but the
@@ -510,12 +334,12 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case EqualTo(tl, tr) => (Seq(tl), Seq(tr))
       case _ => (Seq(tileL: Expression), Seq(tileR: Expression))
     }
-    if (targetParts > sessionParts && !broadcastShaped) {
-      logInfo(s"spatial-join exchange sized to $targetParts partitions " +
-        s"(~${estBytes >> 20} MB est. incl. fan-out margin, session=$sessionParts)")
-      genLeft = RepartitionByExpression(lKeys, genLeft, Some(targetParts))
-      genRight = RepartitionByExpression(rKeys, genRight, Some(targetParts))
-    }
+    val broadcastShaped = SkewSampler.broadcastShaped(spark, j)
+    val sized = targetParts > sessionParts && !broadcastShaped
+    if (sized) logInfo(s"spatial-join exchange sized to $targetParts partitions " +
+      s"(~${estBytes >> 20} MB est. incl. fan-out margin, session=$sessionParts)")
+    def exchange(keys: Seq[Expression], side: LogicalPlan): LogicalPlan =
+      if (sized) RepartitionByExpression(keys, side, Some(targetParts)) else side
 
     // The tile equi-join never benefits from sort order, and on a forced
     // shuffle SMJ sorts BOTH (fanned) sides — at 600M×150M rows that is two
@@ -526,20 +350,19 @@ class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // above, the per-partition build is bounded by targetPartitionBytes-ish;
     // the extra gate skips the hint when the SMALLER side alone would still
     // exceed a safe per-partition build (stats can miss filters).
-    val preferHash =
-      spark.conf.get("spark.graft.spatialJoin.preferHashJoin", "true").toBoolean
     val minSideBytes =
       j.left.stats.sizeInBytes.min(j.right.stats.sizeInBytes)
     val buildFits = minSideBytes / targetParts <= (tgtBytes * 2)
     val newHint =
-      if (preferHash && !broadcastShaped && buildFits) {
+      if (!broadcastShaped && buildFits) {
         def sh(h: Option[HintInfo]): Option[HintInfo] =
           Some(h.getOrElse(HintInfo()).copy(strategy = Some(SHUFFLE_HASH)))
         if (j.right.stats.sizeInBytes <= j.left.stats.sizeInBytes)
           j.hint.copy(rightHint = sh(j.hint.rightHint))
         else j.hint.copy(leftHint = sh(j.hint.leftHint))
       } else j.hint
-    val newJoin = Join(genLeft, genRight, Inner, Some(newCond), newHint)
+    val newJoin = Join(exchange(lKeys, saltedL), exchange(rKeys, saltedR), Inner,
+      Some(newCond), newHint)
     // restore the original output contract: narrowed geometry columns are
     // rebuilt from the sidecar (evaluated only on rows that PASSED the
     // spatial predicate — NULL/EMPTY inputs never reach this projection)

@@ -35,7 +35,7 @@ object SkewBench {
     graft.Graft.register(spark)
     // force the distributed tile join — a broadcast of the poly side would
     // hide the skew this harness exists to measure
-    spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "false")
+    spark.conf.set("spark.graft.spatialJoin.broadcastThreshold", "-1")
     spark.conf.set("spark.graft.spatialJoin.cellSize", "1.0")
 
     // --- deterministic skewed fixture --------------------------------------

@@ -1,11 +1,13 @@
 package graft
 
+import graft.TestFiles.withConfs
 import graft.operators.KnnJoin
 import graft.plans.SpatialBroadcastJoinExec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Broadcast R-tree spatial join: small-side joins must take the
@@ -17,6 +19,10 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
 
   private lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** A pinned cell for the joins that fall back to the tile rewrite. */
+  override def withFixture(test: NoArgTest): Outcome =
+    withConfs("spark.graft.spatialJoin.cellSize" -> "10.0")(super.withFixture(test))
+
   /** The join nodes of `df`'s executed plan (the AQE-final one once run). */
   private def joinsOf(df: DataFrame): Seq[SpatialBroadcastJoinExec] =
     collect(df.queryExecution.executedPlan) { case j: SpatialBroadcastJoinExec => j }
@@ -26,16 +32,12 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
 
   private def indexMisses: Long = LruCache.counters.getOrElse("broadcastIndex.misses", 0L)
 
-  private def withNaive[T](body: => T): T = {
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    try body finally spark.conf.set("spark.graft.spatialJoin.enabled", "true")
-  }
+  private def withNaive[T](body: => T): T =
+    withConfs("spark.graft.spatialJoin.enabled" -> "false")(body)
 
   private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   private def setup(): Unit = {
-    spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "true")
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     spark.sql("""
       SELECT id AS pid, st_point(cast(id % 97 AS DOUBLE), cast((id * 7) % 89 AS DOUBLE)) AS pt
       FROM range(0, 2000)""").createOrReplaceTempView("bpts")
@@ -63,9 +65,7 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
       case other => fail(s"build child is not a broadcast exchange:\n$other")
     }
 
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val naive = collectPairs(sql)
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val naive = withNaive(collectPairs(sql))
     assert(fast == naive && fast.nonEmpty,
       s"broadcast join changed results: only-fast=${(fast -- naive).take(5)} only-naive=${(naive -- fast).take(5)}")
   }
@@ -88,21 +88,18 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
     assert(df.queryExecution.executedPlan.toString.contains("SpatialBroadcastJoin"))
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty && got.forall(_._1 % 2 == 0))
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    assert(got == collectPairs(sql))
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    assert(got == withNaive(collectPairs(sql)))
   }
 
   test("threshold 0 falls back to the tile rewrite") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.broadcastThreshold", "0")
-    try {
+    withConfs("spark.graft.spatialJoin.broadcastThreshold" -> "0") {
       val df = spark.sql("SELECT pid, cell FROM bpts JOIN bcells ON st_contains(env, pt)")
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("SpatialBroadcastJoin"), s"broadcast chosen despite threshold 0:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
       assert(df.count() > 0)
-    } finally spark.conf.unset("spark.graft.spatialJoin.broadcastThreshold")
+    }
   }
 
   test("st_dwithin radius join expands the probe envelope and matches the naive join") {
@@ -119,9 +116,7 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
     val metrics = joinsOf(df).head.metrics
     assert(metrics("numOutputRows").value == rows.length)
     assert(metrics("numCandidates").value >= rows.length)
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val naive = collectPairs(sql)
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val naive = withNaive(collectPairs(sql))
     assert(fast == naive && fast.nonEmpty,
       s"dwithin mismatch: only-fast=${(fast -- naive).take(5)} only-naive=${(naive -- fast).take(5)}")
   }
@@ -130,9 +125,7 @@ class BroadcastSpatialJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper 
     setup()
     val sql = "SELECT pid, cell FROM bpts JOIN bcells ON st_within(pt, env)"
     val broadcast = collectPairs(sql)
-    spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "false")
-    val tiled = collectPairs(sql)
-    spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "true")
+    val tiled = withConfs("spark.graft.spatialJoin.broadcastThreshold" -> "-1")(collectPairs(sql))
     assert(broadcast == tiled && broadcast.nonEmpty)
   }
 

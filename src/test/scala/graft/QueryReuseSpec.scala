@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestFiles.withConfs
 import graft.functions.FnExpr
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -12,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan-time join samples (SkewSampler's cache) and built fixture relations
   * (SparkEntry's fixture map). Both report hits and misses in
   * `LruCache.counters`. */
-class QueryReuseSpec extends AnyFunSuite {
+class QueryReuseSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   /** Stage names of the Spark jobs `f` starts. */
@@ -53,16 +54,6 @@ class QueryReuseSpec extends AnyFunSuite {
     })
   }
 
-  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Builds `build` twice; the second plan must start no Spark job, hit the
     * sample cache without a miss, and carry the first plan's choices and
     * rows. Returns the choices. */
@@ -101,17 +92,15 @@ class QueryReuseSpec extends AnyFunSuite {
         // sf0.001's lineitem is below the tiny-side bypass
         "spark.graft.rangeJoin.maxBroadcastBypass" -> "0") {
       // the columns the two queries read, at about sf0.001's row counts
-      val dir = java.nio.file.Files.createTempDirectory("graft_plan_reuse").toString
-      try {
-        spark.range(0, 6000).selectExpr("id DIV 4 + 1 AS l_orderkey", "id % 4 + 1 AS l_linenumber",
-            "(id * 7919) % 2000 + 1 AS l_partkey", "(id * 104729) % 100 + 1 AS l_suppkey")
-          .write.parquet(s"$dir/lineitem.parquet")
-        spark.range(0, 1500).selectExpr("id + 1 AS o_orderkey", "(id * 31) % 150 + 1 AS o_custkey")
-          .write.parquet(s"$dir/orders.parquet")
-        Seq("q_dwithin_selective", "q_interval_join").foreach { n =>
-          plansTwiceWithoutResampling(n)(SparkEntry.queries(n)(spark, dir))
-        }
-      } finally scala.reflect.io.Path(dir).deleteRecursively()
+      val dir = tempDir("graft_plan_reuse").toString
+      spark.range(0, 6000).selectExpr("id DIV 4 + 1 AS l_orderkey", "id % 4 + 1 AS l_linenumber",
+          "(id * 7919) % 2000 + 1 AS l_partkey", "(id * 104729) % 100 + 1 AS l_suppkey")
+        .write.parquet(s"$dir/lineitem.parquet")
+      spark.range(0, 1500).selectExpr("id + 1 AS o_orderkey", "(id * 31) % 150 + 1 AS o_custkey")
+        .write.parquet(s"$dir/orders.parquet")
+      Seq("q_dwithin_selective", "q_interval_join").foreach { n =>
+        plansTwiceWithoutResampling(n)(SparkEntry.queries(n)(spark, dir))
+      }
       // a skewed join, so the reused choices include a hot-tile IN list:
       // half the points sit in one 10x10 cell
       val hotSql = """
@@ -151,8 +140,8 @@ class QueryReuseSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.sum("sum_qty")).collect()(0).getDouble(0)
 
   test("an unchanged fixture is registered without reading it again") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixture_memo").toString
-    try withConfs("spark.graft.fixtureCache.enabled" -> "false") {
+    val dir = tempDir("graft_fixture_memo").toString
+    withConfs("spark.graft.fixtureCache.enabled" -> "false") {
       writeLineitem(dir, 50)
       val ((_, first), d1) = delta("fixture.hits", "fixture.misses") {
         jobsDuring(SparkEntry.queries("q_tpch_q1")(spark, dir))
@@ -166,22 +155,22 @@ class QueryReuseSpec extends AnyFunSuite {
       assert(second.isEmpty, s"a second registration started jobs: ${second.mkString(" | ")}")
       assert(d2("fixture.misses") == 0 && d2("fixture.hits") == 1, s"counters $d2")
       assert(sumQty(dir) == 50.0)
-    } finally scala.reflect.io.Path(dir).deleteRecursively()
+    }
   }
 
   test("a rewritten fixture returns the new rows, on the default path and under the fixture cache") {
     // under the fixture cache the stale persisted relation would otherwise
     // be substituted for the new read of the same path
     Seq("false", "true").foreach { flag =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_fixture_rewrite").toString
-      try withConfs("spark.graft.fixtureCache.enabled" -> flag) {
+      val dir = tempDir("graft_fixture_rewrite").toString
+      withConfs("spark.graft.fixtureCache.enabled" -> flag) {
         writeLineitem(dir, 100)
         assert(sumQty(dir) == 100.0)
         writeLineitem(dir, 40)
         val (n2, d) = delta("fixture.misses")(sumQty(dir))
         assert(n2 == 40.0, s"fixtureCache.enabled=$flag: the rewritten fixture must be read again, got $n2")
         assert(d("fixture.misses") == 1, s"counters $d")
-      } finally scala.reflect.io.Path(dir).deleteRecursively()
+      }
     }
   }
 }

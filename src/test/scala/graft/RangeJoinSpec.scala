@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.TestFiles.withConfs
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Binned interval join: a BETWEEN join with no equi-key must leave the
@@ -10,10 +13,14 @@ class RangeJoinSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** The cost bailout defers tiny build sides to Spark's BNLJ; force the
+    * rewrite for plan-shape tests (the bailout has its own test below). */
+  override def withFixture(test: NoArgTest): Outcome =
+    withConfs("spark.graft.rangeJoin.maxBroadcastBypass" -> "0")(super.withFixture(test))
+
+  private def withRuleOff[T](f: => T): T = withConfs("spark.graft.rangeJoin.enabled" -> "false")(f)
+
   private def setup(): Unit = {
-    // the cost bailout defers tiny build sides to Spark's BNLJ; force the
-    // rewrite for plan-shape tests (the bailout has its own test below)
-    spark.conf.set("spark.graft.rangeJoin.maxBroadcastBypass", "0")
     spark.sql("""
       SELECT id AS pid, CAST((id * 13) % 9973 AS DOUBLE) AS x
       FROM range(0, 20000)""").createOrReplaceTempView("rj_points")
@@ -37,8 +44,7 @@ class RangeJoinSpec extends AnyFunSuite {
       s"still a pair-scan join:\n$plan")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty,
       s"rewrite changed results: n_fast=${fast.size} n_naive=${naive.size} " +
         s"only-fast=${(fast -- naive).take(5)} only-naive=${(naive -- fast).take(5)}")
@@ -52,15 +58,13 @@ class RangeJoinSpec extends AnyFunSuite {
     val df = spark.sql(sql)
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty)
   }
 
   test("tiny build sides defer to Spark's broadcast nested loop by default") {
     setup()
-    spark.conf.unset("spark.graft.rangeJoin.maxBroadcastBypass")
-    try {
+    withConfs("spark.graft.rangeJoin.maxBroadcastBypass" -> (64 * 1024).toString) { // the default
       spark.sql("""
         SELECT id AS iid, CAST(id * 10 AS DOUBLE) AS lo, CAST(id * 10 + 5 AS DOUBLE) AS hi
         FROM range(0, 20)""").createOrReplaceTempView("rj_tiny")
@@ -69,7 +73,7 @@ class RangeJoinSpec extends AnyFunSuite {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("__graft_bin"),
         s"rewrite fired on a 20-row build side (BNLJ is cheaper there):\n$plan")
-    } finally spark.conf.set("spark.graft.rangeJoin.maxBroadcastBypass", "0")
+    }
   }
 
   test("unbounded (infinite) intervals bail out instead of exploding bins") {
@@ -124,8 +128,7 @@ class RangeJoinSpec extends AnyFunSuite {
     // exact multiset: the anchor dedupe must emit each pair exactly once
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(fast.size == fast.toSet.size, "anchor dedupe emitted duplicates")
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast.toSet == naive && fast.nonEmpty)
   }
 
@@ -142,8 +145,7 @@ class RangeJoinSpec extends AnyFunSuite {
     val sql = """SELECT aid, bid FROM rj_ra a JOIN rj_rb b
                  ON a.alo <= b.bhi AND b.blo <= a.ahi"""
     val fast = pairs(sql)
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty,
       s"n_fast=${fast.size} n_naive=${naive.size} only-naive=${(naive -- fast).take(5)}")
   }
@@ -156,14 +158,15 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"),
       "band-join rewrite did not fire")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty)
   }
 
-  /** Skewed fixture: half the points stacked on one value (a spike at one
+  /** Skewed fixtures: half the points stacked on one value (a spike at one
     * timestamp / one price band — the hot-bin shape), the rest uniform;
-    * intervals cover the whole domain so the hot bin really joins. */
+    * intervals cover the whole domain so the hot bin really joins. And the
+    * mirror: half the intervals starting in one narrow band, met by uniform
+    * points, so the interval side is the dense one. */
   private def setupSkewed(): Unit = {
     setup()
     spark.sql("""
@@ -171,66 +174,77 @@ class RangeJoinSpec extends AnyFunSuite {
              CASE WHEN id % 2 = 0 THEN 500.0d
                   ELSE CAST((id * 13) % 9973 AS DOUBLE) END AS x
       FROM range(0, 20000)""").createOrReplaceTempView("rj_skewp")
+    spark.sql("""
+      SELECT iid, lo, lo + CAST(iid % 17 AS DOUBLE) AS hi FROM (
+        SELECT id AS iid,
+               CASE WHEN id % 2 = 0 THEN 500.0d + CAST(id % 5 AS DOUBLE)
+                    ELSE CAST((id * 37) % 9900 AS DOUBLE) END AS lo
+        FROM range(0, 3000))""").createOrReplaceTempView("rj_skewi")
   }
+
+  /** The salted bin-join inputs, each with the side its salt must split:
+    * dense points, then dense intervals (point side on the left in both). */
+  private val skewedJoins = Seq(
+    "SELECT pid, iid FROM rj_skewp p JOIN rj_intervals i ON p.x BETWEEN i.lo AND i.hi" -> "left",
+    "SELECT pid, iid FROM rj_points p JOIN rj_skewi i ON p.x BETWEEN i.lo AND i.hi" -> "right")
+
+  /** The side of each rewritten join whose rows the salt sub-splits: the
+    * child carrying the `__graft_bin_salt_v` sub-key. */
+  private def splitSides(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case j: LJoin if j.left.output.exists(_.name == "__graft_bin_salt_v") => "left"
+      case j: LJoin if j.right.output.exists(_.name == "__graft_bin_salt_v") => "right"
+    }
 
   test("salt=auto self-enables on a hot bin and keeps exact results") {
     setupSkewed()
-    val sql = "SELECT pid, iid FROM rj_skewp p JOIN rj_intervals i ON p.x BETWEEN i.lo AND i.hi"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // shuffle-shaped
-      spark.conf.set("spark.graft.rangeJoin.salt", "auto")
-      val df = spark.sql(sql)
-      assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin_salt"),
-        "salt=auto must fire on a hot bin in a shuffle-shaped join")
-      val salted = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-      val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
-      assert(salted == naive && salted.nonEmpty,
-        s"salting changed results: only-salted=${(salted -- naive).take(5)} " +
-          s"only-naive=${(naive -- salted).take(5)}")
-    } finally {
-      spark.conf.set("spark.graft.rangeJoin.salt", "auto")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+    skewedJoins.foreach { case (sql, dense) =>
+      withConfs(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1", // shuffle-shaped
+          "spark.graft.rangeJoin.salt" -> "auto") {
+        val df = spark.sql(sql)
+        assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin_salt"),
+          "salt=auto must fire on a hot bin in a shuffle-shaped join")
+        assert(splitSides(df) == Seq(dense), sql)
+        val salted = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val naive = withRuleOff(pairs(sql))
+        assert(salted == naive && salted.nonEmpty,
+          s"salting changed results: only-salted=${(salted -- naive).take(5)} " +
+            s"only-naive=${(naive -- salted).take(5)}")
+      }
     }
   }
 
   test("salt=auto leaves a skew-free bin join's plan unchanged (no replication tax)") {
     setup() // uniform: ~2 points per value, no bin near the hot bar
     val sql = "SELECT pid, iid FROM rj_points p JOIN rj_intervals i ON p.x BETWEEN i.lo AND i.hi"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.rangeJoin.salt", "auto")
-      val auto = spark.sql(sql).queryExecution.optimizedPlan.toString
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val auto = withConfs("spark.graft.rangeJoin.salt" -> "auto") {
+        spark.sql(sql).queryExecution.optimizedPlan.toString
+      }
       assert(!auto.contains("__graft_bin_salt"),
         "uniform data must not pay the salt machinery")
-      spark.conf.set("spark.graft.rangeJoin.salt", "1")
-      val off = spark.sql(sql).queryExecution.optimizedPlan.toString
+      val off = withConfs("spark.graft.rangeJoin.salt" -> "1") {
+        spark.sql(sql).queryExecution.optimizedPlan.toString
+      }
       assert(auto.replaceAll("#\\d+", "#") == off.replaceAll("#\\d+", "#"),
         "salt=auto on skew-free data must produce the identical plan to salt=1")
-    } finally {
-      spark.conf.set("spark.graft.rangeJoin.salt", "auto")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
     }
   }
 
   test("manual salt targets hot bins and keeps exact results") {
     setupSkewed()
-    val sql = "SELECT pid, iid FROM rj_skewp p JOIN rj_intervals i ON p.x BETWEEN i.lo AND i.hi"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.rangeJoin.salt", "4")
-      val df = spark.sql(sql)
-      assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin_salt"))
-      val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-      val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
-      assert(fast == naive && fast.nonEmpty)
-    } finally {
-      spark.conf.set("spark.graft.rangeJoin.salt", "auto")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+    skewedJoins.foreach { case (sql, dense) =>
+      withConfs(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.graft.rangeJoin.salt" -> "4") {
+        val df = spark.sql(sql)
+        assert(df.queryExecution.optimizedPlan.toString.contains("__graft_bin_salt"))
+        assert(splitSides(df) == Seq(dense), sql)
+        val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val naive = withRuleOff(pairs(sql))
+        assert(fast == naive && fast.nonEmpty)
+      }
     }
   }
 
@@ -238,19 +252,17 @@ class RangeJoinSpec extends AnyFunSuite {
     setupSkewed()
     // default broadcast threshold: these small views broadcast, so even a
     // hot bin cannot serialize a task and salting would be pure overhead
-    spark.conf.set("spark.graft.rangeJoin.salt", "8")
-    try {
+    withConfs("spark.graft.rangeJoin.salt" -> "8") {
       val df = spark.sql(
         "SELECT pid, iid FROM rj_skewp p JOIN rj_intervals i ON p.x BETWEEN i.lo AND i.hi")
       assert(!df.queryExecution.optimizedPlan.toString.contains("__graft_bin_salt"),
         "salt must not fire on a broadcast-shaped bin join")
       assert(df.count() > 0)
-    } finally spark.conf.set("spark.graft.rangeJoin.salt", "auto")
+    }
   }
 
   test("randomized parity: 30 generated interval tables match the naive plan") {
     import org.scalacheck.{Gen, rng}
-    spark.conf.set("spark.graft.rangeJoin.maxBroadcastBypass", "0")
     val tbl = for {
       nP <- Gen.choose(50, 400)
       nI <- Gen.choose(20, 200)
@@ -271,15 +283,13 @@ class RangeJoinSpec extends AnyFunSuite {
         FROM range(0, $nI)""").createOrReplaceTempView("rj_fi")
       val sql = "SELECT pid, iid FROM rj_fp p JOIN rj_fi i ON p.x BETWEEN i.lo AND i.hi"
       val fast = pairs(sql)
-      spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-      val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+      val naive = withRuleOff(pairs(sql))
       assert(fast == naive, s"case $i ($nP,$nI,$scale,$neg,$maxLen): " +
         s"fast=${fast.size} naive=${naive.size} onlyN=${(naive -- fast).take(3)}")
     }
   }
 
   test("timestamp intervals bin correctly") {
-    spark.conf.set("spark.graft.rangeJoin.maxBroadcastBypass", "0")
     spark.sql("""
       SELECT id AS pid, timestamp_seconds(1700000000 + id * 60) AS ts
       FROM range(0, 5000)""").createOrReplaceTempView("rj_tsp")
@@ -291,8 +301,7 @@ class RangeJoinSpec extends AnyFunSuite {
     val df = spark.sql(sql)
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    val naive = try pairs(sql) finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty)
   }
 }

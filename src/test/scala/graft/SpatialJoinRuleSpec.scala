@@ -1,21 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.TestFiles.withConfs
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The tile-join rewrite must (a) preserve results exactly and (b) produce a
   * plan with an equi-join (hash/sort-merge-able) instead of a
   * BroadcastNestedLoop/Cartesian join — the single biggest 100 TB scale item
   * (SURVEY §3.3). */
-class SpatialJoinRuleSpec extends AnyFunSuite {
+class SpatialJoinRuleSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** Every test runs on the TILE path with a 10.0 cell unless it sets
+    * otherwise: these inputs are broadcast-sized, and the broadcast-index
+    * rule would otherwise claim every join in this suite
+    * (BroadcastSpatialJoinSpec covers that path). */
+  override def withFixture(test: NoArgTest): Outcome =
+    withConfs(
+      "spark.graft.spatialJoin.broadcastThreshold" -> "-1",
+      "spark.graft.spatialJoin.cellSize" -> "10.0")(super.withFixture(test))
+
+  private def withRuleOff[T](f: => T): T = withConfs("spark.graft.spatialJoin.enabled" -> "false")(f)
+
   private def setup(): Unit = {
-    // pin the TILE path: these inputs are broadcast-sized, and the
-    // broadcast-index rule would otherwise claim every join in this suite
-    // (BroadcastSpatialJoinSpec covers that path)
-    spark.conf.set("spark.graft.spatialJoin.broadcast.enabled", "false")
     spark.sql("""
       SELECT id AS pid, st_point(cast(id % 97 AS DOUBLE), cast((id * 7) % 89 AS DOUBLE)) AS pt
       FROM range(0, 2000)""").createOrReplaceTempView("pts")
@@ -26,33 +36,9 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
       FROM range(0, 100)""").createOrReplaceTempView("cells")
   }
 
-  test("tile join rewrite preserves results and avoids nested-loop join") {
-    setup()
-    val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val rewritten = spark.sql(joinSql)
-    val physical = rewritten.queryExecution.executedPlan.toString
-    assert(!physical.contains("CartesianProduct"), s"plan still cartesian:\n$physical")
-    assert(!physical.contains("BroadcastNestedLoopJoin"), s"plan still BNL:\n$physical")
-    val fast = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // ground truth with the rule disabled (plain BNL join)
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
-
-    assert(fast == slow, s"tile join changed results: only-fast=${(fast -- slow).take(5)} only-slow=${(slow -- fast).take(5)}")
-    assert(fast.nonEmpty)
-  }
-
-  test("skew salting preserves results (shuffle-shaped join)") {
-    setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-    // salt only applies when the join will actually shuffle AND the sample
-    // finds a hot tile: force the shuffle shape, and give the fixture a
-    // genuinely hot tile (half the points in one cell)
+  /** The r14 skew fixture as the `pts` view: half the points in one 10x10
+    * cell. */
+  private def hotPts(): Unit =
     spark.sql("""
       SELECT id AS pid,
              CASE WHEN id % 2 = 0
@@ -60,59 +46,90 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
                              55.0d + cast(id % 7 AS DOUBLE) / 10.0d)
                ELSE st_point(cast(id % 97 AS DOUBLE), cast((id * 7) % 89 AS DOUBLE)) END AS pt
       FROM range(0, 2000)""").createOrReplaceTempView("pts")
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "4")
-      val saltedDf = spark.sql(joinSql)
-      assert(saltedDf.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
-        "salt must fire on a shuffle-shaped join")
-      val salted = saltedDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      val plain = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(salted == plain && salted.nonEmpty)
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+
+  private def pairs(sql: String): Set[(Long, Long)] =
+    spark.sql(sql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** The salted tile-join inputs: the dense point side on the left, then on
+    * the right. */
+  private val hotJoins = Seq(
+    "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)" -> "left",
+    "SELECT pid, cell FROM cells JOIN pts ON st_contains(env, pt)" -> "right")
+
+  /** The side of each rewritten join whose rows the salt sub-splits: the
+    * child carrying the `__graft_tile_salt_v` sub-key. */
+  private def splitSides(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case j: LJoin if j.left.output.exists(_.name == "__graft_tile_salt_v") => "left"
+      case j: LJoin if j.right.output.exists(_.name == "__graft_tile_salt_v") => "right"
+    }
+
+  test("tile join rewrite preserves results and avoids nested-loop join") {
+    setup()
+    val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
+
+    val rewritten = spark.sql(joinSql)
+    val physical = rewritten.queryExecution.executedPlan.toString
+    assert(!physical.contains("CartesianProduct"), s"plan still cartesian:\n$physical")
+    assert(!physical.contains("BroadcastNestedLoopJoin"), s"plan still BNL:\n$physical")
+    val fast = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // ground truth with the rule disabled (plain BNL join)
+    val slow = withRuleOff(pairs(joinSql))
+
+    assert(fast == slow, s"tile join changed results: only-fast=${(fast -- slow).take(5)} only-slow=${(slow -- fast).take(5)}")
+    assert(fast.nonEmpty)
+  }
+
+  test("skew salting preserves results (shuffle-shaped join)") {
+    setup()
+    // salt only applies when the join will actually shuffle AND the sample
+    // finds a hot tile: force the shuffle shape, and give the fixture a
+    // genuinely hot tile (half the points in one cell); the point side is
+    // the dense one in either join order
+    hotPts()
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      hotJoins.foreach { case (joinSql, dense) => withConfs("spark.graft.spatialJoin.salt" -> "4") {
+        val saltedDf = spark.sql(joinSql)
+        assert(saltedDf.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
+          "salt must fire on a shuffle-shaped join")
+        assert(splitSides(saltedDf) == Seq(dense), joinSql)
+        val salted = saltedDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val plain = withConfs("spark.graft.spatialJoin.salt" -> "1")(pairs(joinSql))
+        assert(salted == plain && salted.nonEmpty)
+        assert(salted == withRuleOff(pairs(joinSql)), joinSql)
+      }}
     }
   }
 
   test("salt is skipped on a skew-free shuffle join (no hot tile, no replication tax)") {
     setup() // uniform fixture: no tile's sampled share reaches the hot bar
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "8")
+    withConfs(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.spatialJoin.salt" -> "8") {
       val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
       assert(!df.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
         "uniform data must not pay the salt replication tax")
       assert(df.count() > 0)
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
     }
   }
 
   test("salt is skipped when a join side is broadcast-sized (no shuffle, no skew)") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     // default broadcast threshold: these tiny views hash-join via broadcast,
     // so the hot-tile problem cannot exist and salt must be a no-op (salting
     // a broadcast join multiplies candidates s× for nothing — SkewBench
     // measured 6× wall at salt=8)
-    try {
-      spark.conf.set("spark.graft.spatialJoin.salt", "8")
+    withConfs("spark.graft.spatialJoin.salt" -> "8") {
       val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
       assert(!df.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
         "salt must not fire on a broadcast-shaped join")
       assert(df.count() > 0)
-    } finally spark.conf.set("spark.graft.spatialJoin.salt", "1")
+    }
   }
 
   test("rewrite fires for geometry-geometry joins with extra conjuncts") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val df = spark.sql(
       "SELECT pid, cell FROM pts JOIN cells ON st_intersects(pt, env) AND pid % 2 = 0")
     val plan = df.queryExecution.executedPlan.toString
@@ -122,7 +139,6 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
 
   test("st_dwithin tiles with envelope expansion and matches the naive join") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     spark.sql("""
       SELECT id AS qid, st_point(cast((id * 13) % 97 AS DOUBLE), cast((id * 29) % 89 AS DOUBLE)) AS qpt
       FROM range(0, 300)""").createOrReplaceTempView("qpts")
@@ -132,16 +148,13 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"dwithin still pair-scans:\n$plan")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val naive = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val naive = withRuleOff(pairs(joinSql))
     assert(fast == naive && fast.nonEmpty,
       s"dwithin tile join changed results: only-fast=${(fast -- naive).take(5)} only-naive=${(naive -- fast).take(5)}")
   }
 
   test("sidecar envelope: env struct computed once per row, no per-pair WKB scans") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val plan = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
       .queryExecution.optimizedPlan.toString
     // the envelope is a projected struct column consumed by tiling + dedupe
@@ -155,56 +168,38 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
 
   test("salt=auto self-enables on a hot shuffle join and preserves results") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    // the r14 skew fixture: half the points in one 10x10 cell
-    spark.sql("""
-      SELECT id AS pid,
-             CASE WHEN id % 2 = 0
-               THEN st_point(55.0d + cast(id % 9 AS DOUBLE) / 10.0d,
-                             55.0d + cast(id % 7 AS DOUBLE) / 10.0d)
-               ELSE st_point(cast(id % 97 AS DOUBLE), cast((id * 7) % 89 AS DOUBLE)) END AS pt
-      FROM range(0, 2000)""").createOrReplaceTempView("pts")
-    val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "auto")
-      val autoDf = spark.sql(joinSql)
-      assert(autoDf.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
-        "salt=auto must self-enable when the sample finds a hot tile on a shuffle join")
-      val auto = autoDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      val plain = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(auto == plain && auto.nonEmpty)
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+    hotPts()
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      hotJoins.foreach { case (joinSql, dense) => withConfs("spark.graft.spatialJoin.salt" -> "auto") {
+        val autoDf = spark.sql(joinSql)
+        assert(autoDf.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
+          "salt=auto must self-enable when the sample finds a hot tile on a shuffle join")
+        assert(splitSides(autoDf) == Seq(dense), joinSql)
+        val auto = autoDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val plain = withConfs("spark.graft.spatialJoin.salt" -> "1")(pairs(joinSql))
+        assert(auto == plain && auto.nonEmpty)
+        assert(auto == withRuleOff(pairs(joinSql)), joinSql)
+      }}
     }
   }
 
   test("salt=auto stays off on skew-free shuffle joins and broadcast-shaped joins") {
     setup() // uniform fixture
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.graft.spatialJoin.salt", "auto")
+    withConfs("spark.graft.spatialJoin.salt" -> "auto") {
       // broadcast-shaped (default threshold): no salt, and no sampling cost
       assert(!spark.sql(joinSql).queryExecution.optimizedPlan.toString
         .contains("__graft_tile_salt"), "auto must not salt a broadcast-shaped join")
       // shuffle-shaped but uniform: the sample finds nothing hot
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(!spark.sql(joinSql).queryExecution.optimizedPlan.toString
-        .contains("__graft_tile_salt"), "auto must not salt a skew-free join")
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        assert(!spark.sql(joinSql).queryExecution.optimizedPlan.toString
+          .contains("__graft_tile_salt"), "auto must not salt a skew-free join")
+      }
     }
   }
 
   test("spatially-sorted input with the hot region in the LAST partition is still detected") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     // Hilbert-style layout: rows ordered by location, hot cell at the END of
     // the file order (ids >= 45000 of 60000; range() gives contiguous-id
     // partitions, so the hot rows live entirely in the last partition). A
@@ -218,44 +213,14 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
                              55.0d + cast(id % 7 AS DOUBLE) / 10.0d)
                ELSE st_point(cast(id % 43 AS DOUBLE), cast((id * 7) % 41 AS DOUBLE)) END AS pt
       FROM range(0, 60000)""").createOrReplaceTempView("pts")
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "auto")
+    withConfs(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.spatialJoin.salt" -> "auto") {
       val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
       assert(df.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
         "tail-of-file hot region must be visible to the de-biased sampler")
       assert(df.count() > 0)
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
     }
-  }
-
-  test("negative salt forces the mitigation on a broadcast-shaped join") {
-    setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    // hot fixture again, but broadcast-sized sides and the DEFAULT threshold:
-    // the gate would normally skip salting; salt=-4 overrides it for the
-    // operator whose size stats are unreliable
-    spark.sql("""
-      SELECT id AS pid,
-             CASE WHEN id % 2 = 0
-               THEN st_point(55.0d + cast(id % 9 AS DOUBLE) / 10.0d,
-                             55.0d + cast(id % 7 AS DOUBLE) / 10.0d)
-               ELSE st_point(cast(id % 97 AS DOUBLE), cast((id * 7) % 89 AS DOUBLE)) END AS pt
-      FROM range(0, 2000)""").createOrReplaceTempView("pts")
-    val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-    try {
-      spark.conf.set("spark.graft.spatialJoin.salt", "-4")
-      val forcedDf = spark.sql(joinSql)
-      assert(forcedDf.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
-        "salt<0 must force the mitigation past the broadcast-shape gate")
-      val forced = forcedDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      val plain = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(forced == plain && forced.nonEmpty)
-    } finally spark.conf.set("spark.graft.spatialJoin.salt", "1")
   }
 
   test("q_polyjoin_selective takes the shuffled multi-tile fan-out plan at scale shape") {
@@ -265,9 +230,7 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     // SHUFFLED join — no BNLJ, no broadcast — and results must match the
     // naive plan exactly (the dedupe emits each pair once)
     assume(new java.io.File("/root/testdata/sf0.001/lineitem.parquet").exists())
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = SparkEntry.queries("q_polyjoin_selective")(spark, "/root/testdata/sf0.001")
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("__graft_tile"), s"tile rewrite did not fire:\n${plan.take(800)}")
@@ -281,45 +244,40 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
       // from distinct input rows — the anchor dedupe must emit each
       // CANDIDATE exactly once, i.e. the multisets must match exactly
       val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-      val naive = try {
+      val naive = withRuleOff {
         SparkEntry.queries("q_polyjoin_selective")(spark, "/root/testdata/sf0.001")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      } finally spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+      }
       assert(fast == naive && fast.nonEmpty,
         s"tile plan changed results: fast=${fast.size} naive=${naive.size}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+    }
   }
 
   test("salt=-1 is off, not a forced single-bucket salt") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     // |salt| = 1 means one bucket: forcing it would add the explode + murmur
     // machinery with zero splitting — pure per-row overhead. -1 must behave
-    // exactly like 1 (off), even though it is negative.
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "-1")
-      val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
-      assert(!df.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
-        "salt=-1 must not add salt machinery (single bucket splits nothing)")
-      assert(df.count() > 0)
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
+    // exactly like 1 (off), even though it is negative, and so must every
+    // other number below 2. The fixture has a hot tile, so salt=4 would fire.
+    hotPts()
+    Seq("-1", "-4").foreach { salt =>
+      withConfs(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.graft.spatialJoin.salt" -> salt) {
+        val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)")
+        assert(!df.queryExecution.optimizedPlan.toString.contains("__graft_tile_salt"),
+          "salt=-1 must not add salt machinery (single bucket splits nothing)")
+        assert(df.count() > 0)
+      }
     }
   }
 
   test("rewriting a path with different data invalidates the plan-time sample cache") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val dir = java.nio.file.Files.createTempDirectory("graft_salt_cache").toString
-    val path = s"$dir/pts.parquet"
-    val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.spatialJoin.salt", "auto")
+    val path = s"${tempDir("graft_salt_cache")}/pts.parquet"
+    withConfs(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.spatialJoin.salt" -> "auto") {
       // generation 1: hot fixture → sampled, salted
       spark.sql("""
         SELECT id AS pid,
@@ -342,48 +300,37 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
       assert(!spark.sql(joinSql).queryExecution.optimizedPlan.toString
         .contains("__graft_tile_salt"),
         "generation 2 (uniform, new size) must get a fresh sample, not the stale hot set")
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.salt", "1")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
-      scala.reflect.io.Path(dir).deleteRecursively()
     }
   }
 
   test("auto cellSize samples the data and preserves results") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_contains(env, pt)"
-    val fixed = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "auto")
-    try {
-      val auto = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val fixed = pairs(joinSql)
+    withConfs("spark.graft.spatialJoin.cellSize" -> "auto") {
+      val auto = pairs(joinSql)
       assert(auto == fixed && auto.nonEmpty, s"auto cell changed results")
-    } finally spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
+    }
   }
 
   // ---- envelope-exact residual + payload narrowing (round 16) -------------
 
   /** BinaryType (WKB) attrs flowing out of the rewritten join's children —
     * zero when the narrowing pruned the geometry from the shuffle. */
-  private def joinBinaryCols(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
+  private def joinBinaryCols(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case jn: LJoin => jn.children.flatMap(_.output)
         .filter(_.dataType == org.apache.spark.sql.types.BinaryType).map(_.name)
     }.flatten
-  }
 
   test("envelope-exact st_intersects: WKB pruned from the shuffle, results preserved") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_intersects(env, pt)"
     val df = spark.sql(joinSql)
     assert(joinBinaryCols(df).isEmpty,
       s"geometry WKB still travels through the tile join: ${joinBinaryCols(df)}")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val slow = withRuleOff(pairs(joinSql))
     assert(fast == slow && fast.nonEmpty,
       s"env-exact intersects changed results: only-fast=${(fast -- slow).take(5)} only-slow=${(slow -- fast).take(5)}")
   }
@@ -396,12 +343,9 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
       SELECT id AS pid, st_point(cast((id % 11) * 10 AS DOUBLE),
                                  cast((id DIV 11) * 10 AS DOUBLE)) AS pt
       FROM range(0, 121)""").createOrReplaceTempView("edgepts")
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = "SELECT pid, cell FROM edgepts JOIN cells ON st_intersects(env, pt)"
-    val fast = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val fast = pairs(joinSql)
+    val slow = withRuleOff(pairs(joinSql))
     assert(fast == slow && fast.nonEmpty, s"boundary divergence: ${(fast -- slow) ++ (slow -- fast)}")
   }
 
@@ -411,33 +355,27 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
       SELECT id AS pid, st_point(cast((id % 11) * 10 AS DOUBLE),
                                  cast((id DIV 11) * 10 AS DOUBLE)) AS pt
       FROM range(0, 121)""").createOrReplaceTempView("edgepts")
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = "SELECT pid, cell FROM edgepts JOIN cells ON st_contains(env, pt)"
     val df = spark.sql(joinSql)
     // narrowing substitutes the residual's WKB refs with sidecar rebuilds
     assert(joinBinaryCols(df).isEmpty, s"contains residual still ships WKB: ${joinBinaryCols(df)}")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val slow = withRuleOff(pairs(joinSql))
     // every edge point lies on some cell's boundary: contains must exclude it
     assert(fast == slow, s"contains boundary divergence: ${(fast -- slow) ++ (slow -- fast)}")
   }
 
   test("geometry selected THROUGH the join reconstructs byte-identical WKB") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     // both the rect (st_makeenvelope origin) and the point survive to the
     // output list; the narrowed plan must rebuild them bit-for-bit
     val joinSql = """
       SELECT pid, cell, st_aswkb(env) AS ewkb, st_astext(pt) AS ptxt
       FROM pts JOIN cells ON st_intersects(env, pt)"""
-    val fast = spark.sql(joinSql).collect()
+    def rows = spark.sql(joinSql).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq, r.getString(3))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq, r.getString(3))).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val fast = rows
+    val slow = withRuleOff(rows)
     assert(fast == slow && fast.nonEmpty, "reconstructed geometry differs from the original bytes")
   }
 
@@ -448,26 +386,20 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
         st_point(cast((id % 10) * 10 AS DOUBLE), cast((id DIV 10) * 10 AS DOUBLE)),
         st_point(cast((id % 10) * 10 + 10 AS DOUBLE), cast((id DIV 10) * 10 + 10 AS DOUBLE)))) AS env2
       FROM range(0, 100)""").createOrReplaceTempView("cells2")
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
     val joinSql = """
       SELECT pid, cell2, st_aswkb(env2) AS ewkb
       FROM pts JOIN cells2 ON st_intersects(env2, pt)"""
-    val fast = spark.sql(joinSql).collect()
+    def rows = spark.sql(joinSql).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-    val slow = spark.sql(joinSql).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2).toSeq)).toSet
-    spark.conf.set("spark.graft.spatialJoin.enabled", "true")
+    val fast = rows
+    val slow = withRuleOff(rows)
     assert(fast == slow && fast.nonEmpty, "st_envelope reconstruction differs from original bytes")
   }
 
   test("exchange self-scales with data size and only ever scales UP") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val prevABT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val joinSql = "SELECT pid, cell FROM pts JOIN cells ON st_intersects(env, pt)"
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // at the default 128 MB target, this KB-scale fixture must keep the
       // session partitioning — no RepartitionByExpression in the plan
       val small = spark.sql(joinSql).queryExecution.optimizedPlan.toString
@@ -475,51 +407,36 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
         s"small join was repartitioned:\n$small")
       // a tiny target makes the same stats demand more partitions than the
       // session default — the rule must size the exchange itself
-      spark.conf.set("spark.graft.spatialJoin.targetPartitionBytes", "1024")
-      val df = spark.sql(joinSql)
-      val opt = df.queryExecution.optimizedPlan.toString
-      assert(opt.contains("RepartitionByExpression"), s"exchange not scaled:\n$opt")
-      val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // the join reuses the sized exchange: exactly the two key shuffles,
-      // both above the session partition count (AQE folds the plan, so read
-      // the partition counts from the final adaptive plan text)
-      val planTxt = df.queryExecution.executedPlan.toString
-      val parts = """hashpartitioning\([^)]*, (\d+)\)""".r
-        .findAllMatchIn(planTxt).map(_.group(1).toInt).toSeq
-      // (the adaptive plan text repeats each exchange in its Initial Plan
-      // section — assert on the partition counts, not the match count)
-      assert(parts.size >= 2, s"expected the 2 key exchanges, got $parts:\n$planTxt")
-      assert(parts.forall(_ > spark.sessionState.conf.numShufflePartitions),
-        s"exchange not scaled up: $parts")
-      spark.conf.set("spark.graft.spatialJoin.enabled", "false")
-      val slow = spark.sql(joinSql).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.conf.set("spark.graft.spatialJoin.enabled", "true")
-      assert(fast == slow && fast.nonEmpty, "scaled exchange changed results")
-    } finally {
-      spark.conf.unset("spark.graft.spatialJoin.targetPartitionBytes")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevABT)
+      withConfs("spark.graft.spatialJoin.targetPartitionBytes" -> "1024") {
+        val df = spark.sql(joinSql)
+        val opt = df.queryExecution.optimizedPlan.toString
+        assert(opt.contains("RepartitionByExpression"), s"exchange not scaled:\n$opt")
+        val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        // the join reuses the sized exchange: exactly the two key shuffles,
+        // both above the session partition count (AQE folds the plan, so read
+        // the partition counts from the final adaptive plan text)
+        val planTxt = df.queryExecution.executedPlan.toString
+        val parts = """hashpartitioning\([^)]*, (\d+)\)""".r
+          .findAllMatchIn(planTxt).map(_.group(1).toInt).toSeq
+        // (the adaptive plan text repeats each exchange in its Initial Plan
+        // section — assert on the partition counts, not the match count)
+        assert(parts.size >= 2, s"expected the 2 key exchanges, got $parts:\n$planTxt")
+        assert(parts.forall(_ > spark.sessionState.conf.numShufflePartitions),
+          s"exchange not scaled up: $parts")
+        val slow = withRuleOff(pairs(joinSql))
+        assert(fast == slow && fast.nonEmpty, "scaled exchange changed results")
+      }
     }
   }
 
   test("forced-shuffle tile join plans a shuffled HASH join, not sort-merge") {
     setup()
-    spark.conf.set("spark.graft.spatialJoin.cellSize", "10.0")
-    val prevABT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_intersects(env, pt)")
       val phys = df.queryExecution.executedPlan.toString
       assert(phys.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$phys")
       assert(!phys.contains("SortMergeJoin"), s"tile join still sort-merges:\n$phys")
       assert(df.collect().nonEmpty)
-      // escape hatch: preferHashJoin=false restores Spark's default pick
-      spark.conf.set("spark.graft.spatialJoin.preferHashJoin", "false")
-      val smj = spark.sql("SELECT pid, cell FROM pts JOIN cells ON st_intersects(env, pt)")
-        .queryExecution.executedPlan.toString
-      assert(smj.contains("SortMergeJoin"), s"preferHashJoin=false ignored:\n$smj")
-    } finally {
-      spark.conf.set("spark.graft.spatialJoin.preferHashJoin", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevABT)
     }
   }
 }

@@ -15,6 +15,20 @@ object TestFiles {
   def assumeFile(path: String)(implicit pos: Position): Unit =
     if (!Files.exists(Paths.get(path))) Assertions.cancel(s"NOT RUN: $path absent")
 
+  /** Runs `f` with the session confs `kv` set, then restores each to its
+    * previous value or unsets it. Suites share one SparkSession, so a conf a
+    * test leaves set would reach every suite that runs after it. */
+  def withConfs[T](kv: (String, String)*)(f: => T): T = {
+    val conf = SparkTestSession.spark.conf
+    val old = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally old.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** Deletes `p` and, for a directory, its contents; symlinks are deleted,
     * not followed. */
   def deleteRecursively(p: Path): Unit = {
