@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 
 /**
@@ -18,7 +19,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
  *   - k > 128: the centroid table is BROADCAST and a mapPartitions argmin
  *     scans it per row — an O(k) expression tree would blow past codegen
  *     limits, a broadcast array does not (this is what makes k ~ 10^4-10^5
- *     reachable; same (distance, cid) tie rule bit for bit).
+ *     reachable; same (distance, cid) tie rule bit for bit). Each update
+ *     round destroys its broadcast once collected; the returned DataFrame
+ *     reads the last one, which Spark's ContextCleaner removes with it.
  * With integral input coordinates every centroid is an exact integer-sum /
  * count division, so independent engines reproduce the trajectory bit for
  * bit.
@@ -60,13 +63,15 @@ object KMeans {
       F.array_min(F.array(alts: _*)).getField("c")
     }
 
-    /** (id, x, y, c) with c = argmin by (squared distance, cid) */
-    def assigned(cs: Array[(Int, Double, Double)]): DataFrame =
+    /** (id, x, y, c) with c = argmin by (squared distance, cid), and the
+      * centroid broadcast it reads, if any */
+    def assigned(cs: Array[(Int, Double, Double)])
+        : (DataFrame, Option[Broadcast[Array[(Int, Double, Double)]]]) =
       if (cs.length <= ExprPathMaxK)
-        p.select(F.col("id"), F.col("x"), F.col("y"), assignCol(cs).cast("int").as("c"))
+        (p.select(F.col("id"), F.col("x"), F.col("y"), assignCol(cs).cast("int").as("c")), None)
       else {
         val bc = spark.sparkContext.broadcast(cs)
-        p.as[(Long, Double, Double)].mapPartitions { it =>
+        (p.as[(Long, Double, Double)].mapPartitions { it =>
           val arr = bc.value
           it.map { case (id, x, y) =>
             var best = Double.PositiveInfinity
@@ -80,13 +85,16 @@ object KMeans {
             }
             (id, x, y, bestC)
           }
-        }.toDF("id", "x", "y", "c")
+        }.toDF("id", "x", "y", "c"), Some(bc))
       }
 
     for (_ <- 0 until iters) {
-      val sums = assigned(cents).groupBy("c")
+      val (a, bc) = assigned(cents)
+      // a round's centroids are read only by its own collect
+      val sums = try a.groupBy("c")
         .agg(F.sum("x").as("sx"), F.sum("y").as("sy"), F.count(F.lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
+        finally bc.foreach(_.destroy())
       cents = cents.map { case (cid, cx, cy) =>
         sums.get(cid) match {
           case Some((sx, sy, n)) if n > 0 => (cid, sx / n, sy / n)
@@ -98,7 +106,7 @@ object KMeans {
     // centroid lookup by broadcast join — k rows, works at any k (an
     // element_at over k literals would hit the same codegen wall as above)
     val centsDf = F.broadcast(cents.toSeq.toDF("cluster", "cx", "cy"))
-    assigned(cents).select(F.col("id"), F.col("c").as("cluster"))
+    assigned(cents)._1.select(F.col("id"), F.col("c").as("cluster"))
       .join(centsDf, "cluster")
       .select(F.col("id"), F.col("cluster"), F.col("cx"), F.col("cy"))
   }

@@ -41,8 +41,9 @@ import org.apache.spark.sql.types._
  * dominates and binning wins; set 0 to always rewrite.
  *
  * Tuning: spark.graft.rangeJoin.enabled (default true),
- * spark.graft.rangeJoin.binWidth (default "auto": sample up to 1000 interval
- * rows at planning time, use max(median length, tiny) so a typical interval
+ * spark.graft.rangeJoin.binWidth (default "auto": sample the first 1000
+ * interval rows of up to 64 seeded-random partitions at planning time
+ * ([[SkewSampler.sample]]), use max(median length, tiny) so a typical interval
  * spans 1–2 bins; cached across queries like the spatial cell size),
  * and spark.graft.rangeJoin.salt (default "auto" — the same self-enabling
  * TARGETED skew mitigation as the spatial tile join, via the shared
@@ -197,10 +198,7 @@ class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Predicat
     // NaN caches "do not rewrite"; a failed sample falls back to 1.0 for
     // this query and is not cached
     val w = try SkewSampler.cached(spark, "binWidth", key) {
-      val len = Alias(Subtract(toD(hi), toD(lo)), "__len")()
-      val probe = Limit(Literal(1000), Project(Seq(len), intervalPlan))
-      val raw = spark.sessionState.executePlan(probe).executedPlan.executeCollect()
-        .filterNot(_.isNullAt(0)).map(_.getDouble(0))
+      val raw = SkewSampler.sample[Double](spark, intervalPlan, Subtract(toD(hi), toD(lo)), perPart = 1000)
       val lens = raw.filter(d => !d.isNaN && !d.isInfinite && d >= 0).sorted.toSeq
       java.lang.Double.valueOf(
         if (raw.exists(d => d.isInfinite || d.isNaN)) Double.NaN

@@ -11,8 +11,27 @@ import org.apache.spark.sql.SparkSession
   * shape — but constructing a qShared query DOES execute its shared stages
   * (eager localCheckpoint), which is why those dumps show checkpoint-RDD
   * scans in place of the materialized stage subtrees.
+  *
+  * Dumps are diffable between runs and builds: [[stable]] masks what changes
+  * from run to run, so two dumps differ only where a plan does.
   */
 object PlanDump {
+
+  /** `plan` with its run-to-run noise masked: expression, exchange plan and
+    * RDD ids renumbered per plan in order of first use (so references still
+    * line up), the HTTP fixture server's ephemeral port, and JVM lambda class
+    * names with their identity hashes. */
+  def stable(plan: String): String = {
+    def renumber(s: String, prefix: String): String = {
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      (java.util.regex.Pattern.quote(prefix) + "\\d+").r
+        .replaceAllIn(s, m => prefix + ids.getOrElseUpdate(m.matched, ids.size))
+    }
+    Seq("#", "plan_id=", "RDD[").foldLeft(plan)(renumber)
+      .replaceAll("127\\.0\\.0\\.1:\\d+", "127.0.0.1:<port>")
+      .replaceAll("\\$\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$\\$Lambda")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "plans/r16"
@@ -38,7 +57,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"$name.txt"),
-          plan.getBytes("UTF-8"))
+          stable(plan).getBytes("UTF-8"))
         System.err.println(s"[plandump] $name ok")
       } catch {
         case e: Throwable =>

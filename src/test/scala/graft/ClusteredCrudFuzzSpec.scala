@@ -2,7 +2,6 @@ package graft
 
 import graft.io.GeoWriter
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Randomized CRUD consistency over the clustered layout — the analogue of
   * the reference's rtree fuzz harness (test/python/rtree_fuzz.py: randomized
@@ -10,13 +9,13 @@ import java.nio.file.Files
   * appendAndRecluster / deleteWhere / updateWhere are mirrored in an
   * in-memory model; after every round the full table AND a window query must
   * match the model exactly. */
-class ClusteredCrudFuzzSpec extends AnyFunSuite {
+class ClusteredCrudFuzzSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
   test("randomized append/delete/update rounds match an in-memory model") {
     Graft.register(spark)
-    val dir = Files.createTempDirectory("graft_crud_fuzz").toString + "/t"
+    val dir = tempDir("graft_crud_fuzz").toString + "/t"
     val rnd = new scala.util.Random(1234)
 
     // id -> (x, y, flag); coordinates integral so window-boundary semantics
@@ -82,7 +81,7 @@ class ClusteredCrudFuzzSpec extends AnyFunSuite {
   test("incremental recluster: appends only touch overlapping files; " +
        "content and pruning survive 10 cycles") {
     Graft.register(spark)
-    val dir = Files.createTempDirectory("graft_inc_recluster").toString + "/t"
+    val dir = tempDir("graft_inc_recluster").toString + "/t"
     import spark.implicits._
     def pts(ids: Seq[Long], cell: Long => (Double, Double)) =
       ids.map { i => val (x, y) = cell(i); (i, x, y) }.toDF("id", "x", "y")
@@ -133,7 +132,7 @@ class ClusteredCrudFuzzSpec extends AnyFunSuite {
   test("updateWhere on the geometry column recomputes the bbox sidecar " +
        "(window queries see moved rows)") {
     Graft.register(spark)
-    val dir = Files.createTempDirectory("graft_crud_geomupd").toString + "/t"
+    val dir = tempDir("graft_crud_geomupd").toString + "/t"
     import spark.implicits._
     // 200 points around (10,10); move ids 0..9 far away to (900+id, 900)
     val init = (0L until 200L).map(i => (i, 10.0 + (i % 20), 10.0 + (i / 20)))

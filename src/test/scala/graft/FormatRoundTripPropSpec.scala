@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parsing logic on the read side (MIF/MID and DXF): arbitrary geometries
   * write once through the real Spark sink and read back bit-exactly
   * (`Double.toString` is shortest-round-trip, so the text loses nothing). */
-class FormatRoundTripPropSpec extends AnyFunSuite {
+class FormatRoundTripPropSpec extends AnyFunSuite with TempDirs {
 
   private val f = Geo.factory
   private lazy val spark = SparkTestSession.spark
@@ -66,7 +66,7 @@ class FormatRoundTripPropSpec extends AnyFunSuite {
   }
 
   test("mif writer/reader round-trip 200 random geometries bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mif_prop").toString
+    val dir = tempDir("graft_mif_prop").toString
     val geoms: Seq[Geometry] =
       cases(point, 50, 1) ++ cases(line, 50, 2) ++ cases(polygon, 40, 3) ++
         cases(multiLine, 30, 4) ++ cases(multiPoint, 30, 5)
@@ -78,7 +78,7 @@ class FormatRoundTripPropSpec extends AnyFunSuite {
   }
 
   test("dxf writer/reader round-trip 170 random geometries bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dxf_prop").toString
+    val dir = tempDir("graft_dxf_prop").toString
     // DXF write decomposes multis; use the 1-entity families and carry the
     // index in the layer column
     val geoms: Seq[Geometry] = cases(point, 60, 6) ++ cases(line, 60, 7) ++ cases(polygon, 50, 8)
@@ -98,7 +98,7 @@ class FormatRoundTripPropSpec extends AnyFunSuite {
   }
 
   test("gmt writer/reader round-trip per geometry family bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gmt_prop").toString
+    val dir = tempDir("graft_gmt_prop").toString
     // GMT declares ONE @G type per file — round-trip each family separately
     val families: Seq[(String, Seq[Geometry])] = Seq(
       ("pt", cases(point, 40, 11)), ("ln", cases(line, 40, 12)),
@@ -114,7 +114,7 @@ class FormatRoundTripPropSpec extends AnyFunSuite {
   }
 
   test("mvt writer/reader round-trip integer geometries (normalized rings)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvt_prop").toString
+    val dir = tempDir("graft_mvt_prop").toString
     // the MVT grid is integral: integer ordinates round-trip exactly; ring
     // orientation is normalized by the spec's winding rule, so polygons
     // compare after norm()

@@ -7,11 +7,11 @@ import java.nio.file.{Files, Paths}
   * directory trees (partitioned `year=.../part-N` layouts), glob patterns,
   * and multi-path load() — the shapes a 100 TB corpus actually arrives in.
   * Listing is driver-side names-only; content reads stay on executors. */
-class GeoPathsSpec extends AnyFunSuite {
+class GeoPathsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
-  private val dir: String = {
-    val d = Files.createTempDirectory("graft_paths").toString
+  private lazy val dir: String = {
+    val d = suiteTempDir("graft_paths").toString
     def put(rel: String, n: Int, base: Int): Unit = {
       val p = Paths.get(d, rel)
       Files.createDirectories(p.getParent)
@@ -90,7 +90,7 @@ class GeoPathsSpec extends AnyFunSuite {
   }
 
   test("string partition values unescape %XX; range and IN filters prune") {
-    val d = Files.createTempDirectory("graft_parts").toString
+    val d = tempDir("graft_parts").toString
     def put(rel: String, k: Int): Unit = {
       val p = Paths.get(d, rel)
       Files.createDirectories(p.getParent)
@@ -114,7 +114,7 @@ class GeoPathsSpec extends AnyFunSuite {
   }
 
   test("a data column shadows a same-named path key (no partition column, no mis-pruning)") {
-    val d = Files.createTempDirectory("graft_shadow").toString
+    val d = tempDir("graft_shadow").toString
     val p = Paths.get(d, "k=9", "f.geojsonl")
     Files.createDirectories(p.getParent)
     Files.write(p, """{"type":"Feature","geometry":{"type":"Point","coordinates":[5,1]},"properties":{"k":123}}"""
@@ -129,7 +129,7 @@ class GeoPathsSpec extends AnyFunSuite {
 
   test("partitioned writer round-trips through the reader (escaping, nulls, pruning)") {
     Graft.register(spark)
-    val d = Files.createTempDirectory("graft_pwrite").toString + "/tree"
+    val d = tempDir("graft_pwrite").toString + "/tree"
     val df = spark.sql("""
       SELECT CAST(id AS BIGINT) AS k,
              CASE WHEN id % 3 = 0 THEN 'common crawl' WHEN id % 3 = 1 THEN 'wiki' ELSE NULL END AS src,
@@ -164,14 +164,14 @@ class GeoPathsSpec extends AnyFunSuite {
   }
 
   test("streamed reads of a partitioned tree carry partition columns") {
-    val d = Files.createTempDirectory("graft_stream_parts").toString
+    val d = tempDir("graft_stream_parts").toString
     val p = Paths.get(d, "year=2025", "f.geojsonl")
     Files.createDirectories(p.getParent)
     Files.write(p, """{"type":"Feature","geometry":{"type":"Point","coordinates":[7,1]},"properties":{"k":7}}"""
       .getBytes("UTF-8"))
     val stream = spark.readStream.format("geo").load(d)
     val q = stream.writeStream.format("memory").queryName("parts_stream")
-      .option("checkpointLocation", Files.createTempDirectory("graft_cp").toString)
+      .option("checkpointLocation", tempDir("graft_cp").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     val rows = spark.table("parts_stream").selectExpr("year", "cast(k AS BIGINT)").collect()

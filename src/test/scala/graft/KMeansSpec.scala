@@ -1,7 +1,10 @@
 package graft
 
 import graft.operators.KMeans
+import org.apache.spark.BroadcastBlocks
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 class KMeansSpec extends AnyFunSuite {
 
@@ -44,18 +47,10 @@ class KMeansSpec extends AnyFunSuite {
     assert(two.map(_._2).toSeq == Seq(0, 1, 0, 0))
   }
 
-  test("large k takes the broadcast path and matches a brute-force reference") {
-    // k = 200 > the 128 expression-path cutoff: assignment runs through the
-    // broadcast mapPartitions argmin; verify the full trajectory against an
-    // in-test Lloyd implementation with the identical (distance, cid) tie rule
-    val n = 600; val k = 200; val iters = 3
-    val xs = Array.tabulate(n)(i => ((i * 37) % 100).toDouble)
-    val ys = Array.tabulate(n)(i => ((i * 53) % 100).toDouble)
-    import spark.implicits._
-    val pts = (0 until n).map(i => (i.toLong, xs(i), ys(i))).toDF("id", "x", "y")
-    val got = KMeans.cluster(spark, pts, k, iters)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-
+  /** Lloyd's trajectory in plain Scala with KMeans's seeding and
+    * (distance, cid) tie rule: each point's final cluster. */
+  private def reference(xs: Array[Double], ys: Array[Double], k: Int, iters: Int): Map[Long, Int] = {
+    val n = xs.length
     var cents = Array.tabulate(k)(i => (i, xs(i), ys(i)))
     def assign(x: Double, y: Double): Int = {
       var best = Double.PositiveInfinity; var bc = Int.MaxValue
@@ -79,8 +74,43 @@ class KMeansSpec extends AnyFunSuite {
         }
       }
     }
+    (0 until n).map(i => i.toLong -> assign(xs(i), ys(i))).toMap
+  }
+
+  private def points(n: Int): (Array[Double], Array[Double]) =
+    (Array.tabulate(n)(i => ((i * 37) % 100).toDouble), Array.tabulate(n)(i => ((i * 53) % 100).toDouble))
+
+  test("large k takes the broadcast path and matches a brute-force reference") {
+    // k = 200 > the 128 expression-path cutoff: assignment runs through the
+    // broadcast mapPartitions argmin; verify the full trajectory against an
+    // in-test Lloyd implementation with the identical (distance, cid) tie rule
+    val n = 600; val k = 200; val iters = 3
+    val (xs, ys) = points(n)
+    import spark.implicits._
+    val pts = (0 until n).map(i => (i.toLong, xs(i), ys(i))).toDF("id", "x", "y")
+    val got = KMeans.cluster(spark, pts, k, iters)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val want = reference(xs, ys, k, iters)
     (0 until n).foreach { i =>
-      assert(got(i.toLong) == assign(xs(i), ys(i)), s"id=$i")
+      assert(got(i.toLong) == want(i.toLong), s"id=$i")
+    }
+  }
+
+  test("large k leaves at most one centroid broadcast behind") {
+    // each update round broadcasts its centroids; only the last, which the
+    // returned DataFrame reads, may outlive the call
+    val n = 400; val k = 150; val iters = 4
+    val (xs, ys) = points(n)
+    import spark.implicits._
+    val pts = (0 until n).map(i => (i.toLong, xs(i), ys(i))).toDF("id", "x", "y")
+    val centroids = (v: Any) => v.isInstanceOf[Array[(_, _, _)]]
+    val before = BroadcastBlocks.live(centroids)
+    val got = KMeans.cluster(spark, pts, k, iters)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == reference(xs, ys, k, iters))
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      val left = BroadcastBlocks.live(centroids) -- before
+      assert(left.size <= 1, s"centroid broadcasts left: $left")
     }
   }
 }

@@ -8,13 +8,13 @@ import org.locationtech.jts.geom.Coordinate
   * feature tables, a KML's folders, and a DXF's entity layers are selectable
   * via `.option("layer", …)` / `st_read(path, layer)`, and enumerable via
   * st_read_meta's `layers` column. */
-class LayerSelectionSpec extends AnyFunSuite {
+class LayerSelectionSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val fac = graft.geom.Geo.factory
 
   private lazy val twoLayerGpkg: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers")
+    val dir = suiteTempDir("graft_layers")
     val p = dir.resolve("two.gpkg").toString
     def pts(n: Int, dx: Double) = (1 to n).iterator.map { i =>
       (fac.createPoint(new Coordinate(i + dx, i)): org.locationtech.jts.geom.Geometry,
@@ -54,7 +54,7 @@ class LayerSelectionSpec extends AnyFunSuite {
   }
 
   test("kml: folders are layers; option('layer') restricts to one folder") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers_kml")
+    val dir = tempDir("graft_layers_kml")
     val p = dir.resolve("f.kml")
     java.nio.file.Files.write(p,
       """<?xml version="1.0" encoding="UTF-8"?>
@@ -79,7 +79,7 @@ class LayerSelectionSpec extends AnyFunSuite {
   }
 
   test("dxf: entity layers are selectable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers_dxf")
+    val dir = tempDir("graft_layers_dxf")
     val p = dir.resolve("two.dxf").toString
     // write via the DXF writer: the `layer` column sets the entity layer
     val df = spark.createDataFrame(Seq(
@@ -96,7 +96,7 @@ class LayerSelectionSpec extends AnyFunSuite {
   }
 
   test("geopackageLayers: layer column round-trips through the reader's layer option") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers_w")
+    val dir = tempDir("graft_layers_w")
     val p = dir.resolve("multi.gpkg").toString
     Graft.register(spark)
     val df = spark.sql("""
@@ -117,7 +117,7 @@ class LayerSelectionSpec extends AnyFunSuite {
 
   test("geopackageLayers: NULL layer values fail fast; quoted layer names round-trip") {
     Graft.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers_nq")
+    val dir = tempDir("graft_layers_nq")
     // NULL layer → loud failure, not a silently-empty 'null' table
     val withNull = spark.sql("""
       SELECT CASE WHEN id = 2 THEN NULL ELSE 'a' END AS layer,
@@ -147,7 +147,7 @@ class LayerSelectionSpec extends AnyFunSuite {
   }
 
   test("layer option on a layerless format fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layers_gj")
+    val dir = tempDir("graft_layers_gj")
     val p = dir.resolve("x.geojsonl")
     java.nio.file.Files.write(p,
       """{"type":"Feature","geometry":{"type":"Point","coordinates":[1,2]},"properties":{}}"""

@@ -2,7 +2,9 @@ package graft
 
 import graft.TestFiles.withConfs
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -300,6 +302,26 @@ class RangeJoinSpec extends AnyFunSuite {
     val sql = "SELECT pid, iid FROM rj_tsp p JOIN rj_tsi i ON p.ts BETWEEN i.lo AND i.hi"
     val df = spark.sql(sql)
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
+    val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val naive = withRuleOff(pairs(sql))
+    assert(fast == naive && fast.nonEmpty)
+  }
+
+  test("binWidth=auto samples beyond the first partition of a length-sorted table") {
+    setup()
+    // 8 partitions of 1000 intervals whose length rises with the partition
+    // (1, 5, 9, ..., 29): the first 1000 rows alone give width 1, the first
+    // rows of all eight give the median length 17
+    spark.sql("""
+      SELECT id AS iid, CAST(id * 10 AS DOUBLE) AS lo,
+             CAST(id * 10 + 1 + (id DIV 1000) * 4 AS DOUBLE) AS hi
+      FROM range(0, 8000, 1, 8)""").createOrReplaceTempView("rj_lensorted")
+    val sql = "SELECT pid, iid FROM rj_points p JOIN rj_lensorted i ON p.x BETWEEN i.lo AND i.hi"
+    val df = spark.sql(sql)
+    val widths = df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(_.collect {
+      case a: Alias if a.name == "__graft_bin_p" => a.child.collect { case Literal(w: Double, DoubleType) => w }
+    }.flatten)
+    assert(widths.distinct == Seq(17.0), s"bin widths in the plan: $widths")
     val fast = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val naive = withRuleOff(pairs(sql))
     assert(fast == naive && fast.nonEmpty)

@@ -5,13 +5,13 @@ import org.locationtech.jts.geom.Coordinate
 
 /** Reader-level `keep_wkb` + `open_options` (reference: st_read named
   * parameters, st_read.cpp:623-631; GDAL open options). */
-class ReadOptionsSpec extends AnyFunSuite {
+class ReadOptionsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val fac = graft.geom.Geo.factory
 
   test("keep_wkb on GeoPackage: identical bytes, no JTS round trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_keepwkb")
+    val dir = tempDir("graft_keepwkb")
     val p = dir.resolve("pts.gpkg").toString
     graft.io.GeoPackageWriter.write(p, "pts", Seq(("name", "TEXT")),
       (1 to 5).iterator.map(i =>
@@ -37,7 +37,7 @@ class ReadOptionsSpec extends AnyFunSuite {
   }
 
   test("open_options GEOM_COLUMN overrides the CSV geometry sniff") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_oo_csv")
+    val dir = tempDir("graft_oo_csv")
     val p = dir.resolve("odd.csv")
     // geometry lives in a column the wkt/geom/... sniff would never pick
     java.nio.file.Files.write(p,
@@ -60,7 +60,7 @@ class ReadOptionsSpec extends AnyFunSuite {
   }
 
   test("open_options ENCODING reads Latin-1 CSV text correctly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_oo_enc")
+    val dir = tempDir("graft_oo_enc")
     val p = dir.resolve("latin.csv")
     java.nio.file.Files.write(p,
       "name,wkt\nMünchen,POINT (11 48)\n".getBytes("ISO-8859-1"))
@@ -71,7 +71,7 @@ class ReadOptionsSpec extends AnyFunSuite {
   }
 
   test("spatial_filter: exact geometry window, not just its envelope") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sf")
+    val dir = tempDir("graft_sf")
     val p = dir.resolve("pts.geojsonl")
     // 5 points on a diagonal; the triangle filter below COVERS the envelope
     // corner points' bbox but only intersects 3 of them exactly
@@ -99,7 +99,7 @@ class ReadOptionsSpec extends AnyFunSuite {
   }
 
   test("allowed_drivers restricts format resolution") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ad")
+    val dir = tempDir("graft_ad")
     val p = dir.resolve("x.geojsonl")
     java.nio.file.Files.write(p,
       """{"type":"Feature","geometry":{"type":"Point","coordinates":[1,2]},"properties":{}}"""
@@ -119,7 +119,7 @@ class ReadOptionsSpec extends AnyFunSuite {
   }
 
   test("unknown open_options key fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_oo_bad")
+    val dir = tempDir("graft_oo_bad")
     val p = dir.resolve("x.csv")
     java.nio.file.Files.write(p, "wkt\nPOINT (1 2)\n".getBytes("UTF-8"))
     val err = intercept[Exception] {

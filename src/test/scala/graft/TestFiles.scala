@@ -4,7 +4,7 @@ import java.nio.file.{Files, LinkOption, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.scalactic.source.Position
-import org.scalatest.{Assertions, Outcome, TestSuite}
+import org.scalatest.{Args, Assertions, Outcome, Status, TestSuite}
 
 /** File helpers shared by specs. */
 object TestFiles {
@@ -41,18 +41,35 @@ object TestFiles {
 }
 
 /** Temp dirs that live for one test: each `tempDir` is deleted, with what
-  * the test wrote into it, when the test ends, pass or fail. */
+  * the test wrote into it, when the test ends, pass or fail. A
+  * `suiteTempDir` holds a fixture several tests read and is deleted when
+  * the suite ends. */
 trait TempDirs extends TestSuite {
   private val created = new ConcurrentLinkedQueue[Path]
+  private val suiteCreated = new ConcurrentLinkedQueue[Path]
 
-  protected def tempDir(prefix: String): Path = {
+  protected def tempDir(prefix: String): Path = createIn(created, prefix)
+
+  protected def suiteTempDir(prefix: String): Path = createIn(suiteCreated, prefix)
+
+  private def createIn(q: ConcurrentLinkedQueue[Path], prefix: String): Path = {
     val d = Files.createTempDirectory(prefix)
-    created.add(d)
+    q.add(d)
     d
   }
 
+  private def deleteAll(q: ConcurrentLinkedQueue[Path]): Unit =
+    Iterator.continually(q.poll()).takeWhile(_ != null).foreach(TestFiles.deleteRecursively)
+
   abstract override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally Iterator.continually(created.poll()).takeWhile(_ != null)
-      .foreach(TestFiles.deleteRecursively)
+    finally deleteAll(created)
+
+  abstract override def run(testName: Option[String], args: Args): Status = {
+    val status = try super.run(testName, args) catch {
+      case e: Throwable => deleteAll(suiteCreated); throw e
+    }
+    status.whenCompleted(_ => deleteAll(suiteCreated))
+    status
+  }
 }
