@@ -1,30 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 /**
  * SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the embedding
  * space, then inside each cluster drop every vector whose cosine similarity
  * to an EARLIER vector (id order) is at least tau — the released
- * implementation's upper-triangular max rule.
+ * implementation's upper-triangular max rule. Rows with a null id are
+ * dropped (as `KMeans.cluster` drops null coordinates), and every other row
+ * is judged on its own: rows sharing an id neither drop nor shadow each other.
  *
- * Scale shape: centroid assignment is a broadcast join (k rows); the
- * pairwise step is a self-equi-join keyed by cluster, so it is quadratic
- * only WITHIN a cluster. The paper's guidance is that k must grow with
- * corpus size to keep clusters bounded; this operator additionally enforces
- * a HARD per-cluster bound: clusters larger than `maxClusterSize` are
- * deterministically sub-split (hash of id modulo the needed cell count)
- * and the rule runs within each sub-cell. That caps the pair count at
- * maxClusterSize² per cell regardless of skew — a single mega-cluster can
- * no longer produce an O(N²) stage. The cost is bounded recall loss:
- * near-dup pairs straddling two sub-cells of the same oversized cluster
- * are not compared (the same trade as raising k in the paper).
+ * Scale shape: one lazy plan with one shuffle. Each row picks its nearest
+ * centroid with one expression over the k centroids, which travel in the
+ * plan as a literal (O(N·k·d) compute, no N·k rows). The cluster-size window
+ * hash-partitions rows by cluster, and the pairwise step is one aggregation
+ * per cell over that same partitioning, so it is quadratic only WITHIN a
+ * cell. The paper's guidance is that k must grow with corpus size to keep
+ * clusters bounded; this operator additionally enforces a HARD per-cluster
+ * bound: clusters larger than `maxClusterSize` are deterministically
+ * sub-split (hash of id modulo the needed cell count) and the rule runs
+ * within each sub-cell. That caps a cell's membership near maxClusterSize,
+ * and its pair count near maxClusterSize², regardless of skew — a single
+ * mega-cluster can no longer produce an O(N²) task. The cost is bounded
+ * recall loss: near-dup pairs straddling two sub-cells of the same oversized
+ * cluster are not compared (the same trade as raising k in the paper).
  */
 object SemDeDup {
 
   /** @param emb DataFrame with (idCol: numeric, vecCol: array<double>)
-   *  @param centroids (cid, centroid vector) pairs — k-bounded, broadcast
+   *  @param centroids (cid, centroid vector) pairs — k-bounded, a plan literal
    *  @param tau cosine threshold at or above which the later vector drops
    *  @param maxClusterSize hard bound on the membership a single pairwise
    *         cell may reach; oversized clusters sub-split deterministically
@@ -34,22 +39,20 @@ object SemDeDup {
             maxClusterSize: Int = 4096): DataFrame = {
     require(centroids.nonEmpty, "semdedup needs at least one centroid")
     require(maxClusterSize >= 2, "maxClusterSize must be at least 2")
-    val spark = emb.sparkSession
-    graft.Graft.register(spark)
-    import spark.implicits._
+    graft.Graft.register(emb.sparkSession)
+    def cosine(a: Column, b: Column): Column = F.call_function("vec_cosine", a, b)
 
-    val cents = F.broadcast(
-      centroids.toDF("__sem_cid", "__sem_cv").withColumn("__sem_cv", F.col("__sem_cv").cast("array<double>")))
     val src = emb.select(F.col(idCol).cast("long").as("__sem_id"),
-      F.col(vecCol).cast("array<double>").as("__sem_v"))
+        F.col(vecCol).cast("array<double>").as("__sem_v"))
+      .where(F.col("__sem_id").isNotNull)
 
-    // nearest centroid by cosine; ties resolve to the smallest cid
-    val assigned = src.crossJoin(cents)
-      .withColumn("__sem_sim", F.expr("vec_cosine(__sem_v, __sem_cv)"))
-      .withColumn("__sem_rn", F.row_number().over(
-        Window.partitionBy("__sem_id").orderBy(F.col("__sem_sim").desc, F.col("__sem_cid"))))
-      .where(F.col("__sem_rn") === 1)
-      .select(F.col("__sem_id"), F.col("__sem_v"), F.col("__sem_cid"))
+    // nearest centroid by cosine: the struct maximum ranks a NaN similarity
+    // highest and a null one last, and its second field sends every tie to
+    // the smallest cid
+    val best = F.array_max(F.zip_with(
+      F.typedLit(centroids.map(_._2.toSeq)), F.typedLit(centroids.map(_._1)),
+      (c, cid) => F.struct(cosine(F.col("__sem_v"), c).as("s"), (-cid.cast("long")).as("n"))))
+    val assigned = src.withColumn("__sem_cid", (-best.getField("n")).cast("int"))
 
     // hard per-cell bound: split clusters over maxClusterSize into
     // ceil(n / maxClusterSize) deterministic hash cells
@@ -59,25 +62,15 @@ object SemDeDup {
       F.when(F.col("__sem_n") <= maxClusterSize, F.lit(0))
         .otherwise(F.pmod(F.xxhash64(F.col("__sem_id")),
           F.ceil(F.col("__sem_n") / maxClusterSize).cast("int"))))
-      .select(F.col("__sem_id"), F.col("__sem_v"), F.col("__sem_cid"), F.col("__sem_sub"))
-      // Eager localCheckpoint, not .cache(): the celled assignment feeds both
-      // sides of the pairwise self-join plus the survivor anti-join from
-      // materialized blocks, with no CacheManager registration — the old
-      // cache was never unpersisted, so a later invocation's canonically
-      // equal plan was served from the first run's blocks (cross-run reuse).
-      .transform(df => graft.Ckpt.stage(df, eager = true))
 
-    val a = celled.select(F.col("__sem_cid").as("ca"), F.col("__sem_sub").as("sa"),
-      F.col("__sem_id").as("ia"), F.col("__sem_v").as("va"))
-    val b = celled.select(F.col("__sem_cid").as("cb"), F.col("__sem_sub").as("sb"),
-      F.col("__sem_id").as("ib"), F.col("__sem_v").as("vb"))
-    val dropped = a.join(b,
-        F.col("ca") === F.col("cb") && F.col("sa") === F.col("sb") &&
-          F.col("ia") < F.col("ib"))
-      .where(F.expr("vec_cosine(va, vb)") >= tau)
-      .select(F.col("ib").as("__sem_drop")).distinct()
-
-    celled.join(dropped, celled("__sem_id") === dropped("__sem_drop"), "left_anti")
-      .select(F.col("__sem_id").as(idCol), F.col("__sem_cid").as("cid"))
+    // per cell, keep each member no earlier member is tau-similar to; the
+    // window's partitioning by cid already clusters the cells
+    val members = F.col("__sem_m")
+    val survivors = F.filter(members, x => !F.exists(members, y =>
+      F.coalesce(y("id") < x("id") && cosine(y("v"), x("v")) >= tau, F.lit(false))))
+    celled.groupBy("__sem_cid", "__sem_sub")
+      .agg(F.collect_list(F.struct(F.col("__sem_id").as("id"), F.col("__sem_v").as("v"))).as("__sem_m"))
+      .select(F.explode(survivors).as("__sem_x"), F.col("__sem_cid"))
+      .select(F.col("__sem_x.id").as(idCol), F.col("__sem_cid").as("cid"))
   }
 }

@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * named param (st_read.cpp:623-631): `.option("bbox", "minx,miny,maxx,maxy")`
   * excludes features whose envelope misses the window, for every format, even
   * when the projection pruned the geometry column away. */
-class BboxOptionSpec extends AnyFunSuite {
+class BboxOptionSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
   private lazy val gj: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bbox")
+    val dir = tempDir("graft_bbox")
     val p = dir.resolve("pts.geojsonl")
     val lines = (1 to 20).map(i =>
       s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i,$i]},"properties":{"n":"$i"}}""")
@@ -30,7 +30,7 @@ class BboxOptionSpec extends AnyFunSuite {
   }
 
   test("bbox on the flatgeobuf index path prunes before materializing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bbox_fgb").toString
+    val dir = tempDir("graft_bbox_fgb").toString
     Graft.register(spark)
     val pts = spark.sql(
       "SELECT id, st_aswkb(st_point(cast(id AS DOUBLE), cast(id AS DOUBLE))) AS geom FROM range(1, 101)")

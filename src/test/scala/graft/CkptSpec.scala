@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-class CkptSpec extends AnyFunSuite {
+class CkptSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -27,7 +27,7 @@ class CkptSpec extends AnyFunSuite {
   }
 
   test("checkpoint dir set -> reliable Dataset.checkpoint writes to it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val df = spark.range(50).selectExpr("id", "id + 1 AS v")

@@ -2,14 +2,13 @@ package graft
 
 import graft.io.{GeoMeta, GeoWriter}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The R-tree replacement (SURVEY §4.3): Hilbert clustering + bbox stats +
   * the BboxSkippingRule must reproduce index-grade pruning declaratively. */
-class ClusteringSpec extends AnyFunSuite {
+class ClusteringSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_cluster").toString
+  private lazy val dir = suiteTempDir("graft_cluster").toString
 
   test("clustered parquet + bbox skipping rule prunes and stays correct") {
     val pts = spark.sql("""

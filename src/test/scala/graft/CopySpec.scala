@@ -12,10 +12,10 @@ import java.nio.file.{Files, Paths}
   * The WKT1 synthesis is validated by a full registry sweep — every emitted
   * WKT1 our own reader can parse must reproduce the registry kernel AND
   * datum, so the two public spellings cannot drift. */
-class CopySpec extends AnyFunSuite {
+class CopySpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_copy").toString
+  private lazy val dir = suiteTempDir("graft_copy").toString
 
   private def pts = {
     spark.sql(

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver smoke contract: entry() on sf0.001 must return rows. */
-class EntrySpec extends AnyFunSuite {
+class EntrySpec extends AnyFunSuite with TempDirs {
   test("entry returns rows on sf0.001") {
     val df = SparkEntry.entry(SparkTestSession.spark)
     val rows = df.collect()
@@ -36,7 +36,7 @@ class EntrySpec extends AnyFunSuite {
   test("fixture cache is keyed by data signature: a rewritten fixture is re-read") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixture_sig").toString
+    val dir = tempDir("graft_fixture_sig").toString
     def write(hi: Int): Unit = {
       (0 until hi).map(i => (i.toLong * 10 + 1, 1L, 1.0, "N"))
         .toDF("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -62,7 +62,6 @@ class EntrySpec extends AnyFunSuite {
       assert(n2 == 40.0, s"rewritten fixture must be re-read (stale cache served: $n2)")
     } finally {
       spark.conf.set("spark.graft.fixtureCache.enabled", "false")
-      scala.reflect.io.Path(dir).deleteRecursively()
     }
   }
 }

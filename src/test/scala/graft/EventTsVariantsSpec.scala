@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * consumer must produce IDENTICAL results on either physical encoding.
   * This spec materializes the same logical events in both encodings and
   * cross-checks the contract queries. */
-class EventTsVariantsSpec extends AnyFunSuite {
+class EventTsVariantsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -24,7 +24,7 @@ class EventTsVariantsSpec extends AnyFunSuite {
   }
 
   private def writeVariant(micros: Boolean): String = {
-    val dir = java.nio.file.Files.createTempDirectory(
+    val dir = tempDir(
       s"graft_events_${if (micros) "us" else "ns"}").toString
     import spark.implicits._
     val df = logicalEvents.toDF("event_id", "ts_us", "user_id", "event_type", "value")

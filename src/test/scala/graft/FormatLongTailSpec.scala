@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** KMZ / GeoRSS / MapInfo MIF readers over self-generated fixtures. */
-class FormatLongTailSpec extends AnyFunSuite {
+class FormatLongTailSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_longtail").toString
+  private lazy val dir = suiteTempDir("graft_longtail").toString
 
   private val kml =
     """<?xml version="1.0" encoding="UTF-8"?>

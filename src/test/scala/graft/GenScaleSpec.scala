@@ -1,17 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The sf1 generator's contract: an N× replica that preserves every
   * relationship the contract queries join on (CORRECTNESS_SF1.md documents
   * the construction). Checked here at copies=3 over sf0.001 so the guard
   * runs in seconds. */
-class GenScaleSpec extends AnyFunSuite {
+class GenScaleSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val outDir = {
-    val d = Files.createTempDirectory("graft_genscale").toString
+    val d = suiteTempDir("graft_genscale").toString
     // run the generator in-process against the smallest fixture
     tools.GenScale.genscale(spark, "/root/testdata/sf0.001", d, 3)
     d

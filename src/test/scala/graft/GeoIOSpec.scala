@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.Deflater
 
 /** DSv2 reader tests over self-generated fixture files (no external data). */
-class GeoIOSpec extends AnyFunSuite {
+class GeoIOSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_io").toString
+  private lazy val dir = suiteTempDir("graft_io").toString
 
   // ------------------------------------------------------------- shapefile fixture
   private def writeShapefile(base: String): Unit = {

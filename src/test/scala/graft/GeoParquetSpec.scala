@@ -6,13 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** GeoParquet 1.1 footer metadata + Hadoop-FS writer paths (round-4 interop
   * items; reference reads/writes GeoParquet through GDAL in st_read.cpp /
   * st_write.cpp). */
-class GeoParquetSpec extends AnyFunSuite {
+class GeoParquetSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
-    d
-  }
+  private def tmp(name: String): String = tempDir(s"graft_$name").toString
 
   test("clusteredParquet stamps geo footer metadata that survives a re-read") {
     val dir = tmp("geoparquet")

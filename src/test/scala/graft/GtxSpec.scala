@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * int32 — then row-major float32 undulations from the south-west corner),
   * exact-bilinear interpolation, and the end-to-end orthometric ↔
   * ellipsoidal height chain through ST_Transform. */
-class GtxSpec extends AnyFunSuite {
+class GtxSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -71,7 +71,7 @@ class GtxSpec extends AnyFunSuite {
   private lazy val gridPath: String = {
     val vals = new Array[Float](3 * 4)
     for (r <- 0 until 3; c <- 0 until 4) vals(r * 4 + c) = (40.0 + 0.25 * c + 0.125 * r).toFloat
-    val p = java.nio.file.Files.createTempFile("graft_gtx_spec", ".gtx")
+    val p = suiteTempDir("graft_gtx_spec").resolve("spec.gtx")
     java.nio.file.Files.write(p, Gtx.write(Gtx.Grid(30.0, 250.0, 1.0, 1.0, 3, 4, vals, "spec")))
     p.toString
   }

@@ -9,7 +9,7 @@ import org.locationtech.jts.geom.Coordinate
   * (bare or with `!entry`), and the chained `/vsizip//vsicurl/http://…`.
   * Objects localize lazily to a per-JVM cache on the executor that reads
   * them — the fixture server here stands in for the remote object store. */
-class HttpReadSpec extends AnyFunSuite {
+class HttpReadSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val fac = graft.geom.Geo.factory
@@ -62,7 +62,7 @@ class HttpReadSpec extends AnyFunSuite {
   }
 
   test("remote shapefile localizes its sidecar family") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_http_shp")
+    val dir = tempDir("graft_http_shp")
     val basePath = dir.resolve("pts").toString
     graft.io.ShapefileWriter.write(basePath,
       Seq(graft.io.ShapefileWriter.Field("name", 'C', 16, 0)),
@@ -84,7 +84,7 @@ class HttpReadSpec extends AnyFunSuite {
   }
 
   test("remote zip: bare expansion, !entry, and chained /vsizip//vsicurl/") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_http_zip")
+    val tmp = tempDir("graft_http_zip")
     val zp = tmp.resolve("data.zip")
     val zo = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(zp))
     zo.putNextEntry(new java.util.zip.ZipEntry("a.geojsonl")); zo.write(gjl(3)); zo.closeEntry()

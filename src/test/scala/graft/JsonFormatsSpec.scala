@@ -10,10 +10,10 @@ import java.nio.file.{Files, Paths}
   * against spec-authored data, not self-generated bytes. The ESRIJSON
   * fixture follows the ArcGIS REST FeatureSet layout with the documented
   * ring-orientation convention. */
-class JsonFormatsSpec extends AnyFunSuite {
+class JsonFormatsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_jsonfmt").toString
+  private lazy val dir = suiteTempDir("graft_jsonfmt").toString
 
   // TopoJSON specification example (unquantized): one object, three
   // geometries; the Polygon references arc 1 reversed via ~1 = -2

@@ -10,10 +10,10 @@ import java.nio.file.{Files, Paths}
   * examples ([9,50,34] point, [9,4,4,18,0,16,16,0] linestring,
   * [9,6,12,18,10,12,24,44,15] polygon) — so the decoder is checked against
   * spec-authored data, not this repo's writer. */
-class MvtSpec extends AnyFunSuite {
+class MvtSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_mvt").toString
+  private lazy val dir = suiteTempDir("graft_mvt").toString
 
   /** minimal protobuf helpers for hand-assembling the fixture */
   private def varint(v0: Long): Array[Byte] = {

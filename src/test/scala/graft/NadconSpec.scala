@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** NOAA NADCON .las/.los pair support (geom/Nadcon.scala): write → parse
   * round-trip, exact bilinear interpolation through the shared NTv2 grid
   * model, the east→west column flip, and the +nadgrids= integration. */
-class NadconSpec extends AnyFunSuite {
+class NadconSpec extends AnyFunSuite with TempDirs {
 
   // 25x21 one-degree grid over east-lon [-110,-86] x lat [30,50]; shift
   // fields bilinear in the EAST column index with binary-fraction
@@ -17,7 +17,7 @@ class NadconSpec extends AnyFunSuite {
       la(r * nc + c) = (0.5f + 0.25f * c + 0.125f * r + 0.0625f * c * r)
       lo(r * nc + c) = (1.0f + 0.125f * c + 0.25f * r - 0.03125f * c * r)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_nadcon")
+    val dir = tempDir("graft_nadcon")
     val base = dir.resolve("demo").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(base + ".las"),
       graft.geom.Nadcon.writePlane(nc, nr, -110f, 1f, 30f, 1f, la))
@@ -130,7 +130,7 @@ class NadconSpec extends AnyFunSuite {
   }
 
   test("malformed input fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nadcon_bad")
+    val dir = tempDir("graft_nadcon_bad")
     val bad = dir.resolve("bad")
     java.nio.file.Files.write(java.nio.file.Paths.get(bad.toString + ".las"), new Array[Byte](40))
     java.nio.file.Files.write(java.nio.file.Paths.get(bad.toString + ".los"), new Array[Byte](40))

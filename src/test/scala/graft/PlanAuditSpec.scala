@@ -19,7 +19,7 @@ class PlanAuditSpec extends AnyFunSuite {
   // (centroids/codebooks, k rows) — a BNLJ over k<=16 broadcast rows is the
   // correct plan, not a scale risk.
   private val boundedCross = Set(
-    "q_semdedup", "q_semdedup_op", // 8 broadcast centroid rows
+    "q_semdedup",   // 8 broadcast centroid rows
     "q_ann_pq",     // 16 codebook vectors
     "q_ann_bruteforce", // 10 query rows vs corpus: intentional exact baseline
     "q_hybrid_rrf",     // 4 query vectors vs corpus: the semantic ranker side

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Run the reference's own sqllogictest corpus (test/sql/geometry) through
   * Spark SQL — direct golden-output parity with the reference engine. */
-class SqlLogicSpec extends AnyFunSuite {
+class SqlLogicSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/reference/test/sql/geometry"
@@ -15,8 +15,9 @@ class SqlLogicSpec extends AnyFunSuite {
 
   test("reference sqllogictest corpus: curated files pass fully") {
     TestFiles.assumeFile(dir)
+    val testDir = tempDir("graft_slt").toString
     fullPass.foreach { f =>
-      val o = SqlLogicTest.runFile(spark, s"$dir/$f")
+      val o = SqlLogicTest.runFile(spark, s"$dir/$f", testDir)
       assert(o.failed == 0, s"$f: ${o.failures.take(5).mkString("; ")}")
       assert(o.passed > 0)
     }
@@ -32,9 +33,10 @@ class SqlLogicSpec extends AnyFunSuite {
     val files = dirs.flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.endsWith(".test")))
       .sortBy(_.getPath)
+    val testDir = tempDir("graft_slt").toString
     var p = 0; var fl = 0; var u = 0
     val perFile = files.map { f =>
-      val o = SqlLogicTest.runFile(spark, f.getPath)
+      val o = SqlLogicTest.runFile(spark, f.getPath, testDir)
       p += o.passed; fl += o.failed; u += o.unsupported
       (f.getName, o)
     }

@@ -100,10 +100,7 @@ object SqlLogicTest {
       (allowUnordered && actual.length == expected.length && actual.length > 1 &&
         rowsAligned(actual.map(canon).sorted, expected.map(canon).sorted))
 
-  private lazy val testDir: String =
-    java.nio.file.Files.createTempDirectory("graft_slt").toString
-
-  def rewrite(sql: String): String = {
+  def rewrite(sql: String, testDir: String): String = {
     val base = listLiterals(
       sql.replaceAll("(?i)('(?:[^']|'')*')\\s*::GEOMETRY", "st_geomfromtext($1)")
         .replaceAll("(?i)::GEOMETRY", "")
@@ -283,7 +280,8 @@ object SqlLogicTest {
     out.result()
   }
 
-  def runFile(spark: SparkSession, path: String): Outcome = {
+  /** Runs one .test file; `testDir` receives the files its statements write. */
+  def runFile(spark: SparkSession, path: String, testDir: String): Outcome = {
     Graft.register(spark)
     spark.conf.set("enable_external_access", "true") // per-file sandbox reset
     val lines = expandLoops(scala.io.Source.fromFile(path).getLines().toVector)
@@ -532,7 +530,7 @@ object SqlLogicTest {
         i += 1
         val rawStmts = splitStatements(collectSql(l => l.trim.isEmpty || l.trim == "----"))
         rawStmts.foreach(trackColumnar)
-        val stmts = rawStmts.map(s => wrapColumnarInserts(aliased(rewrite(s))))
+        val stmts = rawStmts.map(s => wrapColumnarInserts(aliased(rewrite(s, testDir))))
         val sql = stmts.mkString(";\n")
         // consume optional expected-error text
         if (i < lines.length && lines(i).trim == "----") {
@@ -603,7 +601,7 @@ object SqlLogicTest {
         val label = headerToks.drop(2).find(t => !Set("rowsort", "valuesort", "nosort").contains(t))
         i += 1
         // sqllogictest records end at a blank line; ---- introduces goldens
-        val sql = aliased(rewrite(collectSql(l => l.trim.isEmpty || l.trim == "----")))
+        val sql = aliased(rewrite(collectSql(l => l.trim.isEmpty || l.trim == "----"), testDir))
         val hasExpected = i < lines.length && lines(i).trim == "----"
         val expected = ArrayBuffer.empty[String]
         if (hasExpected) {

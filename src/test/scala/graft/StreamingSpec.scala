@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
   test("geo source streams newly-arrived files as micro-batches with restart-stable offsets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_geostream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_geostream_ckpt").toString
+    val dir = tempDir("graft_geostream").toString
+    val ckpt = tempDir("graft_geostream_ckpt").toString
     def writeFile(name: String, ids: Range): Unit = {
       val lines = ids.map(i =>
         s"""{"type":"Feature","id":"$i","geometry":{"type":"Point","coordinates":[$i,${i * 2}]},"properties":{"k":"$i"}}""")

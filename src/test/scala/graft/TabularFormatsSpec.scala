@@ -7,10 +7,10 @@ import java.nio.file.{Files, Paths}
   * is hand-written per the OGR GMT driver's documented line grammar; the
   * PGDUMP test asserts the exact emitted SQL (the format IS the published
   * PostgreSQL COPY text format, so the expected text is spec-derived). */
-class TabularFormatsSpec extends AnyFunSuite {
+class TabularFormatsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
-  private val dir = Files.createTempDirectory("graft_tabular").toString
+  private lazy val dir = suiteTempDir("graft_tabular").toString
 
   private val gmtDoc =
     """# @VGMT1.0 @GPOLYGON

@@ -9,13 +9,13 @@ import org.locationtech.jts.geom.Coordinate
   * `/vsizip/archive.zip/entry`, and a bare `archive.zip` (expands to every
   * known-extension entry). Entries localize lazily to a per-JVM cache on the
   * executor that reads them. */
-class VsiZipSpec extends AnyFunSuite {
+class VsiZipSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val fac = graft.geom.Geo.factory
 
   private def zipOf(entries: (String, Array[Byte])*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vsizip")
+    val dir = tempDir("graft_vsizip")
     val p = dir.resolve("data.zip")
     val zo = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(p))
     entries.foreach { case (name, bytes) =>
@@ -28,7 +28,7 @@ class VsiZipSpec extends AnyFunSuite {
   }
 
   private def shpFamily(n: Int): Seq[(String, Array[Byte])] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vsizip_shp")
+    val dir = tempDir("graft_vsizip_shp")
     val base = dir.resolve("pts").toString
     graft.io.ShapefileWriter.write(base,
       Seq(graft.io.ShapefileWriter.Field("name", 'C', 16, 0)),

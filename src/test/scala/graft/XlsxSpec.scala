@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-JVM XLSX read/write (zip + StAX): the attribute-table format the
   * reference reaches through GDAL's xlsx driver (st_read_xlsx.test). */
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -14,7 +14,7 @@ class XlsxSpec extends AnyFunSuite {
       SELECT 1337 AS i, 'foobar' AS f, 2.5d AS d, 'a <b> & "c"' AS esc
       UNION ALL
       SELECT -1, 'second, row', 0.125d, NULL""")
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx").toString
+    val dir = tempDir("graft_xlsx").toString
     graft.io.GeoWriter.xlsx(df, s"$dir/t.xlsx", singleFile = true)
 
     val rows = graft.io.Xlsx.rows(s"$dir/t.xlsx")
@@ -34,7 +34,7 @@ class XlsxSpec extends AnyFunSuite {
   test("shared-strings workbooks parse (external writers use them)") {
     // hand-build a minimal workbook that uses the sharedStrings part, the
     // layout Excel itself produces (our writer uses inline strings instead)
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx2")
+    val dir = tempDir("graft_xlsx2")
     val p = dir.resolve("s.xlsx")
     val z = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(p))
     def part(n: String, c: String): Unit = {
