@@ -2326,11 +2326,9 @@ object SparkEntry {
     // The SemDeDup OPERATOR under the same oracle as the SQL formulation
     // above: identical corpus/centroids/tau, cap set above cluster sizes so
     // the operator's rule is the paper-exact one (the cap path is spec'd in
-    // SemDeDupSpec with a skewed mega-cluster). The operator is one lazy plan
-    // with one shuffle: centroids go in as a literal, with no cross join,
-    // checkpoint job or self-join. The jobs that run while the query is
-    // built are this entry's own: the parquet schema read and the centroid
-    // collect.
+    // SemDeDupSpec with a skewed mega-cluster). The jobs that run while the
+    // query is built are this entry's own: the parquet schema read and the
+    // centroid collect.
     "q_semdedup_op" -> ((s: SparkSession, dir: String) => {
       graft.Graft.register(s)
       s.read.parquet(s"$dir/embeddings.parquet").createOrReplaceTempView("embeddings")

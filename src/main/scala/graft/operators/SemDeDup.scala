@@ -21,15 +21,20 @@ import org.apache.spark.sql.expressions.Window
  * bound: clusters larger than `maxClusterSize` are deterministically
  * sub-split (hash of id modulo the needed cell count) and the rule runs
  * within each sub-cell. That caps a cell's membership near maxClusterSize,
- * and its pair count near maxClusterSize², regardless of skew — a single
- * mega-cluster can no longer produce an O(N²) task. The cost is bounded
- * recall loss: near-dup pairs straddling two sub-cells of the same oversized
- * cluster are not compared (the same trade as raising k in the paper).
+ * and its pair count near maxClusterSize², regardless of skew. All cells of
+ * one cluster share the cluster's partition, so one task runs them one after
+ * another: a cluster of n rows costs that task about n·maxClusterSize cosine
+ * comparisons, linear in n rather than quadratic, but a mega-cluster is not
+ * spread over tasks. The cost is bounded recall loss: near-dup pairs
+ * straddling two sub-cells of the same oversized cluster are not compared
+ * (the same trade as raising k in the paper).
  */
 object SemDeDup {
 
   /** @param emb DataFrame with (idCol: numeric, vecCol: array<double>)
-   *  @param centroids (cid, centroid vector) pairs — k-bounded, a plan literal
+   *  @param centroids (cid, centroid vector) pairs — a plan literal that every
+   *         task binary and the plan string carry, about 15 bytes per value:
+   *         keep k·d near 10^5 or below (SCALING.md)
    *  @param tau cosine threshold at or above which the later vector drops
    *  @param maxClusterSize hard bound on the membership a single pairwise
    *         cell may reach; oversized clusters sub-split deterministically

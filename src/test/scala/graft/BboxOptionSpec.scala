@@ -11,7 +11,7 @@ class BboxOptionSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val gj: String = {
-    val dir = tempDir("graft_bbox")
+    val dir = suiteTempDir("graft_bbox")
     val p = dir.resolve("pts.geojsonl")
     val lines = (1 to 20).map(i =>
       s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i,$i]},"properties":{"n":"$i"}}""")
@@ -43,6 +43,6 @@ class BboxOptionSpec extends AnyFunSuite with TempDirs {
     val err = intercept[Exception] {
       spark.read.format("geo").option("bbox", "1,2,3").load(gj).collect()
     }
-    assert(err.getMessage.contains("bbox"), err.getMessage)
+    assert(err.getMessage.contains("bbox option expects"), err.getMessage)
   }
 }
