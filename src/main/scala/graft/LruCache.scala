@@ -5,44 +5,90 @@ import java.util.concurrent.atomic.LongAdder
 /** Bounded LRU map that counts its hits and misses: the one mechanism behind
   * graft's cross-query reuse of plan-time join samples
   * ([[graft.plans.SkewSampler]]), of built fixture relations
-  * ([[SparkEntry]]) and of executor-side R-trees over broadcast build sides
-  * ([[graft.plans.BroadcastIndex]]). `onEvict` runs on every entry that
-  * leaves the map, whether pushed out by the bound or dropped by
-  * [[removeIf]]. */
-final class LruCache[K, V <: AnyRef](name: String, max: Int, onEvict: V => Unit = (_: V) => ()) {
+  * ([[SparkEntry]]), of executor-side R-trees over broadcast build sides
+  * ([[graft.plans.BroadcastIndex]]) and of local copies of remote files and
+  * zip entries ([[graft.io.GeoFiles]]). `max` bounds the entry count or,
+  * with `bytes`, the summed bytes of the entries; the least recently used
+  * entries leave first, but never the newest one. `onEvict` runs on every
+  * entry that leaves the map, whether pushed out by the bound, dropped by
+  * [[removeIf]] or computed by a caller that lost a race. */
+final class LruCache[K, V <: AnyRef](name: String, bound: Long, onEvict: V => Unit = (_: V) => (),
+    bytes: Option[V => Long] = None) {
   private val hits = new LongAdder
   private val misses = new LongAdder
-  private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
-      val evict = size() > max
-      if (evict) onEvict(e.getValue)
-      evict
-    }
-  }
-  LruCache.register(name, () => Seq("hits" -> hits.sum, "misses" -> misses.sum))
+  private val weigh = bytes.getOrElse((_: V) => 1L)
+  private var weight = 0L // guarded by map, as is max
+  private var max = bound
+  // each value with its weight, taken once when it was stored
+  private val map = new java.util.LinkedHashMap[K, (V, Long)](16, 0.75f, true)
+  LruCache.register(name, () =>
+    Seq("hits" -> hits.sum, "misses" -> misses.sum) ++
+      bytes.map(_ => "bytes" -> map.synchronized(weight)))
 
   /** The cached value for `k`, or else `compute`'s, which is then cached.
     * `compute` runs outside the lock, so a slow one (a Spark job) does not
-    * block other callers; two racing misses both compute and the later
-    * result stays. A `compute` that throws caches nothing. */
+    * block other callers; when two misses race, the first result stored is
+    * kept and returned to both. A `compute` that throws caches nothing. */
   def getOrElseUpdate(k: K)(compute: => V): V = {
     val hit = map.synchronized(map.get(k))
-    if (hit != null) { hits.increment(); hit }
+    if (hit != null) { hits.increment(); hit._1 }
     else {
       misses.increment()
       val v = compute
-      map.synchronized(map.put(k, v))
-      v
+      val w = weigh(v)
+      val evicted = List.newBuilder[V]
+      val kept = map.synchronized {
+        val raced = map.get(k)
+        if (raced != null) { evicted += v; raced._1 }
+        else {
+          map.put(k, (v, w))
+          weight += w
+          evicted ++= trim()
+          v
+        }
+      }
+      evicted.result().foreach(onEvict)
+      kept
     }
   }
 
-  /** Drops (and evicts) every entry whose key satisfies `p`. */
-  def removeIf(p: K => Boolean): Unit = map.synchronized {
-    val it = map.entrySet.iterator
-    while (it.hasNext) {
-      val e = it.next()
-      if (p(e.getKey)) { onEvict(e.getValue); it.remove() }
+  /** Removes the eldest entries while the bound is passed, keeping the
+    * newest; the caller holds the lock and evicts what comes back. */
+  private def trim(): Seq[V] = {
+    val out = Seq.newBuilder[V]
+    val it = map.values.iterator
+    while (weight > max && map.size > 1) {
+      val (e, ew) = it.next()
+      it.remove()
+      weight -= ew
+      out += e
     }
+    out.result()
+  }
+
+  /** Sets a new bound, evicting down to it, and returns the previous one:
+    * lets a spec check the bound under a small budget. */
+  private[graft] def rebound(newMax: Long): Long = {
+    val (old, evicted) = map.synchronized {
+      val old = max
+      max = newMax
+      (old, trim())
+    }
+    evicted.foreach(onEvict)
+    old
+  }
+
+  /** Drops (and evicts) every entry whose key satisfies `p`. */
+  def removeIf(p: K => Boolean): Unit = {
+    val evicted = List.newBuilder[V]
+    map.synchronized {
+      val it = map.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (p(e.getKey)) { weight -= e.getValue._2; evicted += e.getValue._1; it.remove() }
+      }
+    }
+    evicted.result().foreach(onEvict)
   }
 }
 
@@ -54,8 +100,9 @@ object LruCache {
   register("kernelMemo", () => KernelMemo.shared.counters)
 
   /** The one place to read graft's cache counters since JVM start:
-    * `<cache>.hits` and `<cache>.misses` for every cache, and the
-    * [[KernelMemo]]'s `kernelMemo.{hits,misses,clears,bytes}`. */
+    * `<cache>.hits` and `<cache>.misses` for every cache, `<cache>.bytes`
+    * for a cache bounded in bytes, and the [[KernelMemo]]'s
+    * `kernelMemo.{hits,misses,clears,bytes}`. */
   def counters: Map[String, Long] = {
     val out = Map.newBuilder[String, Long]
     all.forEach((name, c) => c().foreach { case (k, v) => out += s"$name.$k" -> v })

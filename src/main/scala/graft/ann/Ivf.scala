@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
  *
  * Index = partition the corpus by nearest centroid (coarse quantizer);
  * search = probe the `nprobe` nearest centroids only, then exact-rerank.
- * Centroids are a deterministic seeded sample of the corpus (hash-ordered),
- * broadcast to executors as a literal — so assignment is a pure row-local
- * expression, the candidate join is a hash equi-join on cluster id, and
- * nothing ever does all-pairs. At 100 TB: centroids stay driver-small
- * (k ≤ 2^16), assignments write once as a clustered table, probes touch
- * k/nprobe of the data.
+ * Centroids are a deterministic seeded sample of the corpus (hash-ordered)
+ * in the plan as one literal — so assignment is the row-local `ivf_probe`
+ * kernel ([[graft.functions.VecFns.Centroids]]), the candidate join is a
+ * hash equi-join on cluster id, and nothing ever does all-pairs. At 100 TB:
+ * centroids stay driver-small (k ≤ 2^16), assignments write once as a
+ * clustered table, probes touch k/nprobe of the data.
  */
 object Ivf {
 
@@ -27,40 +27,25 @@ object Ivf {
       .collect()
       .map(_.getSeq[Double](1).toArray)
 
-  private def centroidsSql(cs: Array[Array[Double]]): String =
-    cs.map(_.mkString("array(", "d,", "d)")).mkString("array(", ",", ")")
-
   /** Lloyd-refined centroids: `iters` distributed k-means steps over the
-    * seeded sample. Assignment is the row-local ivf_probe expression; the
-    * update is a per-(cluster, dimension) mean aggregate, so the shuffle
-    * carries partial sums, never vectors-to-driver (only the k×dim means
-    * collect, bounded like the seeds). Clusters that lose every member keep
-    * their previous centroid. Better-balanced cells than the raw sample →
-    * higher recall at the same nprobe; distributed float summation makes the
-    * last ulp run-dependent, so pin-style tests should keep using
-    * [[centroids]]. */
+    * seeded sample ([[graft.operators.KMeans.refine]]): the shuffle carries
+    * partial sums, never vectors-to-driver. Better-balanced cells than the
+    * raw sample → higher recall at the same nprobe; distributed float
+    * summation makes the last ulp run-dependent, so pin-style tests should
+    * keep using [[centroids]]. */
   def centroidsKmeans(df: DataFrame, idCol: String, vecCol: String, k: Int, seed: Int,
-                      iters: Int = 2): Array[Array[Double]] = {
-    var cs = centroids(df, idCol, vecCol, k, seed)
-    var it = 0
-    while (it < iters) {
-      val next = cs.map(_.clone())
-      assign(df, idCol, vecCol, cs)
-        .select(col("cluster"), posexplode(col(vecCol).cast("array<double>")))
-        .groupBy("cluster", "pos").agg(avg("col").as("m"))
-        .collect()
-        .foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-      cs = next
-      it += 1
-    }
-    cs
-  }
+                      iters: Int = 2): Array[Array[Double]] =
+    graft.operators.KMeans.refine(df, col(vecCol).cast("array<double>"),
+      centroids(df, idCol, vecCol, k, seed), iters)
+
+  /** The indices of the `nprobe` centroids nearest to `v` by L2. */
+  private[ann] def probe(v: Column, cs: Array[Array[Double]], nprobe: Int): Column =
+    call_function("ivf_probe", v, typedLit(cs.map(_.toSeq).toSeq), lit(nprobe))
 
   /** Corpus → (id, cluster) assignment via the ivf_probe expression. */
   def assign(df: DataFrame, idCol: String, vecCol: String, cs: Array[Array[Double]]): DataFrame = {
     graft.Graft.register(df.sparkSession)
-    df.withColumn("cluster",
-      expr(s"ivf_probe(cast($vecCol AS array<double>), ${centroidsSql(cs)}, 1)[0]"))
+    df.withColumn("cluster", probe(col(vecCol).cast("array<double>"), cs, 1)(0))
   }
 
   /** Top-k neighbours for each query row, probing `nprobe` clusters. */
@@ -72,8 +57,7 @@ object Ivf {
       .select(col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"), col("cluster"))
     val probed = queries
       .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("cluster",
-        explode(expr(s"ivf_probe(qvec, ${centroidsSql(cs)}, $nprobe)")))
+      .withColumn("cluster", explode(probe(col("qvec"), cs, nprobe)))
     probed.join(assigned, "cluster")
       .where(col("qid") =!= col("nid"))
       .withColumn("sim", expr("vec_cosine(qvec, nvec)"))

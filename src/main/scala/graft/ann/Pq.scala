@@ -88,8 +88,7 @@ object Pq {
     val probed = queries
       .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("lut", expr(s"pq_lut(qvec, $cbSql)"))
-      .withColumn("cluster", explode(expr(
-        s"ivf_probe(qvec, ${ivfCs.map(_.mkString("array(", "d,", "d)")).mkString("array(", ",", ")")}, $nprobe)")))
+      .withColumn("cluster", explode(Ivf.probe(col("qvec"), ivfCs, nprobe)))
     val adcRanked = probed.join(assigned, "cluster")
       .where(col("qid") =!= col("nid"))
       .withColumn("adc", expr("pq_adc(codes, lut)"))

@@ -352,19 +352,19 @@ object TopoFns {
     val n = ms.length
     val pts = ms.map(m => if (m.isEmpty) null else {
       val c = org.locationtech.jts.algorithm.Centroid.getCentroid(m)
-      (c.x, c.y)
+      Array(c.x, c.y)
     })
     val live = pts.indices.filter(pts(_) != null)
     val out = new Array[Integer](n)
     if (live.isEmpty) return out
     val kk = math.min(k, live.length)
-    def d2(a: (Double, Double), b: (Double, Double)): Double = {
-      val dx = a._1 - b._1; val dy = a._2 - b._2; dx * dx + dy * dy
+    def d2(a: Array[Double], b: Array[Double]): Double = {
+      val dx = a(0) - b(0); val dy = a(1) - b(1); dx * dx + dy * dy
     }
     // farthest-first seeding from the member nearest the mean
-    val mx = live.map(pts(_)._1).sum / live.length
-    val my = live.map(pts(_)._2).sum / live.length
-    var seeds = List(live.minBy(i => d2(pts(i), (mx, my))))
+    val mx = live.map(pts(_)(0)).sum / live.length
+    val my = live.map(pts(_)(1)).sum / live.length
+    var seeds = List(live.minBy(i => d2(pts(i), Array(mx, my))))
     while (seeds.length < kk) {
       // exclude already-chosen indexes: when several members share a
       // location and k approaches the distinct-location count, maxBy over
@@ -383,13 +383,14 @@ object TopoFns {
     var iter = 0
     while (changed && iter < 100) {
       changed = false
+      val cs = VecFns.Centroids.of(centers)
       live.foreach { i =>
-        val best = centers.indices.minBy(c => (d2(pts(i), centers(c)), c))
+        val best = cs.top(pts(i), 1, cosine = false)(0)
         if (assign(i) != best) { assign(i) = best; changed = true }
       }
       val sx = new Array[Double](kk); val sy = new Array[Double](kk); val cnt = new Array[Int](kk)
-      live.foreach { i => sx(assign(i)) += pts(i)._1; sy(assign(i)) += pts(i)._2; cnt(assign(i)) += 1 }
-      centers = Array.tabulate(kk)(c => if (cnt(c) == 0) centers(c) else (sx(c) / cnt(c), sy(c) / cnt(c)))
+      live.foreach { i => sx(assign(i)) += pts(i)(0); sy(assign(i)) += pts(i)(1); cnt(assign(i)) += 1 }
+      centers = Array.tabulate(kk)(c => if (cnt(c) == 0) centers(c) else Array(sx(c) / cnt(c), sy(c) / cnt(c)))
       iter += 1
     }
     val idOf = scala.collection.mutable.Map.empty[Int, Int]

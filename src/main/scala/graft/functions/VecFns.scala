@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,6 +48,76 @@ object VecFns {
     var i = 0
     while (i < n) { val d = a.getDouble(i) - b.getDouble(i); s += d * d; i += 1 }
     math.sqrt(s)
+  }
+
+  /** k centroids in one flat array: the nearest-centroid kernel behind
+   *  `ivf_probe` (so KMeans, SemDeDup and IVF) and st_clusterkmeans. [[top]]
+   *  ranks them by L2 (squared distance over the shared prefix, summed in
+   *  index order from 0.0; smallest first) or by cosine (bit for bit
+   *  `vec_cosine`; largest first). Scores compare as Spark orders doubles:
+   *  NaN above every number, -0.0 equal to 0.0. Equal scores go to the
+   *  smaller index. A null centroid never ranks. */
+  final class Centroids private (vals: Array[Double], len: Array[Int], norms: Array[Double])
+      extends Serializable {
+
+    /** Indices of the best `n` centroids for `q`, best first. One pass in
+     *  index order keeps the n best so far in a sorted buffer, so nothing
+     *  sorts all k; a later centroid gets ahead only by a strictly better
+     *  score, which sends ties to the smaller index. */
+    def top(q: Array[Double], n: Int, cosine: Boolean): Array[Int] = {
+      val sign = if (cosine) -1 else 1
+      def ahead(a: Double, b: Double) = sign * SQLOrderingUtil.compareDoubles(a, b) < 0
+      val cap = math.max(0, math.min(n, len.length))
+      val bs = new Array[Double](cap)
+      val bi = new Array[Int](cap)
+      val qNorm = if (cosine) Centroids.norm(q) else 0.0
+      val q0 = if (q.length > 0) q(0) else 0.0
+      val q1 = if (q.length > 1) q(1) else 0.0
+      var size = 0
+      var c = 0
+      var o = 0 // where centroid c starts in vals
+      while (cap > 0 && c < len.length) {
+        val l = len(c)
+        if (l >= 0) {
+          val m = if (l < q.length) l else q.length
+          var s = 0.0
+          var j = 0
+          if (cosine) {
+            while (j < m) { s += q(j) * vals(o + j); j += 1 }
+            s = if (qNorm == 0.0 || norms(c) == 0.0) 0.0 else s / (qNorm * norms(c))
+          } else if (m == 2) {
+            // KMeans' 2-D case unrolled, which the JIT does not do for a
+            // loop this short; a square added to 0.0 is itself
+            val d0 = q0 - vals(o); val d1 = q1 - vals(o + 1)
+            s = d0 * d0 + d1 * d1
+          } else
+            while (j < m) { val d = q(j) - vals(o + j); s += d * d; j += 1 }
+          if (size < cap || ahead(s, bs(size - 1))) {
+            if (size < cap) size += 1
+            var i = size - 1
+            while (i > 0 && ahead(s, bs(i - 1))) { bs(i) = bs(i - 1); bi(i) = bi(i - 1); i -= 1 }
+            bs(i) = s; bi(i) = c
+          }
+          o += l
+        }
+        c += 1
+      }
+      java.util.Arrays.copyOf(bi, size)
+    }
+  }
+
+  object Centroids {
+    /** From Spark's ARRAY<ARRAY<DOUBLE>>; a null element is a null centroid,
+     *  and a null component reads as `getDouble` reads it. */
+    def apply(cs: ArrayData): Centroids =
+      of(Array.tabulate(cs.numElements())(c => if (cs.isNullAt(c)) null else cs.getArray(c).toDoubleArray()))
+
+    def of(cs: Array[Array[Double]]): Centroids = new Centroids(cs.filter(_ != null).flatten,
+      cs.map(c => if (c == null) -1 else c.length), cs.map(c => if (c == null) 0.0 else norm(c)))
+
+    /** `vec_norm`'s value: squares summed in index order (a square added
+     *  to 0.0 is itself, so summing from the first one changes nothing) */
+    private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
   }
 
   private def zipWith(a: ArrayData, b: ArrayData, f: (Double, Double) => Double): ArrayData = {
@@ -132,19 +202,24 @@ object VecFns {
       while (i < out.length) { out(i) = v.getDouble(i) * s; i += 1 }
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
-    // nearest-centroid probe list for IVF (graft.ann.Ivf): argsort of L2
-    // distance to each centroid, truncated to nprobe
-    fn("ivf_probe", ArrayType(I), Seq(AD, ArrayType(AD), I)) { a =>
-      val v = arr(a(0))
-      val cs = arr(a(1))
-      val nprobe = int(a(2))
-      val dists = Array.tabulate(cs.numElements()) { i =>
-        (l2(v, cs.getArray(i)), i)
-      }
-      java.util.Arrays.sort(dists, Ordering.by((t: (Double, Int)) => t))
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        dists.take(math.min(nprobe, dists.length)).map(_._2: Any))
-    }
+    // the nprobe best centroids under the Centroids contract, by 'l2' (the
+    // default) or 'cosine'; a foldable centroid list decodes once per
+    // expression instance
+    FnRegistry.add(FnSpec("ivf_probe",
+      Map(3 -> Seq(AD, ArrayType(AD), I), 4 -> Seq(AD, ArrayType(AD), I, StringType)),
+      ArrayType(I), { children =>
+        val fixed = children(1).foldable
+        var cs: Centroids = null
+        a => {
+          if (cs == null || !fixed) cs = Centroids(arr(a(1)))
+          val cosine = a.length == 4 && (a(3).toString match {
+            case "l2" => false
+            case "cosine" => true
+            case m => throw new IllegalArgumentException(s"ivf_probe: metric must be 'l2' or 'cosine', got '$m'")
+          })
+          new GenericArrayData(cs.top(arr(a(0)).toDoubleArray(), int(a(2)), cosine).map(i => i: Any))
+        }
+      }))
 
     // ---- product quantization (Jegou/Douze/Schmid, TPAMI 2011): the
     // billion-scale ANN memory path. Codebooks are ARRAY<ARRAY<ARRAY<DOUBLE>>>

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.LruCache
 import graft.geom.Wkb
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -270,14 +271,56 @@ object GeoFiles {
     if (i >= 0 && p.contains("://")) p.substring(0, i) else p
   }
 
-  private val httpCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Local copies of remote objects and zip entries: one directory per
+    * entry under a per-JVM root, which a shutdown hook deletes. Bounded by
+    * the bytes the entries hold (plus 4 KiB each) against a constant 1 GiB:
+    * the least recently used whole entries are evicted and their
+    * directories deleted, though never the newest. A key is
+    * (source, length:mtime), so a changed object or archive is fetched
+    * again, never served stale, and its older copies are dropped. */
+  private[graft] val downloads = new LruCache[(String, String), java.nio.file.Path](
+    "downloadCache", 1L << 30, p => deleteTree(p.getParent),
+    Some(p => 4096L + treeFiles(p.getParent).map(Files.size).sum))
 
-  private def download(url: String): String = httpCache.computeIfAbsent(url, _ => {
+  private lazy val downloadRoot = {
+    val root = Files.createTempDirectory("graft_dl_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(root)))
+    root
+  }
+  private val downloadSeq = new java.util.concurrent.atomic.AtomicLong
+
+  private def treeFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val st = Files.walk(dir)
+    try st.iterator().asScala.filter(Files.isRegularFile(_)).toVector finally st.close()
+  }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit =
+    if (Files.exists(dir)) {
+      val st = Files.walk(dir)
+      try st.iterator().asScala.toVector.reverse.foreach(Files.deleteIfExists)
+      finally st.close()
+    }
+
+  /** The cached local copy of `source` at `version`, or else the path that
+    * `fill` returns in a fresh entry directory it populates. */
+  private def cached(source: String, version: String)(
+      fill: java.nio.file.Path => java.nio.file.Path): String = {
+    val key = (source, version)
+    downloads.getOrElseUpdate(key) {
+      downloads.removeIf(k => k._1 == source && k != key)
+      val dir = downloadRoot.resolve(downloadSeq.incrementAndGet().toString)
+      Files.createDirectories(dir)
+      try fill(dir)
+      catch { case e: Throwable => deleteTree(dir); throw e }
+    }.toString
+  }
+
+  private def download(url: String): String = {
     requireExternalAccess(url)
     val u = java.net.URI.create(url).toURL
-    // identity probe: object length + last-modified keyed into the cache
-    // directory so a republished object re-downloads; servers that reject
-    // HEAD degrade to a URL-only key (first fetch wins for the JVM's life)
+    // identity probe on every lookup: object length + last-modified version
+    // the cache key, so a republished object re-downloads; servers that
+    // reject HEAD degrade to a URL-only key (first fetch wins for the JVM)
     val (len, lm) =
       try {
         val h = u.openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -285,21 +328,17 @@ object GeoFiles {
         val r = (h.getContentLengthLong, h.getLastModified)
         h.disconnect(); r
       } catch { case scala.util.control.NonFatal(_) => (-1L, 0L) }
-    val urlPath = u.getPath
-    val name0 = urlPath.substring(urlPath.lastIndexOf('/') + 1)
-    val name = if (name0.isEmpty) "download" else name0
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(url)) + s"_${len}_$lm"
-    val root = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_http_$key")
-    Files.createDirectories(root)
-    val dest = root.resolve(name)
-    if (!Files.exists(dest)) fetch(u, dest)
-    // a remote shapefile is a file FAMILY: localize the sidecars beside the
-    // .shp (required .dbf/.shx fail loudly; optional .cpg/.prj tolerated)
-    if (name.toLowerCase.endsWith(".shp")) {
-      for (ext <- Seq(".dbf", ".shx", ".cpg", ".prj")) {
-        val sDest = root.resolve(name.dropRight(4) + ext)
-        if (!Files.exists(sDest)) {
+    cached(url, s"$len:$lm") { root =>
+      val urlPath = u.getPath
+      val name0 = urlPath.substring(urlPath.lastIndexOf('/') + 1)
+      val name = if (name0.isEmpty) "download" else name0
+      val dest = root.resolve(name)
+      fetch(u, dest)
+      // a remote shapefile is a file FAMILY: localize the sidecars beside the
+      // .shp (required .dbf/.shx fail loudly; optional .cpg/.prj tolerated)
+      if (name.toLowerCase.endsWith(".shp")) {
+        for (ext <- Seq(".dbf", ".shx", ".cpg", ".prj")) {
+          val sDest = root.resolve(name.dropRight(4) + ext)
           val sUrl = url.patch(url.toLowerCase.lastIndexOf(".shp"), ext, 4)
           try fetch(java.net.URI.create(sUrl).toURL, sDest)
           catch {
@@ -309,21 +348,15 @@ object GeoFiles {
           }
         }
       }
+      dest
     }
-    dest.toString
-  })
+  }
 
   private def fetch(u: java.net.URL, dest: java.nio.file.Path): Unit = {
     val conn = u.openConnection()
     conn.setConnectTimeout(15000); conn.setReadTimeout(120000)
     val in = conn.getInputStream
-    val tmp = dest.resolveSibling(dest.getFileName.toString + "." +
-      Thread.currentThread().getId + ".tmp")
-    try {
-      Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      try Files.move(tmp, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp) }
-    } finally { in.close(); Files.deleteIfExists(tmp) }
+    try Files.copy(in, dest) finally in.close()
   }
 
   /** reference's sandbox switch (config.cpp enable_external_access): archive
@@ -336,11 +369,9 @@ object GeoFiles {
           s"reading $what: External access is disabled by configuration")
     }
 
-  private val zipCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Resolve a (possibly zip-virtual) path to a readable local file. The
-    * cache key carries the archive's length+mtime so a rewritten archive at
-    * the same path is re-extracted, never served stale. */
+  /** Resolve a (possibly zip-virtual) path to a readable local file. An
+    * extracted entry is versioned by the archive's length+mtime, so a
+    * rewritten archive at the same path is re-extracted, never served stale. */
   def local(p: String): String =
     if (isRemote(p)) {
       val bang = p.indexOf('!')
@@ -349,23 +380,21 @@ object GeoFiles {
       else download(p)
     } else if (!isZipVirtual(p)) p
     else {
-      val f = new java.io.File(p.substring(0, p.indexOf('!')).stripPrefix("file:"))
-      zipCache.computeIfAbsent(p + "@" + f.length() + ":" + f.lastModified(),
-        _ => extractEntry(p))
+      val bang = p.indexOf('!')
+      val archive = new java.io.File(p.substring(0, bang).stripPrefix("file:"))
+      val entry = p.substring(bang + 1)
+      // the driver-side gate in expand() has already run; re-check when a
+      // session is visible (extraction on the driver path)
+      requireExternalAccess(archive.toString)
+      cached(archive.getAbsolutePath + "!" + entry, s"${archive.length()}:${archive.lastModified()}")(
+        extractEntry(archive, entry, _))
     }
 
-  private def extractEntry(virtual: String): String = {
-    val bang = virtual.indexOf('!')
-    val archive = new java.io.File(virtual.substring(0, bang).stripPrefix("file:"))
-    val entry = virtual.substring(bang + 1)
-    // the driver-side gate in expand() has already run; re-check when a
-    // session is visible (extraction on the driver path)
-    requireExternalAccess(archive.toString)
-    val key = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      archive.getAbsolutePath)) + "_" + archive.length() + "_" + archive.lastModified()
-    val root = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_zip_$key")
-    // entry paths flatten ('/'→'_') so one cache dir holds a whole archive;
-    // sidecars keep their shared stem, which is what Shapefile.basePath needs
+  /** Extracts `entry` of `archive` into `root` and returns its path there. */
+  private def extractEntry(archive: java.io.File, entry: String,
+      root: java.nio.file.Path): java.nio.file.Path = {
+    // entry paths flatten ('/'→'_'); sidecars keep their shared stem, which
+    // is what Shapefile.basePath needs
     def flat(name: String) = name.replace('/', '_')
     val zf = new java.util.zip.ZipFile(archive)
     try {
@@ -376,19 +405,14 @@ object GeoFiles {
         !e.isDirectory && (e.getName == entry || stem.exists(e.getName.startsWith))
       }.toSeq
       require(wanted.exists(_.getName == entry), s"no entry '$entry' in $archive")
-      java.nio.file.Files.createDirectories(root)
       wanted.foreach { e =>
         val dest = root.resolve(flat(e.getName))
         if (!Files.exists(dest)) {
-          val tmp = root.resolve(flat(e.getName) + "." + Thread.currentThread().getId + ".tmp")
           val in = zf.getInputStream(e)
-          try Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          finally in.close()
-          try Files.move(tmp, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp) }
+          try Files.copy(in, dest) finally in.close()
         }
       }
-      root.resolve(flat(entry)).toString
+      root.resolve(flat(entry))
     } finally zf.close()
   }
 

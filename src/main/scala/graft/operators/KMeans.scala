@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 
 /**
@@ -8,106 +7,60 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
  * ST_ClusterKMeans, with DETERMINISTIC seeding so results are
  * oracle-checkable): initial centroids are the first k points in id order
  * (cluster ids 0..k-1), a fixed number of assign/update rounds, ties broken
- * by cluster id.
+ * by cluster id. Points with a null or NaN coordinate have no distance and
+ * are dropped.
  *
  * Scale shape: centroids live on the driver (k rows); each round is ONE
- * map-side-combined groupBy over the points (sum/count per cluster), no
- * shuffle of anything but k partial states per partition. Assignment has two
- * equivalent implementations chosen by k:
- *   - k ≤ 128: a codegen'd array_min over per-centroid (distance, id)
- *     structs — literals in the plan, stays inside whole-stage codegen;
- *   - k > 128: the centroid table is BROADCAST and a mapPartitions argmin
- *     scans it per row — an O(k) expression tree would blow past codegen
- *     limits, a broadcast array does not (this is what makes k ~ 10^4-10^5
- *     reachable; same (distance, cid) tie rule bit for bit). Each update
- *     round destroys its broadcast once collected; the returned DataFrame
- *     reads the last one, which Spark's ContextCleaner removes with it.
+ * map-side-combined groupBy over the points ([[refine]]). Assignment is
+ * `ivf_probe(array(x, y), centroids, 1)[0]`, the nearest-centroid kernel
+ * ([[graft.functions.VecFns.Centroids]]: `dx*dx + dy*dy`, ties to the
+ * smallest cluster id) over the centroids as one plan literal, which `cx`/`cy`
+ * read too; it costs every task binary about 15 bytes per value (SCALING.md).
  * With integral input coordinates every centroid is an exact integer-sum /
  * count division, so independent engines reproduce the trajectory bit for
  * bit.
  */
 object KMeans {
 
-  /** ks above this use the broadcast mapPartitions assignment */
-  private val ExprPathMaxK = 128
-
   /** @param points columns (id, x, y); k ≤ first-point count
    *  @return DataFrame(id, cluster INT, cx, cy) — assignment against the
    *          centroids after `iters` update rounds */
   def cluster(spark: SparkSession, points: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0)
-    import spark.implicits._
     val p = points.selectExpr("CAST(id AS LONG) AS id", "CAST(x AS DOUBLE) AS x",
       "CAST(y AS DOUBLE) AS y")
-      // null coordinates have no distance — drop them (they would surface as
-      // a null groupBy key and break the centroid update).
-      .where("id IS NOT NULL AND x IS NOT NULL AND y IS NOT NULL")
-      // Eager localCheckpoint, not .cache(): the projected points feed the
-      // seed collect + every assign/update round from materialized blocks,
-      // and unlike a persist there is no CacheManager registration — a later
-      // invocation cannot be served from this run's rows (the old cache was
-      // never unpersisted, so every bench re-run of q_kmeans after the first
-      // silently skipped the scan).
+      // null or NaN coordinates have no distance — drop them (a null would
+      // surface as a null groupBy key, a NaN would turn its centroid NaN)
+      .where("id IS NOT NULL AND x IS NOT NULL AND y IS NOT NULL AND NOT isnan(x) AND NOT isnan(y)")
+      // Eager localCheckpoint, not .cache(): the seed collect and every round
+      // read materialized blocks, and with no CacheManager registration no
+      // later invocation can be served from this run's rows.
       .transform(df => graft.Ckpt.stage(df, eager = true))
 
-    var cents: Array[(Int, Double, Double)] = p.orderBy("id").limit(k).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getDouble(1), r.getDouble(2)) }
-
-    def assignCol(cs: Array[(Int, Double, Double)]): Column = {
-      val alts = cs.map { case (cid, cx, cy) =>
-        F.struct(
-          (F.col("x") - F.lit(cx)) * (F.col("x") - F.lit(cx)) +
-            (F.col("y") - F.lit(cy)) * (F.col("y") - F.lit(cy)) as "d",
-          F.lit(cid) as "c")
-      }
-      F.array_min(F.array(alts: _*)).getField("c")
-    }
-
-    /** (id, x, y, c) with c = argmin by (squared distance, cid), and the
-      * centroid broadcast it reads, if any */
-    def assigned(cs: Array[(Int, Double, Double)])
-        : (DataFrame, Option[Broadcast[Array[(Int, Double, Double)]]]) =
-      if (cs.length <= ExprPathMaxK)
-        (p.select(F.col("id"), F.col("x"), F.col("y"), assignCol(cs).cast("int").as("c")), None)
-      else {
-        val bc = spark.sparkContext.broadcast(cs)
-        (p.as[(Long, Double, Double)].mapPartitions { it =>
-          val arr = bc.value
-          it.map { case (id, x, y) =>
-            var best = Double.PositiveInfinity
-            var bestC = Int.MaxValue
-            var i = 0
-            while (i < arr.length) {
-              val dx = x - arr(i)._2; val dy = y - arr(i)._3
-              val d = dx * dx + dy * dy
-              if (d < best || (d == best && arr(i)._1 < bestC)) { best = d; bestC = arr(i)._1 }
-              i += 1
-            }
-            (id, x, y, bestC)
-          }
-        }.toDF("id", "x", "y", "c"), Some(bc))
-      }
-
-    for (_ <- 0 until iters) {
-      val (a, bc) = assigned(cents)
-      // a round's centroids are read only by its own collect
-      val sums = try a.groupBy("c")
-        .agg(F.sum("x").as("sx"), F.sum("y").as("sy"), F.count(F.lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
-        finally bc.foreach(_.destroy())
-      cents = cents.map { case (cid, cx, cy) =>
-        sums.get(cid) match {
-          case Some((sx, sy, n)) if n > 0 => (cid, sx / n, sy / n)
-          case _ => (cid, cx, cy) // empty cluster keeps its centroid
-        }
-      }
-    }
-
-    // centroid lookup by broadcast join — k rows, works at any k (an
-    // element_at over k literals would hit the same codegen wall as above)
-    val centsDf = F.broadcast(cents.toSeq.toDF("cluster", "cx", "cy"))
-    assigned(cents)._1.select(F.col("id"), F.col("c").as("cluster"))
-      .join(centsDf, "cluster")
-      .select(F.col("id"), F.col("cluster"), F.col("cx"), F.col("cy"))
+    val seeds = p.orderBy("id").limit(k).collect().map(r => Array(r.getDouble(1), r.getDouble(2)))
+    val xy = F.array(F.col("x"), F.col("y"))
+    val cs = centroidsLit(refine(p, xy, seeds, iters))
+    p.withColumn("cluster", nearest(xy, cs))
+      .select(F.col("id"), F.col("cluster"), cs(F.col("cluster"))(0).as("cx"), cs(F.col("cluster"))(1).as("cy"))
   }
+
+  /** `iters` Lloyd rounds from `cs` over the vectors in `v`: each assigns
+    * every row to its nearest centroid, then one (cluster, dimension) mean
+    * aggregate moves the centroids; a centroid with no rows stays put. */
+  def refine(df: DataFrame, v: Column, cs: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
+    graft.Graft.register(df.sparkSession)
+    (0 until iters).foldLeft(cs) { (cs, _) =>
+      val next = cs.map(_.clone())
+      // c before the explode, so the kernel runs once per row
+      df.select(nearest(v, centroidsLit(cs)).as("c"), v.as("v")).select(F.col("c"), F.posexplode(F.col("v")))
+        .groupBy("c", "pos").agg(F.avg("col"))
+        .collect().foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+      next
+    }
+  }
+
+  private def centroidsLit(cs: Array[Array[Double]]): Column = F.typedLit(cs.map(_.toSeq).toSeq)
+
+  /** the index of `v`'s nearest centroid in the array literal `cs` by L2 */
+  private def nearest(v: Column, cs: Column): Column = F.call_function("ivf_probe", v, cs, F.lit(1))(0)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 /**
@@ -12,22 +12,23 @@ import org.apache.spark.sql.expressions.Window
  * is judged on its own: rows sharing an id neither drop nor shadow each other.
  *
  * Scale shape: one lazy plan with one shuffle. Each row picks its nearest
- * centroid with one expression over the k centroids, which travel in the
- * plan as a literal (O(N·k·d) compute, no N·k rows). The cluster-size window
- * hash-partitions rows by cluster, and the pairwise step is one aggregation
- * per cell over that same partitioning, so it is quadratic only WITHIN a
- * cell. The paper's guidance is that k must grow with corpus size to keep
- * clusters bounded; this operator additionally enforces a HARD per-cluster
- * bound: clusters larger than `maxClusterSize` are deterministically
- * sub-split (hash of id modulo the needed cell count) and the rule runs
- * within each sub-cell. That caps a cell's membership near maxClusterSize,
- * and its pair count near maxClusterSize², regardless of skew. All cells of
- * one cluster share the cluster's partition, so one task runs them one after
- * another: a cluster of n rows costs that task about n·maxClusterSize cosine
- * comparisons, linear in n rather than quadratic, but a mega-cluster is not
- * spread over tasks. The cost is bounded recall loss: near-dup pairs
- * straddling two sub-cells of the same oversized cluster are not compared
- * (the same trade as raising k in the paper).
+ * centroid by cosine with the `ivf_probe` kernel over the k centroids sorted
+ * by cid, a plan literal (O(N·k·d) compute, no N·k rows): a NaN similarity
+ * ranks highest, ties and null vectors go to the smallest cid. The
+ * cluster-size window hash-partitions rows by cluster, and the pairwise step
+ * is one aggregation per cell over that same partitioning, so it is
+ * quadratic only WITHIN a cell. The paper's guidance is that k must grow
+ * with corpus size to keep clusters bounded; this operator additionally
+ * enforces a HARD per-cluster bound: clusters larger than `maxClusterSize`
+ * are deterministically sub-split (hash of id modulo the needed cell count)
+ * and the rule runs within each sub-cell. That caps a cell's membership near
+ * maxClusterSize, and its pair count near maxClusterSize², regardless of
+ * skew. All cells of one cluster share the cluster's partition, so one task
+ * runs them one after another: a cluster of n rows costs that task about
+ * n·maxClusterSize cosine comparisons, linear in n rather than quadratic,
+ * but a mega-cluster is not spread over tasks. The cost is bounded recall
+ * loss: near-dup pairs straddling two sub-cells of the same oversized
+ * cluster are not compared (the same trade as raising k in the paper).
  */
 object SemDeDup {
 
@@ -45,19 +46,18 @@ object SemDeDup {
     require(centroids.nonEmpty, "semdedup needs at least one centroid")
     require(maxClusterSize >= 2, "maxClusterSize must be at least 2")
     graft.Graft.register(emb.sparkSession)
-    def cosine(a: Column, b: Column): Column = F.call_function("vec_cosine", a, b)
 
     val src = emb.select(F.col(idCol).cast("long").as("__sem_id"),
         F.col(vecCol).cast("array<double>").as("__sem_v"))
       .where(F.col("__sem_id").isNotNull)
 
-    // nearest centroid by cosine: the struct maximum ranks a NaN similarity
-    // highest and a null one last, and its second field sends every tie to
-    // the smallest cid
-    val best = F.array_max(F.zip_with(
-      F.typedLit(centroids.map(_._2.toSeq)), F.typedLit(centroids.map(_._1)),
-      (c, cid) => F.struct(cosine(F.col("__sem_v"), c).as("s"), (-cid.cast("long")).as("n"))))
-    val assigned = src.withColumn("__sem_cid", (-best.getField("n")).cast("int"))
+    // the index of the nearest centroid by cosine, mapped back to its cid;
+    // a null vector has no index and takes the smallest cid
+    val sorted = centroids.sortBy(_._1)
+    val best = F.call_function("ivf_probe", F.col("__sem_v"),
+      F.typedLit(sorted.map(_._2.toSeq)), F.lit(1), F.lit("cosine"))(0)
+    val assigned = src.withColumn("__sem_cid",
+      F.coalesce(F.typedLit(sorted.map(_._1)).apply(best), F.lit(sorted.head._1)))
 
     // hard per-cell bound: split clusters over maxClusterSize into
     // ceil(n / maxClusterSize) deterministic hash cells
@@ -72,7 +72,7 @@ object SemDeDup {
     // window's partitioning by cid already clusters the cells
     val members = F.col("__sem_m")
     val survivors = F.filter(members, x => !F.exists(members, y =>
-      F.coalesce(y("id") < x("id") && cosine(y("v"), x("v")) >= tau, F.lit(false))))
+      F.coalesce(y("id") < x("id") && F.call_function("vec_cosine", y("v"), x("v")) >= tau, F.lit(false))))
     celled.groupBy("__sem_cid", "__sem_sub")
       .agg(F.collect_list(F.struct(F.col("__sem_id").as("id"), F.col("__sem_v").as("v"))).as("__sem_m"))
       .select(F.explode(survivors).as("__sem_x"), F.col("__sem_cid"))

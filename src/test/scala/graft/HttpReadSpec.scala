@@ -125,4 +125,23 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
       assert(err != null)
     }
   }
+
+  test("downloads stay under the byte budget, evicting whole entries") {
+    val cache = graft.io.GeoFiles.downloads
+    def bytes = LruCache.counters("downloadCache.bytes")
+    val files = (1 to 5).map(i => s"d$i.geojsonl" -> gjl(100 + i)).toMap
+    val budget = 3L * (files.values.map(_.length).max + 4096)
+    val previous = cache.rebound(budget)
+    try withServer(files) { base =>
+      val misses = LruCache.counters("downloadCache.misses")
+      val dirs = (1 to 5).map { i =>
+        assert(spark.read.format("geo").load(s"$base/d$i.geojsonl").count() == 100 + i)
+        java.nio.file.Paths.get(graft.io.GeoFiles.local(s"$base/d$i.geojsonl")).getParent
+      }
+      assert(LruCache.counters("downloadCache.misses") == misses + 5)
+      assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
+      assert(dirs.take(2).forall(d => !java.nio.file.Files.exists(d)), dirs.toString)
+      assert(dirs.drop(2).forall(d => java.nio.file.Files.exists(d)), dirs.toString)
+    } finally cache.rebound(previous)
+  }
 }

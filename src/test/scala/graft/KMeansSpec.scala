@@ -2,9 +2,7 @@ package graft
 
 import graft.operators.KMeans
 import org.apache.spark.BroadcastBlocks
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
 
 class KMeansSpec extends AnyFunSuite {
 
@@ -80,10 +78,10 @@ class KMeansSpec extends AnyFunSuite {
   private def points(n: Int): (Array[Double], Array[Double]) =
     (Array.tabulate(n)(i => ((i * 37) % 100).toDouble), Array.tabulate(n)(i => ((i * 53) % 100).toDouble))
 
-  test("large k takes the broadcast path and matches a brute-force reference") {
-    // k = 200 > the 128 expression-path cutoff: assignment runs through the
-    // broadcast mapPartitions argmin; verify the full trajectory against an
-    // in-test Lloyd implementation with the identical (distance, cid) tie rule
+  test("large k takes the path and matches a brute-force reference") {
+    // k = 200 is past the 128 centroids where assignment once left the plan
+    // for a broadcast; verify the full trajectory against an in-test Lloyd
+    // implementation with the identical (distance, cid) tie rule
     val n = 600; val k = 200; val iters = 3
     val (xs, ys) = points(n)
     import spark.implicits._
@@ -96,21 +94,35 @@ class KMeansSpec extends AnyFunSuite {
     }
   }
 
-  test("large k leaves at most one centroid broadcast behind") {
-    // each update round broadcasts its centroids; only the last, which the
-    // returned DataFrame reads, may outlive the call
+  test("large k leaves no centroid broadcast behind") {
+    // the centroids travel in the plan as a literal: no round broadcasts
+    // them, and cx/cy come from the same literal rather than a broadcast join
     val n = 400; val k = 150; val iters = 4
     val (xs, ys) = points(n)
     import spark.implicits._
     val pts = (0 until n).map(i => (i.toLong, xs(i), ys(i))).toDF("id", "x", "y")
-    val centroids = (v: Any) => v.isInstanceOf[Array[(_, _, _)]]
+    val centroids = (v: Any) => v.isInstanceOf[Array[(_, _, _)]] ||
+      v.getClass.getName.endsWith("HashedRelation") // a broadcast join's build
     val before = BroadcastBlocks.live(centroids)
-    val got = KMeans.cluster(spark, pts, k, iters)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val result = KMeans.cluster(spark, pts, k, iters)
+    val got = result.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == reference(xs, ys, k, iters))
-    eventually(timeout(10.seconds), interval(100.millis)) {
-      val left = BroadcastBlocks.live(centroids) -- before
-      assert(left.size <= 1, s"centroid broadcasts left: $left")
+    val left = BroadcastBlocks.live(centroids) -- before
+    assert(left.isEmpty, s"centroid broadcasts left: $left")
+    assert(!result.queryExecution.executedPlan.toString.contains("Broadcast"),
+      result.queryExecution.executedPlan.toString)
+  }
+
+  test("NaN coordinates are dropped: k = 2 and k = 150 give the rows of the input without them") {
+    import spark.implicits._
+    val (xs, ys) = points(400)
+    val pts = (0 until 400).map(i => (i.toLong, xs(i), ys(i)))
+    // the NaN points take low ids, where they would seed clusters
+    val nans = Seq((-2L, Double.NaN, 5.0), (-1L, 7.0, Double.NaN), (1000L, Double.NaN, Double.NaN))
+    Seq(2, 150).foreach { k =>
+      def rows(df: org.apache.spark.sql.DataFrame) = KMeans.cluster(spark, df, k, iters = 2)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3))).sortBy(_._1).toSeq
+      assert(rows((pts ++ nans).toDF("id", "x", "y")) == rows(pts.toDF("id", "x", "y")), s"k=$k")
     }
   }
 }

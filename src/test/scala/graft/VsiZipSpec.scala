@@ -98,4 +98,43 @@ class VsiZipSpec extends AnyFunSuite with TempDirs {
       assert(rootChain(err).exists(_.contains("External access is disabled")), err.getMessage)
     } finally spark.conf.set("enable_external_access", "true")
   }
+
+  test("extracted entries stay under the byte budget and a rewritten archive re-extracts") {
+    val cache = graft.io.GeoFiles.downloads
+    def bytes = LruCache.counters("downloadCache.bytes")
+    val payload = (1 to 200).map(i =>
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i,$i]},"properties":{}}""")
+      .mkString("\n").getBytes("UTF-8")
+    // room for three of these entries (each weighs its bytes plus 4 KiB)
+    val budget = 3L * (payload.length + 4096) + 100
+    val previous = cache.rebound(budget)
+    try {
+      val zips = (1 to 5).map(_ => zipOf("pts.geojsonl" -> payload))
+      val dirs = zips.map { z =>
+        assert(spark.read.format("geo").load(s"$z!pts.geojsonl").count() == 200)
+        java.nio.file.Paths.get(graft.io.GeoFiles.local(s"$z!pts.geojsonl")).getParent
+      }
+      assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
+      // whole entries leave, oldest first, and take their directories along
+      assert(dirs.take(2).forall(d => !java.nio.file.Files.exists(d)), dirs.toString)
+      assert(dirs.drop(2).forall(d => java.nio.file.Files.exists(d)), dirs.toString)
+      // one per-JVM root holds them all
+      assert(dirs.map(_.getParent).distinct.size == 1, dirs.toString)
+      // a hit serves the same copy; an evicted entry re-extracts on demand
+      val hits = LruCache.counters("downloadCache.hits")
+      assert(graft.io.GeoFiles.local(s"${zips(4)}!pts.geojsonl").startsWith(dirs(4).toString))
+      assert(LruCache.counters("downloadCache.hits") == hits + 1)
+      assert(spark.read.format("geo").load(s"${zips(0)}!pts.geojsonl").count() == 200)
+      // rewriting an archive changes its version: the new bytes are read and
+      // the old copy is dropped
+      val z = zips(4)
+      val zo = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(z)))
+      zo.putNextEntry(new java.util.zip.ZipEntry("pts.geojsonl"))
+      zo.write(payload.take(payload.indexOf('\n'.toByte)))
+      zo.closeEntry(); zo.close()
+      assert(spark.read.format("geo").load(s"$z!pts.geojsonl").count() == 1)
+      assert(!java.nio.file.Files.exists(dirs(4)))
+      assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
+    } finally cache.rebound(previous)
+  }
 }
