@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.LongAdder
   * ([[graft.plans.SkewSampler]]), of built fixture relations
   * ([[SparkEntry]]), of executor-side R-trees over broadcast build sides
   * ([[graft.plans.BroadcastIndex]]) and of local copies of remote files and
-  * zip entries ([[graft.io.GeoFiles]]). `max` bounds the entry count or,
+  * zip entries ([[graft.io.GeoFiles]]). `bound` caps the entry count or,
   * with `bytes`, the summed bytes of the entries; the least recently used
   * entries leave first, but never the newest one. `onEvict` runs on every
   * entry that leaves the map, whether pushed out by the bound, dropped by

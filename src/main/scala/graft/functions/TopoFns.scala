@@ -383,7 +383,7 @@ object TopoFns {
     var iter = 0
     while (changed && iter < 100) {
       changed = false
-      val cs = VecFns.Centroids.of(centers)
+      val cs = new VecFns.Centroids(centers)
       live.foreach { i =>
         val best = cs.top(pts(i), 1, cosine = false)(0)
         if (assign(i) != best) { assign(i) = best; changed = true }

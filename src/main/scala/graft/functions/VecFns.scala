@@ -50,29 +50,30 @@ object VecFns {
     math.sqrt(s)
   }
 
-  /** k centroids in one flat array: the nearest-centroid kernel behind
-   *  `ivf_probe` (so KMeans, SemDeDup and IVF) and st_clusterkmeans. [[top]]
-   *  ranks them by L2 (squared distance over the shared prefix, summed in
-   *  index order from 0.0; smallest first) or by cosine (bit for bit
-   *  `vec_cosine`; largest first). Scores compare as Spark orders doubles:
-   *  NaN above every number, -0.0 equal to 0.0. Equal scores go to the
-   *  smaller index. A null centroid never ranks. */
-  final class Centroids private (vals: Array[Double], len: Array[Int], norms: Array[Double])
-      extends Serializable {
+  /** The nearest-centroid kernel behind `ivf_probe` (so KMeans, SemDeDup,
+   *  IVF) and st_clusterkmeans: k centroids in one flat array, ranked by L2
+   *  (squared distance over the shared prefix, from 0.0 in index order;
+   *  smallest first) or cosine (bit for bit `vec_cosine`; largest first),
+   *  compared as Spark orders doubles (NaN above every number, -0.0 equal to
+   *  0.0). Ties go to the smaller index; a null centroid never ranks. */
+  final class Centroids(cs: Array[Array[Double]]) extends Serializable {
+    private val vals = cs.filter(_ != null).flatten
+    private val len = cs.map(c => if (c == null) -1 else c.length)
+    private val norms = cs.map(c => if (c == null) 0.0 else norm(c))
 
-    /** Indices of the best `n` centroids for `q`, best first. One pass in
-     *  index order keeps the n best so far in a sorted buffer, so nothing
-     *  sorts all k; a later centroid gets ahead only by a strictly better
-     *  score, which sends ties to the smaller index. */
+    /** `vec_norm`'s value (a square added to 0.0 is itself) */
+    private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
+
+    /** Indices of the best `n` centroids for `q`, best first: one pass keeps
+     *  the n best so far in a sorted buffer, and a later centroid gets ahead
+     *  only by a strictly better score, so ties go to the smaller index. */
     def top(q: Array[Double], n: Int, cosine: Boolean): Array[Int] = {
       val sign = if (cosine) -1 else 1
       def ahead(a: Double, b: Double) = sign * SQLOrderingUtil.compareDoubles(a, b) < 0
       val cap = math.max(0, math.min(n, len.length))
       val bs = new Array[Double](cap)
       val bi = new Array[Int](cap)
-      val qNorm = if (cosine) Centroids.norm(q) else 0.0
-      val q0 = if (q.length > 0) q(0) else 0.0
-      val q1 = if (q.length > 1) q(1) else 0.0
+      val qNorm = if (cosine) norm(q) else 0.0
       var size = 0
       var c = 0
       var o = 0 // where centroid c starts in vals
@@ -86,9 +87,8 @@ object VecFns {
             while (j < m) { s += q(j) * vals(o + j); j += 1 }
             s = if (qNorm == 0.0 || norms(c) == 0.0) 0.0 else s / (qNorm * norms(c))
           } else if (m == 2) {
-            // KMeans' 2-D case unrolled, which the JIT does not do for a
-            // loop this short; a square added to 0.0 is itself
-            val d0 = q0 - vals(o); val d1 = q1 - vals(o + 1)
+            // KMeans' 2-D case: the JIT leaves a loop this short slow
+            val d0 = q(0) - vals(o); val d1 = q(1) - vals(o + 1)
             s = d0 * d0 + d1 * d1
           } else
             while (j < m) { val d = q(j) - vals(o + j); s += d * d; j += 1 }
@@ -104,20 +104,6 @@ object VecFns {
       }
       java.util.Arrays.copyOf(bi, size)
     }
-  }
-
-  object Centroids {
-    /** From Spark's ARRAY<ARRAY<DOUBLE>>; a null element is a null centroid,
-     *  and a null component reads as `getDouble` reads it. */
-    def apply(cs: ArrayData): Centroids =
-      of(Array.tabulate(cs.numElements())(c => if (cs.isNullAt(c)) null else cs.getArray(c).toDoubleArray()))
-
-    def of(cs: Array[Array[Double]]): Centroids = new Centroids(cs.filter(_ != null).flatten,
-      cs.map(c => if (c == null) -1 else c.length), cs.map(c => if (c == null) 0.0 else norm(c)))
-
-    /** `vec_norm`'s value: squares summed in index order (a square added
-     *  to 0.0 is itself, so summing from the first one changes nothing) */
-    private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
   }
 
   private def zipWith(a: ArrayData, b: ArrayData, f: (Double, Double) => Double): ArrayData = {
@@ -202,16 +188,16 @@ object VecFns {
       while (i < out.length) { out(i) = v.getDouble(i) * s; i += 1 }
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
-    // the nprobe best centroids under the Centroids contract, by 'l2' (the
-    // default) or 'cosine'; a foldable centroid list decodes once per
-    // expression instance
+    // the nprobe best centroids by 'l2' (the default) or 'cosine'; foldable
+    // centroids decode once per expression instance
     FnRegistry.add(FnSpec("ivf_probe",
       Map(3 -> Seq(AD, ArrayType(AD), I), 4 -> Seq(AD, ArrayType(AD), I, StringType)),
       ArrayType(I), { children =>
         val fixed = children(1).foldable
         var cs: Centroids = null
         a => {
-          if (cs == null || !fixed) cs = Centroids(arr(a(1)))
+          if (cs == null || !fixed) cs = new Centroids(arr(a(1)).toArray[ArrayData](AD)
+            .map(c => if (c == null) null else c.toDoubleArray()))
           val cosine = a.length == 4 && (a(3).toString match {
             case "l2" => false
             case "cosine" => true

@@ -15,7 +15,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
  * `ivf_probe(array(x, y), centroids, 1)[0]`, the nearest-centroid kernel
  * ([[graft.functions.VecFns.Centroids]]: `dx*dx + dy*dy`, ties to the
  * smallest cluster id) over the centroids as one plan literal, which `cx`/`cy`
- * read too; it costs every task binary about 15 bytes per value (SCALING.md).
+ * read too; it costs every task binary about 15 bytes per value, measured
+ * up to k = 10^5 (SCALING.md).
  * With integral input coordinates every centroid is an exact integer-sum /
  * count division, so independent engines reproduce the trajectory bit for
  * bit.

@@ -223,24 +223,23 @@ class NearestCentroidSpec extends AnyFunSuite {
   test("contract: null vectors, null centroids, NaN, ties and metric, one row each") {
     val nan = "double('NaN')"
     val table = Seq(
-      // (vector, centroids, nprobe, metric, result)
-      ("CAST(NULL AS array<double>)", "array(array(1d))", 1, "", null),
-      ("array(0d, 0d)", "CAST(NULL AS array<array<double>>)", 1, "", null),
-      ("array(0d, 0d)", "array(NULL, array(1d, 1d), array(0d, 0d))", 3, "", Seq(2, 1)),
-      ("array(0d, 0d)", "array(CAST(NULL AS array<double>))", 2, "", Seq()),
-      ("array(0d)", "array(array(1d), array(-1d), array(1d))", 3, "", Seq(0, 1, 2)),
-      ("array(0d)", s"array(array($nan), array(5d))", 2, "", Seq(1, 0)),
-      ("array(0d)", s"array(array($nan), array($nan), array(5d))", 3, ", 'l2'", Seq(2, 0, 1)),
-      ("array(1d, 0d)", s"array(array(1d, 0d), array(1d, $nan), array($nan, 0d))", 3, ", 'cosine'", Seq(1, 2, 0)),
-      ("array(1d, 0d)", "array(array(2d, 0d), array(1d, 0d), array(0d, 1d))", 2, ", 'cosine'", Seq(0, 1)),
-      (s"array($nan, 0d)", "array(array(2d, 0d), array(1d, 0d))", 1, ", 'cosine'", Seq(0)),
-      ("array(0d, 0d)", "array(array(1d, 0d), array(0d, 1d))", 1, ", 'cosine'", Seq(0)),
-      ("array(0d)", "array(array(1d))", 0, "", Seq()),
-      ("array(0d)", "array(array(1d))", -2, "", Seq()),
-      ("array(0d)", "array(array(1d))", CAST_NULL, "", null))
-    table.foreach { case (v, cs, nprobe, metric, want) =>
-      val np = if (nprobe == CAST_NULL) "CAST(NULL AS INT)" else nprobe.toString
-      val sql = s"SELECT ivf_probe($v, $cs, $np$metric)"
+      // (vector, centroids, nprobe and metric, result)
+      ("CAST(NULL AS array<double>)", "array(array(1d))", "1", null),
+      ("array(0d, 0d)", "CAST(NULL AS array<array<double>>)", "1", null),
+      ("array(0d, 0d)", "array(NULL, array(1d, 1d), array(0d, 0d))", "3", Seq(2, 1)),
+      ("array(0d, 0d)", "array(CAST(NULL AS array<double>))", "2", Seq()),
+      ("array(0d)", "array(array(1d), array(-1d), array(1d))", "3", Seq(0, 1, 2)),
+      ("array(0d)", s"array(array($nan), array(5d))", "2", Seq(1, 0)),
+      ("array(0d)", s"array(array($nan), array($nan), array(5d))", "3, 'l2'", Seq(2, 0, 1)),
+      ("array(1d, 0d)", s"array(array(1d, 0d), array(1d, $nan), array($nan, 0d))", "3, 'cosine'", Seq(1, 2, 0)),
+      ("array(1d, 0d)", "array(array(2d, 0d), array(1d, 0d), array(0d, 1d))", "2, 'cosine'", Seq(0, 1)),
+      (s"array($nan, 0d)", "array(array(2d, 0d), array(1d, 0d))", "1, 'cosine'", Seq(0)),
+      ("array(0d, 0d)", "array(array(1d, 0d), array(0d, 1d))", "1, 'cosine'", Seq(0)),
+      ("array(0d)", "array(array(1d))", "0", Seq()),
+      ("array(0d)", "array(array(1d))", "-2", Seq()),
+      ("array(0d)", "array(array(1d))", "CAST(NULL AS INT)", null))
+    table.foreach { case (v, cs, rest, want) =>
+      val sql = s"SELECT ivf_probe($v, $cs, $rest)"
       val got = spark.sql(sql).collect()(0)
       if (want == null) assert(got.isNullAt(0), sql)
       else assert(got.getSeq[Int](0) == want, sql)
@@ -249,6 +248,4 @@ class NearestCentroidSpec extends AnyFunSuite {
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("ivf_probe: metric must be 'l2' or 'cosine'")), err.toString)
   }
-
-  private val CAST_NULL = Int.MinValue
 }
