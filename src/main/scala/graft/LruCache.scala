@@ -7,61 +7,84 @@ import java.util.concurrent.atomic.LongAdder
   * ([[graft.plans.SkewSampler]]), of built fixture relations
   * ([[SparkEntry]]), of executor-side R-trees over broadcast build sides
   * ([[graft.plans.BroadcastIndex]]) and of local copies of remote files and
-  * zip entries ([[graft.io.GeoFiles]]). `bound` caps the entry count or,
-  * with `bytes`, the summed bytes of the entries; the least recently used
-  * entries leave first, but never the newest one. `onEvict` runs on every
-  * entry that leaves the map, whether pushed out by the bound, dropped by
-  * [[removeIf]] or computed by a caller that lost a race. */
+  * zip entries ([[graft.io.GeoFiles]]). `bound` caps the summed `weigh` of
+  * the entries, by default their count; the least recently used entries
+  * leave first, but never the newest one nor one that is pinned
+  * ([[acquire]]). `onEvict` runs on every entry that leaves the map, whether
+  * pushed out by the bound, dropped by [[removeIf]] or computed by a caller
+  * that lost a race. */
 final class LruCache[K, V <: AnyRef](name: String, bound: Long, onEvict: V => Unit = (_: V) => (),
-    bytes: Option[V => Long] = None) {
+    weigh: V => Long = LruCache.one) {
   private val hits = new LongAdder
   private val misses = new LongAdder
-  private val weigh = bytes.getOrElse((_: V) => 1L)
-  private var weight = 0L // guarded by map, as is max
+  /** a value, its weight taken once when it was stored, and its pins */
+  private final class Slot(val v: V, val w: Long) { var pins = 0 }
+  private var weight = 0L // guarded by map, as are max and every slot's pins
   private var max = bound
-  // each value with its weight, taken once when it was stored
-  private val map = new java.util.LinkedHashMap[K, (V, Long)](16, 0.75f, true)
+  private val map = new java.util.LinkedHashMap[K, Slot](16, 0.75f, true)
   LruCache.register(name, () =>
     Seq("hits" -> hits.sum, "misses" -> misses.sum) ++
-      bytes.map(_ => "bytes" -> map.synchronized(weight)))
+      (if (weigh eq LruCache.one) Nil else Seq("bytes" -> map.synchronized(weight))))
 
   /** The cached value for `k`, or else `compute`'s, which is then cached.
     * `compute` runs outside the lock, so a slow one (a Spark job) does not
     * block other callers; when two misses race, the first result stored is
     * kept and returned to both. A `compute` that throws caches nothing. */
-  def getOrElseUpdate(k: K)(compute: => V): V = {
-    val hit = map.synchronized(map.get(k))
-    if (hit != null) { hits.increment(); hit._1 }
+  def getOrElseUpdate(k: K)(compute: => V): V = lookup(k, pin = false)(compute)
+
+  /** As [[getOrElseUpdate]], and pins the entry: no bound evicts it until
+    * [[release]] has been called once for each `acquire`. */
+  def acquire(k: K)(compute: => V): V = lookup(k, pin = true)(compute)
+
+  /** Drops one pin that [[acquire]] took on `k`. */
+  def release(k: K): Unit = {
+    val evicted = map.synchronized {
+      val s = map.get(k)
+      if (s != null) s.pins -= 1
+      trim()
+    }
+    evicted.foreach(onEvict)
+  }
+
+  private def lookup(k: K, pin: Boolean)(compute: => V): V = {
+    val hit = map.synchronized {
+      val s = map.get(k)
+      if (s != null && pin) s.pins += 1
+      s
+    }
+    if (hit != null) { hits.increment(); hit.v }
     else {
       misses.increment()
       val v = compute
       val w = weigh(v)
       val evicted = List.newBuilder[V]
       val kept = map.synchronized {
-        val raced = map.get(k)
-        if (raced != null) { evicted += v; raced._1 }
+        var s = map.get(k)
+        if (s != null) evicted += v
         else {
-          map.put(k, (v, w))
+          s = new Slot(v, w)
+          map.put(k, s)
           weight += w
           evicted ++= trim()
-          v
         }
+        if (pin) s.pins += 1
+        s.v
       }
       evicted.result().foreach(onEvict)
       kept
     }
   }
 
-  /** Removes the eldest entries while the bound is passed, keeping the
-    * newest; the caller holds the lock and evicts what comes back. */
+  /** Removes the eldest unpinned entries while the bound is passed, keeping
+    * the newest; the caller holds the lock and evicts what comes back. */
   private def trim(): Seq[V] = {
     val out = Seq.newBuilder[V]
     val it = map.values.iterator
-    while (weight > max && map.size > 1) {
-      val (e, ew) = it.next()
-      it.remove()
-      weight -= ew
-      out += e
+    var older = map.size - 1
+    while (weight > max && older > 0) {
+      val s = it.next()
+      older -= 1
+      if (s.pins == 0) { it.remove(); weight -= s.w; out += s.v }
     }
     out.result()
   }
@@ -78,14 +101,15 @@ final class LruCache[K, V <: AnyRef](name: String, bound: Long, onEvict: V => Un
     old
   }
 
-  /** Drops (and evicts) every entry whose key satisfies `p`. */
+  /** Drops (and evicts) every unpinned entry whose key satisfies `p`. */
   def removeIf(p: K => Boolean): Unit = {
     val evicted = List.newBuilder[V]
     map.synchronized {
       val it = map.entrySet.iterator
       while (it.hasNext) {
         val e = it.next()
-        if (p(e.getKey)) { weight -= e.getValue._2; evicted += e.getValue._1; it.remove() }
+        val s = e.getValue
+        if (s.pins == 0 && p(e.getKey)) { weight -= s.w; evicted += s.v; it.remove() }
       }
     }
     evicted.result().foreach(onEvict)
@@ -94,6 +118,9 @@ final class LruCache[K, V <: AnyRef](name: String, bound: Long, onEvict: V => Un
 
 object LruCache {
   private val all = new java.util.concurrent.ConcurrentHashMap[String, () => Seq[(String, Long)]]()
+
+  /** the default weight: a cache bound by its entry count */
+  private val one: Any => Long = _ => 1L
 
   private def register(name: String, counters: () => Seq[(String, Long)]): Unit =
     all.put(name, counters)

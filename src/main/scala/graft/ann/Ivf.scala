@@ -1,6 +1,7 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.VecFns
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,14 +39,10 @@ object Ivf {
     graft.operators.KMeans.refine(df, col(vecCol).cast("array<double>"),
       centroids(df, idCol, vecCol, k, seed), iters)
 
-  /** The indices of the `nprobe` centroids nearest to `v` by L2. */
-  private[ann] def probe(v: Column, cs: Array[Array[Double]], nprobe: Int): Column =
-    call_function("ivf_probe", v, typedLit(cs.map(_.toSeq).toSeq), lit(nprobe))
-
   /** Corpus → (id, cluster) assignment via the ivf_probe expression. */
   def assign(df: DataFrame, idCol: String, vecCol: String, cs: Array[Array[Double]]): DataFrame = {
     graft.Graft.register(df.sparkSession)
-    df.withColumn("cluster", probe(col(vecCol).cast("array<double>"), cs, 1)(0))
+    df.withColumn("cluster", VecFns.probe(col(vecCol).cast("array<double>"), VecFns.centroidsLit(cs), 1)(0))
   }
 
   /** Top-k neighbours for each query row, probing `nprobe` clusters. */
@@ -57,7 +54,7 @@ object Ivf {
       .select(col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"), col("cluster"))
     val probed = queries
       .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("cluster", explode(probe(col("qvec"), cs, nprobe)))
+      .withColumn("cluster", explode(VecFns.probe(col("qvec"), VecFns.centroidsLit(cs), nprobe)))
     probed.join(assigned, "cluster")
       .where(col("qid") =!= col("nid"))
       .withColumn("sim", expr("vec_cosine(qvec, nvec)"))

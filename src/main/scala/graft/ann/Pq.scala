@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.VecFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -88,7 +89,7 @@ object Pq {
     val probed = queries
       .select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("lut", expr(s"pq_lut(qvec, $cbSql)"))
-      .withColumn("cluster", explode(Ivf.probe(col("qvec"), ivfCs, nprobe)))
+      .withColumn("cluster", explode(VecFns.probe(col("qvec"), VecFns.centroidsLit(ivfCs), nprobe)))
     val adcRanked = probed.join(assigned, "cluster")
       .where(col("qid") =!= col("nid"))
       .withColumn("adc", expr("pq_adc(codes, lut)"))

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.{Column, functions => F}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,9 +58,12 @@ object VecFns {
    *  compared as Spark orders doubles (NaN above every number, -0.0 equal to
    *  0.0). Ties go to the smaller index; a null centroid never ranks. */
   final class Centroids(cs: Array[Array[Double]]) extends Serializable {
-    private val vals = cs.filter(_ != null).flatten
-    private val len = cs.map(c => if (c == null) -1 else c.length)
-    private val norms = cs.map(c => if (c == null) 0.0 else norm(c))
+    private val ids = cs.indices.filter(cs(_) != null).toArray // the centroids that rank
+    private val vals = ids.flatMap(cs(_))
+    private val offs = ids.scanLeft(0)(_ + cs(_).length) // centroid i is vals(offs(i) until offs(i + 1))
+    private val norms = ids.map(i => norm(cs(i)))
+    // KMeans, IVF and SemDeDup give every centroid one length: read at that stride
+    private val dim = if (ids.nonEmpty && ids.forall(cs(_).length == offs(1))) offs(1) else -1
 
     /** `vec_norm`'s value (a square added to 0.0 is itself) */
     private def norm(v: Array[Double]): Double = math.sqrt(v.map(x => x * x).sum)
@@ -68,43 +72,49 @@ object VecFns {
      *  the n best so far in a sorted buffer, and a later centroid gets ahead
      *  only by a strictly better score, so ties go to the smaller index. */
     def top(q: Array[Double], n: Int, cosine: Boolean): Array[Int] = {
-      val sign = if (cosine) -1 else 1
-      def ahead(a: Double, b: Double) = sign * SQLOrderingUtil.compareDoubles(a, b) < 0
-      val cap = math.max(0, math.min(n, len.length))
+      // Spark's double order without its call: a NaN ties a NaN and beats every number
+      def ahead(a: Double, b: Double) =
+        if (cosine) a > b || (a != a && b == b) else a < b || (b != b && a == a)
+      val cap = math.max(0, math.min(n, ids.length))
       val bs = new Array[Double](cap)
       val bi = new Array[Int](cap)
       val qNorm = if (cosine) norm(q) else 0.0
+      val q0 = if (q.length > 1) q(0) else 0.0 // read in the 2-D case only
+      val q1 = if (q.length > 1) q(1) else 0.0
       var size = 0
       var c = 0
-      var o = 0 // where centroid c starts in vals
-      while (cap > 0 && c < len.length) {
-        val l = len(c)
-        if (l >= 0) {
-          val m = if (l < q.length) l else q.length
-          var s = 0.0
-          var j = 0
-          if (cosine) {
-            while (j < m) { s += q(j) * vals(o + j); j += 1 }
-            s = if (qNorm == 0.0 || norms(c) == 0.0) 0.0 else s / (qNorm * norms(c))
-          } else if (m == 2) {
-            // KMeans' 2-D case: the JIT leaves a loop this short slow
-            val d0 = q(0) - vals(o); val d1 = q(1) - vals(o + 1)
-            s = d0 * d0 + d1 * d1
-          } else
-            while (j < m) { val d = q(j) - vals(o + j); s += d * d; j += 1 }
-          if (size < cap || ahead(s, bs(size - 1))) {
-            if (size < cap) size += 1
-            var i = size - 1
-            while (i > 0 && ahead(s, bs(i - 1))) { bs(i) = bs(i - 1); bi(i) = bi(i - 1); i -= 1 }
-            bs(i) = s; bi(i) = c
-          }
-          o += l
+      while (c < ids.length && cap > 0) {
+        val o = if (dim >= 0) c * dim else offs(c)
+        val m = math.min(if (dim >= 0) dim else offs(c + 1) - o, q.length)
+        var s = 0.0
+        var j = 0
+        if (cosine) {
+          while (j < m) { s += q(j) * vals(o + j); j += 1 }
+          s = if (qNorm == 0.0 || norms(c) == 0.0) 0.0 else s / (qNorm * norms(c))
+        } else if (m == 2) {
+          // KMeans' 2-D case: the JIT leaves a loop this short slow
+          val d0 = q0 - vals(o); val d1 = q1 - vals(o + 1)
+          s = d0 * d0 + d1 * d1
+        } else
+          while (j < m) { val d = q(j) - vals(o + j); s += d * d; j += 1 }
+        if (size < cap || ahead(s, bs(cap - 1))) {
+          if (size < cap) size += 1
+          var i = size - 1
+          while (i > 0 && ahead(s, bs(i - 1))) { bs(i) = bs(i - 1); bi(i) = bi(i - 1); i -= 1 }
+          bs(i) = s; bi(i) = ids(c)
         }
         c += 1
       }
       java.util.Arrays.copyOf(bi, size)
     }
   }
+
+  /** `cs` as one plan literal, which every task binary carries (about 15 bytes per value) */
+  def centroidsLit(cs: Seq[Array[Double]]): Column = F.typedLit(cs.map(_.toSeq))
+
+  /** `ivf_probe`: the indices of `v`'s best `n` centroids in `cs` by `metric`, best first */
+  def probe(v: Column, cs: Column, n: Int, metric: String = "l2"): Column =
+    F.call_function("ivf_probe", v, cs, F.lit(n), F.lit(metric))
 
   private def zipWith(a: ArrayData, b: ArrayData, f: (Double, Double) => Double): ArrayData = {
     val n = math.min(a.numElements(), b.numElements())
@@ -194,15 +204,13 @@ object VecFns {
       Map(3 -> Seq(AD, ArrayType(AD), I), 4 -> Seq(AD, ArrayType(AD), I, StringType)),
       ArrayType(I), { children =>
         val fixed = children(1).foldable
+        val metrics = Map("l2" -> false, "cosine" -> true)
         var cs: Centroids = null
         a => {
           if (cs == null || !fixed) cs = new Centroids(arr(a(1)).toArray[ArrayData](AD)
             .map(c => if (c == null) null else c.toDoubleArray()))
-          val cosine = a.length == 4 && (a(3).toString match {
-            case "l2" => false
-            case "cosine" => true
-            case m => throw new IllegalArgumentException(s"ivf_probe: metric must be 'l2' or 'cosine', got '$m'")
-          })
+          val cosine = a.length == 4 && metrics.getOrElse(a(3).toString,
+            throw new IllegalArgumentException(s"ivf_probe: metric must be 'l2' or 'cosine', got '${a(3)}'"))
           new GenericArrayData(cs.top(arr(a(0)).toDoubleArray(), int(a(2)), cosine).map(i => i: Any))
         }
       }))

@@ -174,7 +174,7 @@ object GeoFiles {
       requireExternalAccess(vsz)
       if (isZipVirtual(vsz)) return Seq(vsz)
       if (stripQuery(vsz).toLowerCase.endsWith(".zip"))
-        return expand(local(vsz)).map(l => vsz + "!" + l.substring(l.indexOf('!') + 1))
+        return withLocal(vsz)(expand(_)).map(l => vsz + "!" + l.substring(l.indexOf('!') + 1))
       return Seq(vsz)
     }
     if (isZipVirtual(vsz)) { requireExternalAccess(vsz); return Seq(vsz) }
@@ -255,9 +255,6 @@ object GeoFiles {
     l.startsWith("http://") || l.startsWith("https://")
   }
 
-  /** a path that must resolve through [[local]] before it can be opened */
-  def needsLocal(p: String): Boolean = isZipVirtual(p) || isRemote(p)
-
   /** reference st_read `allowed_drivers`: the resolved format must be in
     * the caller's allowlist (GDAL semantics: restrict which driver may
     * open the path) */
@@ -275,12 +272,13 @@ object GeoFiles {
     * entry under a per-JVM root, which a shutdown hook deletes. Bounded by
     * the bytes the entries hold (plus 4 KiB each) against a constant 1 GiB:
     * the least recently used whole entries are evicted and their
-    * directories deleted, though never the newest. A key is
-    * (source, length:mtime), so a changed object or archive is fetched
-    * again, never served stale, and its older copies are dropped. */
+    * directories deleted, though never one an open [[LocalFile]] holds, nor
+    * the newest. A key is (source, length:mtime), so a changed object or
+    * archive is fetched again, never served stale, and its older copies are
+    * dropped once no reader holds them. */
   private[graft] val downloads = new LruCache[(String, String), java.nio.file.Path](
     "downloadCache", 1L << 30, p => deleteTree(p.getParent),
-    Some(p => 4096L + treeFiles(p.getParent).map(Files.size).sum))
+    p => 4096L + treeFiles(p.getParent).map(Files.size).sum)
 
   private lazy val downloadRoot = {
     val root = Files.createTempDirectory("graft_dl_")
@@ -301,34 +299,73 @@ object GeoFiles {
       finally st.close()
     }
 
-  /** The cached local copy of `source` at `version`, or else the path that
-    * `fill` returns in a fresh entry directory it populates. */
+  /** A readable local path for a path that may be remote or zip-virtual:
+    * a cached copy stays on disk until `close`, whatever the cache bound. */
+  final class LocalFile private[GeoFiles] (val path: String, release: () => Unit)
+      extends AutoCloseable {
+    private val open = new java.util.concurrent.atomic.AtomicBoolean(true)
+    override def close(): Unit = if (open.getAndSet(false)) release()
+  }
+
+  /** Runs `f` on the local copies of `paths`, held until `f` returns. */
+  def withLocal[T](paths: Seq[String])(f: Seq[String] => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[LocalFile]
+    try { paths.foreach(held += open(_)); f(held.map(_.path).toSeq) }
+    finally held.foreach(_.close())
+  }
+  def withLocal[T](path: String)(f: String => T): T = withLocal(Seq(path))(ps => f(ps.head))
+
+  /** The cached local copy of `source` at `version`, held for the caller,
+    * or else the path that `fill` returns in a fresh entry directory. */
   private def cached(source: String, version: String)(
-      fill: java.nio.file.Path => java.nio.file.Path): String = {
+      fill: java.nio.file.Path => java.nio.file.Path): LocalFile = {
     val key = (source, version)
-    downloads.getOrElseUpdate(key) {
+    val path = downloads.acquire(key) {
       downloads.removeIf(k => k._1 == source && k != key)
       val dir = downloadRoot.resolve(downloadSeq.incrementAndGet().toString)
       Files.createDirectories(dir)
       try fill(dir)
       catch { case e: Throwable => deleteTree(dir); throw e }
-    }.toString
+    }
+    new LocalFile(path.toString, () => downloads.release(key))
   }
 
-  private def download(url: String): String = {
+  // a remote path planned on the driver carries the version it was planned
+  // on, so its tasks read that version and send no probe of their own
+  private val VersionMark = "#graft-version="
+
+  /** `p` with the version of the remote object it names fixed; a local `p`
+    * is returned as it is. */
+  def pinVersion(p: String): String =
+    if (!isRemote(p) || p.contains(VersionMark)) p
+    else {
+      val bang = p.indexOf('!')
+      val url = if (bang > 0) p.substring(0, bang) else p
+      p + VersionMark + versionOf(url)
+    }
+
+  /** `p` without the version [[pinVersion]] gave it */
+  def unpinned(p: String): String = {
+    val i = p.lastIndexOf(VersionMark)
+    if (i < 0) p else p.substring(0, i)
+  }
+
+  /** length:last-modified of a remote object, from a HEAD probe; servers
+    * that reject HEAD give "-1:0", a URL-only version */
+  private def versionOf(url: String): String = {
+    requireExternalAccess(url)
+    try {
+      val h = java.net.URI.create(url).toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      h.setRequestMethod("HEAD"); h.setConnectTimeout(15000); h.setReadTimeout(15000)
+      val r = s"${h.getContentLengthLong}:${h.getLastModified}"
+      h.disconnect(); r
+    } catch { case scala.util.control.NonFatal(_) => "-1:0" }
+  }
+
+  private def download(url: String, version: String): LocalFile = {
     requireExternalAccess(url)
     val u = java.net.URI.create(url).toURL
-    // identity probe on every lookup: object length + last-modified version
-    // the cache key, so a republished object re-downloads; servers that
-    // reject HEAD degrade to a URL-only key (first fetch wins for the JVM)
-    val (len, lm) =
-      try {
-        val h = u.openConnection().asInstanceOf[java.net.HttpURLConnection]
-        h.setRequestMethod("HEAD"); h.setConnectTimeout(15000); h.setReadTimeout(15000)
-        val r = (h.getContentLengthLong, h.getLastModified)
-        h.disconnect(); r
-      } catch { case scala.util.control.NonFatal(_) => (-1L, 0L) }
-    cached(url, s"$len:$lm") { root =>
+    cached(url, version) { root =>
       val urlPath = u.getPath
       val name0 = urlPath.substring(urlPath.lastIndexOf('/') + 1)
       val name = if (name0.isEmpty) "download" else name0
@@ -369,16 +406,26 @@ object GeoFiles {
           s"reading $what: External access is disabled by configuration")
     }
 
-  /** Resolve a (possibly zip-virtual) path to a readable local file. An
-    * extracted entry is versioned by the archive's length+mtime, so a
-    * rewritten archive at the same path is re-extracted, never served stale. */
-  def local(p: String): String =
+  /** A local copy of a (possibly remote or zip-virtual) path, held until
+    * closed. An extracted entry is versioned by its archive's length+mtime,
+    * so a rewritten archive at the same path is re-extracted, never served
+    * stale. A remote path is versioned by a HEAD probe unless
+    * [[pinVersion]] fixed its version. */
+  def open(p0: String): LocalFile = {
+    val p = unpinned(p0)
     if (isRemote(p)) {
       val bang = p.indexOf('!')
-      if (bang > 0 && stripQuery(p.substring(0, bang)).toLowerCase.endsWith(".zip"))
-        local(download(p.substring(0, bang)) + p.substring(bang)) // remote archive → local zip-virtual
-      else download(p)
-    } else if (!isZipVirtual(p)) p
+      val url = if (bang > 0) p.substring(0, bang) else p
+      val version = if (p == p0) versionOf(url) else p0.substring(p.length + VersionMark.length)
+      if (bang > 0 && stripQuery(url).toLowerCase.endsWith(".zip"))
+        // keyed by URL, so a cached entry is served without its archive
+        cached(p, version) { root =>
+          val archive = download(url, version)
+          try extractEntry(new java.io.File(archive.path), p.substring(bang + 1), root)
+          finally archive.close()
+        }
+      else download(p, version)
+    } else if (!isZipVirtual(p)) new LocalFile(p, () => ())
     else {
       val bang = p.indexOf('!')
       val archive = new java.io.File(p.substring(0, bang).stripPrefix("file:"))
@@ -389,6 +436,7 @@ object GeoFiles {
       cached(archive.getAbsolutePath + "!" + entry, s"${archive.length()}:${archive.lastModified()}")(
         extractEntry(archive, entry, _))
     }
+  }
 
   /** Extracts `entry` of `archive` into `root` and returns its path there. */
   private def extractEntry(archive: java.io.File, entry: String,
@@ -778,19 +826,20 @@ object GeoFiles {
   def schemaFor(format: String, paths0: Seq[String], layer: Option[String] = None,
                 opts: GeoReadOptions = GeoReadOptions.default): StructType = {
     requireLayerSupported(format, layer)
-    val paths = paths0.map(local)
-    format match {
-      case "shapefile" => shapefileSchema(paths.head)
-      case "geojson" | "geojsonl" => geojsonSchemaFor(format, paths)
-      case "kml" | "gpx" | "gml" | "kmz" | "georss" | "dxf" | "topojson" | "esrijson" | "mvt" | "gmt" => geojsonSchema
-      case "mapinfo" => mifSchema(paths.head)
-      case "osmpbf" => osmSchema
-      case "flatgeobuf" => flatgeobufSchema(paths.head)
-      case "geopackage" => geopackageSchema(paths.head, layer)
-      case "csvwkt" => csvSchema(paths.head, opts)
-      case "xlsx" => xlsxSchema(paths.head)
-      case "ods" => odsSchema(paths.head)
-      case other => throw new IllegalArgumentException(s"unknown geo format $other")
+    withLocal(paths0) { paths =>
+      format match {
+        case "shapefile" => shapefileSchema(paths.head)
+        case "geojson" | "geojsonl" => geojsonSchemaFor(format, paths)
+        case "kml" | "gpx" | "gml" | "kmz" | "georss" | "dxf" | "topojson" | "esrijson" | "mvt" | "gmt" => geojsonSchema
+        case "mapinfo" => mifSchema(paths.head)
+        case "osmpbf" => osmSchema
+        case "flatgeobuf" => flatgeobufSchema(paths.head)
+        case "geopackage" => geopackageSchema(paths.head, layer)
+        case "csvwkt" => csvSchema(paths.head, opts)
+        case "xlsx" => xlsxSchema(paths.head)
+        case "ods" => odsSchema(paths.head)
+        case other => throw new IllegalArgumentException(s"unknown geo format $other")
+      }
     }
   }
 }
@@ -941,9 +990,8 @@ class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], 
     * Catalyst can pick broadcast joins over geo scans — without this every
     * DSv2 relation defaults to "unknown/huge" and a small .shp lookup table
     * shuffles instead of broadcasting. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val localPaths = paths.map(GeoFiles.local)
-    private val bytes: Long = localPaths.map { p =>
+  override def estimateStatistics(): Statistics = GeoFiles.withLocal(paths) { localPaths =>
+    val bytes: Long = localPaths.map { p =>
       val f = new java.io.File(p.stripPrefix("file:"))
       // shapefile payloads live beside the .shp in .dbf; count the family
       if (format == "shapefile") {
@@ -951,7 +999,7 @@ class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], 
         Seq(".shp", ".dbf", ".shx").map(e => new java.io.File(base + e).length()).sum
       } else f.length()
     }.sum
-    private val rows: java.util.OptionalLong = format match {
+    val rows: java.util.OptionalLong = format match {
       case "shapefile" =>
         try java.util.OptionalLong.of(localPaths.map(p => Shapefile.readMeta(p).recordCount.toLong).sum)
         catch { case scala.util.control.NonFatal(_) => java.util.OptionalLong.empty() }
@@ -963,8 +1011,10 @@ class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], 
         } catch { case scala.util.control.NonFatal(_) => java.util.OptionalLong.empty() }
       case _ => java.util.OptionalLong.empty()
     }
-    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(math.max(bytes, 1L))
-    override def numRows(): java.util.OptionalLong = rows
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(math.max(bytes, 1L))
+      override def numRows(): java.util.OptionalLong = rows
+    }
   }
 
   override def toMicroBatchStream(checkpointLocation: String):
@@ -984,11 +1034,16 @@ object GeoScan {
   /** Partition planning shared by the batch Scan and the micro-batch stream:
     * every format splits intra-file where its container allows it. */
   def partitionsFor(format: String, paths: Seq[String],
-                    layer: Option[String] = None): Array[InputPartition] = format match {
+                    layer: Option[String] = None): Array[InputPartition] =
+    // the remote versions planned here are the ones the tasks read
+    plan(format, paths.map(GeoFiles.pinVersion), layer)
+
+  private def plan(format: String, paths: Seq[String],
+                   layer: Option[String]): Array[InputPartition] = format match {
     case "osmpbf" =>
       // blob-parallel: runs of 16 blobs per partition (st_read_osm.cpp parallel model)
       paths.flatMap { p =>
-        OsmPbf.indexBlobs(GeoFiles.local(p)).grouped(16)
+        GeoFiles.withLocal(p)(OsmPbf.indexBlobs).grouped(16)
           .map(g => OsmPartition(p, g.toArray): InputPartition)
       }.toArray
     case "shapefile" =>
@@ -997,8 +1052,7 @@ object GeoScan {
       // VIRTUAL path (zip entries localize executor-side); split planning
       // reads the localized copy.
       val targetBytes = 64L << 20
-      paths.flatMap { p =>
-        val lp = GeoFiles.local(p)
+      paths.flatMap { p => GeoFiles.withLocal(p) { lp =>
         val meta = Shapefile.readMeta(lp)
         val n = meta.recordCount
         if (n == 0) Seq(ShpRangePartition(p, 0, 0): InputPartition)
@@ -1008,7 +1062,7 @@ object GeoScan {
           val per = (n + chunks - 1) / chunks
           (0 until n by per).map(s => ShpRangePartition(p, s, math.min(n, s + per)): InputPartition)
         }
-      }.toArray
+      }}.toArray
     case "flatgeobuf" =>
       // intra-file splits via the packed index's leaf offsets: a 10 GB .fgb
       // becomes ~160 range partitions instead of one task (unindexed files
@@ -1018,7 +1072,7 @@ object GeoScan {
           .getConfString("spark.graft.fgb.splitBytes", (64L << 20).toString).toLong
         catch { case _: Exception => 64L << 20 }
       paths.flatMap { p =>
-        FlatGeobuf.splitOffsets(GeoFiles.local(p), target).map { case (from, to) =>
+        GeoFiles.withLocal(p)(FlatGeobuf.splitOffsets(_, target)).map { case (from, to) =>
           FgbRangePartition(p, from, to): InputPartition
         }
       }.toArray
@@ -1027,15 +1081,14 @@ object GeoScan {
       // subtrees: a multi-GB .gpkg scans as ~64 MB page-group tasks (the
       // balanced tree makes equal child counts ≈ equal bytes)
       val target = 64L << 20
-      paths.flatMap { p =>
-        val lp = GeoFiles.local(p)
+      paths.flatMap { p => GeoFiles.withLocal(p) { lp =>
         val table = GeoFiles.geopackageTable(lp, layer)
         val roots = GeoPackage.subtreeRoots(lp, table)
         val bytes = new java.io.File(lp.stripPrefix("file:")).length()
         val chunks = math.max(1, math.min(roots.size.toLong, bytes / target + 1)).toInt
         val per = (roots.size + chunks - 1) / chunks
         roots.grouped(per).map(g => GpkgPartition(p, g.toArray): InputPartition)
-      }.toArray
+      }}.toArray
     case "geojsonl" =>
       // newline-aligned byte-range splits: a 10 GB .geojsonl becomes ~160
       // tasks. Gzipped files aren't seekable — they stay one task each.
@@ -1044,9 +1097,9 @@ object GeoScan {
           .getConfString("spark.graft.jsonl.splitBytes", (64L << 20).toString).toLong
         catch { case _: Exception => 64L << 20 }
       paths.flatMap { p =>
-        if (p.toLowerCase.endsWith(".gz")) Seq(FilePartition(p): InputPartition)
+        if (GeoFiles.unpinned(p).toLowerCase.endsWith(".gz")) Seq(FilePartition(p): InputPartition)
         else {
-          val len = new java.io.File(GeoFiles.local(p)).length()
+          val len = GeoFiles.withLocal(p)(new java.io.File(_).length())
           if (len == 0) Seq(JsonlRangePartition(p, 0L, 0L): InputPartition)
           else (0L until len by target).map(s =>
             JsonlRangePartition(p, s, math.min(len, s + target)): InputPartition)
@@ -1070,19 +1123,27 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: S
                        opts: GeoReadOptions = GeoReadOptions.default)
     extends PartitionReaderFactory {
   override def createReader(partition0: InputPartition): PartitionReader[InternalRow] = {
-    // zip-virtual paths localize HERE — on the executor that owns the
-    // partition — so archive entries are extracted where they are read
+    // zip-virtual and remote paths localize HERE — on the executor that owns
+    // the partition — and the copy stays on disk until the reader closes
+    val held = GeoFiles.open(partition0.asInstanceOf[Product].productElement(0).toString)
+    val rows = try read(partition0, held.path) catch { case e: Throwable => held.close(); throw e }
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
+      override def get(): InternalRow = current
+      override def close(): Unit = held.close()
+    }
+  }
+
+  /** The rows of `partition0`, whose file is at `local`. */
+  private def read(partition0: InputPartition, local: String): Iterator[InternalRow] = {
     val partition = partition0 match {
-      case FilePartition(p) if GeoFiles.needsLocal(p) => FilePartition(GeoFiles.local(p))
-      case JsonlRangePartition(p, a, b) if GeoFiles.needsLocal(p) =>
-        JsonlRangePartition(GeoFiles.local(p), a, b)
-      case GpkgPartition(p, r) if GeoFiles.needsLocal(p) => GpkgPartition(GeoFiles.local(p), r)
-      case FgbRangePartition(p, a, b) if GeoFiles.needsLocal(p) =>
-        FgbRangePartition(GeoFiles.local(p), a, b)
-      case ShpRangePartition(p, a, b) if GeoFiles.needsLocal(p) =>
-        ShpRangePartition(GeoFiles.local(p), a, b)
-      case OsmPartition(p, blobs) if GeoFiles.needsLocal(p) => OsmPartition(GeoFiles.local(p), blobs)
-      case other => other
+      case FilePartition(_) => FilePartition(local)
+      case JsonlRangePartition(_, a, b) => JsonlRangePartition(local, a, b)
+      case GpkgPartition(_, r) => GpkgPartition(local, r)
+      case FgbRangePartition(_, a, b) => FgbRangePartition(local, a, b)
+      case ShpRangePartition(_, a, b) => ShpRangePartition(local, a, b)
+      case OsmPartition(_, blobs) => OsmPartition(local, blobs)
     }
     // format readers see DATA columns only; Hive-style partition columns are
     // appended afterwards as per-file constants parsed from the path
@@ -1201,42 +1262,35 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: S
           case None => envFiltered
         }
       }
-    val rows: Iterator[InternalRow] =
-      if (partNames.isEmpty && !dropBboxGeom) rows0b
-      else {
-        // every InputPartition's first element is its file path; use the
-        // ORIGINAL (possibly zip-virtual) path — extracted copies flatten
-        // the k=v directory segments away
-        val path = partition0.asInstanceOf[Product].productElement(0).toString
-        val kv = GeoFiles.partitionValuesOf(path).toMap
-        val dataIdx = required.fieldNames.zipWithIndex.toMap
-        val cells: Array[Either[Int, Any]] = required0.fields.map { f =>
-          dataIdx.get(f.name) match {
-            case Some(i) => Left(i)
-            case None =>
-              val t = partCols.collectFirst { case (n, tp) if n == f.name => tp }.get
-              Right(GeoFiles.partitionValue(kv.getOrElse(f.name, null), t))
-          }
-        }
-        val dataTypes = required.fields.map(_.dataType)
-        rows0b.map { r =>
-          val out = new Array[Any](cells.length)
-          var i = 0
-          while (i < cells.length) {
-            out(i) = cells(i) match {
-              case Left(j) => if (r.isNullAt(j)) null else r.get(j, dataTypes(j))
-              case Right(c) => c
-            }
-            i += 1
-          }
-          new GenericInternalRow(out)
+    if (partNames.isEmpty && !dropBboxGeom) rows0b
+    else {
+      // every InputPartition's first element is its file path; use the
+      // ORIGINAL (possibly zip-virtual) path — extracted copies flatten
+      // the k=v directory segments away
+      val path = partition0.asInstanceOf[Product].productElement(0).toString
+      val kv = GeoFiles.partitionValuesOf(path).toMap
+      val dataIdx = required.fieldNames.zipWithIndex.toMap
+      val cells: Array[Either[Int, Any]] = required0.fields.map { f =>
+        dataIdx.get(f.name) match {
+          case Some(i) => Left(i)
+          case None =>
+            val t = partCols.collectFirst { case (n, tp) if n == f.name => tp }.get
+            Right(GeoFiles.partitionValue(kv.getOrElse(f.name, null), t))
         }
       }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
+      val dataTypes = required.fields.map(_.dataType)
+      rows0b.map { r =>
+        val out = new Array[Any](cells.length)
+        var i = 0
+        while (i < cells.length) {
+          out(i) = cells(i) match {
+            case Left(j) => if (r.isNullAt(j)) null else r.get(j, dataTypes(j))
+            case Right(c) => c
+          }
+          i += 1
+        }
+        new GenericInternalRow(out)
+      }
     }
   }
 }

@@ -397,34 +397,35 @@ object GeoMeta {
           projjson.map(fromProjjson).getOrElse(if (g.isDefined) Crs84Detail else CrsDetail()))
       } else {
         // zip-virtual entries localize so header/sidecar probes below work
-        val paths = GeoFiles.expand(path).map(GeoFiles.local)
-        val f = GeoFiles.formatOf(paths, None)
-        val (crs, detail) = f match {
-          case "shapefile" =>
-            val prj = java.nio.file.Paths.get(Shapefile.basePath(paths.head) + ".prj")
-            if (java.nio.file.Files.exists(prj)) {
-              val wkt = new String(java.nio.file.Files.readAllBytes(prj), "UTF-8").trim
-              (wkt, fromWkt1(wkt))
-            } else (null, CrsDetail())
-          case "flatgeobuf" =>
-            val h = FlatGeobuf.readHeader(paths.head)
-            val base = fromWkt1(h.crsWkt)
-            val Array(org, code) = (Option(h.crs).getOrElse(":") + ":").split(":", -1).take(2)
-            (h.crs, base.copy(
-              name = Option(h.crsName).getOrElse(base.name),
-              authName = if (org.nonEmpty) org else base.authName,
-              authCode = if (code.nonEmpty) code else base.authCode))
-          case "geopackage" =>
-            GeoPackage.srsDetail(paths.head) match {
-              case Some((name, org, code, wkt)) =>
-                (s"$org:$code", fromWkt1(wkt).copy(name = name, authName = org, authCode = code))
-              case None => (null, CrsDetail())
-            }
-          case "geojson" | "geojsonl" | "kml" | "gpx" | "kmz" | "georss" =>
-            ("OGC:CRS84", Crs84Detail) // spec-fixed CRSes
-          case _ => (null, CrsDetail())
+        GeoFiles.withLocal(GeoFiles.expand(path)) { paths =>
+          val f = GeoFiles.formatOf(paths, None)
+          val (crs, detail) = f match {
+            case "shapefile" =>
+              val prj = java.nio.file.Paths.get(Shapefile.basePath(paths.head) + ".prj")
+              if (java.nio.file.Files.exists(prj)) {
+                val wkt = new String(java.nio.file.Files.readAllBytes(prj), "UTF-8").trim
+                (wkt, fromWkt1(wkt))
+              } else (null, CrsDetail())
+            case "flatgeobuf" =>
+              val h = FlatGeobuf.readHeader(paths.head)
+              val base = fromWkt1(h.crsWkt)
+              val Array(org, code) = (Option(h.crs).getOrElse(":") + ":").split(":", -1).take(2)
+              (h.crs, base.copy(
+                name = Option(h.crsName).getOrElse(base.name),
+                authName = if (org.nonEmpty) org else base.authName,
+                authCode = if (code.nonEmpty) code else base.authCode))
+            case "geopackage" =>
+              GeoPackage.srsDetail(paths.head) match {
+                case Some((name, org, code, wkt)) =>
+                  (s"$org:$code", fromWkt1(wkt).copy(name = name, authName = org, authCode = code))
+                case None => (null, CrsDetail())
+              }
+            case "geojson" | "geojsonl" | "kml" | "gpx" | "kmz" | "georss" =>
+              ("OGC:CRS84", Crs84Detail) // spec-fixed CRSes
+            case _ => (null, CrsDetail())
+          }
+          (f, GeoFiles.schemaFor(f, paths).fields, paths.length, null, crs, detail)
         }
-        (f, GeoFiles.schemaFor(f, paths).fields, paths.length, null, crs, detail)
       }
     // Registry enrichment (st_read_meta.cpp:26-65 shape): a recognized
     // authority code fills the human name and an equivalent +proj= string —

@@ -263,8 +263,8 @@ object Mvt {
   }
 
   def features(path: String, layerSel: Option[String]): Iterator[GeoJsonFile.Feature] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      GeoFiles.local(path).stripPrefix("file:")))
+    val bytes = GeoFiles.withLocal(path)(p =>
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.stripPrefix("file:"))))
     val addr = tileAddress(path)
     val layers0 = readTile(bytes)
     val layers = layerSel match {
@@ -292,8 +292,8 @@ object Mvt {
   }
 
   def layers(path: String): Seq[String] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      GeoFiles.local(path).stripPrefix("file:")))
+    val bytes = GeoFiles.withLocal(path)(p =>
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.stripPrefix("file:"))))
     readTile(bytes).map(_._1.name)
   }
 

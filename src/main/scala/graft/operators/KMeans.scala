@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VecFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 
 /**
@@ -8,15 +9,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
  * oracle-checkable): initial centroids are the first k points in id order
  * (cluster ids 0..k-1), a fixed number of assign/update rounds, ties broken
  * by cluster id. Points with a null or NaN coordinate have no distance and
- * are dropped.
+ * are dropped (a NaN point would turn its centroid NaN).
  *
  * Scale shape: centroids live on the driver (k rows); each round is ONE
  * map-side-combined groupBy over the points ([[refine]]). Assignment is
- * `ivf_probe(array(x, y), centroids, 1)[0]`, the nearest-centroid kernel
- * ([[graft.functions.VecFns.Centroids]]: `dx*dx + dy*dy`, ties to the
- * smallest cluster id) over the centroids as one plan literal, which `cx`/`cy`
- * read too; it costs every task binary about 15 bytes per value, measured
- * up to k = 10^5 (SCALING.md).
+ * `ivf_probe(array(x, y), centroids, 1)[0]` over one plan literal that
+ * `cx`/`cy` read too ([[graft.functions.VecFns.Centroids]]: `dx*dx + dy*dy`,
+ * ties to the smallest cluster id), about 15 bytes per value in every task
+ * binary; measured up to k = 10^5 (SCALING.md).
  * With integral input coordinates every centroid is an exact integer-sum /
  * count division, so independent engines reproduce the trajectory bit for
  * bit.
@@ -30,8 +30,6 @@ object KMeans {
     require(k > 0 && iters >= 0)
     val p = points.selectExpr("CAST(id AS LONG) AS id", "CAST(x AS DOUBLE) AS x",
       "CAST(y AS DOUBLE) AS y")
-      // null or NaN coordinates have no distance — drop them (a null would
-      // surface as a null groupBy key, a NaN would turn its centroid NaN)
       .where("id IS NOT NULL AND x IS NOT NULL AND y IS NOT NULL AND NOT isnan(x) AND NOT isnan(y)")
       // Eager localCheckpoint, not .cache(): the seed collect and every round
       // read materialized blocks, and with no CacheManager registration no
@@ -40,8 +38,8 @@ object KMeans {
 
     val seeds = p.orderBy("id").limit(k).collect().map(r => Array(r.getDouble(1), r.getDouble(2)))
     val xy = F.array(F.col("x"), F.col("y"))
-    val cs = centroidsLit(refine(p, xy, seeds, iters))
-    p.withColumn("cluster", nearest(xy, cs))
+    val cs = VecFns.centroidsLit(refine(p, xy, seeds, iters))
+    p.withColumn("cluster", VecFns.probe(xy, cs, 1)(0))
       .select(F.col("id"), F.col("cluster"), cs(F.col("cluster"))(0).as("cx"), cs(F.col("cluster"))(1).as("cy"))
   }
 
@@ -53,15 +51,11 @@ object KMeans {
     (0 until iters).foldLeft(cs) { (cs, _) =>
       val next = cs.map(_.clone())
       // c before the explode, so the kernel runs once per row
-      df.select(nearest(v, centroidsLit(cs)).as("c"), v.as("v")).select(F.col("c"), F.posexplode(F.col("v")))
+      df.select(VecFns.probe(v, VecFns.centroidsLit(cs), 1)(0).as("c"), v.as("v"))
+        .select(F.col("c"), F.posexplode(F.col("v")))
         .groupBy("c", "pos").agg(F.avg("col"))
         .collect().foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
       next
     }
   }
-
-  private def centroidsLit(cs: Array[Array[Double]]): Column = F.typedLit(cs.map(_.toSeq).toSeq)
-
-  /** the index of `v`'s nearest centroid in the array literal `cs` by L2 */
-  private def nearest(v: Column, cs: Column): Column = F.call_function("ivf_probe", v, cs, F.lit(1))(0)
 }

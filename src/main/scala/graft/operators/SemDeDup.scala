@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VecFns
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
@@ -54,8 +55,7 @@ object SemDeDup {
     // the index of the nearest centroid by cosine, mapped back to its cid;
     // a null vector has no index and takes the smallest cid
     val sorted = centroids.sortBy(_._1)
-    val best = F.call_function("ivf_probe", F.col("__sem_v"),
-      F.typedLit(sorted.map(_._2.toSeq)), F.lit(1), F.lit("cosine"))(0)
+    val best = VecFns.probe(F.col("__sem_v"), VecFns.centroidsLit(sorted.map(_._2)), 1, "cosine")(0)
     val assigned = src.withColumn("__sem_cid",
       F.coalesce(F.typedLit(sorted.map(_._1)).apply(best), F.lit(sorted.head._1)))
 

@@ -15,12 +15,14 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
   private lazy val fac = graft.geom.Geo.factory
 
   /** one-shot fixture HTTP server rooted at a temp dir */
-  private def withServer(files: Map[String, Array[Byte]])(body: String => Unit): Unit = {
+  private def withServer(files: Map[String, Array[Byte]],
+      seen: String => Unit = _ => ())(body: String => Unit): Unit = {
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     srv.createContext("/", new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
         val p = ex.getRequestURI.getPath.stripPrefix("/")
+        seen(s"${ex.getRequestMethod} $p")
         files.get(p) match {
           case Some(bytes) if ex.getRequestMethod == "HEAD" =>
             ex.getResponseHeaders.add("Last-Modified", "Tue, 01 Jan 2030 00:00:00 GMT")
@@ -136,12 +138,47 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
       val misses = LruCache.counters("downloadCache.misses")
       val dirs = (1 to 5).map { i =>
         assert(spark.read.format("geo").load(s"$base/d$i.geojsonl").count() == 100 + i)
-        java.nio.file.Paths.get(graft.io.GeoFiles.local(s"$base/d$i.geojsonl")).getParent
+        java.nio.file.Paths.get(graft.io.GeoFiles.withLocal(s"$base/d$i.geojsonl")(p => p)).getParent
       }
       assert(LruCache.counters("downloadCache.misses") == misses + 5)
       assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
       assert(dirs.take(2).forall(d => !java.nio.file.Files.exists(d)), dirs.toString)
       assert(dirs.drop(2).forall(d => java.nio.file.Files.exists(d)), dirs.toString)
     } finally cache.rebound(previous)
+  }
+
+  test("a remote archive and its entry over the budget download and extract once") {
+    val cache = graft.io.GeoFiles.downloads
+    val entry = gjl(400)
+    val zip = {
+      val out = new java.io.ByteArrayOutputStream
+      val zo = new java.util.zip.ZipOutputStream(out)
+      zo.putNextEntry(new java.util.zip.ZipEntry("pts.geojsonl"))
+      zo.write(entry)
+      zo.closeEntry(); zo.close()
+      out.toByteArray
+    }
+    // room for the entry, not for the archive beside it
+    val budget = entry.length + 4096L + 100
+    val previous = cache.rebound(budget)
+    val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    spark.conf.set("spark.graft.jsonl.splitBytes", (entry.length / 16).toString)
+    try withServer(Map("a.zip" -> zip), requests.add(_)) { base =>
+      val misses = LruCache.counters("downloadCache.misses")
+      val df = spark.read.format("geo").load(s"$base/a.zip!pts.geojsonl")
+      val parts = df.rdd.getNumPartitions
+      assert(parts >= 16)
+      assert(df.selectExpr("st_x(st_geomfromwkb(geom))").collect().length == 400)
+      val sent = requests.toArray.toSeq
+      // one download and one extraction for the driver and every task
+      assert(LruCache.counters("downloadCache.misses") == misses + 2, sent)
+      assert(sent.count(_ == "GET a.zip") == 1, sent)
+      // the version is probed while planning (a few times), not by each task
+      assert(sent.count(_ == "HEAD a.zip") < parts, sent)
+      assert(LruCache.counters("downloadCache.bytes") <= budget)
+    } finally {
+      cache.rebound(previous)
+      spark.conf.unset("spark.graft.jsonl.splitBytes")
+    }
   }
 }

@@ -112,7 +112,7 @@ class VsiZipSpec extends AnyFunSuite with TempDirs {
       val zips = (1 to 5).map(_ => zipOf("pts.geojsonl" -> payload))
       val dirs = zips.map { z =>
         assert(spark.read.format("geo").load(s"$z!pts.geojsonl").count() == 200)
-        java.nio.file.Paths.get(graft.io.GeoFiles.local(s"$z!pts.geojsonl")).getParent
+        java.nio.file.Paths.get(graft.io.GeoFiles.withLocal(s"$z!pts.geojsonl")(p => p)).getParent
       }
       assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
       // whole entries leave, oldest first, and take their directories along
@@ -122,7 +122,7 @@ class VsiZipSpec extends AnyFunSuite with TempDirs {
       assert(dirs.map(_.getParent).distinct.size == 1, dirs.toString)
       // a hit serves the same copy; an evicted entry re-extracts on demand
       val hits = LruCache.counters("downloadCache.hits")
-      assert(graft.io.GeoFiles.local(s"${zips(4)}!pts.geojsonl").startsWith(dirs(4).toString))
+      assert(graft.io.GeoFiles.withLocal(s"${zips(4)}!pts.geojsonl")(_.startsWith(dirs(4).toString)))
       assert(LruCache.counters("downloadCache.hits") == hits + 1)
       assert(spark.read.format("geo").load(s"${zips(0)}!pts.geojsonl").count() == 200)
       // rewriting an archive changes its version: the new bytes are read and
@@ -135,6 +135,34 @@ class VsiZipSpec extends AnyFunSuite with TempDirs {
       assert(spark.read.format("geo").load(s"$z!pts.geojsonl").count() == 1)
       assert(!java.nio.file.Files.exists(dirs(4)))
       assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
+    } finally cache.rebound(previous)
+  }
+
+  test("an entry held open is never evicted, and leaves once released") {
+    val cache = graft.io.GeoFiles.downloads
+    def bytes = LruCache.counters("downloadCache.bytes")
+    val payload = (1 to 200).map(i =>
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i,$i]},"properties":{}}""")
+      .mkString("\n").getBytes("UTF-8")
+    // room for one entry
+    val budget = payload.length + 4096L + 100
+    val previous = cache.rebound(budget)
+    try {
+      val zips = (1 to 3).map(_ => zipOf("pts.geojsonl" -> payload))
+      val held = graft.io.GeoFiles.open(s"${zips(0)}!pts.geojsonl")
+      val others = zips.drop(1).map { z =>
+        assert(spark.read.format("geo").load(s"$z!pts.geojsonl").count() == 200)
+        java.nio.file.Paths.get(graft.io.GeoFiles.withLocal(s"$z!pts.geojsonl")(p => p))
+      }
+      // the held copy outlives entries that came after it
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(held.path)))
+      assert(!java.nio.file.Files.exists(others(0)) && java.nio.file.Files.exists(others(1)))
+      assert(bytes > budget, "a held entry counts against the budget")
+      held.close()
+      held.close() // a second close releases nothing more
+      assert(bytes <= budget, s"cache holds $bytes bytes over a $budget budget")
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(held.path)) !=
+        java.nio.file.Files.exists(others(1)), "one of the two is evicted")
     } finally cache.rebound(previous)
   }
 }
