@@ -234,18 +234,8 @@ object Graft {
       }
       graft.io.GeoReadOptions(keep, open.toMap, sf, drivers)
     }.getOrElse(graft.io.GeoReadOptions.default)
-    val paths = graft.io.GeoFiles.expand(path)
-    val fmt = graft.io.GeoFiles.formatOf(paths, forced)
-    graft.io.GeoFiles.requireAllowedDriver(fmt, opts)
-    val schema = graft.io.GeoFiles.schemaFor(fmt, paths, layer, opts)
-    val bbox = opts.spatialFilter.map { w =>
-      val e = graft.geom.Geo.fromWkt(w).getEnvelopeInternal
-      (e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
-    }
-    val table = new graft.io.GeoTable(schema, paths, fmt, bbox = bbox,
-      layer = layer, opts = opts)
     org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-      table, None, None)
+      graft.io.GeoSource(Seq(path), forced, layer, opts).table(), None, None)
   }
 
   /** ST_List_Proj_CRS — the reference's CRS-catalog table function
@@ -348,9 +338,9 @@ object Graft {
     val sr = org.apache.spark.sql.catalyst.FunctionIdentifier("st_read")
     if (!oursT(sr)) tfr.registerFunction(sr, new ExpressionInfo("graft", "st_read"), stReadPlan _)
     val shp = org.apache.spark.sql.catalyst.FunctionIdentifier("st_readshp")
-    if (!oursT(shp)) tfr.registerFunction(shp, new ExpressionInfo("graft", "st_readshp"), stReadAs(Some("shapefile")) _)
+    if (!oursT(shp)) tfr.registerFunction(shp, new ExpressionInfo("graft", "st_readshp"), stReadAs(Some(graft.io.GeoFormat.Shp.name)) _)
     val osm = org.apache.spark.sql.catalyst.FunctionIdentifier("st_readosm")
-    if (!oursT(osm)) tfr.registerFunction(osm, new ExpressionInfo("graft", "st_readosm"), stReadAs(Some("osmpbf")) _)
+    if (!oursT(osm)) tfr.registerFunction(osm, new ExpressionInfo("graft", "st_readosm"), stReadAs(Some(graft.io.GeoFormat.Osm.name)) _)
     val lpc = org.apache.spark.sql.catalyst.FunctionIdentifier("st_list_proj_crs")
     if (!oursT(lpc)) tfr.registerFunction(lpc, new ExpressionInfo("graft", "st_list_proj_crs"), listProjCrsPlan _)
     val drv = org.apache.spark.sql.catalyst.FunctionIdentifier("st_drivers")
@@ -404,11 +394,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectTableFunction((
       FunctionIdentifier("st_readshp"),
       new ExpressionInfo("graft", "st_readshp"),
-      Graft.stReadAs(Some("shapefile"))))
+      Graft.stReadAs(Some(graft.io.GeoFormat.Shp.name))))
     ext.injectTableFunction((
       FunctionIdentifier("st_readosm"),
       new ExpressionInfo("graft", "st_readosm"),
-      Graft.stReadAs(Some("osmpbf"))))
+      Graft.stReadAs(Some(graft.io.GeoFormat.Osm.name))))
     ext.injectTableFunction((
       FunctionIdentifier("st_list_proj_crs"),
       new ExpressionInfo("graft", "st_list_proj_crs"),

@@ -17,49 +17,42 @@ import java.util.{Collections => JCollections}
 import scala.jdk.CollectionConverters._
 
 /**
- * `spark.read.format("geo").load(path)` — DataSourceV2 reader for the spatial
- * file formats the reference reads natively (SURVEY §2.4): shapefile
- * (.shp+.dbf+.shx+.cpg), GeoJSON (FeatureCollection + newline-delimited), and
- * OSM PBF (block-parallel). Format is inferred from the extension or forced
- * with option("format", "shapefile"|"geojson"|"osmpbf").
+ * `spark.read.format("geo").load(path)`: a DataSourceV2 reader for every
+ * format in [[GeoFormat.all]] (SURVEY §2.4). The format comes from the
+ * extension (a `.json` is sniffed) or is forced with option("format", name).
  *
- * Scale design: every file (or OSM blob run) is its own InputPartition, read
- * independently on executors — strictly more parallel than the reference's
- * single GDAL stream (st_read.cpp:381-444). Column pruning is pushed down.
+ * Scale design: each file is read on executors in splits its format plans
+ * (.shx record ranges, FlatGeobuf index leaves, GeoPackage subtrees,
+ * newline-aligned byte ranges, PBF blob runs), sized like Spark's own file
+ * scans from `spark.sql.files.maxPartitionBytes`; other files are one
+ * split each. That is more parallel than the reference's single GDAL
+ * stream (st_read.cpp:381-444). Column pruning is pushed down.
  */
 class GeoDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "geo"
 
-  private def pathsOf(options: CaseInsensitiveStringMap): Seq[String] = {
+  private def source(options: CaseInsensitiveStringMap): GeoSource = {
     // load(a, b, ...) arrives as a JSON string array under "paths";
     // load(a) as a plain string under "path"
     val raw = Option(options.get("path")).toSeq ++
       Option(options.get("paths")).map(GeoFiles.parseJsonStringArray).getOrElse(Seq.empty)
     if (raw.isEmpty) throw new IllegalArgumentException("geo source requires a path")
-    val expanded = raw.distinct.flatMap(GeoFiles.expand).distinct
-    if (expanded.isEmpty) throw new IllegalArgumentException(
-      s"geo source: no files match ${raw.mkString(", ")}")
-    expanded
+    GeoSource(raw, Option(options.get("format")), Option(options.get("layer")),
+      GeoReadOptions.from(options))
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val paths = pathsOf(options)
-    val layer = Option(options.get("layer"))
-    val opts = GeoReadOptions.from(options)
-    val fmt = GeoFiles.formatOf(paths, Option(options.get("format")))
-    GeoFiles.requireAllowedDriver(fmt, opts)
-    val base = GeoFiles.schemaFor(fmt, paths, layer, opts)
+    val src = source(options)
     // Hive-style partition columns appended after the data columns; a path
     // key shadowed by a data column of the same name is dropped (data wins)
-    GeoFiles.partitionSpec(paths)
-      .filterNot(p => base.fieldNames.contains(p._1))
-      .foldLeft(base)((s, p) => s.add(p._1, p._2, nullable = true))
+    GeoFiles.partitionSpec(src.paths)
+      .filterNot(p => src.schema.fieldNames.contains(p._1))
+      .foldLeft(src.schema)((s, p) => s.add(p._1, p._2, nullable = true))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    val paths = pathsOf(options)
     // reference's st_read spatial_filter_box named param (st_read.cpp:623-631):
     // a bind-time query window — index-backed formats (FlatGeobuf packed
     // R-tree) prune features before they are materialized. The exact
@@ -69,21 +62,50 @@ class GeoDataSource extends TableProvider with DataSourceRegister {
       require(p.length == 4, s"bbox option expects 'minx,miny,maxx,maxy', got '$s'")
       (p(0), p(1), p(2), p(3))
     }
-    val opts = GeoReadOptions.from(options)
-    val fmt = GeoFiles.formatOf(paths, Option(options.get("format")))
-    GeoFiles.requireAllowedDriver(fmt, opts)
-    // an exact spatial_filter implies its envelope as the coarse bbox
-    // prefilter (index-backed formats prune on it before materializing)
-    val bboxEff = bbox.orElse(opts.spatialFilter.map { w =>
-      val e = graft.geom.Geo.fromWkt(w).getEnvelopeInternal
-      (e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
-    })
-    new GeoTable(schema, paths, fmt,
-      bbox = bboxEff, rawPath = Option(options.get("path")), layer = Option(options.get("layer")),
-      opts = opts)
+    source(options).table(schema, bbox, rawPath = Option(options.get("path")))
   }
 
   override def supportsExternalMetadata(): Boolean = true
+}
+
+/** A geo input resolved from what the user gave: the expanded files, their
+  * format (checked against `allowed_drivers` and the layer request) and the
+  * data schema of the first file. `spark.read.format("geo")`, `st_read`, a
+  * bare `` FROM `path` `` and `st_read_meta` all resolve through here. */
+final class GeoSource private (val paths: Seq[String], val format: GeoFormat,
+                               val layer: Option[String], val opts: GeoReadOptions) {
+  /** the data columns, read from the local copy of the first file only */
+  lazy val schema: StructType = GeoFiles.withLocal(paths.head)(format.schema(_, layer, opts))
+
+  /** A table over these files. An exact spatial_filter implies its envelope
+    * as the coarse `bbox` prefilter (index-backed formats prune on it). */
+  def table(schema: StructType = schema, bbox: Option[(Double, Double, Double, Double)] = None,
+            rawPath: Option[String] = None): GeoTable =
+    new GeoTable(schema, this, bbox.orElse(opts.spatialFilter.map { w =>
+      val e = graft.geom.Geo.fromWkt(w).getEnvelopeInternal
+      (e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
+    }), rawPath)
+}
+
+object GeoSource {
+  def apply(raw: Seq[String], forced: Option[String] = None, layer: Option[String] = None,
+            opts: GeoReadOptions = GeoReadOptions.default): GeoSource = {
+    val paths = raw.distinct.flatMap(GeoFiles.expand).distinct
+    if (paths.isEmpty) throw new IllegalArgumentException(
+      s"geo source: no files match ${raw.mkString(", ")}")
+    val format = GeoFormat.of(paths.head, forced)
+    // reference st_read `allowed_drivers`: the resolved format must be in
+    // the caller's allowlist (GDAL semantics: restrict which driver may
+    // open the path)
+    require(opts.allowedDrivers.isEmpty || opts.allowedDrivers.contains(format.name),
+      s"allowed_drivers: resolved format '${format.name}' is not in [${opts.allowedDrivers.mkString(", ")}]")
+    // a layerless format rejects `layer` loudly instead of reading the whole file
+    layer.foreach { l =>
+      require(format.layered, s"format '${format.name}' has no layers (requested layer '$l'); " +
+        s"layer selection applies to ${GeoFormat.all.filter(_.layered).map(_.name).mkString("/")}")
+    }
+    new GeoSource(paths, format, layer, opts)
+  }
 }
 
 /** Reader-level options (reference: st_read's `keep_wkb` + GDAL
@@ -185,13 +207,13 @@ object GeoFiles {
       val zf = new java.util.zip.ZipFile(vsz)
       try {
         val names = zf.entries().asScala
-          .filter(e => !e.isDirectory && known(e.getName))
+          .filter(e => !e.isDirectory && GeoFormat.known(e.getName))
           .map(_.getName).toVector.sorted
         if (names.isEmpty) throw new IllegalArgumentException(
           s"no known geo entries inside $vsz")
         // one archive = one dataset: mixed formats can't share a schema —
         // demand an explicit entry instead of misparsing the tail
-        val fmts = names.map(n => formatOf(Seq(n), None)).distinct
+        val fmts = names.map(n => GeoFormat.byExtension(n).getOrElse(GeoFormat.GeoJson).name).distinct
         if (fmts.length > 1) throw new IllegalArgumentException(
           s"mixed formats inside $vsz (${fmts.mkString(", ")}); " +
             s"read one entry via '$vsz!<entry>' — entries: ${names.take(10).mkString(", ")}")
@@ -222,7 +244,7 @@ object GeoFiles {
       if (Files.isDirectory(p)) {
         val st = Files.walk(p)
         try st.iterator().asScala
-          .filter(f => Files.isRegularFile(f) && known(f.toString))
+          .filter(f => Files.isRegularFile(f) && GeoFormat.known(f.toString))
           .map(_.toString).toVector.sorted
         finally st.close()
       } else Seq(p.toString)
@@ -255,15 +277,8 @@ object GeoFiles {
     l.startsWith("http://") || l.startsWith("https://")
   }
 
-  /** reference st_read `allowed_drivers`: the resolved format must be in
-    * the caller's allowlist (GDAL semantics: restrict which driver may
-    * open the path) */
-  def requireAllowedDriver(fmt: String, opts: GeoReadOptions): Unit =
-    require(opts.allowedDrivers.isEmpty || opts.allowedDrivers.contains(fmt),
-      s"allowed_drivers: resolved format '$fmt' is not in [${opts.allowedDrivers.mkString(", ")}]")
-
   /** query strings never participate in extension sniffing */
-  private def stripQuery(p: String): String = {
+  private[io] def stripQuery(p: String): String = {
     val i = p.indexOf('?')
     if (i >= 0 && p.contains("://")) p.substring(0, i) else p
   }
@@ -563,68 +578,6 @@ object GeoFiles {
     else Seq(p.toString)
   }
 
-  /** trailing .gz is transparent for the text formats */
-  private def degz(l: String): String = if (l.endsWith(".gz")) l.dropRight(3) else l
-
-  /** A bare `.json` can be GeoJSON, TopoJSON, or ESRIJSON — GDAL sniffs,
-    * and so do we: a bounded head read looking for the discriminating
-    * members (`"type": "Topology"` / ESRI's `geometryType`-or-`attributes`
-    * shape). GeoJSON remains the default on ambiguity. */
-  private def sniffJson(path: String): String = {
-    try {
-      val r = GeoFiles.textReader(path)
-      val head = try {
-        val buf = new Array[Char](8192)
-        val n = r.read(buf)
-        if (n <= 0) "" else new String(buf, 0, n)
-      } finally r.close()
-      val compact = head.replaceAll("\\s", "")
-      if (compact.contains("\"type\":\"Topology\"")) "topojson"
-      else if (compact.contains("\"geometryType\":\"esriGeometry") ||
-               (compact.contains("\"attributes\":") && !compact.contains("\"properties\":")))
-        "esrijson"
-      else "geojson"
-    } catch { case scala.util.control.NonFatal(_) => "geojson" }
-  }
-
-  private def known(f: String): Boolean = {
-    val l = degz(stripQuery(f).toLowerCase)
-    l.endsWith(".shp") || l.endsWith(".geojson") || l.endsWith(".json") ||
-      l.endsWith(".ndjson") || l.endsWith(".geojsonl") || l.endsWith(".osm.pbf") ||
-      l.endsWith(".fgb") || l.endsWith(".gpkg") || l.endsWith(".kml") ||
-      l.endsWith(".gpx") || l.endsWith(".gml") || l.endsWith(".csv") || l.endsWith(".xlsx") ||
-      l.endsWith(".kmz") || l.endsWith(".mif") || l.endsWith(".rss") || l.endsWith(".atom") ||
-      l.endsWith(".georss") || l.endsWith(".dxf") ||
-      l.endsWith(".topojson") || l.endsWith(".esrijson") || l.endsWith(".mvt") ||
-      l.endsWith(".gmt") || l.endsWith(".ods")
-  }
-
-  def formatOf(paths: Seq[String], forced: Option[String]): String = forced.map(_.toLowerCase).getOrElse {
-    val l = degz(stripQuery(paths.head).toLowerCase)
-    if (l.endsWith(".shp")) "shapefile"
-    else if (l.endsWith(".fgb")) "flatgeobuf"
-    else if (l.endsWith(".gpkg")) "geopackage"
-    else if (l.endsWith(".osm.pbf")) "osmpbf"
-    else if (l.endsWith(".ndjson") || l.endsWith(".geojsonl")) "geojsonl"
-    else if (l.endsWith(".geojson")) "geojson"
-    else if (l.endsWith(".json")) sniffJson(paths.head)
-    else if (l.endsWith(".kml")) "kml"
-    else if (l.endsWith(".gpx")) "gpx"
-    else if (l.endsWith(".gml")) "gml"
-    else if (l.endsWith(".csv")) "csvwkt"
-    else if (l.endsWith(".xlsx")) "xlsx"
-    else if (l.endsWith(".kmz")) "kmz"
-    else if (l.endsWith(".mif")) "mapinfo"
-    else if (l.endsWith(".rss") || l.endsWith(".atom") || l.endsWith(".georss")) "georss"
-    else if (l.endsWith(".dxf")) "dxf"
-    else if (l.endsWith(".topojson")) "topojson"
-    else if (l.endsWith(".esrijson")) "esrijson"
-    else if (l.endsWith(".mvt")) "mvt"
-    else if (l.endsWith(".gmt")) "gmt"
-    else if (l.endsWith(".ods")) "ods"
-    else throw new IllegalArgumentException(s"cannot infer geo format from ${paths.head}")
-  }
-
   /** Lines whose first byte lies in [from, to) — the standard split contract
     * for newline-delimited text (Hadoop TextInputFormat semantics): a range
     * starting past 0 skips the partial line it lands in; the line straddling
@@ -698,72 +651,6 @@ object GeoFiles {
     StructField("geom", BinaryType),
     StructField("properties", MapType(StringType, StringType))))
 
-  /** GeoJSON property promotion (reference: GDAL's OGRGeoJSON promotes every
-    * property to a column): keys seen in a bounded head sample of the first
-    * file become string columns after the stable fields, so `SELECT kind …`
-    * works like the reference while `properties` map access stays intact. */
-  def geojsonSchemaFor(format: String, paths: Seq[String]): StructType = {
-    val keys = scala.collection.mutable.LinkedHashSet.empty[String]
-    try {
-      val sample: Iterator[GeoJsonFile.Feature] = format match {
-        case "geojson" => GeoJsonFile.streamDocument(textReader(paths.head))
-        case _ =>
-          val br = textReader(paths.head)
-          Iterator.continually(br.readLine()).takeWhile(_ != null).flatMap(GeoJsonFile.parseLine)
-      }
-      sample.take(200).foreach(f => keys ++= f.properties.keys)
-    } catch { case scala.util.control.NonFatal(_) => }
-    val reserved = Set("id", "geom", "properties")
-    StructType(geojsonSchema.fields ++
-      keys.toSeq.filterNot(reserved).map(StructField(_, StringType)))
-  }
-
-  val osmSchema: StructType = StructType(Seq(
-    StructField("kind", StringType),
-    StructField("id", LongType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("refs", ArrayType(LongType)),
-    StructField("lat", DoubleType),
-    StructField("lon", DoubleType),
-    StructField("ref_roles", ArrayType(StringType)),
-    StructField("ref_types", ArrayType(StringType))))
-
-  def dbfFieldType(f: Shapefile.DbfField): DataType = f.typ match {
-    case 'N' if f.decimals == 0 && f.width < 10 => IntegerType
-    case 'N' if f.decimals == 0 && f.width < 19 => LongType
-    case 'N' | 'F' => DoubleType
-    case 'D' => DateType
-    case 'L' => BooleanType
-    case _ => StringType
-  }
-
-  def shapefileSchema(path: String): StructType = {
-    val meta = Shapefile.readMeta(path)
-    // dedupe names like the reference (read_shapefile.cpp:164-172)
-    val seen = scala.collection.mutable.Map.empty[String, Int]
-    val fields = meta.fields.map { f =>
-      val n = seen.get(f.name) match {
-        case None => seen(f.name) = 1; f.name
-        case Some(c) => seen(f.name) = c + 1; s"${f.name}_$c"
-      }
-      StructField(n, dbfFieldType(f))
-    }
-    StructType(fields :+ StructField("geom", BinaryType))
-  }
-
-  def flatgeobufSchema(path: String): StructType = {
-    val h = FlatGeobuf.readHeader(path)
-    // property values surface as strings (same dynamic-schema stance as geojson)
-    StructType(h.columns.map(c => StructField(c.name, StringType)) :+ StructField("geom", BinaryType))
-  }
-
-  def sqliteToSpark(declared: String, isGeom: Boolean): DataType =
-    if (isGeom) BinaryType
-    else if (declared.startsWith("INT") || declared == "MEDIUMINT" || declared == "BOOLEAN") LongType
-    else if (declared.startsWith("REAL") || declared.startsWith("DOUBLE") || declared.startsWith("FLOAT")) DoubleType
-    else if (declared == "BLOB") BinaryType
-    else StringType
-
   /** Multi-layer dataset selection (reference: st_read.cpp:623-631 `layer`
     * open option): a GeoPackage is a container of feature tables; `layer`
     * names the one to read, default = the first registered table. */
@@ -777,92 +664,26 @@ object GeoFiles {
           s"layer '$name' not found in $path; available layers: ${tables.map(_.name).mkString(", ")}"))
     }
   }
-
-  def geopackageSchema(path: String, layer: Option[String] = None): StructType = {
-    val t = geopackageTable(path, layer)
-    StructType(t.columns.map { case (n, typ) =>
-      StructField(n, sqliteToSpark(typ, n == t.geomColumn))
-    })
-  }
-
-  /** Formats with a real sub-dataset concept; anything else rejects `layer`
-    * loudly instead of silently reading the whole file. */
-  private val layeredFormats = Set("geopackage", "kml", "kmz", "dxf", "topojson", "mvt")
-  def requireLayerSupported(format: String, layer: Option[String]): Unit =
-    layer.foreach { l =>
-      require(layeredFormats.contains(format),
-        s"format '$format' has no layers (requested layer '$l'); " +
-          s"layer selection applies to ${layeredFormats.mkString("/")}")
-    }
-
-  def xlsxSchema(path: String): StructType = {
-    val hdr = Xlsx.rows(path).headOption.getOrElse(Array.empty[String])
-    StructType(hdr.zipWithIndex.map { case (h, i) =>
-      StructField(if (h == null || h.isEmpty) s"col$i" else h.trim, StringType)
-    }.toIndexedSeq)
-  }
-
-  def odsSchema(path: String): StructType = {
-    val hdr = Ods.rows(path).headOption.getOrElse(Array.empty[String])
-    StructType(hdr.zipWithIndex.map { case (h, i) =>
-      StructField(if (h == null || h.isEmpty) s"col$i" else h.trim, StringType)
-    }.toIndexedSeq)
-  }
-
-  def mifSchema(path: String): StructType = {
-    val m = MapInfoMif.meta(path)
-    // attribute values surface as strings (same dynamic-schema stance as fgb)
-    StructType(m.columns.map(StructField(_, StringType)) :+ StructField("geom", BinaryType))
-  }
-
-  def csvSchema(path: String, opts: GeoReadOptions = GeoReadOptions.default): StructType = {
-    val hdr = CsvWkt.header(path, opts.encoding)
-    val gi = CsvWkt.geomColumn(hdr.toSeq, opts.geomColumn)
-    StructType(hdr.zipWithIndex.collect {
-      case (h, i) if i != gi => StructField(h.trim, StringType)
-    } :+ StructField("geom", BinaryType))
-  }
-
-  def schemaFor(format: String, paths0: Seq[String], layer: Option[String] = None,
-                opts: GeoReadOptions = GeoReadOptions.default): StructType = {
-    requireLayerSupported(format, layer)
-    withLocal(paths0) { paths =>
-      format match {
-        case "shapefile" => shapefileSchema(paths.head)
-        case "geojson" | "geojsonl" => geojsonSchemaFor(format, paths)
-        case "kml" | "gpx" | "gml" | "kmz" | "georss" | "dxf" | "topojson" | "esrijson" | "mvt" | "gmt" => geojsonSchema
-        case "mapinfo" => mifSchema(paths.head)
-        case "osmpbf" => osmSchema
-        case "flatgeobuf" => flatgeobufSchema(paths.head)
-        case "geopackage" => geopackageSchema(paths.head, layer)
-        case "csvwkt" => csvSchema(paths.head, opts)
-        case "xlsx" => xlsxSchema(paths.head)
-        case "ods" => odsSchema(paths.head)
-        case other => throw new IllegalArgumentException(s"unknown geo format $other")
-      }
-    }
-  }
 }
 
-class GeoTable(schema: StructType, paths: Seq[String], val format: String,
+class GeoTable(schema: StructType, val source: GeoSource,
                val bbox: Option[(Double, Double, Double, Double)] = None,
-               val rawPath: Option[String] = None,
-               val layer: Option[String] = None,
-               val opts: GeoReadOptions = GeoReadOptions.default)
+               val rawPath: Option[String] = None)
     extends Table with SupportsRead {
+  def format: GeoFormat = source.format
   /** Hive-style partition columns carried by the path layout: keys present
     * in every file's path whose name made it into the schema as a NON-data
     * column. Empty (zero IO) for unpartitioned layouts. */
   lazy val partCols: Seq[(String, DataType)] = {
-    val spec = GeoFiles.partitionSpec(paths)
+    val spec = GeoFiles.partitionSpec(source.paths)
     if (spec.isEmpty) Seq.empty
     else {
-      val dataNames = GeoFiles.schemaFor(format, paths, layer).fieldNames.toSet
+      val dataNames = source.schema.fieldNames.toSet
       spec.filter(p => !dataNames.contains(p._1) && schema.fieldNames.contains(p._1))
     }
   }
   override def name(): String =
-    s"geo($format:${paths.headOption.getOrElse("")})" +
+    s"geo(${format.name}:${source.paths.head})" +
       bbox.map(b => s" bbox=[${b._1},${b._2},${b._3},${b._4}]").getOrElse("")
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] = {
@@ -871,23 +692,17 @@ class GeoTable(schema: StructType, paths: Seq[String], val format: String,
     if (rawPath.isDefined) caps.add(TableCapability.MICRO_BATCH_READ)
     caps
   }
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GeoScanBuilder(schema, paths, format, bbox, rawPath, partCols, layer, opts)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = new GeoScanBuilder(this)
   /** same table narrowed to a query window (index-backed formats prune) */
   def withBbox(b: (Double, Double, Double, Double)): GeoTable =
-    new GeoTable(schema, paths, format, Some(b), rawPath, layer, opts)
+    new GeoTable(schema, source, Some(b), rawPath)
 }
 
-class GeoScanBuilder(fullSchema: StructType, paths: Seq[String], format: String,
-                     bbox: Option[(Double, Double, Double, Double)],
-                     rawPath: Option[String] = None,
-                     partCols: Seq[(String, DataType)] = Seq.empty,
-                     layer: Option[String] = None,
-                     opts: GeoReadOptions = GeoReadOptions.default)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
+class GeoScanBuilder(table: GeoTable) extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = fullSchema
-  private var prunedPaths: Seq[String] = paths
+  private val partCols = table.partCols
+  private var required: StructType = table.schema()
+  private var prunedPaths: Seq[String] = table.source.paths
   private var accepted: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = { required = requiredSchema }
 
@@ -921,8 +736,7 @@ class GeoScanBuilder(fullSchema: StructType, paths: Seq[String], format: String,
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = accepted
 
-  override def build(): Scan =
-    new GeoScan(fullSchema, required, prunedPaths, format, bbox, rawPath, partCols, layer, opts)
+  override def build(): Scan = new GeoScan(table, required, prunedPaths)
 }
 
 /** Evaluates a source Filter against one file's partition values (raw
@@ -976,13 +790,9 @@ object GeoPartFilter {
   }
 }
 
-class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], format: String,
-              bbox: Option[(Double, Double, Double, Double)] = None,
-              rawPath: Option[String] = None,
-              partCols: Seq[(String, DataType)] = Seq.empty,
-              layer: Option[String] = None,
-              opts: GeoReadOptions = GeoReadOptions.default)
+class GeoScan(table: GeoTable, required: StructType, paths: Seq[String])
     extends Scan with Batch with SupportsReportStatistics {
+  private val format = table.format
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -991,26 +801,13 @@ class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], 
     * DSv2 relation defaults to "unknown/huge" and a small .shp lookup table
     * shuffles instead of broadcasting. */
   override def estimateStatistics(): Statistics = GeoFiles.withLocal(paths) { localPaths =>
-    val bytes: Long = localPaths.map { p =>
-      val f = new java.io.File(p.stripPrefix("file:"))
-      // shapefile payloads live beside the .shp in .dbf; count the family
-      if (format == "shapefile") {
-        val base = Shapefile.basePath(p)
-        Seq(".shp", ".dbf", ".shx").map(e => new java.io.File(base + e).length()).sum
-      } else f.length()
-    }.sum
-    val rows: java.util.OptionalLong = format match {
-      case "shapefile" =>
-        try java.util.OptionalLong.of(localPaths.map(p => Shapefile.readMeta(p).recordCount.toLong).sum)
-        catch { case scala.util.control.NonFatal(_) => java.util.OptionalLong.empty() }
-      case "flatgeobuf" =>
-        try {
-          val counts = localPaths.map(p => FlatGeobuf.readHeader(p).featuresCount)
-          if (counts.forall(_ > 0)) java.util.OptionalLong.of(counts.sum)
-          else java.util.OptionalLong.empty()
-        } catch { case scala.util.control.NonFatal(_) => java.util.OptionalLong.empty() }
-      case _ => java.util.OptionalLong.empty()
-    }
+    val bytes = localPaths.map(format.bytes).sum
+    val rows =
+      try {
+        val counts = localPaths.map(format.rowCount)
+        if (counts.forall(_.isDefined)) java.util.OptionalLong.of(counts.flatten.sum)
+        else java.util.OptionalLong.empty()
+      } catch { case scala.util.control.NonFatal(_) => java.util.OptionalLong.empty() }
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(math.max(bytes, 1L))
       override def numRows(): java.util.OptionalLong = rows
@@ -1019,114 +816,53 @@ class GeoScan(fullSchema: StructType, required: StructType, paths: Seq[String], 
 
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GeoMicroBatchStream(fullSchema, required, format,
-      rawPath.getOrElse(throw new IllegalArgumentException(
-        "geo streaming requires a directory path")), checkpointLocation, partCols)
+    new GeoMicroBatchStream(table.schema(), required, format,
+      table.rawPath.getOrElse(throw new IllegalArgumentException(
+        "geo streaming requires a directory path")), checkpointLocation, table.partCols)
 
   override def planInputPartitions(): Array[InputPartition] =
-    GeoScan.partitionsFor(format, paths, layer)
+    GeoScan.partitionsFor(format, paths, table.source.layer)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoReaderFactory(fullSchema, required, format, bbox, partCols, layer, opts)
+    new GeoReaderFactory(table.schema(), required, format, table.bbox, table.partCols,
+      table.source.layer, table.source.opts)
 }
 
 object GeoScan {
   /** Partition planning shared by the batch Scan and the micro-batch stream:
-    * every format splits intra-file where its container allows it. */
-  def partitionsFor(format: String, paths: Seq[String],
-                    layer: Option[String] = None): Array[InputPartition] =
+    * each file in its format's splits. Split sizes follow Spark's file
+    * sources: `spark.sql.files.maxPartitionBytes`, lowered towards the
+    * scan's bytes per core (`openCostInBytes` per file, at least that). */
+  def partitionsFor(format: GeoFormat, paths0: Seq[String],
+                    layer: Option[String] = None): Array[InputPartition] = {
     // the remote versions planned here are the ones the tasks read
-    plan(format, paths.map(GeoFiles.pinVersion), layer)
-
-  private def plan(format: String, paths: Seq[String],
-                   layer: Option[String]): Array[InputPartition] = format match {
-    case "osmpbf" =>
-      // blob-parallel: runs of 16 blobs per partition (st_read_osm.cpp parallel model)
-      paths.flatMap { p =>
-        GeoFiles.withLocal(p)(OsmPbf.indexBlobs).grouped(16)
-          .map(g => OsmPartition(p, g.toArray): InputPartition)
-      }.toArray
-    case "shapefile" =>
-      // intra-file splits from the .shx record index: one 20 GB .shp becomes
-      // ~300 range partitions instead of one task. Partitions carry the
-      // VIRTUAL path (zip entries localize executor-side); split planning
-      // reads the localized copy.
-      val targetBytes = 64L << 20
-      paths.flatMap { p => GeoFiles.withLocal(p) { lp =>
-        val meta = Shapefile.readMeta(lp)
-        val n = meta.recordCount
-        if (n == 0) Seq(ShpRangePartition(p, 0, 0): InputPartition)
-        else {
-          val totalBytes = new java.io.File(Shapefile.basePath(lp) + ".shp").length()
-          val chunks = math.max(1, math.min(n.toLong, totalBytes / targetBytes + 1)).toInt
-          val per = (n + chunks - 1) / chunks
-          (0 until n by per).map(s => ShpRangePartition(p, s, math.min(n, s + per)): InputPartition)
-        }
-      }}.toArray
-    case "flatgeobuf" =>
-      // intra-file splits via the packed index's leaf offsets: a 10 GB .fgb
-      // becomes ~160 range partitions instead of one task (unindexed files
-      // stay one range — length-prefixed features aren't seekable blind)
-      val target =
-        try org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.fgb.splitBytes", (64L << 20).toString).toLong
-        catch { case _: Exception => 64L << 20 }
-      paths.flatMap { p =>
-        GeoFiles.withLocal(p)(FlatGeobuf.splitOffsets(_, target)).map { case (from, to) =>
-          FgbRangePartition(p, from, to): InputPartition
-        }
-      }.toArray
-    case "geopackage" =>
-      // intra-file splits over the feature table's root-level B-tree
-      // subtrees: a multi-GB .gpkg scans as ~64 MB page-group tasks (the
-      // balanced tree makes equal child counts ≈ equal bytes)
-      val target = 64L << 20
-      paths.flatMap { p => GeoFiles.withLocal(p) { lp =>
-        val table = GeoFiles.geopackageTable(lp, layer)
-        val roots = GeoPackage.subtreeRoots(lp, table)
-        val bytes = new java.io.File(lp.stripPrefix("file:")).length()
-        val chunks = math.max(1, math.min(roots.size.toLong, bytes / target + 1)).toInt
-        val per = (roots.size + chunks - 1) / chunks
-        roots.grouped(per).map(g => GpkgPartition(p, g.toArray): InputPartition)
-      }}.toArray
-    case "geojsonl" =>
-      // newline-aligned byte-range splits: a 10 GB .geojsonl becomes ~160
-      // tasks. Gzipped files aren't seekable — they stay one task each.
-      val target =
-        try org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.jsonl.splitBytes", (64L << 20).toString).toLong
-        catch { case _: Exception => 64L << 20 }
-      paths.flatMap { p =>
-        if (GeoFiles.unpinned(p).toLowerCase.endsWith(".gz")) Seq(FilePartition(p): InputPartition)
-        else {
-          val len = GeoFiles.withLocal(p)(new java.io.File(_).length())
-          if (len == 0) Seq(JsonlRangePartition(p, 0L, 0L): InputPartition)
-          else (0L until len by target).map(s =>
-            JsonlRangePartition(p, s, math.min(len, s + target)): InputPartition)
-        }
-      }.toArray
-    case _ => paths.map(p => FilePartition(p): InputPartition).toArray
+    val paths = paths0.map(GeoFiles.pinVersion)
+    lazy val maxBytes = {
+      val spark = org.apache.spark.sql.SparkSession.active
+      val openCost = spark.sessionState.conf.filesOpenCostInBytes
+      org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(spark,
+        paths.map(p => GeoFiles.withLocal(p)(new java.io.File(_).length()) + openCost).sum)
+    }
+    paths.flatMap(p => format.splits(p, layer, maxBytes).map(GeoPartition(p, _): InputPartition)).toArray
   }
 }
 
-case class FilePartition(path: String) extends InputPartition
-case class JsonlRangePartition(path: String, fromOff: Long, toOff: Long) extends InputPartition
-case class GpkgPartition(path: String, subtreeRoots: Array[Long]) extends InputPartition
-case class FgbRangePartition(path: String, fromOff: Long, toOff: Long) extends InputPartition
-case class ShpRangePartition(path: String, startRec: Int, endRec: Int) extends InputPartition
-case class OsmPartition(path: String, blobs: Array[OsmPbf.BlobRef]) extends InputPartition
+/** One task's share of one file: the path as planned (remote, zip-virtual
+  * or local) and the format's split of it ([[GeoFormat]]). */
+final case class GeoPartition(path: String, split: Array[Long]) extends InputPartition
 
-class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: String,
+class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: GeoFormat,
                        bbox: Option[(Double, Double, Double, Double)] = None,
                        partCols: Seq[(String, DataType)] = Seq.empty,
                        layer: Option[String] = None,
                        opts: GeoReadOptions = GeoReadOptions.default)
     extends PartitionReaderFactory {
   override def createReader(partition0: InputPartition): PartitionReader[InternalRow] = {
+    val partition = partition0.asInstanceOf[GeoPartition]
     // zip-virtual and remote paths localize HERE — on the executor that owns
     // the partition — and the copy stays on disk until the reader closes
-    val held = GeoFiles.open(partition0.asInstanceOf[Product].productElement(0).toString)
-    val rows = try read(partition0, held.path) catch { case e: Throwable => held.close(); throw e }
+    val held = GeoFiles.open(partition.path)
+    val rows = try read(partition, held.path) catch { case e: Throwable => held.close(); throw e }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
@@ -1135,16 +871,8 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: S
     }
   }
 
-  /** The rows of `partition0`, whose file is at `local`. */
-  private def read(partition0: InputPartition, local: String): Iterator[InternalRow] = {
-    val partition = partition0 match {
-      case FilePartition(_) => FilePartition(local)
-      case JsonlRangePartition(_, a, b) => JsonlRangePartition(local, a, b)
-      case GpkgPartition(_, r) => GpkgPartition(local, r)
-      case FgbRangePartition(_, a, b) => FgbRangePartition(local, a, b)
-      case ShpRangePartition(_, a, b) => ShpRangePartition(local, a, b)
-      case OsmPartition(_, blobs) => OsmPartition(local, blobs)
-    }
+  /** The rows of `partition`, whose file is at `local`. */
+  private def read(partition: GeoPartition, local: String): Iterator[InternalRow] = {
     // format readers see DATA columns only; Hive-style partition columns are
     // appended afterwards as per-file constants parsed from the path
     val partNames = partCols.map(_._1).toSet
@@ -1168,75 +896,7 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: S
         else (StructType(required1.fields :+ fullSchema(geomName)), required1.length, true)
       case _ => (required1, -1, false)
     }
-    val rows0: Iterator[InternalRow] = (format, partition) match {
-      case ("shapefile", ShpRangePartition(p, s, e)) =>
-        GeoRows.shapefileRows(p, s, e, fullSchema, required, opts.encoding)
-      case ("geojson", FilePartition(p)) =>
-        // stream the FeatureCollection: a multi-GB document must not be
-        // materialized as one String/byte[]
-        GeoJsonFile.streamDocument(GeoFiles.textReader(p)).map(GeoRows.featureRow(_, required))
-      case ("geojsonl", JsonlRangePartition(p, from, to)) =>
-        GeoFiles.lineRange(p, from, to)
-          .flatMap(GeoJsonFile.parseLine)
-          .map(GeoRows.featureRow(_, required))
-      case ("geojsonl", FilePartition(p)) => // gzipped: not seekable, one task
-        val br = GeoFiles.textReader(p)
-        Iterator.continually(br.readLine()).takeWhile(_ != null)
-          .flatMap(GeoJsonFile.parseLine)
-          .map(GeoRows.featureRow(_, required))
-      case ("osmpbf", OsmPartition(p, blobs)) =>
-        blobs.iterator.flatMap(b => OsmPbf.readBlob(p, b)).map(GeoRows.osmRow(_, required))
-      case ("flatgeobuf", FgbRangePartition(p, from, to)) =>
-        // packed-index pruning when a query window was pushed down; the
-        // exact spatial predicate remains in the residual Filter above
-        val feats = bbox match {
-          case Some((x0, y0, x1, y1)) =>
-            FlatGeobuf.searchIndex(p, x0, y0, x1, y1) match {
-              case Some(offsets) =>
-                FlatGeobuf.readFeaturesAt(p,
-                  offsets.filter(o => o >= from && (to < 0 || o < to)))
-              case None => FlatGeobuf.readFeaturesRange(p, from, to)
-            }
-          case None => FlatGeobuf.readFeaturesRange(p, from, to)
-        }
-        feats.map(GeoRows.fgbRow(_, required))
-      case ("geopackage", GpkgPartition(p, roots)) =>
-        GeoRows.gpkgRows(p, roots, required, layer, keepWkb = opts.keepWkb)
-      case ("kml", FilePartition(p)) =>
-        XmlGeo.kmlFeatures(p, layer).map(GeoRows.featureRow(_, required))
-      case ("gpx", FilePartition(p)) =>
-        XmlGeo.gpxFeatures(p).map(GeoRows.featureRow(_, required))
-      case ("gml", FilePartition(p)) =>
-        XmlGeo.gmlFeatures(p).map(GeoRows.featureRow(_, required))
-      case ("kmz", FilePartition(p)) =>
-        XmlGeo.kmzFeatures(p, layer).map(GeoRows.featureRow(_, required))
-      case ("georss", FilePartition(p)) =>
-        XmlGeo.georssFeatures(p).map(GeoRows.featureRow(_, required))
-      case ("mapinfo", FilePartition(p)) =>
-        MapInfoMif.features(p).map(GeoRows.featureRow(_, required))
-      case ("dxf", FilePartition(p)) =>
-        // DXF layers = entity layer codes; the `layer` property always carries it
-        val feats = Dxf.features(p)
-        layer.fold(feats)(l => feats.filter(_.properties.get("layer").contains(l)))
-          .map(GeoRows.featureRow(_, required))
-      case ("topojson", FilePartition(p)) =>
-        // TopoJSON layers = named topology objects
-        TopoJson.features(p, layer).map(GeoRows.featureRow(_, required))
-      case ("esrijson", FilePartition(p)) =>
-        EsriJson.features(p).map(GeoRows.featureRow(_, required))
-      case ("mvt", FilePartition(p)) =>
-        // MVT layers = tile layers; z/x/y paths georeference to EPSG:3857
-        Mvt.features(p, layer).map(GeoRows.featureRow(_, required))
-      case ("csvwkt", FilePartition(p)) =>
-        GeoRows.csvRows(p, fullSchema, required, opts)
-      case ("xlsx", FilePartition(p)) =>
-        GeoRows.xlsxRows(p, fullSchema, required)
-      case ("ods", FilePartition(p)) =>
-        GeoRows.odsRows(p, fullSchema, required)
-      case ("gmt", FilePartition(p)) =>
-        Gmt.features(p).map(GeoRows.featureRow(_, required))
-      case other => throw new IllegalArgumentException(s"bad partition $other")
-    }
+    val rows0 = format.rows(local, partition.split, GeoRead(fullSchema, required, layer, opts, bbox))
     val rows0b: Iterator[InternalRow] =
       if (bboxGeomIdx < 0) rows0
       else {
@@ -1264,11 +924,9 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: S
       }
     if (partNames.isEmpty && !dropBboxGeom) rows0b
     else {
-      // every InputPartition's first element is its file path; use the
-      // ORIGINAL (possibly zip-virtual) path — extracted copies flatten
+      // the ORIGINAL (possibly zip-virtual) path: extracted copies flatten
       // the k=v directory segments away
-      val path = partition0.asInstanceOf[Product].productElement(0).toString
-      val kv = GeoFiles.partitionValuesOf(path).toMap
+      val kv = GeoFiles.partitionValuesOf(partition.path).toMap
       val dataIdx = required.fieldNames.zipWithIndex.toMap
       val cells: Array[Either[Int, Any]] = required0.fields.map { f =>
         dataIdx.get(f.name) match {
@@ -1372,22 +1030,10 @@ object GeoRows {
     }
   }
 
-  def xlsxRows(path: String, fullSchema: StructType, required: StructType): Iterator[InternalRow] = {
+  def sheetRows(sheet: Vector[Array[String]], fullSchema: StructType,
+                required: StructType): Iterator[InternalRow] = {
     val idx = fullSchema.fieldNames.zipWithIndex.toMap
-    Xlsx.rows(path).iterator.drop(1).map { cells =>
-      val vals = required.fields.map { field =>
-        (idx.get(field.name) match {
-          case Some(i) if i < cells.length && cells(i) != null => utf(cells(i))
-          case _ => null
-        }): Any
-      }
-      new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-    }
-  }
-
-  def odsRows(path: String, fullSchema: StructType, required: StructType): Iterator[InternalRow] = {
-    val idx = fullSchema.fieldNames.zipWithIndex.toMap
-    Ods.rows(path).iterator.drop(1).map { cells =>
+    sheet.iterator.drop(1).map { cells =>
       val vals = required.fields.map { field =>
         (idx.get(field.name) match {
           case Some(i) if i < cells.length && cells(i) != null => utf(cells(i))

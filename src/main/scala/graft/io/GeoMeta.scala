@@ -13,29 +13,10 @@ import scala.jdk.CollectionConverters._
  */
 object GeoMeta {
 
-  /** ST_Drivers equivalent: the formats this engine reads/writes natively. */
+  /** ST_Drivers equivalent: every readable format, then the write-only
+    * PostgreSQL dump and GeoParquet (read through Spark's parquet source). */
   def drivers(spark: SparkSession): DataFrame = {
-    val rows = Seq(
-      Row("shapefile", "ESRI Shapefile (.shp/.shx/.dbf/.cpg; per-partition writer)", true, true),
-      Row("geojson", "GeoJSON FeatureCollection (RFC 7946; single-document writer)", true, true),
-      Row("geojsonl", "Newline-delimited GeoJSON", true, true),
-      Row("osmpbf", "OpenStreetMap PBF (block-parallel)", true, false),
-      Row("flatgeobuf", "FlatGeobuf (native flatbuffers decoder; writer emits the packed Hilbert R-tree)", true, true),
-      Row("geopackage", "GeoPackage (mmap sqlite B-tree scan; sqlite-page writer)", true, true),
-      Row("kml", "OGC KML Placemarks (StAX streaming parse; Placemark/ExtendedData writer)", true, true),
-      Row("gpx", "GPX waypoints/tracks/routes (StAX streaming parse; wpt/trk writer)", true, true),
-      Row("gml", "OGC GML 2/3 feature collections (StAX streaming parse; GML3 posList writer)", true, true),
-      Row("csvwkt", "CSV with a WKT geometry column (RFC-4180 reader/writer)", true, true),
-      Row("xlsx", "Office Open XML spreadsheet (attribute tables; pure-JVM zip+StAX)", true, true),
-      Row("kmz", "Zipped KML (doc.kml inside a .kmz archive; reader + writer)", true, true),
-      Row("georss", "GeoRSS-Simple / W3C-geo over RSS 2.0 and Atom feeds; RSS item writer", true, true),
-      Row("mapinfo", "MapInfo Interchange MIF/MID (points/plines/regions/rect/ellipse/arc/collection; MIF/MID writer)", true, true),
-      Row("dxf", "AutoCAD DXF ASCII entities (point/line/lwpolyline/polyline/circle/arc/solid/text; entity writer)", true, true),
-      Row("topojson", "TopoJSON 1.0 topologies (shared delta-encoded arc table; objects as layers)", true, false),
-      Row("esrijson", "ESRIJSON / ArcGIS REST FeatureSet (point/multipoint/polyline/polygon ring conventions)", true, false),
-      Row("mvt", "Mapbox Vector Tiles 2.1 (protobuf command streams; z/x/y paths georeference to EPSG:3857; single-tile writer)", true, true),
-      Row("gmt", "GMT ASCII vectors (@G/@N/@T headers, @D attribute rows, @P/@H polygon ring markers; reader + writer)", true, true),
-      Row("ods", "OpenDocument spreadsheet (attribute tables; pure-JVM zip+StAX; reader + writer)", true, true),
+    val rows = GeoFormat.all.map(f => Row(f.name, f.description, true, f.canWrite)) ++ Seq(
       Row("pgdump", "PostgreSQL SQL dump (CREATE TABLE + COPY FROM STDIN with hex-WKB geometry; write-only, like GDAL)", false, true),
       Row("geoparquet", "Parquet + WKB geometry + bbox stats + GeoParquet 1.1 metadata (clustered writer)", true, true))
     spark.createDataFrame(rows.asJava, StructType(Seq(
@@ -66,16 +47,16 @@ object GeoMeta {
   /** CRS struct matching the reference's geometry-field CRS shape
     * (st_read_meta.cpp:29-37): name, auth_name, auth_code, wkt, proj4,
     * projjson — nulls where a source doesn't carry the representation. */
-  private case class CrsDetail(name: String = null, authName: String = null,
-                               authCode: String = null, wkt: String = null,
-                               proj4: String = null, projjson: String = null) {
+  private[io] case class CrsDetail(name: String = null, authName: String = null,
+                                   authCode: String = null, wkt: String = null,
+                                   proj4: String = null, projjson: String = null) {
     def row: Row = Row(name, authName, authCode, wkt, proj4, projjson)
   }
 
   private val Crs84Proj4 = "+proj=longlat +datum=WGS84 +no_defs"
 
   /** name + top-level AUTHORITY from a WKT1 CRS definition. */
-  private def fromWkt1(wkt: String): CrsDetail = {
+  private[io] def fromWkt1(wkt: String): CrsDetail = {
     if (wkt == null || wkt.isEmpty) return CrsDetail()
     val name = "^\\s*\\w+\\[\"([^\"]+)\"".r.findFirstMatchIn(wkt).map(_.group(1)).orNull
     // the outermost authority is the LAST in WKT1 text
@@ -373,6 +354,8 @@ object GeoMeta {
 
   private val Crs84Detail = CrsDetail("WGS 84 longitude-latitude", "OGC", "CRS84",
     proj4 = Crs84Proj4)
+  /** the CRS of the formats whose specification fixes WGS 84 */
+  private[io] val Crs84 = ("OGC:CRS84", Crs84Detail)
 
   /** ST_Read_Meta equivalent: schema + counts for any geo path. For parquet
    *  inputs the GeoParquet `geo` footer metadata is surfaced (reference:
@@ -383,7 +366,7 @@ object GeoMeta {
       java.nio.file.Files.isDirectory(p) &&
         java.nio.file.Files.list(p).iterator().asScala.exists(_.toString.endsWith(".parquet"))
     }
-    val (fmt, fields, fileCount, geo, crs, detail) =
+    val (fmt, fields, fileCount, geo, crs, detail, layers) =
       if (isParquet) {
         val df = spark.read.parquet(path)
         val n = GeoFiles.expand0(path).count(_.endsWith(".parquet")) max 1
@@ -394,37 +377,19 @@ object GeoMeta {
         // GeoParquet 1.1: absent "crs" member means OGC:CRS84
         ("geoparquet", df.schema.fields, n, g.orNull,
           g.map(j => if (j.contains("\"crs\"")) null else "OGC:CRS84").orNull,
-          projjson.map(fromProjjson).getOrElse(if (g.isDefined) Crs84Detail else CrsDetail()))
+          projjson.map(fromProjjson).getOrElse(if (g.isDefined) Crs84Detail else CrsDetail()),
+          Seq.empty[String])
       } else {
-        // zip-virtual entries localize so header/sidecar probes below work
-        GeoFiles.withLocal(GeoFiles.expand(path)) { paths =>
-          val f = GeoFiles.formatOf(paths, None)
-          val (crs, detail) = f match {
-            case "shapefile" =>
-              val prj = java.nio.file.Paths.get(Shapefile.basePath(paths.head) + ".prj")
-              if (java.nio.file.Files.exists(prj)) {
-                val wkt = new String(java.nio.file.Files.readAllBytes(prj), "UTF-8").trim
-                (wkt, fromWkt1(wkt))
-              } else (null, CrsDetail())
-            case "flatgeobuf" =>
-              val h = FlatGeobuf.readHeader(paths.head)
-              val base = fromWkt1(h.crsWkt)
-              val Array(org, code) = (Option(h.crs).getOrElse(":") + ":").split(":", -1).take(2)
-              (h.crs, base.copy(
-                name = Option(h.crsName).getOrElse(base.name),
-                authName = if (org.nonEmpty) org else base.authName,
-                authCode = if (code.nonEmpty) code else base.authCode))
-            case "geopackage" =>
-              GeoPackage.srsDetail(paths.head) match {
-                case Some((name, org, code, wkt)) =>
-                  (s"$org:$code", fromWkt1(wkt).copy(name = name, authName = org, authCode = code))
-                case None => (null, CrsDetail())
-              }
-            case "geojson" | "geojsonl" | "kml" | "gpx" | "kmz" | "georss" =>
-              ("OGC:CRS84", Crs84Detail) // spec-fixed CRSes
-            case _ => (null, CrsDetail())
-          }
-          (f, GeoFiles.schemaFor(f, paths).fields, paths.length, null, crs, detail)
+        val src = GeoSource(Seq(path))
+        // the first file's local copy (a zip entry or remote object is
+        // extracted or fetched) answers the header, sidecar and layer probes
+        GeoFiles.withLocal(src.paths.head) { local =>
+          val (crs, detail) = src.format.crs(local)
+          // layer inventory (st_read_meta.cpp:26-65 reports a GDAL layer
+          // array); a layerless format reports an empty list
+          val layers =
+            try src.format.layers(local) catch { case scala.util.control.NonFatal(_) => Seq.empty }
+          (src.format.name, src.schema.fields, src.paths.length, null, crs, detail, layers)
         }
       }
     // Registry enrichment (st_read_meta.cpp:26-65 shape): a recognized
@@ -445,25 +410,6 @@ object GeoMeta {
         byCode.copy(proj4 = proj4FromWkt1(byCode.wkt))
       else byCode
     }
-    // Layer inventory (st_read_meta.cpp:26-65 reports a GDAL layer array):
-    // geopackage = feature tables, KML/KMZ = folders, DXF = entity layers;
-    // single-layer formats report an empty list.
-    val layers: Seq[String] =
-      try fmt match {
-        case "geopackage" => GeoPackage.featureTables(path.stripPrefix("file:")).map(_.name)
-        case "kml" => XmlGeo.kmlLayers(path)
-        case "kmz" =>
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          XmlGeo.kmzFeatures(path).foreach(_.properties.get("folder").foreach(seen += _))
-          seen.toSeq
-        case "dxf" =>
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          Dxf.features(path).foreach(_.properties.get("layer").foreach(seen += _))
-          seen.toSeq
-        case "topojson" => TopoJson.layers(path)
-        case "mvt" => Mvt.layers(path)
-        case _ => Seq.empty
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
     val rows = Seq(Row(path, fmt, fileCount,
       fields.map(f => Row(f.name, f.dataType.simpleString)), layers, geo, crs, enriched.row))
     spark.createDataFrame(rows.asJava, StructType(Seq(

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
  * Structured Streaming ingest for the geo source:
  * `spark.readStream.format("geo").load(dir)` turns newly-arrived files in a
  * directory into micro-batches — the DSv2 equivalent of Spark's own
- * FileStreamSource, for the 16 spatial formats (stream a drop-folder of
+ * FileStreamSource, for every format of [[GeoFormat.all]] (stream a drop-folder of
  * GeoRSS feeds, geojsonl exports, shapefile deliveries…).
  *
  * Offsets count files in arrival order. The discovered-file log persists to
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
  * ([[GeoScan.partitionsFor]]: .shx ranges, FGB index leaves, PBF blobs…).
  */
 class GeoMicroBatchStream(fullSchema: StructType, required: StructType,
-                          format: String, rawPath: String, checkpointLoc: String,
+                          format: GeoFormat, rawPath: String, checkpointLoc: String,
                           partCols: Seq[(String, org.apache.spark.sql.types.DataType)] = Seq.empty)
     extends MicroBatchStream {
 

@@ -9,30 +9,18 @@ import org.apache.spark.sql.catalyst.rules.Rule
  * `FROM 'roads.shp'` resolve through ST_Read). Spark's grammar spells it with
  * backticks — `` SELECT * FROM `/data/roads.shp` `` — and the parser splits
  * unquoted dotted names, so the rule re-joins the identifier parts and only
- * fires when the joined name has a known geo extension AND exists on disk;
- * real catalog tables can never be shadowed by a non-existent path.
+ * fires when the joined name has the extension of a format that declares
+ * bare paths (generic tabular and JSON extensions do not) AND exists on
+ * disk; real catalog tables can never be shadowed by a non-existent path.
  */
 object BarePathRelationRule extends Rule[LogicalPlan] {
-  private def isGeoPath(name: String): Boolean = {
-    val l = name.toLowerCase
-    l.endsWith(".shp") || l.endsWith(".geojson") || l.endsWith(".ndjson") ||
-      l.endsWith(".geojsonl") || l.endsWith(".fgb") || l.endsWith(".gpkg") ||
-      l.endsWith(".kml") || l.endsWith(".gpx") || l.endsWith(".gml") ||
-      l.endsWith(".kmz") || l.endsWith(".mif") || l.endsWith(".rss") || l.endsWith(".dxf") ||
-      l.endsWith(".topojson") || l.endsWith(".esrijson") || l.endsWith(".mvt") ||
-      l.endsWith(".gmt") || l.endsWith(".osm.pbf")
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case u: UnresolvedRelation =>
       val joined = u.multipartIdentifier.mkString(".")
       val onDisk = joined.stripPrefix("file:")
-      if (isGeoPath(joined) && new java.io.File(onDisk).isFile) {
-        val paths = graft.io.GeoFiles.expand(onDisk)
-        val fmt = graft.io.GeoFiles.formatOf(paths, None)
-        val schema = graft.io.GeoFiles.schemaFor(fmt, paths)
+      if (graft.io.GeoFormat.byExtension(joined).exists(_.barePath) && new java.io.File(onDisk).isFile)
         org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
-          new graft.io.GeoTable(schema, paths, fmt), None, None)
-      } else u
+          graft.io.GeoSource(Seq(onDisk)).table(), None, None)
+      else u
   }
 }

@@ -34,7 +34,7 @@ class BboxSkippingRule(spark: SparkSession) extends Rule[LogicalPlan] with Predi
       // predicate's envelope; the exact predicate stays as residual filter
       case f @ Filter(cond, r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation)
           if r.table.isInstanceOf[graft.io.GeoTable] &&
-            r.table.asInstanceOf[graft.io.GeoTable].format == "flatgeobuf" &&
+            r.table.asInstanceOf[graft.io.GeoTable].format.bboxIndex &&
             r.table.asInstanceOf[graft.io.GeoTable].bbox.isEmpty =>
         val windows = splitConjunctivePredicates(cond).flatMap(constWindow(_, r))
         if (windows.isEmpty) f

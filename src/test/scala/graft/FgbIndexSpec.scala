@@ -81,12 +81,12 @@ class FgbIndexSpec extends AnyFunSuite with TempDirs {
     val full = FlatGeobuf.readFeatures(s"$dir/pts.fgb").map(_.properties("fid")).toSeq
     assert(viaRanges.size == 8000 && viaRanges.sorted == full.sorted)
     // Spark scan picks up the splits once the target drops below file size
-    spark.conf.set("spark.graft.fgb.splitBytes", (64 << 10).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (64 << 10).toString)
     try {
       val scan = spark.read.format("geo").load(s"$dir/pts.fgb")
       assert(scan.rdd.getNumPartitions > 2, s"partitions=${scan.rdd.getNumPartitions}")
       assert(scan.count() == 8000)
-    } finally spark.conf.unset("spark.graft.fgb.splitBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("SQL bbox filter pushes the window into the fgb scan") {

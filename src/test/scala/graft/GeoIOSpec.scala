@@ -130,14 +130,14 @@ class GeoIOSpec extends AnyFunSuite with TempDirs {
     assert(whole.length == 500)
 
     // force ~tiny ranges: every line straddles or abuts a split boundary somewhere
-    spark.conf.set("spark.graft.jsonl.splitBytes", "257")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "257")
     try {
       val split = readAll()
       assert(split == whole)
       // and the plan really did split into many partitions
       val n = spark.read.format("geo").load(s"$dir/many.geojsonl").rdd.getNumPartitions
       assert(n > 10, s"expected many range partitions, got $n")
-    } finally spark.conf.unset("spark.graft.jsonl.splitBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   // ------------------------------------------------------------- OSM PBF fixture
@@ -399,6 +399,29 @@ class GeoIOSpec extends AnyFunSuite with TempDirs {
     val shp = new java.io.File(out).listFiles().filter(_.getName.endsWith(".shp")).head.getAbsolutePath
     val r = spark.sql(s"SELECT id, st_astext(geom) AS wkt FROM `$shp`").collect()(0)
     assert(r.getLong(0) == 1L && r.getString(1) == "POINT (7 8)")
+    // every extension of a bare-path format resolves, a trailing .gz of a
+    // text format too
+    val rss = """<?xml version="1.0"?><rss version="2.0" xmlns:georss="http://www.georss.org/georss">
+      |<channel><item><title>a</title><georss:point>8 7</georss:point></item></channel></rss>""".stripMargin
+    val atom = """<?xml version="1.0"?><feed xmlns="http://www.w3.org/2005/Atom"
+      |xmlns:georss="http://www.georss.org/georss"><entry><title>a</title>
+      |<georss:point>8 7</georss:point></entry></feed>""".stripMargin
+    Files.writeString(Paths.get(s"$dir/bare.atom"), atom)
+    Files.writeString(Paths.get(s"$dir/bare.georss"), rss)
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(Paths.get(s"$dir/bare.geojsonl.gz")))
+    try gz.write(
+      """{"type":"Feature","geometry":{"type":"Point","coordinates":[7,8]},"properties":{}}""".getBytes("UTF-8"))
+    finally gz.close()
+    for (name <- Seq("bare.atom", "bare.georss", "bare.geojsonl.gz")) {
+      val wkt = spark.sql(s"SELECT st_astext(geom) FROM `$dir/$name`").collect().map(_.getString(0)).toSeq
+      assert(wkt == Seq("POINT (7 8)"), name)
+    }
+    // a generic tabular extension stays a table name
+    Files.writeString(Paths.get(s"$dir/bare.csv"), "id,wkt\n1,POINT (7 8)\n")
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql(s"SELECT * FROM `$dir/bare.csv`").collect()
+    }
+    assert(err.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), err.getMessage)
   }
 
   test("geopackage writer round-trips through the geopackage reader") {

@@ -104,6 +104,29 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("schema inference fetches only the first of several remote files") {
+    val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val files = (1 to 3).map(i => s"s$i.geojsonl" -> gjl(i)).toMap
+    withServer(files, requests.add(_)) { base =>
+      val schema = spark.read.format("geo")
+        .load(s"$base/s1.geojsonl", s"$base/s2.geojsonl", s"$base/s3.geojsonl").schema
+      assert(schema.fieldNames.contains("geom"))
+      val gets = requests.toArray.toSeq.map(_.toString).filter(_.startsWith("GET"))
+      assert(gets == Seq("GET s1.geojsonl"), gets)
+    }
+  }
+
+  test("a served .json is sniffed from its local copy") {
+    val topo = """{"type":"Topology","objects":{"o":{"type":"Point","coordinates":[1,2]}},"arcs":[]}"""
+    withServer(Map("t.json" -> topo.getBytes("UTF-8"))) { base =>
+      val meta = graft.io.GeoMeta.readMeta(spark, s"$base/t.json").selectExpr("driver").collect()
+      assert(meta(0).getString(0) == "topojson")
+      val wkt = spark.read.format("geo").load(s"$base/t.json").selectExpr("st_astext(geom)")
+        .collect().map(_.getString(0)).toSeq
+      assert(wkt == Seq("POINT (1 2)"))
+    }
+  }
+
   test("enable_external_access=false blocks remote reads") {
     withServer(Map("x.geojsonl" -> gjl(1))) { base =>
       spark.conf.set("enable_external_access", "false")
@@ -162,7 +185,7 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
     val budget = entry.length + 4096L + 100
     val previous = cache.rebound(budget)
     val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    spark.conf.set("spark.graft.jsonl.splitBytes", (entry.length / 16).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (entry.length / 16).toString)
     try withServer(Map("a.zip" -> zip), requests.add(_)) { base =>
       val misses = LruCache.counters("downloadCache.misses")
       val df = spark.read.format("geo").load(s"$base/a.zip!pts.geojsonl")
@@ -178,7 +201,7 @@ class HttpReadSpec extends AnyFunSuite with TempDirs {
       assert(LruCache.counters("downloadCache.bytes") <= budget)
     } finally {
       cache.rebound(previous)
-      spark.conf.unset("spark.graft.jsonl.splitBytes")
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }
   }
 }

@@ -53,6 +53,17 @@ class LayerSelectionSpec extends AnyFunSuite with TempDirs {
     assert(layers == Seq("roads", "pois"), layers.mkString(","))
   }
 
+  test("st_read_meta lists the layers of a zipped GeoPackage") {
+    val zip = tempDir("graft_layers_zip").resolve("x.zip")
+    val zo = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(zip))
+    zo.putNextEntry(new java.util.zip.ZipEntry("two.gpkg"))
+    zo.write(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(twoLayerGpkg)))
+    zo.closeEntry(); zo.close()
+    val layers = graft.io.GeoMeta.readMeta(spark, s"$zip!two.gpkg")
+      .selectExpr("layers").collect()(0).getSeq[String](0)
+    assert(layers == Seq("roads", "pois"), layers.mkString(","))
+  }
+
   test("kml: folders are layers; option('layer') restricts to one folder") {
     val dir = tempDir("graft_layers_kml")
     val p = dir.resolve("f.kml")
