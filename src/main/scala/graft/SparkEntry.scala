@@ -81,67 +81,103 @@ object SparkEntry {
       s.sql(sql)
     }
 
-  /** Registers each table of `dir` as a temp view of `s`. The built relation
-    * (read, fanned out to the cores, ts-normalized) comes from one bounded
-    * map, `fixtures`, keyed by (session, dir, table, useCache, data
-    * signature): a table whose leaf files are unchanged is not read again
-    * (no Spark file index or schema-inference job), and a rewritten one gets a
-    * new key, is read afresh, and drops its stale entries. The same map
-    * entry is what `spark.graft.fixtureCache.enabled` persists; with the
-    * flag off (the default) nothing is persisted, so every execution still
-    * scans every input row. */
+  /** Registers each table of `dir` as a temp view of `s` (see `fixture`). */
   private def registerFixtures(s: SparkSession, dir: String, useCache: Boolean,
       tables: Seq[String]): Unit = {
-      Graft.register(s)
-      // Driver fixtures have shipped events.ts both as TIMESTAMP(NANOS)
-      // (readable only as epoch-nanos LongType via this legacy conf) and as
-      // plain timestamp[us]. Accept either: read nanos as long, then
-      // normalize below so every query sees one canonical TimestampType.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Optional per-session fixture cache (spark.graft.fixtureCache
-      // .enabled, default false): persist the fanned table once so the
-      // 150+ bench queries stop re-paying the same parquet scan + fan-out
-      // shuffle — pure Spark job-floor amortization, identical results.
-      // HARD byte budget (fixtureCache.maxBytes, default 32 MB on-disk
-      // per table), for two measured reasons. (1) Memory: cached blocks
-      // live inside the protected storageFraction half of unified memory,
-      // so an over-eager persist does not spill harmlessly — it starves
-      // execution memory for the buffer-heavy queries (sf100's 2.6 GB
-      // orders cached "because it was under-split" OOMed q_cluster_agg's
-      // aggregation 40 queries later). (2) Decode crossover: the columnar
-      // cache re-decodes strings/float-arrays per scan, and above tens of
-      // MB that costs more than parquet's vectorized reader — sf10's
-      // 51-57 MB embeddings/documents cached made q_semdedup 5× slower.
-      // At 32 MB every sf0.1 table still caches (the job-floor win the
-      // cache exists for) and the sf10+ mid-size tables scan parquet.
-      // Bench turns the cache on; Verify and the correctness gate keep the
-      // default read-every-time path.
-      val maxCacheBytes =
-        s.conf.get("spark.graft.fixtureCache.maxBytes", (32L << 20).toString).toLong
-      // lenient flag parse: accept 1/0 alongside true/false (the env
-      // override documents SPARK_GRAFT_CACHE_FIXTURES=0; "0".toBoolean
-      // throws)
-      val cacheFlag = s.conf.get("spark.graft.fixtureCache.enabled", "false")
-      val persist = useCache && (cacheFlag.equalsIgnoreCase("true") || cacheFlag == "1")
-      tables.foreach { t =>
-        val path = s"$dir/$t.parquet"
-        val files = leafFiles(new java.io.File(path))
-        // Data signature: lengths + mtimes of the leaf files catch any
-        // rewrite (same-size same-mtime replacement is below filesystem
-        // resolution), so a path rewritten mid-session never serves the
-        // stale relation or its persisted rows.
-        val dataSig = files.foldLeft(17L)((h, f) =>
-          h * 1000003L + f.length * 31L + f.lastModified)
-        val df = fixtures.getOrElseUpdate((s, dir, t, useCache, dataSig)) {
-          fixtures.removeIf(k => k._1 == s && k._2 == dir && k._3 == t && k._4 == useCache)
-          buildFixture(s, path, useCache, files)
-        }
-        if (persist && files.map(_.length).sum <= maxCacheBytes &&
-            df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.createOrReplaceTempView(t)
-      }
+    Graft.register(s)
+    tables.foreach(t => fixture(s, dir, t, useCache).createOrReplaceTempView(t))
+  }
+
+  /** Table `t` of `dir` as every catalog query reads it. The built relation
+    * (read, fanned out when that pays, ts-normalized) comes from one bounded
+    * map, `fixtures`, keyed by (session, dir, table, useCache, persisted,
+    * fanned out, data signature): a table whose leaf files are unchanged is
+    * not read again (no Spark file index or schema-inference job), and a
+    * rewritten one gets a new key, is read afresh, and drops its stale
+    * entries. The persisted entry is what `spark.graft.fixtureCache.enabled`
+    * keeps; with the flag off (the default) nothing is persisted, so every
+    * execution still scans every input row.
+    *
+    * An under-split table is fanned out to the cores (a round-robin
+    * exchange, `defaultParallelism` wide) only when the shuffle pays:
+    *  - paid once: the table is persisted, so every later query reads the
+    *    fanned blocks; or
+    *  - big enough: its leaf files total at least
+    *    `spark.sql.files.openCostInBytes` (4 MB), the size below which
+    *    Spark's file planner (and `GeoScan`'s) never splits a file.
+    * Every other table is read as it lies: on a small table the fan-out is
+    * a serial one-task stage of its own that costs more than it spreads
+    * (28-30 % of a 0.4-0.55 s transform query on 4 cores), and the engine's
+    * own exchanges
+    * (tile join, aggregation, `SortProjectDeferRule`'s range exchange)
+    * spread the work over the cores after the scan anyway. Both decisions
+    * are part of the key, so flipping the cache flag (or the open cost)
+    * within a session builds the other entry and drops, and unpersists,
+    * this one: a table read as it lies is never the one persisted. */
+  private def fixture(s: SparkSession, dir: String, t: String,
+      useCache: Boolean): DataFrame = {
+    // Driver fixtures have shipped events.ts both as TIMESTAMP(NANOS)
+    // (readable only as epoch-nanos LongType via this legacy conf) and as
+    // plain timestamp[us]. Accept either: read nanos as long, then
+    // normalize below so every query sees one canonical TimestampType.
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Optional per-session fixture cache (spark.graft.fixtureCache
+    // .enabled, default false): persist the fanned table once so the
+    // 150+ bench queries stop re-paying the same parquet scan + fan-out
+    // shuffle — pure Spark job-floor amortization, identical results.
+    // HARD byte budget (fixtureCache.maxBytes, default 32 MB on-disk
+    // per table), for two measured reasons. (1) Memory: cached blocks
+    // live inside the protected storageFraction half of unified memory,
+    // so an over-eager persist does not spill harmlessly — it starves
+    // execution memory for the buffer-heavy queries (sf100's 2.6 GB
+    // orders cached "because it was under-split" OOMed q_cluster_agg's
+    // aggregation 40 queries later). (2) Decode crossover: the columnar
+    // cache re-decodes strings/float-arrays per scan, and above tens of
+    // MB that costs more than parquet's vectorized reader — sf10's
+    // 51-57 MB embeddings/documents cached made q_semdedup 5× slower.
+    // At 32 MB every sf0.1 table still caches (the job-floor win the
+    // cache exists for) and the sf10+ mid-size tables scan parquet.
+    // Bench turns the cache on; Verify and the correctness gate keep the
+    // default read-every-time path.
+    val maxCacheBytes =
+      s.conf.get("spark.graft.fixtureCache.maxBytes", (32L << 20).toString).toLong
+    // lenient flag parse: accept 1/0 alongside true/false (the env
+    // override documents SPARK_GRAFT_CACHE_FIXTURES=0; "0".toBoolean
+    // throws)
+    val cacheFlag = s.conf.get("spark.graft.fixtureCache.enabled", "false")
+    val path = s"$dir/$t.parquet"
+    val files = leafFiles(new java.io.File(path))
+    val bytes = files.map(_.length).sum
+    val persist = useCache && (cacheFlag.equalsIgnoreCase("true") || cacheFlag == "1") &&
+      bytes <= maxCacheBytes
+    // Under-split: the shipped testdata is single-row-group parquet (one
+    // scan task no matter the split config) and GenScale scale points
+    // ship ~80 MB single-row-group part files (one task per file — 16
+    // tasks on 32 cores at sf10). Parquet can't split inside a row group,
+    // so estimate the EFFECTIVE task count as sum(ceil(file/128MB)) over
+    // leaf files. Below 3 waves: barely-above-core split counts are the
+    // worst case (33 single-row-group parts on 32 cores = one task
+    // straggling alone in wave 2 — measured 1.6-2x on kernel-bound
+    // queries). At real scale inputs carry plenty of row groups (sf100's
+    // ~870 MB parts yield ~112 splits) and this never fires.
+    val rowGroup = 128L << 20
+    val effSplits = files.map(f => math.max(1L, (f.length + rowGroup - 1) / rowGroup)).sum
+    val fanOut = effSplits < 3L * s.sparkContext.defaultParallelism &&
+      (persist || bytes >= s.sessionState.conf.filesOpenCostInBytes)
+    // Data signature: lengths + mtimes of the leaf files catch any
+    // rewrite (same-size same-mtime replacement is below filesystem
+    // resolution), so a path rewritten mid-session never serves the
+    // stale relation or its persisted rows.
+    val dataSig = files.foldLeft(17L)((h, f) =>
+      h * 1000003L + f.length * 31L + f.lastModified)
+    val df = fixtures.getOrElseUpdate((s, dir, t, useCache, persist, fanOut, dataSig)) {
+      fixtures.removeIf(k => k._1 == s && k._2 == dir && k._3 == t && k._4 == useCache)
+      buildFixture(s, path, useCache, fanOut)
     }
+    if (persist && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df
+  }
 
   /** Leaf data files under `f`, skipping what Hadoop's default PathFilter
     * skips: '_' (committer markers) and '.' (hidden + local-FS .crc checksum
@@ -154,10 +190,12 @@ object SparkEntry {
       k.getName.startsWith(".")).flatMap(leafFiles)
   }
 
-  /** One fixture table read from `path` (with leaf `files`), fanned out and
-    * ts-normalized. */
+  /** One fixture table read from `path`, ts-normalized, and fanned out to
+    * the cores when `fanOut`: `fixture` sets it for an under-split table
+    * only when the shuffle pays, because the table is persisted or its
+    * files total at least `spark.sql.files.openCostInBytes`. */
   private def buildFixture(s: SparkSession, path: String, useCache: Boolean,
-      files: Seq[java.io.File]): DataFrame = {
+      fanOut: Boolean): DataFrame = {
     // An uncached read must not only skip persist() — CacheManager
     // substitutes ANY analyzed subtree that canonically matches a
     // persisted plan, so a plain re-read of the same path would still be
@@ -169,31 +207,7 @@ object SparkEntry {
     val df =
       if (useCache) s.read.parquet(path)
       else s.read.option("graft.fixtureCache.bypass", "true").parquet(path)
-    // Fan out under-split inputs to the cores: the shipped testdata is
-    // single-row-group parquet (one scan task no matter the split
-    // config) and GenScale scale points ship ~80 MB single-row-group
-    // part files (one task per file — 16 tasks on 32 cores at sf10).
-    // Parquet can't split inside a row group, so estimate the EFFECTIVE
-    // task count as sum(ceil(file/128MB)) over leaf files and shuffle
-    // only when it undershoots the core count. At real scale inputs
-    // carry plenty of row groups and this never fires — e.g. sf100's
-    // ~870 MB parts yield ~112 splits, and the earlier total-bytes
-    // check (which read File.length on a DIRECTORY — the ~4 KB inode
-    // size) made every sf100 query pay a useless 13 GB shuffle first.
-    // Fan below 3 waves: barely-above-core split counts are the worst
-    // case (33 single-row-group parts on 32 cores = one task straggling
-    // alone in wave 2 — measured 1.6-2x on kernel-bound queries), so
-    // require enough splits that waves amortize stragglers before
-    // trusting the source layout. At real scale splits >> 3x cores and
-    // this never fires.
-    val rowGroup = 128L << 20
-    val effSplits = files
-      .map(f => math.max(1L, (f.length + rowGroup - 1) / rowGroup)).sum
-    val fanned =
-      if (effSplits < 3L * s.sparkContext.defaultParallelism)
-        df.repartition(s.sparkContext.defaultParallelism)
-      else df
-    normalizeEventTs(fanned)
+    normalizeEventTs(if (fanOut) df.repartition(s.sparkContext.defaultParallelism) else df)
   }
 
   // The fixture map (see registerFixtures). LRU-bounded: a long-lived JVM
@@ -202,8 +216,8 @@ object SparkEntry {
   // Eviction UNPERSISTS a persisted entry: removing only the map reference
   // leaves the blocks pinned in the live session's CacheManager, so the
   // bound would not actually cap storage memory.
-  private val fixtures = new LruCache[(SparkSession, String, String, Boolean, Long), DataFrame](
-    "fixture", 64, df =>
+  private val fixtures = new LruCache[
+    (SparkSession, String, String, Boolean, Boolean, Boolean, Long), DataFrame]("fixture", 64, df =>
       try {
         if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
           df.unpersist(blocking = false)
@@ -313,10 +327,7 @@ object SparkEntry {
    *  keeps the pair set small enough to pin in the oracle. Bucketed
    *  equi-join — never all-pairs. */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
-    Graft.register(s)
-    s.read.parquet(s"$dir/documents.parquet")
-      .repartition(s.sparkContext.defaultParallelism)
-      .createOrReplaceTempView("documents")
+    registerFixtures(s, dir, useCache = true, Seq("documents"))
     val sigs = s.sql("""
       SELECT doc_id, char_shingles(text, 5) AS sh,
              minhash_lsh_buckets(text, 64, 5, 16, 42) AS bs
@@ -1454,9 +1465,7 @@ object SparkEntry {
     // JOIN over the same parquet.
     "q_asof_join" -> ((s: SparkSession, dir: String) => {
       Graft.register(s)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = normalizeEventTs(s.read.parquet(s"$dir/events.parquet"))
-        .repartition(s.sparkContext.defaultParallelism)
+      val ev = fixture(s, dir, "events", useCache = false)
       val markers = ev.where("event_type = 'purchase'")
         .selectExpr("user_id", "ts", "event_id AS mid", "value AS mval")
       graft.operators.AsofJoin.asof(ev, markers, Seq("user_id"), "ts", "ts",
@@ -1484,10 +1493,7 @@ object SparkEntry {
     // squared distance is integer-exact after the sqrt→square round trip, so
     // the oracle is plain integer arithmetic + row_number.
     "q_knn_join" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-        .createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       // ($K collides in the synthetic lineitem) → DISTINCT pid, coords derived
       // from the pid itself so every probe id is unique
       val probe = s.sql(s"""
@@ -1508,10 +1514,7 @@ object SparkEntry {
     // oracle as q_knn_join: identical (distance, id) tie rule, so the exact
     // row set must match the broadcast formulation's.
     "q_knn_tiled" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism)
-        .createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val probe = s.sql(s"""
         SELECT id,
                st_aswkb(st_point(CAST((id * 3) % 997 AS DOUBLE), CAST((id * 7) % 983 AS DOUBLE))) AS g
@@ -2055,9 +2058,7 @@ object SparkEntry {
     // Oracle unrolls the same four rounds in SQL.
     "q_bpe" -> ((s: SparkSession, dir: String) => {
       Graft.register(s)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .where("doc_id < 120")
-        .repartition(s.sparkContext.defaultParallelism)
+      val docs = fixture(s, dir, "documents", useCache = false).where("doc_id < 120")
       graft.operators.BpeTrainer.learnMerges(s, docs, "text", rounds = 4)
         .selectExpr("CAST(round AS INT) AS round", "p1", "p2", "CAST(cnt AS BIGINT) AS cnt")
         .orderBy("round")
@@ -2067,9 +2068,8 @@ object SparkEntry {
     // and independently verified — the oracle replays the same four replaces
     "q_bpe_encode" -> ((s: SparkSession, dir: String) => {
       Graft.register(s)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = fixture(s, dir, "documents", useCache = false)
         .where("doc_id < 120").select("doc_id", "text")
-        .repartition(s.sparkContext.defaultParallelism)
       val merges = graft.operators.BpeTrainer
         .learnMerges(s, docs, "text", rounds = 4)
         .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -2316,9 +2316,11 @@ object SparkEntry {
           FROM corpus c CROSS JOIN cents t)
         SELECT vec_id, v, cid FROM scored WHERE rn = 1""")("""
       WITH dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM semdedup_assigned a JOIN semdedup_assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        WHERE vec_cosine(a.v, b.v) >= 0.9d)
+        SELECT DISTINCT vec_id
+        FROM (SELECT b.vec_id, vec_cosine(a.v, b.v) AS sim
+              FROM semdedup_assigned a JOIN semdedup_assigned b
+                ON a.cid = b.cid AND a.vec_id < b.vec_id)
+        WHERE sim >= 0.9d AND NOT isnan(sim))
       SELECT s.vec_id, s.cid
       FROM semdedup_assigned s LEFT ANTI JOIN dropped d ON s.vec_id = d.vec_id
       ORDER BY s.vec_id"""),
@@ -2601,9 +2603,7 @@ object SparkEntry {
     // id-derived integers, so the oracle is plain lineitem arithmetic;
     // fixture generation collects ≤1k driver rows (test plumbing).
     "q_vsizip_roundtrip" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism).createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val ids = s.sql(s"SELECT DISTINCT $K AS id FROM lineitem WHERE l_orderkey % 101 = 0")
         .collect().map(_.getLong(0)).sorted
       val zipPath = java.nio.file.Paths.get(
@@ -2661,9 +2661,7 @@ object SparkEntry {
     // path — URL partitioning, per-executor localization, and the geojsonl
     // decode all under the oracle. Reference: test/sql/gdal/gdal_vsi.test.
     "q_http_read" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism).createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val ids = s.sql(s"SELECT DISTINCT $K AS id FROM lineitem WHERE l_orderkey % 103 = 0")
         .collect().map(_.getLong(0)).sorted
       val sb = new StringBuilder
@@ -2683,9 +2681,7 @@ object SparkEntry {
     // keep_wkb slice that mangled byte order, header offsets, or envelope
     // flags would hash-mismatch here.
     "q_gpkg_keepwkb" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism).createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val src = s.sql(s"""
         SELECT id AS k,
                st_aswkb(st_point(CAST((id * 13) % 983 AS DOUBLE), CAST((id * 17) % 991 AS DOUBLE))) AS geom
@@ -2708,9 +2704,7 @@ object SparkEntry {
     // envelope-only implementation (which would keep y > x points inside
     // the box) hash-mismatches.
     "q_spatial_filter" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism).createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val ids = s.sql(s"SELECT DISTINCT $K AS id FROM lineitem WHERE l_orderkey % 109 = 0")
         .collect().map(_.getLong(0)).sorted
       val sb = new StringBuilder
@@ -2732,9 +2726,7 @@ object SparkEntry {
     // into feature tables via geopackageLayers; st_read(path, layer) reads
     // ONE of them back. Oracle = the odd-id half of the same arithmetic.
     "q_gpkg_layers" -> ((s: SparkSession, dir: String) => {
-      Graft.register(s)
-      s.read.parquet(s"$dir/lineitem.parquet")
-        .repartition(s.sparkContext.defaultParallelism).createOrReplaceTempView("lineitem")
+      registerFixtures(s, dir, useCache = true, Seq("lineitem"))
       val src = s.sql(s"""
         SELECT CASE WHEN id % 2 = 0 THEN 'evens' ELSE 'odds' END AS layer,
                id AS k,
@@ -5875,10 +5867,12 @@ $minhashPairPins) v(da, db, j)
         FROM corpus c CROSS JOIN cents t),
       assigned AS (SELECT vec_id, v, cid FROM scored WHERE rn = 1),
       dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.9)
+        SELECT DISTINCT vec_id
+        FROM (SELECT b.vec_id,
+                     list_dot_product(a.v, b.v)
+                       / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS sim
+              FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id)
+        WHERE sim >= 0.9 AND NOT isnan(sim))
       SELECT s.vec_id, s.cid
       FROM assigned s
       WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.vec_id = s.vec_id)
@@ -5902,10 +5896,12 @@ $minhashPairPins) v(da, db, j)
         FROM corpus c CROSS JOIN cents t),
       assigned AS (SELECT vec_id, v, cid FROM scored WHERE rn = 1),
       dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.9)
+        SELECT DISTINCT vec_id
+        FROM (SELECT b.vec_id,
+                     list_dot_product(a.v, b.v)
+                       / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS sim
+              FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.vec_id < b.vec_id)
+        WHERE sim >= 0.9 AND NOT isnan(sim))
       SELECT s.vec_id, s.cid
       FROM assigned s
       WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.vec_id = s.vec_id)

@@ -584,7 +584,7 @@ object GeoFiles {
     * `to` belongs to the range that contains its first byte. Byte-counted on
     * the raw stream ('\n' = 0x0A never occurs inside a UTF-8 multibyte
     * sequence), so ranges compose exactly regardless of character content. */
-  def lineRange(path: String, from: Long, until: Long): Iterator[String] = {
+  def lineRange(path: String, from: Long, until: Long): Iterator[String] with java.io.Closeable = {
     val fis = new java.io.FileInputStream(path)
     // start one byte early and always skip through the first '\n': if byte
     // from-1 IS a newline, only that byte is consumed and the line starting
@@ -599,7 +599,7 @@ object GeoFiles {
       while (b != -1 && b != '\n') { pos += 1; b = in.read() }
       if (b != -1) pos += 1
     }
-    new Iterator[String] {
+    new Iterator[String] with java.io.Closeable {
       private var nextLine: String = null
       private var closed = false
       private def advance(): Unit = {
@@ -614,7 +614,7 @@ object GeoFiles {
         val n = if (bytes.nonEmpty && bytes(bytes.length - 1) == '\r') bytes.length - 1 else bytes.length
         nextLine = new String(bytes, 0, n, java.nio.charset.StandardCharsets.UTF_8)
       }
-      private def close(): Unit = { closed = true; try in.close() catch { case _: Exception => } }
+      override def close(): Unit = { closed = true; try in.close() catch { case _: Exception => } }
       override def hasNext: Boolean = { advance(); nextLine != null }
       override def next(): String = {
         advance()
@@ -862,17 +862,21 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: G
     // zip-virtual and remote paths localize HERE — on the executor that owns
     // the partition — and the copy stays on disk until the reader closes
     val held = GeoFiles.open(partition.path)
-    val rows = try read(partition, held.path) catch { case e: Throwable => held.close(); throw e }
+    var fmtRead: GeoRead = null
+    def closeAll(): Unit = try if (fmtRead != null) fmtRead.close() finally held.close()
+    val rows = try read(partition, held.path, fmtRead = _) catch { case e: Throwable => closeAll(); throw e }
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = { if (rows.hasNext) { current = rows.next(); true } else false }
       override def get(): InternalRow = current
-      override def close(): Unit = held.close()
+      override def close(): Unit = closeAll()
     }
   }
 
-  /** The rows of `partition`, whose file is at `local`. */
-  private def read(partition: GeoPartition, local: String): Iterator[InternalRow] = {
+  /** The rows of `partition`, whose file is at `local`; `started` sees the
+    * format's read, whose streams the partition reader closes. */
+  private def read(partition: GeoPartition, local: String,
+      started: GeoRead => Unit): Iterator[InternalRow] = {
     // format readers see DATA columns only; Hive-style partition columns are
     // appended afterwards as per-file constants parsed from the path
     val partNames = partCols.map(_._1).toSet
@@ -896,7 +900,9 @@ class GeoReaderFactory(fullSchema0: StructType, required0: StructType, format: G
         else (StructType(required1.fields :+ fullSchema(geomName)), required1.length, true)
       case _ => (required1, -1, false)
     }
-    val rows0 = format.rows(local, partition.split, GeoRead(fullSchema, required, layer, opts, bbox))
+    val fmtRead = GeoRead(partition.path, fullSchema, required, layer, opts, bbox)
+    started(fmtRead)
+    val rows0 = format.rows(local, partition.split, fmtRead)
     val rows0b: Iterator[InternalRow] =
       if (bboxGeomIdx < 0) rows0
       else {

@@ -4,10 +4,18 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 
-/** What one partition reader asks of its format: the table's data columns,
-  * the ones the query reads, and the scan's layer, options and window. */
-final case class GeoRead(fullSchema: StructType, required: StructType, layer: Option[String],
-                         opts: GeoReadOptions, bbox: Option[(Double, Double, Double, Double)])
+/** What one partition reader asks of its format: the path as planned
+  * (remote, zip-virtual or local), the table's data columns, the ones the
+  * query reads, and the scan's layer, options and window. A format that
+  * opens a stream its rows read lazily registers it with [[closing]]; the
+  * partition reader closes it, whether or not the rows were read to the end. */
+final case class GeoRead(path: String, fullSchema: StructType, required: StructType,
+                         layer: Option[String], opts: GeoReadOptions,
+                         bbox: Option[(Double, Double, Double, Double)]) {
+  private val opened = scala.collection.mutable.ArrayBuffer.empty[java.io.Closeable]
+  def closing[C <: java.io.Closeable](c: C): C = { opened += c; c }
+  def close(): Unit = opened.foreach(c => try c.close() catch { case _: java.io.IOException => })
+}
 
 /**
  * One readable spatial format, with everything the reader, `st_read_meta`,
@@ -116,22 +124,21 @@ object GeoFormat {
   object GeoJson extends GeoFormat("geojson", Seq(".geojson"),
       "GeoJSON FeatureCollection (RFC 7946; single-document writer)", gz = true) {
     def schema(local: String, layer: Option[String], opts: GeoReadOptions): StructType =
-      promotedSchema(GeoJsonFile.streamDocument(GeoFiles.textReader(local)))
+      promotedSchema(local)(GeoJsonFile.streamDocument)
     // stream the FeatureCollection: a multi-GB document must not be
     // materialized as one String/byte[]
     def rows(local: String, split: Array[Long], read: GeoRead): Iterator[InternalRow] =
-      GeoJsonFile.streamDocument(GeoFiles.textReader(local)).map(GeoRows.featureRow(_, read.required))
+      GeoJsonFile.streamDocument(read.closing(GeoFiles.textReader(local)))
+        .map(GeoRows.featureRow(_, read.required))
     override def crs(local: String): (String, GeoMeta.CrsDetail) = GeoMeta.Crs84
   }
 
   object GeoJsonl extends GeoFormat("geojsonl", Seq(".ndjson", ".geojsonl"),
       "Newline-delimited GeoJSON", gz = true) {
-    private def lines(local: String): Iterator[GeoJsonFile.Feature] = {
-      val br = GeoFiles.textReader(local)
+    private def lines(br: java.io.BufferedReader): Iterator[GeoJsonFile.Feature] =
       Iterator.continually(br.readLine()).takeWhile(_ != null).flatMap(GeoJsonFile.parseLine)
-    }
     def schema(local: String, layer: Option[String], opts: GeoReadOptions): StructType =
-      promotedSchema(lines(local))
+      promotedSchema(local)(lines)
     // newline-aligned byte ranges; a gzipped file is not seekable and stays
     // one task
     override def splits(path: String, layer: Option[String], maxBytes: => Long): Seq[Array[Long]] =
@@ -143,8 +150,8 @@ object GeoFormat {
         else (0L until len by step).map(s => Array(s, math.min(len, s + step)))
       }
     def rows(local: String, split: Array[Long], read: GeoRead): Iterator[InternalRow] =
-      (if (split.isEmpty) lines(local)
-       else GeoFiles.lineRange(local, split(0), split(1)).flatMap(GeoJsonFile.parseLine))
+      (if (split.isEmpty) lines(read.closing(GeoFiles.textReader(local)))
+       else read.closing(GeoFiles.lineRange(local, split(0), split(1))).flatMap(GeoJsonFile.parseLine))
         .map(GeoRows.featureRow(_, read.required))
     override def crs(local: String): (String, GeoMeta.CrsDetail) = GeoMeta.Crs84
   }
@@ -320,10 +327,18 @@ object GeoFormat {
     sniff = h => h.contains("\"geometryType\":\"esriGeometry") ||
       (h.contains("\"attributes\":") && !h.contains("\"properties\":")),
     canWrite = false)
-  // MVT layers are tile layers; z/x/y paths georeference to EPSG:3857
-  val mvt = new Features("mvt", Seq(".mvt"),
-    "Mapbox Vector Tiles 2.1 (protobuf command streams; z/x/y paths georeference to EPSG:3857; single-tile writer)",
-    Mvt.features, Mvt.layers)
+  // MVT layers are tile layers. A z/x/y path georeferences to EPSG:3857, so
+  // the rows read the planned path (whose local copy the partition reader
+  // holds): a zip entry's or a URL's copy does not keep the z/x/y directories.
+  object MvtTile extends GeoFormat("mvt", Seq(".mvt"),
+      "Mapbox Vector Tiles 2.1 (protobuf command streams; z/x/y paths georeference to EPSG:3857; single-tile writer)",
+      gz = true, layered = true) {
+    def schema(local: String, layer: Option[String], opts: GeoReadOptions): StructType =
+      GeoFiles.geojsonSchema
+    def rows(local: String, split: Array[Long], read: GeoRead): Iterator[InternalRow] =
+      Mvt.features(read.path, read.layer).map(GeoRows.featureRow(_, read.required))
+    override def layers(local: String): Seq[String] = Mvt.layers(local)
+  }
   val gmt = new Features("gmt", Seq(".gmt"),
     "GMT ASCII vectors (@G/@N/@T headers, @D attribute rows, @P/@H polygon ring markers; reader + writer)",
     (p, _) => Gmt.features(p))
@@ -353,7 +368,7 @@ object GeoFormat {
     * this object (for its constructor's defaults) before it is itself
     * complete, so a strict list would hold null for it. */
   lazy val all: Seq[GeoFormat] = Seq(Shp, GeoJson, GeoJsonl, Osm, Fgb, Gpkg, kml, gpx, gml, Csv, xlsx,
-    kmz, georss, Mif, dxf, topojson, esrijson, mvt, gmt, ods)
+    kmz, georss, Mif, dxf, topojson, esrijson, MvtTile, gmt, ods)
 
   // ------------------------------------------------------------- lookup
 
@@ -404,10 +419,13 @@ object GeoFormat {
     * property to a column): keys seen in a bounded head sample of the first
     * file become string columns after the stable fields, so `SELECT kind …`
     * works like the reference while `properties` map access stays intact. */
-  private def promotedSchema(sample: => Iterator[GeoJsonFile.Feature]): StructType = {
+  private def promotedSchema(local: String)(
+      features: java.io.BufferedReader => Iterator[GeoJsonFile.Feature]): StructType = {
     val keys = scala.collection.mutable.LinkedHashSet.empty[String]
-    try sample.take(200).foreach(f => keys ++= f.properties.keys)
-    catch { case scala.util.control.NonFatal(_) => }
+    try {
+      val r = GeoFiles.textReader(local)
+      try features(r).take(200).foreach(f => keys ++= f.properties.keys) finally r.close()
+    } catch { case scala.util.control.NonFatal(_) => }
     val reserved = Set("id", "geom", "properties")
     StructType(GeoFiles.geojsonSchema.fields ++
       keys.toSeq.filterNot(reserved).map(StructField(_, StringType)))

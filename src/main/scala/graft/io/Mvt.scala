@@ -262,10 +262,13 @@ object Mvt {
     case _ => None
   }
 
+  /** The features of the tile at `path` (as planned: local, zip entry or
+    * URL), in EPSG:3857 when the path carries a z/x/y address
+    * ([[tileAddress]]), else tile-local. */
   def features(path: String, layerSel: Option[String]): Iterator[GeoJsonFile.Feature] = {
     val bytes = GeoFiles.withLocal(path)(p =>
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.stripPrefix("file:"))))
-    val addr = tileAddress(path)
+    val addr = tileAddress(GeoFiles.unpinned(path))
     val layers0 = readTile(bytes)
     val layers = layerSel match {
       case Some(l) =>

@@ -8,9 +8,11 @@ import org.apache.spark.sql.expressions.Window
  * SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the embedding
  * space, then inside each cluster drop every vector whose cosine similarity
  * to an EARLIER vector (id order) is at least tau — the released
- * implementation's upper-triangular max rule. Rows with a null id are
- * dropped (as `KMeans.cluster` drops null coordinates), and every other row
- * is judged on its own: rows sharing an id neither drop nor shadow each other.
+ * implementation's upper-triangular max rule; a NaN similarity is never at
+ * least tau, so a vector with a NaN component drops no row. Rows with a null
+ * id are dropped (as `KMeans.cluster` drops null coordinates), and every
+ * other row is judged on its own: rows sharing an id neither drop nor shadow
+ * each other.
  *
  * Scale shape: one lazy plan with one shuffle. Each row picks its nearest
  * centroid by cosine with the `ivf_probe` kernel over the k centroids sorted
@@ -69,10 +71,14 @@ object SemDeDup {
           F.ceil(F.col("__sem_n") / maxClusterSize).cast("int"))))
 
     // per cell, keep each member no earlier member is tau-similar to; the
-    // window's partitioning by cid already clusters the cells
+    // window's partitioning by cid already clusters the cells. Spark ranks
+    // NaN above every number, so a NaN similarity must be excluded by name
+    // or one NaN vector would drop every later row of its cell.
     val members = F.col("__sem_m")
-    val survivors = F.filter(members, x => !F.exists(members, y =>
-      F.coalesce(y("id") < x("id") && F.call_function("vec_cosine", y("v"), x("v")) >= tau, F.lit(false))))
+    val survivors = F.filter(members, x => !F.exists(members, y => {
+      val sim = F.call_function("vec_cosine", y("v"), x("v"))
+      F.coalesce(y("id") < x("id") && sim >= tau && !F.isnan(sim), F.lit(false))
+    }))
     celled.groupBy("__sem_cid", "__sem_sub")
       .agg(F.collect_list(F.struct(F.col("__sem_id").as("id"), F.col("__sem_v").as("v"))).as("__sem_m"))
       .select(F.explode(survivors).as("__sem_x"), F.col("__sem_cid"))

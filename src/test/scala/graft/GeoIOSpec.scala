@@ -473,4 +473,32 @@ class GeoIOSpec extends AnyFunSuite with TempDirs {
     assert(pieced == full, "subtree union must equal the full scan in rowid order")
     assert(full.size == 2000)
   }
+
+  test("schema inference and reads close every file they open") {
+    val fd = new java.io.File("/proc/self/fd")
+    assume(fd.isDirectory, "NOT RUN: no /proc/self/fd")
+    val feature = (i: Int) =>
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i,${i % 7}]},"properties":{"k":"$i"}}"""
+    val gj = Paths.get(s"$dir/fds.geojson")
+    Files.write(gj, (0 until 300).map(feature).mkString(
+      """{"type":"FeatureCollection","features":[""", ",", "]}").getBytes("UTF-8"))
+    val lines = (0 until 300).map(feature).mkString("", "\n", "\n").getBytes("UTF-8")
+    val gjl = Paths.get(s"$dir/fds.geojsonl")
+    Files.write(gjl, lines)
+    val zip = Paths.get(s"$dir/fds.zip")
+    val zo = new java.util.zip.ZipOutputStream(Files.newOutputStream(zip))
+    zo.putNextEntry(new java.util.zip.ZipEntry("pts.geojsonl")); zo.write(lines); zo.closeEntry(); zo.close()
+    val sources = Seq(gj.toString, gjl.toString, s"$zip!pts.geojsonl")
+    def load(p: String) = spark.read.format("geo").load(p)
+    def work(): Unit = {
+      (0 until 50).foreach(i => load(sources(i % 2)).schema)
+      sources.foreach(p => assert(load(p).count() == 300L, p))
+      assert(load(gjl.toString).limit(1).collect().length == 1)
+    }
+    work() // loads the classes and jars the reads use
+    val before = fd.list().length
+    work()
+    val after = fd.list().length
+    assert(math.abs(after - before) <= 2, s"open files $before -> $after")
+  }
 }

@@ -340,4 +340,28 @@ class MvtSpec extends AnyFunSuite with TempDirs {
       spark.read.format("geo").option("layer", "nope").load(p).collect())
     assert(err.getMessage.contains("nope") || err.getCause != null)
   }
+
+  test("a z/x/y tile keeps its address read plain, zipped and over HTTP") {
+    // tile-local (2048, 2048): the centre of tile 12/654/1583
+    val tile = lenField(3, varField(15, 2) ++ lenField(1, "t".getBytes("UTF-8")) ++
+      lenField(2, feature(1, Seq(9L, 4096L, 4096L))) ++ varField(5, 4096))
+    val plain = Paths.get(s"$dir/addr/12/654/1583.mvt")
+    Files.createDirectories(plain.getParent)
+    Files.write(plain, tile)
+    val zip = Paths.get(s"$dir/addr_tiles.zip")
+    val zo = new java.util.zip.ZipOutputStream(Files.newOutputStream(zip))
+    zo.putNextEntry(new java.util.zip.ZipEntry("12/654/1583.mvt")); zo.write(tile); zo.closeEntry(); zo.close()
+    val url = HttpFixtureServer.serve("12/654/1583.mvt", tile)
+    def xy(p: String): (Double, Double) = {
+      val r = spark.read.format("geo").load(p).selectExpr("st_x(geom)", "st_y(geom)").collect()(0)
+      (r.getDouble(0), r.getDouble(1))
+    }
+    val w = 2 * math.Pi * 6378137.0
+    val size = w / (1 << 12)
+    val (x, y) = xy(plain.toString)
+    assert(math.abs(x - (-w / 2 + 654.5 * size)) < 1e-6, s"$x")
+    assert(math.abs(y - (w / 2 - 1583.5 * size)) < 1e-6, s"$y")
+    assert(xy(s"$zip!12/654/1583.mvt") == ((x, y)))
+    assert(xy(url) == ((x, y)))
+  }
 }

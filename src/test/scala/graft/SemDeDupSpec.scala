@@ -50,7 +50,7 @@ private object SemDeDupReference {
     val dropped = a.join(b,
         F.col("ca") === F.col("cb") && F.col("sa") === F.col("sb") &&
           F.col("ia") < F.col("ib"))
-      .where(F.expr("vec_cosine(va, vb)") >= tau)
+      .where(F.expr("vec_cosine(va, vb)") >= tau && !F.isnan(F.expr("vec_cosine(va, vb)")))
       .select(F.col("ib").as("__sem_drop")).distinct()
 
     celled.join(dropped, celled("__sem_id") === dropped("__sem_drop"), "left_anti")
@@ -143,9 +143,10 @@ class SemDeDupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         FROM semdedup_spec_corpus c CROSS JOIN semdedup_spec_cents t),
       assigned AS (SELECT id, vec, cid FROM scored WHERE rn = 1),
       dropped AS (
-        SELECT DISTINCT b.id
-        FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.id < b.id
-        WHERE vec_cosine(a.vec, b.vec) >= ${tau}d)
+        SELECT DISTINCT id
+        FROM (SELECT b.id, vec_cosine(a.vec, b.vec) AS sim
+              FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.id < b.id)
+        WHERE sim >= ${tau}d AND NOT isnan(sim))
       SELECT s.id, s.cid FROM assigned s LEFT ANTI JOIN dropped d ON s.id = d.id""")
   }
 
@@ -234,6 +235,19 @@ class SemDeDupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(got == ref, ctx)
       if (cap >= n) assert(got == idCids(sqlDedup(emb, cs, tau)), s"$ctx (SQL)")
     }
+  }
+
+  test("a NaN similarity never drops a row, whatever tau") {
+    // k = 1 puts every row in one cell; tau = 2.0 is above any real cosine
+    val emb = embDf(Seq(
+      (Long.box(1L), Array(Double.NaN, 1.0, 0.0)),
+      (Long.box(2L), Array(1.0, 0.0, 0.0)),
+      (Long.box(3L), Array(1.0, 0.0, 0.0)),
+      (Long.box(4L), Array(Double.NaN, 0.0, 1.0))))
+    val one = Seq(0 -> Array(1.0, 1.0, 0.0))
+    val got = idCids(SemDeDup.dedup(emb, "id", "vec", one, tau = 2.0))
+    assert(got.map(_._1.longValue) == Seq(1L, 2L, 3L, 4L), got.toString)
+    assert(got == idCids(sqlDedup(emb, one, 2.0)))
   }
 
   test("differential: NaN centroid components and every similarity tied") {
