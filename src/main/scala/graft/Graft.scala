@@ -426,6 +426,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(spark => new graft.plans.SpatialJoinRule(spark))
     ext.injectOptimizerRule(spark => new graft.plans.RangeJoinRule(spark))
     ext.injectPlannerStrategy(spark => new graft.plans.GraftJoinStrategy(spark))
+    ext.injectPlannerStrategy(spark => new graft.plans.SinglePartitionScanStrategy(spark))
     ext.injectOptimizerRule(spark => new graft.plans.BboxSkippingRule(spark))
     ext.injectOptimizerRule(spark => new graft.plans.SaltedUnionAggRule(spark))
     ext.injectOptimizerRule(spark => new graft.plans.SortProjectDeferRule(spark))

@@ -81,11 +81,23 @@ object SparkEntry {
       s.sql(sql)
     }
 
-  /** Registers each table of `dir` as a temp view of `s` (see `fixture`). */
+  /** Registers each table of `dir` as a temp view of `s` (see `fixture`).
+    * `createOrReplaceTempView` runs an eager command, a SQL execution of its
+    * own, so a view is registered again only when the session's view of
+    * that name is not the very one registered here last over the same
+    * fixture: the fixture was rebuilt, or something else replaced the view
+    * (`q_semdedup_op` registers its own `embeddings`). */
   private def registerFixtures(s: SparkSession, dir: String, useCache: Boolean,
       tables: Seq[String]): Unit = {
     Graft.register(s)
-    tables.foreach(t => fixture(s, dir, t, useCache).createOrReplaceTempView(t))
+    val catalog = s.sessionState.catalog
+    tables.foreach { t =>
+      val f = fixtureEntry(s, dir, t, useCache)
+      if (!catalog.getRawTempView(t).exists(_ eq f.view)) {
+        f.df.createOrReplaceTempView(t)
+        f.view = catalog.getRawTempView(t).orNull
+      }
+    }
   }
 
   /** Table `t` of `dir` as every catalog query reads it. The built relation
@@ -107,15 +119,24 @@ object SparkEntry {
     *    Spark's file planner (and `GeoScan`'s) never splits a file.
     * Every other table is read as it lies: on a small table the fan-out is
     * a serial one-task stage of its own that costs more than it spreads
-    * (28-30 % of a 0.4-0.55 s transform query on 4 cores), and the engine's
-    * own exchanges
-    * (tile join, aggregation, `SortProjectDeferRule`'s range exchange)
-    * spread the work over the cores after the scan anyway. Both decisions
+    * (28-30 % of a 0.4-0.55 s transform query on 4 cores). A one-file
+    * table below the open cost is then one partition, and
+    * `SinglePartitionScanStrategy` plans it as one, so joins, aggregates,
+    * windows, sorts and tile joins over it run without an exchange; only
+    * `SortProjectDeferRule`'s per-core range exchange under a kernel-heavy
+    * ORDER BY spreads its rows over the cores. Both decisions
     * are part of the key, so flipping the cache flag (or the open cost)
     * within a session builds the other entry and drops, and unpersists,
     * this one: a table read as it lies is never the one persisted. */
-  private def fixture(s: SparkSession, dir: String, t: String,
-      useCache: Boolean): DataFrame = {
+  private def fixture(s: SparkSession, dir: String, t: String, useCache: Boolean): DataFrame =
+    fixtureEntry(s, dir, t, useCache).df
+
+  /** A built fixture relation, and the temp view `registerFixtures` last
+    * registered over it in its session. */
+  private final class Fixture(val df: DataFrame) { @volatile var view: AnyRef = null }
+
+  private def fixtureEntry(s: SparkSession, dir: String, t: String,
+      useCache: Boolean): Fixture = {
     // Driver fixtures have shipped events.ts both as TIMESTAMP(NANOS)
     // (readable only as epoch-nanos LongType via this legacy conf) and as
     // plain timestamp[us]. Accept either: read nanos as long, then
@@ -170,13 +191,13 @@ object SparkEntry {
     // stale relation or its persisted rows.
     val dataSig = files.foldLeft(17L)((h, f) =>
       h * 1000003L + f.length * 31L + f.lastModified)
-    val df = fixtures.getOrElseUpdate((s, dir, t, useCache, persist, fanOut, dataSig)) {
+    val f = fixtures.getOrElseUpdate((s, dir, t, useCache, persist, fanOut, dataSig)) {
       fixtures.removeIf(k => k._1 == s && k._2 == dir && k._3 == t && k._4 == useCache)
-      buildFixture(s, path, useCache, fanOut)
+      new Fixture(buildFixture(s, path, useCache, fanOut))
     }
-    if (persist && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
+    if (persist && f.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      f.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    f
   }
 
   /** Leaf data files under `f`, skipping what Hadoop's default PathFilter
@@ -217,10 +238,10 @@ object SparkEntry {
   // leaves the blocks pinned in the live session's CacheManager, so the
   // bound would not actually cap storage memory.
   private val fixtures = new LruCache[
-    (SparkSession, String, String, Boolean, Boolean, Boolean, Long), DataFrame]("fixture", 64, df =>
+    (SparkSession, String, String, Boolean, Boolean, Boolean, Long), Fixture]("fixture", 64, f =>
       try {
-        if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          df.unpersist(blocking = false)
+        if (f.df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+          f.df.unpersist(blocking = false)
       } catch { case _: Exception => }) // dead session: blocks already gone
 
   /** Schema-robustness shim for the `events` fixture: a LongType `ts` is

@@ -20,7 +20,9 @@ import org.locationtech.jts.geom._
  */
 object Dxf {
 
-  def features(path: String): Iterator[Feature] = {
+  /** The entities of the file at `path` (of `layer` only, when given), as a
+    * stream that closes the file when it drains or closes. */
+  def features(path: String, layer: Option[String] = None): GeoJsonFile.FeatureStream = {
     val br = GeoFiles.textReader(path)
     val fac = Geo.factory
 
@@ -34,7 +36,7 @@ object Dxf {
       (code, v.trim)
     }
 
-    new Iterator[Feature] {
+    val entities = new Iterator[Feature] {
       private var pendingF: Feature = null
       private var done = false
       private var inEntities = false
@@ -181,7 +183,7 @@ object Dxf {
             else p = nextPair()
           } else p = nextPair()
         }
-        if (pendingF == null) { done = true; try br.close() catch { case _: Exception => } }
+        if (pendingF == null) done = true
       }
       def hasNext: Boolean = { advance(); pendingF != null }
       def next(): Feature = {
@@ -189,5 +191,7 @@ object Dxf {
         val f = pendingF; pendingF = null; f
       }
     }
+    new GeoJsonFile.FeatureStream(() => br.close())(() =>
+      entities.find(f => layer.forall(f.properties.get("layer").contains)).orNull)
   }
 }

@@ -258,7 +258,7 @@ object GeoFormat {
       StructType(MapInfoMif.meta(local).columns.map(StructField(_, StringType)) :+
         StructField("geom", BinaryType))
     def rows(local: String, split: Array[Long], read: GeoRead): Iterator[InternalRow] =
-      MapInfoMif.features(local).map(GeoRows.featureRow(_, read.required))
+      read.closing(MapInfoMif.features(local)).map(GeoRows.featureRow(_, read.required))
   }
 
   object Csv extends GeoFormat("csvwkt", Seq(".csv"),
@@ -275,7 +275,8 @@ object GeoFormat {
   }
 
   /** A format whose rows are GeoJSON-shaped features (id, geom, properties);
-    * `layerNames` makes it layered. */
+    * `layerNames` makes it layered. A lazy reader returns a
+    * [[GeoJsonFile.FeatureStream]], which the partition reader closes. */
   final class Features(name: String, extensions: Seq[String], description: String,
       features: (String, Option[String]) => Iterator[GeoJsonFile.Feature],
       layerNames: String => Seq[String] = null, crs84: Boolean = false,
@@ -284,7 +285,10 @@ object GeoFormat {
     def schema(local: String, layer: Option[String], opts: GeoReadOptions): StructType =
       GeoFiles.geojsonSchema
     def rows(local: String, split: Array[Long], read: GeoRead): Iterator[InternalRow] =
-      features(local, read.layer).map(GeoRows.featureRow(_, read.required))
+      (features(local, read.layer) match {
+        case s: GeoJsonFile.FeatureStream => read.closing(s)
+        case eager => eager
+      }).map(GeoRows.featureRow(_, read.required))
     override def sniffs(compactHead: String): Boolean = sniff(compactHead)
     override def crs(local: String): (String, GeoMeta.CrsDetail) =
       if (crs84) GeoMeta.Crs84 else super.crs(local)
@@ -294,8 +298,11 @@ object GeoFormat {
 
   /** distinct values of one feature property, in first-seen order */
   private def distinct(property: String, features: String => Iterator[GeoJsonFile.Feature])(
-      local: String): Seq[String] =
-    features(local).flatMap(_.properties.get(property)).distinct.toSeq
+      local: String): Seq[String] = {
+    val fs = features(local)
+    try fs.flatMap(_.properties.get(property)).distinct.toSeq
+    finally fs match { case s: GeoJsonFile.FeatureStream => s.close(); case _ => }
+  }
 
   val kml = new Features("kml", Seq(".kml"),
     "OGC KML Placemarks (StAX streaming parse; Placemark/ExtendedData writer)",
@@ -315,8 +322,7 @@ object GeoFormat {
   // DXF layers are entity layer codes; the `layer` property always carries one
   val dxf = new Features("dxf", Seq(".dxf"),
     "AutoCAD DXF ASCII entities (point/line/lwpolyline/polyline/circle/arc/solid/text; entity writer)",
-    (p, layer) => layer.fold(Dxf.features(p))(l => Dxf.features(p).filter(_.properties.get("layer").contains(l))),
-    distinct("layer", Dxf.features))
+    Dxf.features, distinct("layer", Dxf.features(_)))
   // TopoJSON layers are named topology objects
   val topojson = new Features("topojson", Seq(".topojson"),
     "TopoJSON 1.0 topologies (shared delta-encoded arc table; objects as layers)",

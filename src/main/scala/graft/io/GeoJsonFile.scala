@@ -15,6 +15,29 @@ object GeoJsonFile {
 
   final case class Feature(id: String, geom: Geometry, properties: Map[String, String])
 
+  /** A lazy stream of features over open files: `step` returns the next
+    * feature, or null at the end. `release` runs once, when the stream
+    * drains or at an earlier [[close]]: a partition reader registers the
+    * stream with `GeoRead.closing`, so a read that stops early (a LIMIT)
+    * closes its files too. */
+  final class FeatureStream(release: () => Unit)(step: () => Feature)
+      extends Iterator[Feature] with java.io.Closeable {
+    private var pending: Feature = null
+    private var closed = false
+    def hasNext: Boolean = {
+      if (pending == null && !closed) {
+        pending = step()
+        if (pending == null) close()
+      }
+      pending != null
+    }
+    def next(): Feature = {
+      if (!hasNext) throw new NoSuchElementException("exhausted")
+      val f = pending; pending = null; f
+    }
+    def close(): Unit = if (!closed) { closed = true; release() }
+  }
+
   def parseDocument(text: String): Iterator[Feature] = {
     val t = text.trim
     if (t.isEmpty) Iterator.empty

@@ -114,25 +114,26 @@ object MapInfoMif {
       var t = next()
       while (t != null && !t.contains(")")) t = next()
     }
-    def close(): Unit = br.close()
   }
 
   private val styleKeys = Set("SYMBOL", "PEN", "BRUSH", "FONT")
 
-  def features(path: String): Iterator[Feature] = {
+  /** The objects of the `.mif` at `path` with their `.mid` attributes, as a
+    * stream that closes both files when it drains or closes. */
+  def features(path: String): GeoJsonFile.FeatureStream = {
     val m = meta(path)
     val fac = Geo.factory
-    val toks = new Tokens(GeoFiles.textReader(path))
-
     // MID attribute rows (may be absent — geometry-only table)
     val midFile = new java.io.File(midPath(path))
+    val in = GeoFiles.textReader(path)
+    val mid = try { if (midFile.exists()) GeoFiles.textReader(midFile.getPath) else null }
+      catch { case e: Throwable => in.close(); throw e }
+    val release = () => try in.close() finally if (mid != null) mid.close()
+    val toks = try new Tokens(in) catch { case e: Throwable => release(); throw e }
     val midLines: Iterator[Array[String]] =
-      if (!midFile.exists()) Iterator.continually(Array.empty[String])
-      else {
-        val br = GeoFiles.textReader(midFile.getPath)
-        Iterator.continually(br.readLine()).takeWhile(_ != null)
-          .map(l => splitMid(l, m.delimiter)) ++ Iterator.continually(Array.empty[String])
-      }
+      if (mid == null) Iterator.continually(Array.empty[String])
+      else Iterator.continually(mid.readLine()).takeWhile(_ != null)
+        .map(l => splitMid(l, m.delimiter)) ++ Iterator.continually(Array.empty[String])
 
     def readCoords(k: Int): Array[Coordinate] =
       Array.fill(k) { val x = toks.num(); val y = toks.num(); new Coordinate(x, y) }
@@ -224,37 +225,31 @@ object MapInfoMif {
       case other => throw new IllegalArgumentException(s"unsupported MIF object '$other' in $path")
     }
 
-    new Iterator[Feature] {
-      private var pendingF: Feature = null
-      private var done = false
-      private var n = 0
-      private def advance(): Unit = {
-        if (pendingF != null || done) return
-        var t = toks.next()
-        var geom: Geometry = null
-        while (geom == null && t != null) {
-          val up = t.toUpperCase(java.util.Locale.ROOT)
-          if (styleKeys(up)) { toks.skipParens() }
-          else if (styleKeys.exists(k => up.startsWith(k + "("))) { if (!t.contains(")")) toks.skipParens() }
-          else if (up == "SMOOTH") ()
-          else if (up == "CENTER") { toks.num(); toks.num() }
-          else geom = obj(up)
-          if (geom == null) t = toks.next()
-        }
-        if (geom == null) { done = true; toks.close(); return }
+    var n = 0
+    /** The next object with its attributes, or null at the end. */
+    def nextObject(): Feature = {
+      var t = toks.next()
+      var geom: Geometry = null
+      while (geom == null && t != null) {
+        val up = t.toUpperCase(java.util.Locale.ROOT)
+        if (styleKeys(up)) { toks.skipParens() }
+        else if (styleKeys.exists(k => up.startsWith(k + "("))) { if (!t.contains(")")) toks.skipParens() }
+        else if (up == "SMOOTH") ()
+        else if (up == "CENTER") { toks.num(); toks.num() }
+        else geom = obj(up)
+        if (geom == null) t = toks.next()
+      }
+      if (geom == null) null
+      else {
         n += 1
         val attrs = midLines.next()
         val props = m.columns.zipWithIndex.collect {
           case (c, i) if i < attrs.length => c -> attrs(i)
         }.toMap
-        pendingF = Feature(n.toString, geom, props)
-      }
-      def hasNext: Boolean = { advance(); pendingF != null }
-      def next(): Feature = {
-        if (!hasNext) throw new NoSuchElementException
-        val f = pendingF; pendingF = null; f
+        Feature(n.toString, geom, props)
       }
     }
+    new GeoJsonFile.FeatureStream(release)(() => nextObject())
   }
 
   /** MID row split honoring double-quoted fields (quotes strip; delimiter

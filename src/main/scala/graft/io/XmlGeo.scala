@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.geom.Geo
-import graft.io.GeoJsonFile.Feature
+import graft.io.GeoJsonFile.{Feature, FeatureStream}
 import org.locationtech.jts.geom._
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
@@ -14,61 +14,47 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
  */
 object XmlGeo {
 
-  private def reader(path: String): XMLStreamReader =
-    readerOf(GeoFiles.textReader(path))
-
+  /** A StAX cursor over `in`, which the caller closes (closing the cursor
+   *  does not close `in`); `in` is closed here if the cursor cannot start. */
   private def readerOf(in: java.io.Reader): XMLStreamReader = {
     val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false) // no external entities
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.createXMLStreamReader(in)
+    try f.createXMLStreamReader(in)
+    catch { case e: Throwable => in.close(); throw e }
   }
 
-  /** Lazy pull-iterator over a StAX stream: `step()` parses and returns the
+  /** Lazy pull-stream over a StAX cursor: `step()` parses and returns the
    *  NEXT feature (or null at end of document). Features never buffer — a
    *  multi-GB file holds one feature in memory at a time, which is what
-   *  makes these readers safe inside an executor task at scale. The reader
-   *  closes at exhaustion (the Spark scan path always drains fully). */
-  private def lazily(r: XMLStreamReader, extraClose: () => Unit = null)(step: () => Feature): Iterator[Feature] =
-    new Iterator[Feature] {
-      private var pending: Feature = null
-      private var done = false
-      def hasNext: Boolean = {
-        if (pending == null && !done) {
-          pending = step()
-          if (pending == null) {
-            done = true; r.close()
-            if (extraClose != null) extraClose()
-          }
-        }
-        pending != null
-      }
-      def next(): Feature = {
-        if (!hasNext) throw new NoSuchElementException("exhausted")
-        val f = pending; pending = null; f
-      }
-    }
+   *  makes these readers safe inside an executor task at scale. The cursor
+   *  and `in`, the file under it, close when the stream drains or closes. */
+  private def lazily(r: XMLStreamReader, in: java.io.Closeable)(step: () => Feature): FeatureStream =
+    new FeatureStream(() => try r.close() finally in.close())(step)
 
   // ------------------------------------------------------------------- KML
   /** Placemarks → features: name/description as properties, geometry from
    *  Point/LineString/Polygon/MultiGeometry (KML coordinates are
    *  "lon,lat[,alt]" whitespace-separated tuples). */
-  def kmlFeatures(path: String, layer: Option[String] = None): Iterator[Feature] =
-    kmlFrom(reader(path), null, layer.orNull)
+  def kmlFeatures(path: String, layer: Option[String] = None): FeatureStream = {
+    val in = GeoFiles.textReader(path)
+    kmlFrom(readerOf(in), in, layer.orNull)
+  }
 
   /** Distinct Folder names of a KML document, in first-seen order — the
    *  layer list st_read_meta reports (KML's layer concept is the Folder;
    *  GDAL's LIBKML driver surfaces folders as layers). */
   def kmlLayers(path: String): Seq[String] = {
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    kmlFeatures(path).foreach(_.properties.get("folder").foreach(seen += _))
+    val features = kmlFeatures(path)
+    try features.foreach(_.properties.get("folder").foreach(seen += _)) finally features.close()
     seen.toSeq
   }
 
   /** KMZ: a zip archive whose main document is `doc.kml` (OGC KML 2.2 §10.2).
    *  The root doc.kml wins; otherwise the first .kml entry. The archive stays
-   *  open until the feature stream drains. */
-  def kmzFeatures(path: String, layer: Option[String] = None): Iterator[Feature] = {
+   *  open until the feature stream drains or closes. */
+  def kmzFeatures(path: String, layer: Option[String] = None): FeatureStream = {
     val zf = new java.util.zip.ZipFile(path.stripPrefix("file:"))
     import scala.jdk.CollectionConverters._
     val kmls = zf.entries().asScala
@@ -77,11 +63,13 @@ object XmlGeo {
       .getOrElse { zf.close(); throw new IllegalArgumentException(s"no .kml entry inside $path") }
     val br = new java.io.BufferedReader(
       new java.io.InputStreamReader(zf.getInputStream(entry), "UTF-8"), 1 << 16)
-    kmlFrom(readerOf(br), () => zf.close(), layer.orNull)
+    // closing the archive closes the entry's stream
+    val r = try readerOf(br) catch { case e: Throwable => zf.close(); throw e }
+    kmlFrom(r, zf, layer.orNull)
   }
 
-  private def kmlFrom(r: XMLStreamReader, extraClose: () => Unit,
-                      layerFilter: String = null): Iterator[Feature] = {
+  private def kmlFrom(r: XMLStreamReader, in: java.io.Closeable,
+                      layerFilter: String): FeatureStream = {
     val fac = Geo.factory
     var n = 0
 
@@ -183,7 +171,7 @@ object XmlGeo {
     def currentFolder: String =
       folders.collectFirst { case slot if slot(0) != null => slot(0) }.orNull
 
-    lazily(r, extraClose) { () =>
+    lazily(r, in) { () =>
       var result: Feature = null
       while (result == null && r.hasNext) {
         r.next() match {
@@ -385,8 +373,9 @@ object XmlGeo {
     }
   }
 
-  def gmlFeatures(path: String): Iterator[Feature] = {
-    val r = reader(path)
+  def gmlFeatures(path: String): FeatureStream = {
+    val in = GeoFiles.textReader(path)
+    val r = readerOf(in)
     val G = new GmlGeom(r)
     val geomNames = gmlGeomNames
     var n = 0
@@ -434,7 +423,7 @@ object XmlGeo {
     // memberDepth persists across pulls so featureMembers batches (several
     // features inside one member element) stream one at a time
     var memberDepth = 0
-    lazily(r) { () =>
+    lazily(r, in) { () =>
       var result: Feature = null
       while (result == null && r.hasNext) {
         r.next() match {
@@ -460,8 +449,9 @@ object XmlGeo {
    *  `geo:lat`/`geo:long`. Properties: title, link (href attr or text),
    *  description/summary, pubDate/updated as `date`, category; guid/id is the
    *  feature id. */
-  def georssFeatures(path: String): Iterator[Feature] = {
-    val r = reader(path)
+  def georssFeatures(path: String): FeatureStream = {
+    val in = GeoFiles.textReader(path)
+    val r = readerOf(in)
     val fac = Geo.factory
     val G = new GmlGeom(r)
     var n = 0
@@ -475,7 +465,7 @@ object XmlGeo {
       def filter(c: Coordinate): Unit = { val t = c.x; c.x = c.y; c.y = t }
     }
 
-    lazily(r) { () =>
+    lazily(r, in) { () =>
       var result: Feature = null
       while (result == null && r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT &&
@@ -546,8 +536,9 @@ object XmlGeo {
   // ------------------------------------------------------------------- GPX
   /** Waypoints → points; each trkseg → LineString; each rte → LineString.
    *  Properties: kind (wpt/trk/rte), name, ele (waypoints). */
-  def gpxFeatures(path: String): Iterator[Feature] = {
-    val r = reader(path)
+  def gpxFeatures(path: String): FeatureStream = {
+    val in = GeoFiles.textReader(path)
+    val r = readerOf(in)
     val fac = Geo.factory
     var n = 0
 
@@ -576,7 +567,7 @@ object XmlGeo {
       Feature(n.toString, g, props)
     }
 
-    lazily(r) { () =>
+    lazily(r, in) { () =>
       var result: Feature = null
       while (result == null && r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT) r.getLocalName match {

@@ -55,6 +55,11 @@ import org.apache.spark.sql.types._
  * TakeOrderedAndProject over a single Project, which must keep that shape
  * and gain no shuffle, so there only the top Project is split.
  *
+ * A one-file scan below spark.sql.files.openCostInBytes is planned as one
+ * partition (`SinglePartitionScanStrategy`) and needs no exchange for the
+ * sort, so over such a scan this per-core range exchange is the one place
+ * its rows fan out to the cores.
+ *
  * Disable with spark.graft.sortDefer.enabled=false.
  */
 class SortProjectDeferRule(spark: SparkSession) extends Rule[LogicalPlan] {

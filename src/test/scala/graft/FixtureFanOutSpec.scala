@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.files.openCostInBytes` (it pays in every query). Every other
   * table is read as it lies. The tables are sf0.001-sized (6,000 lineitem
   * rows, 1,500 orders, one file each), written to a fresh dir per test: the
-  * fixture map is keyed by dir, so no test sees another's entries. */
+  * fixture map is keyed by dir, so no test sees another's entries. A view
+  * is registered again only when the session's view of that name is not
+  * the one `registerFixtures` registered last. */
 class FixtureFanOutSpec extends AnyFunSuite with TempDirs with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
@@ -109,5 +111,24 @@ class FixtureFanOutSpec extends AnyFunSuite with TempDirs with AdaptiveSparkPlan
       }
     }
     assert(rows.distinct.size == 1)
+  }
+
+  test("a second run registers no view; a view replaced from outside is registered again") {
+    val dir = tables()
+    val catalog = spark.sessionState.catalog
+    def views(): Seq[AnyRef] = Seq("lineitem", "orders").map(catalog.getRawTempView(_).orNull)
+    withConf(cacheKey -> "false") {
+      val (_, rows) = run("q_dwithin_selective", dir)
+      val first = views()
+      assert(first.forall(_ != null) && rows.nonEmpty)
+      assert(run("q_dwithin_selective", dir)._2 == rows)
+      assert(views().zip(first).forall { case (a, b) => a eq b }, "a second run registered a view")
+      spark.range(1).toDF("x").createOrReplaceTempView("lineitem")
+      val outside = views().head
+      assert(run("q_dwithin_selective", dir)._2 == rows)
+      val third = views()
+      assert(!(third.head eq outside) && !(third.head eq first.head), "lineitem was not registered again")
+      assert(third(1) eq first(1), "orders was registered again")
+    }
   }
 }

@@ -501,4 +501,40 @@ class GeoIOSpec extends AnyFunSuite with TempDirs {
     val after = fd.list().length
     assert(math.abs(after - before) <= 2, s"open files $before -> $after")
   }
+
+  test("the streaming text readers close their files, read to the end or under LIMIT 1") {
+    val fd = new java.io.File("/proc/self/fd")
+    assume(fd.isDirectory, "NOT RUN: no /proc/self/fd")
+    Graft.register(spark)
+    val pts = spark.sql(
+      """SELECT concat('p', id) AS name,
+        |       st_point(cast(id AS double), cast(id % 7 AS double)) AS geom
+        |FROM range(300)""".stripMargin)
+    val w = graft.io.GeoWriter
+    val sources = Seq("kml", "gpx", "gml", "georss", "kmz", "mif", "dxf").map { ext =>
+      val p = s"$dir/fds_stream.$ext"
+      ext match {
+        case "kml" => w.kml(pts, "geom", p, singleFile = true)
+        case "gpx" => w.gpx(pts, "geom", p, singleFile = true)
+        case "gml" => w.gml(pts, "geom", p, singleFile = true)
+        case "georss" => w.georss(pts, "geom", p, singleFile = true)
+        case "kmz" => w.kmz(pts, "geom", p, singleFile = true)
+        case "mif" => w.mif(pts, "geom", p, singleFile = true) // and its .mid
+        case "dxf" => w.dxf(pts, "geom", p, singleFile = true)
+      }
+      p
+    }
+    def load(p: String) = spark.read.format("geo").load(p)
+    def work(): Unit = sources.foreach { p =>
+      assert(load(p).count() == 300L, p)
+      assert(load(p).limit(1).collect().length == 1, p)
+    }
+    work() // loads the classes the reads use
+    val before = fd.list().length
+    (1 to 3).foreach(_ => work())
+    val after = fd.list().length
+    // a leak grows the count by 9 files a round (mif holds two); other
+    // suites' files closing meanwhile may only shrink it
+    assert(after - before <= 2, s"open files $before -> $after")
+  }
 }
